@@ -39,8 +39,7 @@ object Stress {
     "a23_tokenizer_fertility", "mm08_resize_grid", "c18_quantile_calibrate",
     "c20_padding_waste", "d17_threshold_yield",
     // the production ARPACK SVD — runs with the in-query eigen-residual
-    // gate ON, so completing here IS at-scale solver verification; the
-    // power-twin σ cross-check on the leaders is tools/Ls08TwinCheck
+    // gate ON, so completing here IS at-scale solver verification
     "ls08_concepts_arpack",
     // round-6 additions: real-pixel dHash, trained-tokenizer fertility,
     // the S5 report over the power chain

@@ -1,8 +1,6 @@
 package graft.baseline
 
-import java.math.{BigDecimal => JBig, RoundingMode}
-
-import graft.lsa.PowerCore
+import graft.lsa.{PowerCore, SparkNumerics}
 
 /** The DuckDB-replayable configuration of the Ozsoy cross-method
   * baseline (reference BigdataProjectCode.py:167-176 / pytldr): the
@@ -29,8 +27,7 @@ object OzsoyPowerSummarizer {
 
   final case class Scored(index: Int, score: Double)
 
-  def round6(x: Double): Double =
-    JBig.valueOf(x).setScale(6, RoundingMode.HALF_UP).doubleValue
+  def round6(x: Double): Double = SparkNumerics.round(x, 6)
 
   /** Cross-method scores for every sentence (0.0 for sentences with no
     * kept tokens), in sentence order.
@@ -47,10 +44,11 @@ object OzsoyPowerSummarizer {
     val termIdx = terms.zipWithIndex.toMap
     val present = pairs.map(_._2).distinct.sorted.toArray
     val sentPos = present.zipWithIndex.toMap
-    val factors = PowerCore.factorize(terms.length, present.length,
-      pairs.map(p => termIdx(p._1)).toArray,
-      pairs.map(p => sentPos(p._2)).toArray,
-      Array.fill(pairs.length)(1.0), topics, iters)
+    val factors = PowerCore.factorize(
+      PowerCore.Matrix.indexed(terms.length, present.length,
+        pairs.map(p => termIdx(p._1)).toArray,
+        pairs.map(p => sentPos(p._2)).toArray,
+        Array.fill(pairs.length)(1.0)), topics, iters)
     val n = sentences.size
     val sigmas = factors.map(_.sigma)
     val smax = sigmas.max
@@ -60,25 +58,19 @@ object OzsoyPowerSummarizer {
       val fl = if (f.v(tStar) < 0) -1.0 else 1.0
       f.v.map(fl * _)
     }
-    val avgs = sv.map { row =>
-      var acc = JBig.ZERO
-      row.foreach(x => acc = acc.add(PowerCore.dec(x)))
-      acc.doubleValue / n
-    }
+    val avgs = sv.map(row => PowerCore.sum(row) / n)
     sentences.indices.map { i =>
       sentPos.get(i) match {
         case None => Scored(i, 0.0)
         case Some(p) =>
-          var acc = JBig.ZERO
-          factors.indices.foreach { j =>
+          Scored(i, PowerCore.sum(factors.indices.map { j =>
             val sig =
               if (sigmas(j) >= topicSigmaThreshold * smax) sigmas(j) else 0.0
             val v = sv(j)(p)
             val vcut = if (v > avgs(j)) v else 0.0
             val x = sig * vcut
-            acc = acc.add(PowerCore.dec(x * x))
-          }
-          Scored(i, acc.doubleValue)
+            x * x
+          }))
       }
     }
   }

@@ -1,6 +1,6 @@
 package graft.lsa
 
-import java.math.{BigDecimal => JBig, RoundingMode}
+import java.math.{BigDecimal => JBig}
 
 /** Driver/executor-LOCAL exact-decimal power-deflation SVD core — the
   * compact sibling of [[PowerLsa]]'s distributed recurrence, and the
@@ -23,17 +23,15 @@ import java.math.{BigDecimal => JBig, RoundingMode}
   *     v  = w / √castDouble(Σ dec(w·w))
   *   σ_j = ‖A v‖, u_j = A v / σ_j
   *
-  * where dec(x) = CAST(x AS DECIMAL(38,18)) — i.e. the SHORTEST-DECIMAL
-  * representation of the double rounded HALF_UP at 18 fractional digits,
-  * which on the JVM is precisely `BigDecimal.valueOf(x).setScale(18,
-  * HALF_UP)` (what Spark's double→decimal cast does), and Σ is the exact
-  * decimal sum (associative, so partitioning/iteration order cannot
-  * perturb an ulp). castDouble is the correctly-rounded decimal→double.
+  * where dec(x) = CAST(x AS DECIMAL(38,18)) ([[SparkNumerics.dec]]) and
+  * Σ is the exact decimal sum (associative, so partitioning/iteration
+  * order cannot perturb an ulp). castDouble is the correctly-rounded
+  * decimal→double.
   *
-  * Index-space contract: callers pass cells with ids in [0,nIds) and
-  * tokens in [0,nToks) where BOTH index assignments follow the natural
-  * ascending order of the underlying keys — tie-breaks ("lowest index
-  * wins") then equal the SQL tie-breaks ("lowest token/id wins").
+  * Index-space contract: a [[Matrix]]'s id and token indices BOTH
+  * follow the ascending order of the underlying keys — tie-breaks
+  * ("lowest index wins") then equal the SQL tie-breaks ("lowest
+  * token/id wins").
   */
 object PowerCore {
 
@@ -42,12 +40,12 @@ object PowerCore {
     */
   final case class Factor(sigma: Double, v: Array[Double], av: Array[Double])
 
-  /** The Spark double→decimal(38,18) cast, exactly. */
-  def dec(x: Double): JBig =
-    JBig.valueOf(x).setScale(18, RoundingMode.HALF_UP)
+  /** dec(x): the Spark double→decimal(38,18) cast every sum here runs in. */
+  def dec(x: Double): JBig = SparkNumerics.dec(x, 38, 18)
 
-  private def sumInto(acc: Array[JBig], i: Int, x: Double): Unit =
-    acc(i) = acc(i).add(dec(x))
+  /** acc(i) += dec(x), a null cast skipped as `sum` skips it. */
+  def sumInto(acc: Array[JBig], i: Int, x: Double): Unit =
+    acc(i) = SparkNumerics.plus(acc(i), dec(x))
 
   private def zeros(n: Int): Array[JBig] = Array.fill(n)(JBig.ZERO)
 
@@ -55,8 +53,61 @@ object PowerCore {
   def dot(x: Array[Double], y: Array[Double]): Double = {
     var acc = JBig.ZERO
     var i = 0
-    while (i < x.length) { acc = acc.add(dec(x(i) * y(i))); i += 1 }
+    while (i < x.length) { acc = SparkNumerics.plus(acc, dec(x(i) * y(i))); i += 1 }
     acc.doubleValue
+  }
+
+  /** Exact-decimal sum Σ dec(x) cast back to double. */
+  def sum(xs: Iterable[Double]): Double =
+    xs.foldLeft(JBig.ZERO)((acc, x) => SparkNumerics.plus(acc, dec(x))).doubleValue
+
+  /** The exact-decimal 2-norm √Σ dec(w·w). */
+  def norm(w: Array[Double]): Double = math.sqrt(dot(w, w))
+
+  /** Sparse (id × token) cells on compact indices, with the keys behind
+    * each index: `ids`/`toks` ascending, so index order is key order.
+    * Cell order never reaches a value (every sum is an exact decimal).
+    */
+  final class Matrix(val ids: Array[Long], val toks: Array[String],
+      cellIds: Array[Int], cellToks: Array[Int], cellAs: Array[Double]) {
+    def nIds: Int = ids.length
+    def nToks: Int = toks.length
+
+    /** u = A v: per-id Σ dec(a·v). */
+    def matvecV(v: Array[Double]): Array[Double] = {
+      val acc = zeros(nIds)
+      var i = 0
+      while (i < cellAs.length) { sumInto(acc, cellIds(i), cellAs(i) * v(cellToks(i))); i += 1 }
+      acc.map(_.doubleValue)
+    }
+
+    /** w = Aᵀ u: per-token Σ dec(a·u). */
+    def matvecU(u: Array[Double]): Array[Double] = {
+      val acc = zeros(nToks)
+      var i = 0
+      while (i < cellAs.length) { sumInto(acc, cellToks(i), cellAs(i) * u(cellIds(i))); i += 1 }
+      acc.map(_.doubleValue)
+    }
+  }
+
+  object Matrix {
+    /** (id, token, a) triples → [[Matrix]]; an (id, token) pair must
+      * occur at most once.
+      */
+    def apply(cells: Seq[(Long, String, Double)]): Matrix = {
+      val ids = cells.map(_._1).distinct.sorted.toArray
+      val toks = cells.map(_._2).distinct.sorted.toArray
+      val idIdx = ids.zipWithIndex.toMap
+      val tokIdx = toks.zipWithIndex.toMap
+      new Matrix(ids, toks, cells.map(c => idIdx(c._1)).toArray,
+        cells.map(c => tokIdx(c._2)).toArray, cells.map(_._3).toArray)
+    }
+
+    /** Cells already on compact indices; keys are the indices themselves. */
+    def indexed(nIds: Int, nToks: Int, cellIds: Array[Int],
+        cellToks: Array[Int], cellAs: Array[Double]): Matrix =
+      new Matrix(Array.tabulate(nIds)(_.toLong),
+        Array.tabulate(nToks)(_.toString), cellIds, cellToks, cellAs)
   }
 
   /** k singular triples of the sparse cells matrix by sequential
@@ -69,30 +120,9 @@ object PowerCore {
     * normalize guards `nrm = 0`), keeping engine and oracle total on
     * degenerate groups instead of diverging on an early stop.
     */
-  def factorize(nIds: Int, nToks: Int, cellIds: Array[Int],
-      cellToks: Array[Int], cellAs: Array[Double],
-      k: Int, iters: Int): Array[Factor] = {
+  def factorize(m: Matrix, k: Int, iters: Int): Array[Factor] = {
     require(k >= 1 && iters >= 1)
-    val nnz = cellAs.length
-
-    def matvecV(v: Array[Double]): Array[Double] = { // u = A v
-      val acc = zeros(nIds)
-      var i = 0
-      while (i < nnz) { sumInto(acc, cellIds(i), cellAs(i) * v(cellToks(i))); i += 1 }
-      acc.map(_.doubleValue)
-    }
-    def matvecU(u: Array[Double]): Array[Double] = { // w = Aᵀ u
-      val acc = zeros(nToks)
-      var i = 0
-      while (i < nnz) { sumInto(acc, cellToks(i), cellAs(i) * u(cellIds(i))); i += 1 }
-      acc.map(_.doubleValue)
-    }
-    def norm(w: Array[Double]): Double = {
-      var acc = JBig.ZERO
-      var i = 0
-      while (i < w.length) { acc = acc.add(dec(w(i) * w(i))); i += 1 }
-      math.sqrt(acc.doubleValue)
-    }
+    val nToks = m.nToks
 
     def normalize(w: Array[Double]): Array[Double] = {
       val n = norm(w)
@@ -108,20 +138,17 @@ object PowerCore {
         if (out.isEmpty) Array.fill(nToks)(c0)
         else {
           val corr = zeros(nToks)
+          val c0s = Array.fill(nToks)(c0)
           out.foreach { f =>
-            var acc = JBig.ZERO
+            val d0 = dot(f.v, c0s) // Σ dec(v_i·c0)
             var t = 0
-            while (t < nToks) { acc = acc.add(dec(f.v(t) * c0)); t += 1 }
-            val d0 = acc.doubleValue
-            t = 0
             while (t < nToks) { sumInto(corr, t, d0 * f.v(t)); t += 1 }
           }
           normalize(Array.tabulate(nToks)(t => c0 - corr(t).doubleValue))
         }
       var it = 0
       while (it < iters) {
-        val u = matvecV(v)
-        val w0 = matvecU(u)
+        val w0 = m.matvecU(m.matvecV(v))
         val w =
           if (out.isEmpty) w0
           else {
@@ -137,7 +164,7 @@ object PowerCore {
         v = normalize(w)
         it += 1
       }
-      val av = matvecV(v)
+      val av = m.matvecV(v)
       out += Factor(norm(av), v, av)
       j += 1
     }

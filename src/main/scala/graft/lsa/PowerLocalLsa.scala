@@ -27,26 +27,17 @@ object PowerLocalLsa {
     val nd = tok.size
     val df: Map[String, Int] = tok.flatMap { case (_, ts) => ts.distinct }
       .groupBy(identity).map { case (t, xs) => t -> xs.size }
-    val terms = df.keys.toArray.sorted
-    val termIdx = terms.zipWithIndex.toMap
-    val ids = tok.map(_._1).sorted.toArray
-    val idIdx = ids.zipWithIndex.toMap
-    val cells = tok.flatMap { case (id, ts) =>
-      ts.groupBy(identity).map { case (t, dup) =>
-        val a = dup.size * math.log10(nd.toDouble / df(t))
-        (idIdx(id), termIdx(t), // = round(a, 6) on both engines
-          java.math.BigDecimal.valueOf(a)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue)
+    val m = PowerCore.Matrix(tok.flatMap { case (id, ts) =>
+      ts.groupBy(identity).map { case (t, dup) => // = round(a, 6) on both engines
+        (id, t, SparkNumerics.round(dup.size * math.log10(nd.toDouble / df(t)), 6))
       }
-    }
-    val factors = PowerCore.factorize(ids.length, terms.length,
-      cells.map(_._1).toArray, cells.map(_._2).toArray,
-      cells.map(_._3).toArray, k, iters)
+    })
+    val factors = PowerCore.factorize(m, k, iters)
     factors.zipWithIndex.map { case (f, j) =>
-      val tStar = terms.indices.minBy(t => (-math.abs(f.v(t)), terms(t)))
+      val tStar = m.toks.indices.minBy(t => (-math.abs(f.v(t)), m.toks(t)))
       val fl = if (f.v(tStar) < 0) -1.0 else 1.0
-      val top = ids.indices.map(d => (
-          if (f.sigma == 0.0) 0.0 else fl * (f.av(d) / f.sigma), ids(d)))
+      val top = m.ids.indices.map(d => (
+          if (f.sigma == 0.0) 0.0 else fl * (f.av(d) / f.sigma), m.ids(d)))
         .sortBy { case (su, d) => (-su, d) }.take(nDocs)
       Concept(j, f.sigma, top.map(_._2))
     }.toSeq

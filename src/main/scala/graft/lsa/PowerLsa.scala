@@ -36,6 +36,39 @@ object PowerLsa {
 
   private val Dec = "decimal(38,18)"
 
+  /** Default local-route budgets: cells (nnz) and distinct ids. */
+  private val MaxLocalNnz = 2000000L
+  private val MaxLocalIds = 500000L
+
+  /** The one route probe over persisted cells: whether they fit the
+    * local budgets, and — when `vocab` — the vocabulary size the DF
+    * chains' uniform start 1/√nv needs (else 0), fused into the same
+    * aggregate job.
+    */
+  private def probe(c: DataFrame, maxNnz: Long, maxIds: Long,
+      vocab: Boolean): (Boolean, Long) = {
+    val aggs = Seq(count(lit(1)), count_distinct(col("id"))) ++
+      (if (vocab) Seq(count_distinct(col("token"))) else Nil)
+    val r = c.agg(aggs.head, aggs.tail: _*).head()
+    val nv = if (vocab) r.getLong(2) else 0L
+    // fail fast on an impossible-empty vocabulary: a cache race
+    // could otherwise feed 0 into 1/sqrt(nv) (silent Inf or ANSI
+    // divide-by-zero deep in the chain — seen once under a
+    // concurrent-gate clearCache; see Verify's cache note)
+    require(!vocab || nv > 0, s"empty vocabulary (nv=$nv) from non-empty " +
+      "cells - likely a cache/materialization race; retry the query")
+    (r.getLong(0) <= maxNnz && r.getLong(1) <= maxIds, nv)
+  }
+
+  /** The local routes' one bounded collect: cells → [[PowerCore.Matrix]]. */
+  private def collectCells(cells: DataFrame): PowerCore.Matrix = {
+    val spark = cells.sparkSession
+    import spark.implicits._
+    PowerCore.Matrix(cells.select(col("id").cast("long"), col("token"),
+      // collect-bound: probe-guarded: every caller routes here only under the probe()'s nnz/id budgets; the distributed chains are the fallback
+      col("a").cast("double")).as[(Long, String, Double)].collect().toSeq)
+  }
+
   /** One A v matvec: (id, u). */
   private def matvecV(c: DataFrame, v: DataFrame, out: String): DataFrame =
     c.join(v, Seq("token"))
@@ -95,20 +128,12 @@ object PowerLsa {
     * is gone on both routes.
     */
   def topSingular(cells: DataFrame, iters: Int,
-      maxLocalNnz: Long = 2000000L, maxLocalIds: Long = 500000L): DataFrame = {
+      maxLocalNnz: Long = MaxLocalNnz, maxLocalIds: Long = MaxLocalIds): DataFrame = {
     require(iters >= 1 && iters <= 32, s"iters $iters out of range")
     val c = cells.select(col("id"), col("token"), col("a")).persist()
-    val probe = c.agg(count(lit(1)), count_distinct(col("id")),
-      count_distinct(col("token"))).head()
-    val (nnz, nIds, nv) = (probe.getLong(0), probe.getLong(1), probe.getLong(2))
-    // fail fast on an impossible-empty vocabulary: a cache race
-    // could otherwise feed 0 into 1/sqrt(nv) (silent Inf or ANSI
-    // divide-by-zero deep in the chain — seen once under a
-    // concurrent-gate clearCache; see Verify's cache note)
-    require(nv > 0, s"empty vocabulary (nv=$nv) from non-empty cells - " +
-      "likely a cache/materialization race; retry the query")
-    if (nnz <= maxLocalNnz && nIds <= maxLocalIds) {
-      val chain = LocalPowerChain.collect(c)
+    val (fits, nv) = probe(c, maxLocalNnz, maxLocalIds, vocab = true)
+    if (fits) {
+      val chain = new LocalPowerChain(collectCells(c))
       c.unpersist()
       chain.emitTop(cells.sparkSession, iters)
     } else {
@@ -133,12 +158,10 @@ object PowerLsa {
     */
   def kConcepts(cells: DataFrame, k: Int, iters: Int,
       nKeywords: Int = 3, nDocs: Int = 3,
-      maxLocalNnz: Long = 2000000L, maxLocalIds: Long = 500000L): DataFrame = {
+      maxLocalNnz: Long = MaxLocalNnz, maxLocalIds: Long = MaxLocalIds): DataFrame = {
     val c = cells.select(col("id"), col("token"), col("a")).persist()
-    val probe = c.agg(count(lit(1)), count_distinct(col("id"))).head()
-    val (nnz, nIds) = (probe.getLong(0), probe.getLong(1))
     val out =
-      if (nnz <= maxLocalNnz && nIds <= maxLocalIds)
+      if (probe(c, maxLocalNnz, maxLocalIds, vocab = false)._1)
         kConceptsLocal(c, k, iters, nKeywords, nDocs)
       else kConceptsDF(c, k, iters, nKeywords, nDocs)
     c.unpersist()
@@ -150,89 +173,44 @@ object PowerLsa {
 
   /** Bounded-collect twin of the ls06/ls07 chains ([[topSingular]] /
     * [[secondSingular]]): the SAME exact-decimal recurrences walked on
-    * primitive arrays off one collect. Each DF op is mirrored 1:1 —
-    * dec() sums via [[PowerCore.dec]] (the Spark double→decimal(38,18)
-    * cast), PLAIN double arithmetic exactly where the DF chain uses it
-    * (powerV's unguarded w/‖w‖ division; secondSingular's
-    * `c0 − dot·v1` / `w0 − (σ²·dot)·v1` corrections, which unlike
-    * kFactors' grouped sums do NOT round-trip through decimal), and
-    * Spark's Round semantics for the 6dp emission (Inf/NaN pass
-    * through). Index/order never reaches a value: every sum is an exact
-    * decimal (associative), every per-element op is elementwise.
+    * [[PowerCore]]'s primitives off one collect. Each DF op is mirrored
+    * 1:1 — matvecs, norms and dots in dec sums, PLAIN double arithmetic
+    * exactly where the DF chain uses it (powerV's unguarded w/‖w‖
+    * division; secondSingular's `c0 − dot·v1` / `w0 − (σ²·dot)·v1`
+    * corrections, which unlike kFactors' grouped sums do NOT round-trip
+    * through decimal), and Spark's ROUND for the 6dp emission. Index
+    * and order never reach a value: every sum is an exact decimal
+    * (associative), every per-element op is elementwise.
     */
-  private[lsa] final class LocalPowerChain(
-      val ids: Array[Long], val toks: Array[String],
-      cellIds: Array[Int], cellToks: Array[Int], cellAs: Array[Double]) {
-    import java.math.{BigDecimal => JBig}
-    private val nnz = cellAs.length
-    private def dbl(a: Array[JBig]): Array[Double] = a.map(_.doubleValue)
-    private def zeros(n: Int) = Array.fill(n)(JBig.ZERO)
-
-    def matvecV(v: Array[Double]): Array[Double] = { // u = A v (per-id dec sums)
-      val acc = zeros(ids.length)
-      var i = 0
-      while (i < nnz) {
-        acc(cellIds(i)) = acc(cellIds(i)).add(PowerCore.dec(cellAs(i) * v(cellToks(i))))
-        i += 1
-      }
-      dbl(acc)
-    }
-    def matvecU(u: Array[Double]): Array[Double] = { // w = Aᵀ u (per-token dec sums)
-      val acc = zeros(toks.length)
-      var i = 0
-      while (i < nnz) {
-        acc(cellToks(i)) = acc(cellToks(i)).add(PowerCore.dec(cellAs(i) * u(cellIds(i))))
-        i += 1
-      }
-      dbl(acc)
-    }
-    def normOf(w: Array[Double]): Double = { // √Σ dec(w·w)
-      var acc = JBig.ZERO
-      var i = 0
-      while (i < w.length) { acc = acc.add(PowerCore.dec(w(i) * w(i))); i += 1 }
-      math.sqrt(acc.doubleValue)
-    }
-    def dotDec(x: Array[Double], y: Array[Double]): Double = { // Σ dec(x·y)
-      var acc = JBig.ZERO
-      var i = 0
-      while (i < x.length) { acc = acc.add(PowerCore.dec(x(i) * y(i))); i += 1 }
-      acc.doubleValue
-    }
+  private[lsa] final class LocalPowerChain(m: PowerCore.Matrix) {
+    import PowerCore.{dot, norm}
 
     /** The powerV loop: v ← AᵀAv / ‖AᵀAv‖ from the uniform start —
       * UNGUARDED division, exactly like the DF chain (a zero norm yields
       * Inf/NaN there too, never the zero vector).
       */
     def powerV(iters: Int): Array[Double] = {
-      val c0 = 1.0 / math.sqrt(toks.length.toDouble)
-      var v = Array.fill(toks.length)(c0)
+      var v = Array.fill(m.nToks)(1.0 / math.sqrt(m.nToks.toDouble))
       var it = 0
       while (it < iters) {
-        val u = matvecV(v)
-        val w = matvecU(u)
-        val nrm = normOf(w)
+        val w = m.matvecU(m.matvecV(v))
+        val nrm = norm(w)
         v = w.map(_ / nrm)
         it += 1
       }
       v
     }
 
-    /** Spark Round(double, 6): HALF_UP on the shortest-decimal repr,
-      * Inf/NaN unchanged.
-      */
-    private def round6(x: Double): Double =
-      if (x.isNaN || x.isInfinite) x
-      else JBig.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-
     /** emit(): one sigma row + per-token 'term' rows + per-id 'doc' rows. */
     private def emitRows(spark: SparkSession,
         v: Array[Double]): DataFrame = {
-      val av = matvecV(v)
-      val sigma = normOf(av)
+      def round6(x: Double) = SparkNumerics.round(x, 6)
+      val av = m.matvecV(v)
+      val sigma = norm(av)
       val rows =
         Seq(("sigma", "", round6(sigma))) ++
-          toks.indices.map(t => ("term", toks(t), round6(v(t)))) ++
-          ids.indices.map(d => ("doc", ids(d).toString, round6(av(d) / sigma)))
+          m.toks.indices.map(t => ("term", m.toks(t), round6(v(t)))) ++
+          m.ids.indices.map(d => ("doc", m.ids(d).toString, round6(av(d) / sigma)))
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toSeq, 1))
         .toDF("kind", "ident", "score")
@@ -247,53 +225,25 @@ object PowerLsa {
       */
     def emitSecond(spark: SparkSession, iters: Int): DataFrame = {
       val v1 = powerV(iters)
-      val av1 = matvecV(v1)
-      val sigma1 = normOf(av1)
+      val sigma1 = norm(m.matvecV(v1))
       val s2 = sigma1 * sigma1
-      val c0 = 1.0 / math.sqrt(toks.length.toDouble)
+      val c0 = 1.0 / math.sqrt(m.nToks.toDouble)
       // init: uniform orthogonalized against v₁ (dot in dec, correction
       // and division in plain double, unguarded — as the DF chain)
-      val dot0 = {
-        var acc = JBig.ZERO
-        var i = 0
-        while (i < v1.length) { acc = acc.add(PowerCore.dec(v1(i) * c0)); i += 1 }
-        acc.doubleValue
-      }
+      val dot0 = dot(v1, Array.fill(m.nToks)(c0))
       val q0raw = v1.map(x => c0 - dot0 * x)
-      val nrm0 = normOf(q0raw)
+      val nrm0 = norm(q0raw)
       var q = q0raw.map(_ / nrm0)
       var it = 0
       while (it < iters) {
-        val u = matvecV(q)
-        val w0 = matvecU(u)
-        val dt = dotDec(v1, q)
-        val w = Array.tabulate(toks.length)(t => w0(t) - (s2 * dt) * v1(t))
-        val nrm = normOf(w)
+        val w0 = m.matvecU(m.matvecV(q))
+        val dt = dot(v1, q)
+        val w = Array.tabulate(m.nToks)(t => w0(t) - (s2 * dt) * v1(t))
+        val nrm = norm(w)
         q = w.map(_ / nrm)
         it += 1
       }
       emitRows(spark, q)
-    }
-  }
-
-  private[lsa] object LocalPowerChain {
-    /** One bounded collect of the cells into index-compact arrays; ids
-      * and tokens keep their natural ascending order (determinism only —
-      * no value depends on it).
-      */
-    def collect(cells: DataFrame): LocalPowerChain = {
-      val spark = cells.sparkSession
-      import spark.implicits._
-      val rows = cells.select(col("id").cast("long"), col("token"),
-        // collect-bound: probe-guarded: topSingular/secondSingular route here only under the maxLocalNnz/maxLocalIds probes; the distributed chain is the fallback
-        col("a").cast("double")).as[(Long, String, Double)].collect()
-      val ids = rows.map(_._1).distinct.sorted
-      val toks = rows.map(_._2).distinct.sorted
-      val idIdx = ids.zipWithIndex.toMap
-      val tokIdx = toks.zipWithIndex.toMap
-      new LocalPowerChain(ids, toks,
-        rows.map(r => idIdx(r._1)), rows.map(r => tokIdx(r._2)),
-        rows.map(_._3))
     }
   }
 
@@ -304,18 +254,9 @@ object PowerLsa {
   def kConceptsLocal(cells: DataFrame, k: Int, iters: Int,
       nKeywords: Int, nDocs: Int): DataFrame = {
     val spark = cells.sparkSession
-    import spark.implicits._
-    val rows = cells.select(col("id").cast("long"), col("token"),
-      // collect-bound: probe-guarded: kConcepts routes here only under the maxLocalNnz/maxLocalIds probes; kConceptsDF is the distributed fallback
-      col("a").cast("double")).as[(Long, String, Double)].collect()
-    val toks = rows.map(_._2).distinct.sorted
-    val ids = rows.map(_._1).distinct.sorted
-    val tokIdx = toks.zipWithIndex.toMap
-    val idIdx = ids.zipWithIndex.toMap
-    val factors = PowerCore.factorize(ids.length, toks.length,
-      rows.map(r => idIdx(r._1)), rows.map(r => tokIdx(r._2)),
-      rows.map(_._3), k, iters)
-    val out = factors.zipWithIndex.map { case (f, j) =>
+    val m = collectCells(cells)
+    val (ids, toks) = (m.ids, m.toks)
+    val out = PowerCore.factorize(m, k, iters).zipWithIndex.map { case (f, j) =>
       // sign convention: max-|loading| term positive (Q9/H2), ties to
       // the lexicographically first token — ORDER BY abs(v) DESC, token
       val tStar = toks.indices.minBy(t => (-math.abs(f.v(t)), toks(t)))
@@ -332,9 +273,7 @@ object PowerLsa {
     spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq, 1))
   }
 
-  private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+  private def round4(x: Double): Double = SparkNumerics.round(x, 4)
 
   /** Distributed route: the [[secondSingular]] machinery generalized to
     * k concepts — per round two shuffled matvecs plus one grouped dot /
@@ -343,32 +282,15 @@ object PowerLsa {
     */
   def kConceptsDF(cells: DataFrame, k: Int, iters: Int,
       nKeywords: Int, nDocs: Int): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
     val c = cells.select(col("id"), col("token"), col("a")).persist()
     val done = kFactors(c, k, iters)
-    val out = done.zipWithIndex.map { case ((vj, sigma, av), i) =>
-      val flRow = vj.orderBy(abs(col("v")).desc, col("token")).limit(1)
-        .select(col("v")).head()
-      val fl = if (flRow.getDouble(0) < 0) -1.0 else 1.0
-      val kw = vj.select(col("token"), (lit(fl) * col("v")).as("sv"))
-        .orderBy(desc("sv"), col("token")).limit(nKeywords)
-        // collect-bound: top-k: limit(nKeywords) tokens per concept
-        .select(col("token")).as[String].collect().mkString(" ")
-      val dc = av.select(col("id"),
-          (if (sigma == 0.0) lit(0.0)
-           else lit(fl) * (col("av") / lit(sigma))).as("su"))
-        .orderBy(desc("su"), col("id")).limit(nDocs)
-        // collect-bound: top-k: limit(nDocs) ids per concept
-        .select(col("id").cast("long")).as[Long].collect().mkString(" ")
-      ConceptRow(i, round4(sigma), kw, dc)
-    }
+    val out = kConceptsFromFactors(done, cells.sparkSession, nKeywords, nDocs)
     // `out` holds plain local rows now — every (v, av) checkpoint is dead.
     done.foreach { case (vj, _, av) =>
       releaseCheckpoint(vj); releaseCheckpoint(av)
     }
     c.unpersist()
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq, 1))
+    out
   }
 
   /** Bounded-collect twin of [[kFactors]]: run the IDENTICAL
@@ -384,19 +306,10 @@ object PowerLsa {
       iters: Int): Seq[(DataFrame, Double, DataFrame)] = {
     val spark = cells.sparkSession
     import spark.implicits._
-    val rows = cells.select(col("id").cast("long"), col("token"),
-      // collect-bound: probe-guarded: kFactorsAuto routes here only under the nnz/id budget probes; kFactors is the distributed fallback
-      col("a").cast("double")).as[(Long, String, Double)].collect()
-    val toks = rows.map(_._2).distinct.sorted
-    val ids = rows.map(_._1).distinct.sorted
-    val tokIdx = toks.zipWithIndex.toMap
-    val idIdx = ids.zipWithIndex.toMap
-    val factors = PowerCore.factorize(ids.length, toks.length,
-      rows.map(r => idIdx(r._1)), rows.map(r => tokIdx(r._2)),
-      rows.map(_._3), k, iters)
-    factors.map { f =>
-      val vj = toks.indices.map(t => (toks(t), f.v(t))).toDF("token", "v")
-      val av = ids.indices.map(d => (ids(d), f.av(d))).toDF("id", "av")
+    val m = collectCells(cells)
+    PowerCore.factorize(m, k, iters).toSeq.map { f =>
+      val vj = m.toks.indices.map(t => (m.toks(t), f.v(t))).toDF("token", "v")
+      val av = m.ids.indices.map(d => (m.ids(d), f.av(d))).toDF("id", "av")
       (vj, f.sigma, av)
     }
   }
@@ -406,13 +319,11 @@ object PowerLsa {
     * Either way the caller owns the returned factors.
     */
   def kFactorsAuto(cells: DataFrame, k: Int, iters: Int,
-      maxLocalNnz: Long = 2000000L,
-      maxLocalIds: Long = 500000L): Seq[(DataFrame, Double, DataFrame)] = {
+      maxLocalNnz: Long = MaxLocalNnz,
+      maxLocalIds: Long = MaxLocalIds): Seq[(DataFrame, Double, DataFrame)] = {
     val c = cells.select(col("id"), col("token"), col("a")).persist()
-    val probe = c.agg(count(lit(1)), count_distinct(col("id"))).head()
-    val (nnz, nIds) = (probe.getLong(0), probe.getLong(1))
     val out =
-      if (nnz <= maxLocalNnz && nIds <= maxLocalIds) kFactorsLocal(c, k, iters)
+      if (probe(c, maxLocalNnz, maxLocalIds, vocab = false)._1) kFactorsLocal(c, k, iters)
       else kFactors(c, k, iters)
     // factors are materialized (collected locally or localCheckpoint'd),
     // so the cells cache is dead either way
@@ -452,10 +363,9 @@ object PowerLsa {
       .computeIfAbsent(s"$key:$k:$iters", _ => kFactorsAuto(cells, k, iters))
   }
 
-  /** Concept emission from precomputed factors (the tail of
-    * [[kConceptsDF]] without the factor loop): sign convention, top
-    * keywords/doc ids, round-4 σ. Does NOT release the factors —
-    * the caller (or the memo) owns them.
+  /** Concept emission from precomputed factors ([[kConceptsDF]]'s
+    * tail): sign convention, top keywords/doc ids, round-4 σ. Does NOT
+    * release the factors — the caller (or the memo) owns them.
     */
   def kConceptsFromFactors(done: Seq[(DataFrame, Double, DataFrame)],
       spark: org.apache.spark.sql.SparkSession,
@@ -614,24 +524,15 @@ object PowerLsa {
     * both concepts bit-for-bit.
     */
   def secondSingular(cells: DataFrame, iters: Int,
-      maxLocalNnz: Long = 2000000L, maxLocalIds: Long = 500000L): DataFrame = {
+      maxLocalNnz: Long = MaxLocalNnz, maxLocalIds: Long = MaxLocalIds): DataFrame = {
     require(iters >= 1 && iters <= 32, s"iters $iters out of range")
     val c = cells.select(col("id"), col("token"), col("a")).persist()
-    // fused size probe + vocabulary count (r15; same routing and budgets
-    // as topSingular — see its scaladoc; the local twin replicates THIS
-    // chain's plain-double corrections, not kFactors' decimal-summed
-    // ones)
-    val probe = c.agg(count(lit(1)), count_distinct(col("id")),
-      count_distinct(col("token"))).head()
-    val (nnz, nIds, nv) = (probe.getLong(0), probe.getLong(1), probe.getLong(2))
-    // fail fast on an impossible-empty vocabulary: a cache race
-    // could otherwise feed 0 into 1/sqrt(nv) (silent Inf or ANSI
-    // divide-by-zero deep in the chain — seen once under a
-    // concurrent-gate clearCache; see Verify's cache note)
-    require(nv > 0, s"empty vocabulary (nv=$nv) from non-empty cells - " +
-      "likely a cache/materialization race; retry the query")
-    if (nnz <= maxLocalNnz && nIds <= maxLocalIds) {
-      val chain = LocalPowerChain.collect(c)
+    // same routing and budgets as topSingular — see its scaladoc; the
+    // local twin replicates THIS chain's plain-double corrections, not
+    // kFactors' decimal-summed ones
+    val (fits, nv) = probe(c, maxLocalNnz, maxLocalIds, vocab = true)
+    if (fits) {
+      val chain = new LocalPowerChain(collectCells(c))
       c.unpersist()
       return chain.emitSecond(cells.sparkSession, iters)
     }

@@ -3,10 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import java.math.{BigDecimal => JBig, RoundingMode}
-
 import graft.baseline.{OzsoyLsaSummarizer, OzsoyPowerSummarizer}
-import graft.lsa.{LocalLsa, Lsa, PowerCore, PowerLocalLsa}
+import graft.lsa.{LocalLsa, Lsa, PowerCore, PowerLocalLsa, SparkNumerics}
 import graft.rouge.Rouge
 
 /** Distributed per-group extractive summarization: the Ozsoy/LSA scorer
@@ -97,8 +95,7 @@ object GroupedSummarizer {
       nDocs: Int = 3): Dataset[EvalRow] = {
     val spark = sents.sparkSession
     import spark.implicits._
-    def r6(x: Double): Double =
-      JBig.valueOf(x).setScale(6, RoundingMode.HALF_UP).doubleValue
+    def r6(x: Double): Double = SparkNumerics.round(x, 6)
     sents.select(col("grp").cast("string"),
         col("review_id").cast("string"), col("sent_idx").cast("int"),
         col("sentence").cast("string"))
@@ -126,14 +123,8 @@ object GroupedSummarizer {
           }
           // exact-decimal mean of the round-6 per-pair scores (the
           // oracle-replayable aggregation; empty pair set -> zeros)
-          def mean(xs: Seq[Double]): Double = {
-            if (xs.isEmpty) 0.0
-            else {
-              var acc = JBig.ZERO
-              xs.foreach(x => acc = acc.add(PowerCore.dec(r6(x))))
-              r6(acc.doubleValue / xs.size)
-            }
-          }
+          def mean(xs: Seq[Double]): Double =
+            if (xs.isEmpty) 0.0 else r6(PowerCore.sum(xs.map(r6)) / xs.size)
           EvalRow(grp, metric,
             mean(scores.map(_.precision)),
             mean(scores.map(_.recall)),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.lsa.{PowerCore, SparkNumerics}
+
 /** Deterministic fixed-iteration HITS (Kleinberg, "Authoritative
   * Sources in a Hyperlinked Environment", JACM 1999): hub and authority
   * scores by mutual reinforcement — a ← Σ_in h, h ← Σ_out a, each
@@ -39,18 +41,11 @@ object Hits {
   def hits(edges: DataFrame, iters: Int,
       maxLocalEdges: Int = 500000): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    // Probe and collect FUSED into one bounded job: limit(budget+1)
-    // caps the driver footprint by construction — if the limit did not
-    // truncate, these are ALL the edges and the local route proceeds;
-    // one extra row means the graph is over budget and the distributed
-    // loop runs (the collected sample is discarded). Edge ORDER never
-    // reaches a value (decimal sums are exact; output order is the
-    // caller's ORDER BY).
-    // collect-bound: probe-guarded: limit(maxLocalEdges+1) bounds the collect; the distributed loop is the fallback
-    val probeRows = edges.select(col("src"), col("dst"))
-      .limit(maxLocalEdges + 1).collect()
-    if (probeRows.length <= maxLocalEdges)
-      return hitsLocal(edges, probeRows, iters)
+    // Edge ORDER never reaches a value (decimal sums are exact; output
+    // order is the caller's ORDER BY).
+    val local = LocalRoute.collectWithin(edges.select(col("src"), col("dst")),
+      maxLocalEdges)
+    if (local.isDefined) return hitsLocal(edges, local.get, iters)
     val verts = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id")))
       .distinct().localCheckpoint(true)
@@ -88,47 +83,29 @@ object Hits {
 
   /** Bounded-collect twin of [[hits]] — mirrors the DF route 1:1:
     * scatter sums accumulate as exact decimal(38,18) of the per-edge
-    * doubles (Spark's double→decimal cast = BigDecimal.valueOf +
-    * setScale(18, HALF_UP)), missing vertices fill 0.0, norms are
+    * doubles ([[SparkNumerics]]: a NaN/Inf term is null and skipped,
+    * as the cast and `sum` do), missing vertices fill 0.0, norms are
     * √(exact decimal sum of squares), the normalize division is plain
     * UNGUARDED double (a zero norm yields Inf/NaN on both routes), and
-    * the 6dp emission uses Spark Round semantics (Inf/NaN unchanged).
+    * the 6dp emission is Spark's ROUND.
     */
   private def hitsLocal(edges: DataFrame,
       eRows: Array[org.apache.spark.sql.Row], iters: Int): DataFrame = {
-    import java.math.{BigDecimal => JBig, RoundingMode}
     val spark = edges.sparkSession
     val verts: Array[Any] = eRows.flatMap(r => Seq(r.get(0), r.get(1))).distinct
     val idx: Map[Any, Int] = verts.zipWithIndex.toMap
     val nv = verts.length
     val srcs = eRows.map(r => idx(r.get(0)))
     val dsts = eRows.map(r => idx(r.get(1)))
-    // Spark's double→decimal cast yields NULL on NaN/Inf (ansi off) and
-    // sum() skips nulls — mirror that instead of throwing (reachable
-    // only through a zero-norm round on a degenerate graph)
-    def dec(x: Double): JBig =
-      if (x.isNaN || x.isInfinite) null
-      else JBig.valueOf(x).setScale(18, RoundingMode.HALF_UP)
     // one scatter: per outIdx vertex, exact-decimal sum of x(keyIdx),
     // missing vertices 0.0, then the unguarded 2-norm normalize
     def step(keys: Array[Int], outs: Array[Int],
         x: Array[Double]): Array[Double] = {
-      val acc = Array.fill(nv)(JBig.ZERO)
+      val acc = Array.fill(nv)(java.math.BigDecimal.ZERO)
       var i = 0
-      while (i < srcs.length) {
-        val d = dec(x(keys(i)))
-        if (d != null) acc(outs(i)) = acc(outs(i)).add(d)
-        i += 1
-      }
+      while (i < srcs.length) { PowerCore.sumInto(acc, outs(i), x(keys(i))); i += 1 }
       val s = acc.map(_.doubleValue)
-      var n2 = JBig.ZERO
-      i = 0
-      while (i < nv) {
-        val d = dec(s(i) * s(i))
-        if (d != null) n2 = n2.add(d)
-        i += 1
-      }
-      val nrm = math.sqrt(n2.doubleValue)
+      val nrm = PowerCore.norm(s)
       s.map(_ / nrm)
     }
     var h = Array.fill(nv)(1.0 / math.sqrt(nv.toDouble))
@@ -139,9 +116,7 @@ object Hits {
       h = step(dsts, srcs, a) // hub: out-edge authority mass
       it += 1
     }
-    def round6(x: Double): Double =
-      if (x.isNaN || x.isInfinite) x
-      else JBig.valueOf(x).setScale(6, RoundingMode.HALF_UP).doubleValue
+    def round6(x: Double): Double = SparkNumerics.round(x, 6)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     val idField = edges.schema("src").copy(name = "id")

@@ -562,8 +562,7 @@ object Multimodal {
           (0 until cells).iterator.map { c =>
             val v =
               if (cnts(c) == 0L) 0.0
-              else java.math.BigDecimal.valueOf(sums(c) * 1.0 / cnts(c))
-                .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+              else graft.lsa.SparkNumerics.round(sums(c) * 1.0 / cnts(c), 6)
             Row(id, modality, c, v)
           }
         }
@@ -602,8 +601,7 @@ object Multimodal {
           (0 until cells).iterator.map { c =>
             val v =
               if (cnts(c) == 0L) 0.0
-              else java.math.BigDecimal.valueOf(sums(c) * 1.0 / cnts(c))
-                .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+              else graft.lsa.SparkNumerics.round(sums(c) * 1.0 / cnts(c), 6)
             Row(id, modality, c, v)
           }
         }

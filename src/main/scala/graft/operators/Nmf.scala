@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Fnv
+import graft.lsa.SparkNumerics
 
 /** Nonnegative matrix factorization of the TF-IDF doc×term matrix by
   * Lee–Seung multiplicative updates (NIPS 2000) — the classic
@@ -63,9 +64,8 @@ object Nmf {
     * w), H (topic, term, h)), both 6dp DECIMAL.
     *
     * Scale routing (r15; the Hits/PowerLsa pattern): under the nnz
-    * budget, ONE bounded collect (limit(budget+1) caps the driver
-    * footprint by construction) feeds a local loop walking the
-    * IDENTICAL exact-decimal multiplicative updates
+    * budget, ONE bounded collect ([[LocalRoute.collectWithin]]) feeds a
+    * local loop walking the IDENTICAL exact-decimal multiplicative updates
     * (NmfLocalTwinSpec pins the routes bit-equal) — at gate scale this
     * replaces 2·rounds eager-checkpoint jobs of 3 grouped matrix
     * products each, for every ls10/ls11/ls13-class consumer. Above the
@@ -75,11 +75,9 @@ object Nmf {
       maxLocalNnz: Int = 2000000): (DataFrame, DataFrame) = {
     val spark = v.sparkSession
     import spark.implicits._
-    // collect-bound: probe-guarded: limit(maxLocalNnz+1) bounds the collect; the distributed loop is the fallback
-    val probeRows = v.select(col("doc_id"), col("term"), col("v"))
-      .limit(maxLocalNnz + 1).collect()
-    if (probeRows.length <= maxLocalNnz)
-      return factorizeLocal(v, probeRows, k, rounds)
+    val local = LocalRoute.collectWithin(
+      v.select(col("doc_id"), col("term"), col("v")), maxLocalNnz)
+    if (local.isDefined) return factorizeLocal(v, local.get, k, rounds)
     val vp = v.persist()
     val topics = spark.range(k).select($"id".cast("int").as("topic"))
     var w = vp.select($"doc_id").distinct()
@@ -145,8 +143,8 @@ object Nmf {
     *    decimal);
     *  - every matrix product is an EXACT decimal sum of exact
     *    decimal×decimal products (scale 6 × scale 6 → scale 12), cast
-    *    to double, Spark-rounded HALF_UP at 6dp, re-held at scale 6 —
-    *    matching `round(sum(a*b).cast("double"), 6).cast(dec)`;
+    *    to double, then `round(_, 6).cast(decimal(18,6))` through
+    *    [[graft.lsa.SparkNumerics]];
     *  - the multiplicative step is the same plain-double
     *    `x·num/(den+1e-9)` rounded at 6dp.
     * Sum order never reaches a value (decimal addition is exact).
@@ -154,7 +152,7 @@ object Nmf {
   private def factorizeLocal(v: DataFrame,
       rows: Array[org.apache.spark.sql.Row], k: Int,
       rounds: Int): (DataFrame, DataFrame) = {
-    import java.math.{BigDecimal => JBig, RoundingMode}
+    import java.math.{BigDecimal => JBig}
     val spark = v.sparkSession
     val docIds: Array[Any] = rows.map(_.get(0)).distinct
     val terms: Array[String] = rows.map(_.getString(1)).distinct
@@ -166,16 +164,14 @@ object Nmf {
     val ct = rows.map(r => tIdx(r.getString(1)))
     val cv: Array[JBig] = rows.map(_.getDecimal(2))
 
-    // Spark round(double, 6) then cast decimal(18,6): HALF_UP on the
-    // shortest-decimal repr (valueOf); Inf/NaN would cast to null —
-    // unreachable here (den+1e-9 > 0 keeps every divide finite)
-    def r6(x: Double): JBig =
-      JBig.valueOf(x).setScale(6, RoundingMode.HALF_UP)
+    // round(x, 6).cast("decimal(18,6)"); NaN/Inf are unreachable here
+    // (den+1e-9 > 0 keeps every divide finite)
+    def r6(x: Double): JBig = SparkNumerics.dec(SparkNumerics.round(x, 6), 18, 6)
     def init(key: String): JBig = {
       val hv = graft.functions.Fnv.hashUtf8(
         org.apache.spark.unsafe.types.UTF8String.fromString(key))
       val m = ((hv % 1000L) + 1000L) % 1000L
-      r6((m + 1).toDouble / 1000.0)
+      SparkNumerics.dec((m + 1).toDouble / 1000.0, 18, 6)
     }
     def stepped(x: JBig, num: JBig, den: JBig): JBig =
       r6(x.doubleValue * num.doubleValue / (den.doubleValue + 1e-9))

@@ -29,9 +29,7 @@ object QualityModel {
   /** mu = 6dp feature means; w = (bias, f1, f2, f3) 6dp weights. */
   final case class Model(mu: Array[Double], w: Array[Double])
 
-  private def round6(d: Double): Double =
-    java.math.BigDecimal.valueOf(d)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  private def round6(d: Double): Double = graft.lsa.SparkNumerics.round(d, 6)
 
   /** (doc_id, h1, h2, h3, y): ln-length, digit ratio, alpha ratio as
     * 6dp DECIMALs plus the hard length/digit gate label. Narrow — safe

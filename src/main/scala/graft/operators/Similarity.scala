@@ -373,16 +373,13 @@ object Similarity {
     // keep-previous empty-cluster rule — LloydLocalTwinSpec pins the two
     // routes row-equal), replacing 2·lloydIters window+agg rounds of
     // eager checkpoints per call. IVFADC calls this once per subspace,
-    // so s15-class queries save ~5× that. Probe and collect are FUSED:
-    // orderBy(id).limit(budget+1) caps the driver footprint by
-    // construction (a distributed TakeOrdered, not a global sort) — if
-    // the limit did not truncate, these are ALL the rows in Spark's own
-    // id order; one extra row routes to the unchanged distributed loop
-    // (the 100 TB path) and the sample is discarded.
-    // collect-bound: probe-guarded: limit(maxLocalRows+1) bounds the collect; the distributed loop is the fallback
-    val probeRows = v0.orderBy(col("id")).limit(maxLocalRows + 1).collect()
-    if (probeRows.length <= maxLocalRows)
-      return lloydClustersLocal(v0, probeRows, nClusters, lloydIters)
+    // so s15-class queries save ~5× that. The bounded collect runs the
+    // orderBy(id) inside its job (a distributed TakeOrdered, not a
+    // global sort), so the rows arrive in Spark's own id order; over
+    // budget, the unchanged distributed loop runs (the 100 TB path).
+    val local = LocalRoute.collectWithin(v0.orderBy(col("id")), maxLocalRows)
+    if (local.isDefined)
+      return lloydClustersLocal(v0, local.get, nClusters, lloydIters)
     val v = v0
     var centroids = v.orderBy(col("id")).limit(nClusters)
       .select(col("id").as("cid"), col("vec").as("cv"))
@@ -427,57 +424,62 @@ object Similarity {
     *    (orderBy(id) runs in the collect job, so id-type ordering —
     *    UTF8 binary for strings, numeric otherwise — is Spark's own);
     *  - assign = [[graft.functions.SqDist]]'s strict left-fold
-    *    Σ(aᵢ−bᵢ)², argmin scanning clusters ASCENDING with strict `<`
-    *    (ties keep the lowest cluster — exactly row_number over
-    *    (dist, cluster));
-    *  - means = exact decimal(28,14) per-coordinate sums (HALF_UP at
-    *    14 fractional digits = Spark's double→decimal cast; a value
-    *    whose rounded precision exceeds 28 digits becomes null there
-    *    and is SKIPPED here, matching sum-over-null semantics) divided
-    *    in double by the member count;
+    *    Σ(aᵢ−bᵢ)², argmin in row_number's (dist, cluster) order: a null
+    *    distance (a null centroid coordinate) first, NaN after every
+    *    number, ties to the lowest cluster;
+    *  - means = exact decimal(28,14) per-coordinate sums through
+    *    [[graft.lsa.SparkNumerics]] (a NaN/Inf coordinate casts to null
+    *    and is skipped; a coordinate with no non-null term is a null
+    *    mean, as `sum` gives) divided in double by the member count;
     *  - empty clusters keep their previous centroid.
     */
   private def lloydClustersLocal(v: DataFrame,
       rows: Array[org.apache.spark.sql.Row], nClusters: Int,
       lloydIters: Int): (DataFrame, DataFrame) = {
-    import java.math.{BigDecimal => JBig, RoundingMode}
+    import java.math.{BigDecimal => JBig}
+    import graft.lsa.SparkNumerics
     val spark = v.sparkSession
     val ids: Array[Any] = rows.map(_.get(0))
     val vs: Array[Array[Double]] = rows.map(_.getSeq[Double](1).toArray)
     val n = vs.length
     val kEff = math.min(nClusters, n)
-    var cents: Array[Array[Double]] = Array.tabulate(kEff)(i => vs(i))
+    // boxed: a centroid coordinate can be null (see means below)
+    var cents: Array[Array[java.lang.Double]] =
+      Array.tabulate(kEff)(i => vs(i).map(Double.box))
 
-    def sqd(a: Array[Double], b: Array[Double]): Double = {
-      // SqDist.compute's strict left-fold (arrays here are same-dim,
-      // null-free doubles — the DF route would NULL on anything else)
+    def sqd(a: Array[Double], b: Array[java.lang.Double]): Double = {
+      // SqDist.compute's strict left-fold (data vectors here are
+      // same-dim and null-free). A null centroid coordinate makes
+      // SqDist null, which row_number's ascending order puts FIRST:
+      // encoded as -Inf, below every real (non-negative) distance.
       var s = 0.0
       var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+      while (i < a.length) {
+        if (b(i) == null) return Double.NegativeInfinity
+        val d = a(i) - b(i); s += d * d; i += 1
+      }
       s
     }
-    def assignAll(cs: Array[Array[Double]]): Array[Int] =
+    def assignAll(cs: Array[Array[java.lang.Double]]): Array[Int] =
       vs.map { x =>
         var best = 0
         var bd = sqd(x, cs(0))
         var c = 1
         while (c < cs.length) {
           val d = sqd(x, cs(c))
-          if (d < bd) { bd = d; best = c }
+          // Double.compare orders NaN after every number, as Spark
+          // sorts; a tie keeps the lower cluster
+          if (java.lang.Double.compare(d, bd) < 0) { bd = d; best = c }
           c += 1
         }
         best
       }
-    def dec14(x: Double): JBig = {
-      val b = JBig.valueOf(x).setScale(14, RoundingMode.HALF_UP)
-      if (b.precision > 28) null else b // Spark cast overflow -> null
-    }
 
     var it = 0
     while (it < lloydIters) {
       val asg = assignAll(cents)
       val dim = if (n > 0) vs(0).length else 0
-      val sums = Array.fill(kEff, dim)(JBig.ZERO)
+      val sums = Array.fill[JBig](kEff, dim)(null)
       val cnts = new Array[Long](kEff)
       var i = 0
       while (i < n) {
@@ -485,22 +487,21 @@ object Similarity {
         cnts(c) += 1
         var p = 0
         while (p < dim) {
-          val d = dec14(vs(i)(p))
-          if (d != null) sums(c)(p) = sums(c)(p).add(d)
+          sums(c)(p) = SparkNumerics.plus(sums(c)(p), SparkNumerics.dec(vs(i)(p), 28, 14))
           p += 1
         }
         i += 1
       }
       cents = Array.tabulate(kEff)(c =>
         if (cnts(c) == 0L) cents(c) // empty keeps previous
-        else Array.tabulate(dim)(p =>
-          sums(c)(p).doubleValue / cnts(c).toDouble))
+        else sums(c).map(s =>
+          if (s == null) null else Double.box(s.doubleValue / cnts(c).toDouble)))
       it += 1
     }
     val finalAsg = assignAll(cents)
 
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
     val idField = v.schema("id")
     val vecField = v.schema("vec")
     val centroidsDf = spark.createDataFrame(
@@ -508,7 +509,8 @@ object Similarity {
         cents.toIndexedSeq.zipWithIndex.map { case (cv, c) =>
           Row(c, cv.toSeq) }, 1),
       StructType(Seq(StructField("cluster", IntegerType, nullable = false),
-        vecField.copy(name = "cv"))))
+        vecField.copy(name = "cv",
+          dataType = ArrayType(DoubleType, containsNull = true)))))
     val assignedDf = spark.createDataFrame(
       spark.sparkContext.parallelize(
         ids.indices.map(i => Row(ids(i), vs(i).toSeq, finalAsg(i))), 1),

@@ -184,8 +184,8 @@ object RougeQueries extends QueryProvider {
           .join(docs.select(($"doc_id" - 250).as("pid"), $"text".as("ref")), "pid")
           .select($"sys", $"ref").as[(String, String)]
         val m = pairs.select(graft.rouge.RougeMean.rouge1(stem = false).toColumn).head()
-        def r6(x: Double) = // HALF_UP to match round() on both engines
-          BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        def r6(x: Double) = // round() on both engines
+          graft.lsa.SparkNumerics.round(x, 6)
         Seq((r6(m.precision), r6(m.recall), r6(m.f1)))
           .toDF("avg_p", "avg_r", "avg_f")
       },

@@ -63,9 +63,7 @@ object PlanAudit {
     "c27_doremi_weights" -> "model table: per-domain weight iterates (group domain = |sources|)",
     "d03_jaccard_pairs" -> "truth leg: bounded slice (doc_id<2000) non-equi self-join",
     "d06_cosine_neardup" -> "truth leg: deliberate all-pairs cosine reference (STRESS-exempt quadratic)",
-    "d12_semantic_dedup" -> "model table: Lloyd k=16 centroid/mean tables per iteration",
     "d17_threshold_yield" -> "model table: threshold grid joined to pair stats",
-    "e04_pq_codes" -> "model table: per-subspace PQ codebooks (k=16 centroids each)",
     "e06_pca_project" -> "model table: top-k PCA component rows",
     "s01_cosine_topk" -> "query batch: id<5 slice broadcast against the corpus",
     "s03_ivf_topk" -> "query batch + model table: id<5 slice, k=16 IVF centroids",
@@ -74,13 +72,11 @@ object PlanAudit {
     "s08_pq_adc" -> "query batch + model table: per-subspace codebooks and LUTs",
     "s11_hybrid_rrf" -> "query batch: bounded query slice for both retrieval legs",
     "s12_ann_recall" -> "query batch: brute-force truth leg over the bounded query slice",
-    "s14_cluster_balanced_sample" -> "model table: per-cluster caps (k=16 clusters)",
     "s15_ivfadc" -> "query batch + model table: IVF centroids + PQ codebooks/LUTs",
     "s16_matryoshka_recall" -> "query batch: id<k slice at each prefix dimension",
     "s17_ivfadc_recall" -> "query batch + model table: recall eval of s15's bounded sides",
     "s18_hard_negatives" -> "query batch: bounded anchor slice broadcast to the corpus",
     "s19_ann_ndcg" -> "query batch: bounded query slice for the NDCG eval",
-    "s21_cluster_balance" -> "model table: per-cluster size/balance stats (k clusters)",
     "sk12_theta_setops" -> "model table: theta-sketch register tables (k-bounded)",
     "sm14_stream_drift" -> "model table: reference-window histogram (bin-bounded)")
 

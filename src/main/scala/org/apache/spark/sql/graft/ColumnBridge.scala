@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into Spark 4's classic-API Column↔Expression conversions,
-  * which are `private[sql]` since the Spark Connect refactor. Living in
-  * the `org.apache.spark.sql` namespace is the standard extension-library
+  * which are `private[sql]` since the Spark Connect refactor, and into
+  * Spark's `private[sql]` error constructors. Living in the
+  * `org.apache.spark.sql` namespace is the standard extension-library
   * technique for registering custom Catalyst expressions as Columns.
   */
 object ColumnBridge {
@@ -21,4 +22,13 @@ object ColumnBridge {
     org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** Spark's own NUMERIC_VALUE_OUT_OF_RANGE error for a decimal cast
+    * whose rounded value does not fit DECIMAL(precision, scale).
+    */
+  def decimalOutOfRange(value: java.math.BigDecimal, precision: Int,
+      scale: Int): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors
+      .cannotChangeDecimalPrecisionError(
+        org.apache.spark.sql.types.Decimal(value), precision, scale)
 }

@@ -34,4 +34,8 @@ class HitsLocalTwinSpec extends SparkSpec {
     val byId = local.map(t => t._1 -> (t._2, t._3)).toMap
     assert(byId(5L)._1 == 0.0 && byId(4L)._2 == 0.0)
   }
+
+  test("an Int.MaxValue budget routes local without overflowing") {
+    assert(rows(maxLocalEdges = Int.MaxValue) == rows(maxLocalEdges = 500000))
+  }
 }

@@ -42,6 +42,34 @@ class LloydLocalTwinSpec extends SparkSpec {
     assert(cLocal.size == 3 && aLocal.size == 8)
   }
 
+  test("an Int.MaxValue budget routes local without overflowing") {
+    assert(run(maxLocalRows = Int.MaxValue) == run(maxLocalRows = 200000))
+  }
+
+  test("a NaN coordinate in the lowest-id vector matches the distributed loop") {
+    // the NaN vector seeds centroid 0: every distance to it is NaN
+    // (ordered last), its own mean coordinate is a null sum (a null
+    // distance, ordered first) — the twin must walk the same rows
+    val withNaN = vecs.as[(Long, Seq[Double])].map { case (id, v) =>
+      (id, if (id == 0L) Seq(Double.NaN, v(1)) else v) }.toDF("id", "vec")
+    def bits(xs: Seq[Any]) = xs.map {
+      case null => None
+      case d: Double => Some(java.lang.Double.doubleToLongBits(d))
+    }
+    def runNaN(iters: Int, maxLocalRows: Int) = {
+      val (cents, asg) = Similarity.lloydClusters(withNaN, 3, iters, maxLocalRows)
+      (cents.schema, asg.schema, cents.orderBy("cluster").collect()
+        .map(r => (r.getInt(0), bits(r.getSeq[Any](1)))).toSeq,
+        asg.orderBy("id").collect()
+          .map(r => (r.getLong(0), bits(r.getSeq[Any](1)), r.getInt(2))).toSeq)
+    }
+    for (iters <- Seq(1, 2)) { // 1 ends on the null coordinate
+      val local = runNaN(iters, maxLocalRows = 200000)
+      assert(local == runNaN(iters, maxLocalRows = -1))
+      assert(local._4.size == 8)
+    }
+  }
+
   test("ivfadc consumer runs deterministically on the local route") {
     // the heaviest lloyd consumer: full IVFADC over the same fixture
     // (route equality is pinned above at the lloydClusters surface —

@@ -36,4 +36,8 @@ class NmfLocalTwinSpec extends SparkSpec {
     assert(hLocal == hDist)
     assert(wLocal.size == 4 * 3 && hLocal.size == 3 * 4)
   }
+
+  test("an Int.MaxValue budget routes local without overflowing") {
+    assert(run(maxLocalNnz = Int.MaxValue) == run(maxLocalNnz = 2000000))
+  }
 }
