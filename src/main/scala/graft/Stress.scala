@@ -120,20 +120,7 @@ object Stress {
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val filter = args.lift(1).map(_.r)
     val src = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .withExtensions(new graft.functions.GraftExtensions)
-        .master(s"local[$cpus]")
-        .appName("graft-stress")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def newSession(): SparkSession = LocalSession("graft-stress", 32)
     var spark = newSession()
 
     val nCopies = args.lift(2).map(_.toInt).getOrElse(10)

@@ -39,16 +39,7 @@ object Verify {
     val nameFilter = args.lift(2).map(_.r)
     def keep(name: String): Boolean =
       nameFilter.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-verify", 4, "spark.scheduler.mode" -> "FAIR")
     new java.io.File(outDir).mkdirs()
     val t0 = System.nanoTime()
     val work = SparkEntry.queries.toSeq.filter(kv => keep(kv._1)).sortBy(_._1)

@@ -12,14 +12,17 @@ import graft.text.{Lemmatizer, StopWords}
   *
   *  - LSA token pipeline: `[a-zA-Z]+` on lowercased text → NLTK stopword
   *    filter → length ≥ 3 → optional lemmatizer (TextFunctions.lsaTokens);
-  *  - vocabulary ordered (df desc, token asc), 0-based idx, minDf floor;
-  *  - cell value tf · log10(N/df) (quirk Q3), doc rows ordered by id;
+  *  - vocabulary ordered (df desc, token asc), 0-based idx, every token
+  *    kept (no df floor);
+  *  - cell value tf · log10(N/df) (quirk Q3); the dense matrix stacks the
+  *    doc rows in ascending id order, which is the distributed path's
+  *    row-index order, since there the id IS the row index;
   *  - sign convention: max-|V-loading| entry positive per concept (Q9/H2),
   *    scanning idx ascending with strict `>` (first max wins);
   *  - loadings quantized to the 1e-6 ordering grid before top-k
   *    tie-breaks (solver-noise-proof determinism);
   *  - keywords: top nKeywords by (-loading, token); docs: top nDocs by
-  *    (-loading, row index).
+  *    (-loading, id).
   *
   * `LocalLsaSpec` asserts this against the distributed `Lsa.concepts`
   * output on a shared fixture.
@@ -52,10 +55,10 @@ object LocalLsa {
       cfg: Lsa.Config = Lsa.Config()): Seq[Concept] = {
     val tok = docs.map { case (id, t) => id -> lsaTokens(t, cfg.lemma) }
       .filter(_._2.nonEmpty)
-    // vocabulary: (df desc, token asc), df floor, 0-based idx
+    // vocabulary: (df desc, token asc), 0-based idx
     val df = tok.flatMap { case (id, ts) => ts.distinct.map(_ -> id) }
       .groupBy(_._1).map { case (t, xs) => t -> xs.size.toLong }
-    val vocabArr = df.filter(_._2 >= cfg.minDf).toSeq
+    val vocabArr = df.toSeq
       .sortBy { case (t, d) => (-d, t) }.map(_._1).toArray
     val vocab = vocabArr.zipWithIndex.toMap
     val nDocs = tok.size
@@ -70,10 +73,7 @@ object LocalLsa {
     tok.foreach { case (id, ts) =>
       val row = rowOf(id)
       ts.groupBy(identity).foreach { case (t, dup) =>
-        vocab.get(t).foreach { idx =>
-          val idf = math.log10(nDocs.toDouble / df(t))
-          m(row, idx) = dup.size * idf
-        }
+        m(row, vocab(t)) = dup.size * math.log10(nDocs.toDouble / df(t))
       }
     }
     val r = bsvd.reduced(m)

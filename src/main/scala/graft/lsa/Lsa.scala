@@ -2,8 +2,10 @@ package graft.lsa
 
 import org.apache.spark.mllib.linalg.{Vectors => MlVectors}
 import org.apache.spark.mllib.linalg.distributed.{IndexedRow, IndexedRowMatrix}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.text.TextFunctions
 import graft.tfidf.TfIdf
@@ -24,7 +26,11 @@ import graft.tfidf.TfIdf
   *    its max-|loading| V-entry is positive, making signed-loading top-k
   *    deterministic across runs/backends.
   *  - Vocabulary order is pinned to (df desc, token asc) — deterministic,
-  *    unlike the reference's driver-side `set()` (quirk Q6).
+  *    unlike the reference's driver-side `set()` (quirk Q6). Every token
+  *    is kept: there is no document-frequency floor.
+  *  - The reference fixes its matrix row order with one sort; here the
+  *    caller's document id IS the matrix row index, so there is one
+  *    numbering and no renumbering pass.
   */
 object Lsa {
 
@@ -32,57 +38,13 @@ object Lsa {
       k: Int = 5,
       nKeywords: Int = 3,
       nDocs: Int = 3,
-      lemma: Boolean = true,
-      /** Drop vocabulary entries with document frequency below this.
-        * 1 keeps everything (reference semantics); at corpus scale a
-        * higher floor bounds the local V matrix (|vocab| × k) and the
-        * broadcast vocabulary table.
-        */
-      minDf: Long = 1L,
-      /** In-query solver verification, SCALE-INDEPENDENT: after the SVD,
-        * one extra distributed pass checks every returned (σⱼ, vⱼ)
-        * satisfies the eigenpair identity ‖AᵀAvⱼ − σⱼ²vⱼ‖ ≤ tol·σⱼ² —
-        * i.e. the ARPACK output is a genuine singular triple of THIS
-        * matrix with the claimed σ, whatever the corpus size. (U needs no
-        * separate check: computeSVD derives U = AVS⁻¹ from V.) This is
-        * the at-scale complement to the ≤2000-doc dense-LAPACK mirror in
-        * ls08 and the power-twin σ cross-check in Stress: those pin the
-        * top-k SELECTION on collectable corpora; the residual gate pins
-        * solver integrity everywhere, including 100 TB. Cost: one
-        * treeAggregate over the cached row RDD with a |vocab|×k
-        * accumulator — negligible next to the ~dozens of ARPACK matvec
-        * jobs that precede it.
-        */
-      verifyResiduals: Boolean = true,
-      /** Max relative eigen-residual ‖AᵀAvⱼ−σⱼ²vⱼ‖/σⱼ². Measured ~1e-12
-        * at sf0.1 (ARPACK tol 1e-10); 1e-6 leaves float headroom without
-        * letting a broken solver through.
-        */
-      residualTol: Double = 1e-6)
+      lemma: Boolean = true)
 
   final case class Concept(
       concept: Int,
       singular_value: Double,
       keywords: Seq[String],
       doc_ids: Seq[Long])
-
-  /** Vocabulary table (token, df, idx) ordered by (df desc, token), with an
-    * optional document-frequency floor. Numbering is distributed: the sorted
-    * table is range-partitioned and `zipWithIndex` assigns contiguous ids
-    * per partition — no single-partition global window (the same pattern as
-    * the docIdx numbering in [[concepts]]).
-    */
-  def vocabulary(tf: DataFrame, minDf: Long = 1L): DataFrame = {
-    val spark = tf.sparkSession
-    import spark.implicits._
-    tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf)
-      .orderBy(desc("df"), col("token"))
-      .select(col("token"), col("df")).as[(String, Long)].rdd
-      .zipWithIndex()
-      .map { case ((token, df), idx) => (token, df, idx.toInt) }
-      .toDF("token", "df", "idx")
-  }
 
   /** Relative eigen-residuals ‖AᵀAvⱼ − σⱼ²vⱼ‖ / σⱼ² of a claimed
     * factorization against the ACTUAL matrix, computed distributed in
@@ -96,7 +58,7 @@ object Lsa {
     * loadings; `s`: claimed singular values (length = #concepts).
     */
   def eigenResiduals(
-      rows: org.apache.spark.rdd.RDD[IndexedRow],
+      rows: RDD[IndexedRow],
       v: (Int, Int) => Double, s: Array[Double],
       vocabSize: Int): Array[Double] = {
     val kEff = s.length
@@ -146,219 +108,172 @@ object Lsa {
     }
   }
 
+  /** Max relative eigen-residual ‖AᵀAvⱼ−σⱼ²vⱼ‖/σⱼ² the in-query gate in
+    * [[concepts]] accepts. Measured ~1e-12 at sf0.1 (ARPACK tol 1e-10);
+    * 1e-6 leaves float headroom without letting a broken solver through.
+    */
+  private val ResidualTol = 1e-6
+
   /** Concepts from a (id: long, text: string) corpus. Returns a LOCAL
     * small result (k rows) as a DataFrame.
+    *
+    * The caller's id is the matrix row index (`IndexedRow.index`) as is,
+    * whatever its range: `computeSVD` derives σ and V from the row vectors
+    * alone and carries each index onto its U row, so no renumbering is
+    * needed, and the top-doc tie-break (ascending index) is ascending id.
+    *
+    * Every result is checked in-query, at any corpus size: one extra
+    * distributed pass ([[eigenResiduals]]) proves each returned (σⱼ, vⱼ)
+    * is a genuine singular triple of THIS matrix (‖AᵀAvⱼ − σⱼ²vⱼ‖ ≤
+    * 1e-6·σⱼ²); U needs no separate check, since computeSVD derives
+    * U = AVS⁻¹ from V. This complements the ≤2000-doc dense-LAPACK mirror
+    * in ls08 and the power-twin σ cross-check in Stress, which pin the
+    * top-k SELECTION on collectable corpora.
     */
   def concepts(docs: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config()): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    // tok is NOT persisted (r15): on the dense-id path its ONLY consumer
-    // is the tf build below (one pass), so the cache write of the
-    // corpus-sized token arrays bought nothing; the non-dense docIdx —
-    // previously tok's second reader — now derives its id set from the
-    // (persisted, narrower) tf table instead.
+    // tok is NOT persisted: its ONLY consumer is the tf build below
+    // (one pass), so a cache of the corpus-sized token arrays buys nothing.
     val tok = graft.Par.fanOut(docs)
       .select(col(idCol).cast("long").as("id"),
         TextFunctions.lsaTokens(col(textCol), cfg.lemma).as("tokens"))
       .filter(size(col("tokens")) > 0)
     val tf = TfIdf.termFrequencies(tok, "id", "tokens").persist() // feeds vocab, idf, cells
-    // ONE job for every corpus scalar this method needs (r14; the
-    // count_distinct(token) leg dropped in r15 — vocabSize now comes
-    // from the vocabulary collect below):
-    //  - nnz sizes the SVD row partitioning,
-    //  - nDocs feeds IDF and k,
-    //  - min/max id detect ids that are already 0..nDocs-1.
-    val (nnz, nDocs, minId, maxId) = {
-      val row = tf.agg(count(lit(1)), count_distinct(col("id")),
-        min(col("id")), max(col("id"))).head()
-      (row.getLong(0), row.getLong(1),
-        if (row.isNullAt(2)) -1L else row.getLong(2),
-        if (row.isNullAt(3)) -1L else row.getLong(3))
-    }
-    // Vocabulary COLLECTED once, (df desc, token asc)-ordered by the same
-    // Spark sort the old distributed table used; idx = collect position —
-    // identical numbering to vocabulary()'s range-partitioned zipWithIndex
-    // over the same total order (token is unique within the groupBy, so
-    // the order is total). One job replaces three (the zipWithIndex
-    // materialization, the vocabArr collect, and the broadcast-build job
-    // over the vocab plan — the join side below is now a LocalRelation).
-    // The collect itself is the SAME vocab-sized driver footprint the
-    // solver already holds (V is |vocab|×k) and vocabArr already paid.
-    // collect-bound: vocabulary: (token, df) rows, Heaps-bounded; the local solver already holds vocab-sized vectors
-    val vocabRows: Array[(String, Long)] =
-      tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-        .filter(col("df") >= cfg.minDf)
-        .orderBy(desc("df"), col("token"))
-        .select(col("token"), col("df")).as[(String, Long)].collect()
-    val vocabSize = vocabRows.length
-    val k = math.min(cfg.k, math.min(nDocs, vocabSize.toLong).toInt)
-    if (k <= 0) { // degenerate corpus (no tokens survive the pipeline)
-      tf.unpersist()
-      return spark.createDataFrame(Seq.empty[Concept])
-    }
-
-    // doc ids -> dense matrix row indices (deterministic by id order).
-    //
-    // DENSE-ID FAST PATH (r14): when the surviving ids are exactly
-    // 0..nDocs-1 (min 0, max nDocs-1, nDocs distinct — the common
-    // harness/corpus layout), the id→row map by id-ascending order IS
-    // the identity, so the whole docIdx machinery (a sort + eager
-    // zipWithIndex job, a doc-count-sized broadcast join, and the
-    // winner back-map collect below) is skipped: row = id. Values are
-    // unchanged by construction — zipWithIndex over ids sorted
-    // ascending assigns row i to id i precisely when the range is
-    // dense. Non-dense corpora take the distributed numbering exactly
-    // as before, at any scale.
-    val denseIds = minId == 0L && maxId == nDocs - 1L
-    lazy val docIdx = {
-      import spark.implicits._
-      // id set from the persisted tf (distinct of its id column == the
-      // doc ids with >= 1 token, i.e. exactly tok's ids) — tok itself is
-      // no longer cached, and re-deriving it would re-run the lemmatizer
-      tf.select(col("id")).distinct().orderBy(col("id")).as[Long].rdd
-        .zipWithIndex().toDF("id", "row")
-        .persist() // used by the cell join and the row->id back-map
-    }
-
-    // IDF from the collected vocabulary (r14/r15): the join side is a
-    // LOCAL relation carrying (token, idx, df) — no distributed subtree
-    // to execute under the broadcast build — and the idf expression
-    // below is byte-for-byte TfIdf.idfCol (log10(N/df)), evaluated in
-    // the plan exactly as before.
-    val vocabLocal = spark.createDataFrame(
-      vocabRows.toIndexedSeq.zipWithIndex.map { case ((t, df), i) => (t, df, i) })
-      .toDF("token", "df", "idx")
-    val weighted = tf
-      .join(broadcast(vocabLocal.select(col("token"), col("idx"),
-        TfIdf.idfCol(nDocs, col("df")).as("idf"))), "token")
-    val cells =
-      if (denseIds)
-        weighted.select(col("id").as("row"), col("idx"), (col("tf") * col("idf")).as("v"))
-      else {
-        // docIdx is doc-count-sized: broadcast while it fits a sane
-        // driver budget (~16 B/row → 1M docs ≈ 60-100 MB hashed) so the
-        // cell join is map-side; at corpus scale it falls back to a
-        // shuffled join.
-        val docIdxSide =
-          if (nDocs <= 1000000L) broadcast(docIdx) else docIdx
-        weighted.join(docIdxSide, "id")
-          .select(col("row"), col("idx"), (col("tf") * col("idf")).as("v"))
+    var rows: RDD[IndexedRow] = null
+    // released on every exit, including a failed job or the residual gate
+    try {
+      // ONE job for both corpus scalars: nnz sizes the SVD row
+      // partitioning, nDocs feeds IDF and k (vocabSize comes from the
+      // vocabulary collect below).
+      val (nnz, nDocs) = {
+        val row = tf.agg(count(lit(1)), count_distinct(col("id"))).head()
+        (row.getLong(0), row.getLong(1))
       }
+      // Vocabulary COLLECTED once, (df desc, token asc)-ordered by a Spark
+      // sort (token is unique within the groupBy, so the order is total);
+      // idx = collect position. One job, and the join side below is a
+      // LocalRelation. The collect is the SAME vocab-sized driver footprint
+      // the solver already holds (V is |vocab|×k).
+      // collect-bound: vocabulary: (token, df) rows, Heaps-bounded; the local solver already holds vocab-sized vectors
+      val vocabRows: Array[(String, Long)] =
+        tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+          .orderBy(desc("df"), col("token"))
+          .select(col("token"), col("df")).as[(String, Long)].collect()
+      val vocabSize = vocabRows.length
+      val k = math.min(cfg.k, math.min(nDocs, vocabSize.toLong).toInt)
+      if (k <= 0) // degenerate corpus (no tokens survive the pipeline)
+        return spark.createDataFrame(Seq.empty[Concept])
 
-    // ARPACK runs one treeAggregate job over this RDD per Lanczos
-    // iteration (dozens of jobs), so per-iteration cost = per-task
-    // scheduling × partitions + the actual multiply. Size partitions by
-    // nonzero count (~250k cells each): a small corpus collapses to a
-    // couple of tasks (scheduling overhead was dominating the SVD at
-    // bench scale), a 100 TB corpus still spreads across the cluster.
-    val rowParts = math.max(1,
-      math.min((nnz / 250000L).toInt + 1, spark.sparkContext.defaultParallelism))
-    val rows = cells.as[(Long, Int, Double)].rdd
-      .groupBy((t: (Long, Int, Double)) => t._1, rowParts)
-      .map { case (row, cs) =>
-        val sorted = cs.toSeq.sortBy(_._2)
-        IndexedRow(row, MlVectors.sparse(vocabSize,
-          sorted.map(_._2).toArray, sorted.map(_._3).toArray))
-      }
-      // Without this persist each ARPACK iteration replays the
-      // join+groupBy lineage above.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mat = new IndexedRowMatrix(rows)
-    val svd = mat.computeSVD(k, computeU = true)
-    // ARPACK may converge on fewer than k singular values — truncate.
-    val kEff = math.min(k, math.min(svd.s.size, svd.V.numCols))
+      // IDF from the collected vocabulary: the join side is a LOCAL
+      // relation carrying (token, idx, df) — no distributed subtree to
+      // execute under the broadcast build — and the idf expression below
+      // is byte-for-byte TfIdf.idfCol (log10(N/df)), evaluated in the plan.
+      val vocabLocal = spark.createDataFrame(
+        vocabRows.toIndexedSeq.zipWithIndex.map { case ((t, df), i) => (t, df, i) })
+        .toDF("token", "df", "idx")
+      val cells = tf
+        .join(broadcast(vocabLocal.select(col("token"), col("idx"),
+          TfIdf.idfCol(nDocs, col("df")).as("idf"))), "token")
+        .select(col("id"), col("idx"), (col("tf") * col("idf")).as("v"))
 
-    if (cfg.verifyResiduals) {
+      // ARPACK runs one treeAggregate job over this RDD per Lanczos
+      // iteration (dozens of jobs), so per-iteration cost = per-task
+      // scheduling × partitions + the actual multiply. Size partitions by
+      // nonzero count (~250k cells each): a small corpus collapses to a
+      // couple of tasks (scheduling overhead was dominating the SVD at
+      // bench scale), a 100 TB corpus still spreads across the cluster.
+      val rowParts = math.max(1,
+        math.min((nnz / 250000L).toInt + 1, spark.sparkContext.defaultParallelism))
+      rows = cells.as[(Long, Int, Double)].rdd
+        .groupBy((t: (Long, Int, Double)) => t._1, rowParts)
+        .map { case (id, cs) =>
+          val sorted = cs.toSeq.sortBy(_._2)
+          IndexedRow(id, MlVectors.sparse(vocabSize,
+            sorted.map(_._2).toArray, sorted.map(_._3).toArray))
+        }
+        // Without this persist each ARPACK iteration replays the
+        // join+groupBy lineage above.
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val svd = new IndexedRowMatrix(rows).computeSVD(k, computeU = true)
+      // ARPACK may converge on fewer than k singular values — truncate.
+      val kEff = math.min(k, math.min(svd.s.size, svd.V.numCols))
+
       val res = eigenResiduals(rows,
         (i, j) => svd.V(i, j), Array.tabulate(kEff)(svd.s(_)), vocabSize)
       res.zipWithIndex.foreach { case (rel, j) =>
-        require(rel <= cfg.residualTol,
+        require(rel <= ResidualTol,
           s"SVD self-check failed: concept $j eigen-residual " +
-            s"|AtAv - s2 v|/s2 = $rel > ${cfg.residualTol} (sigma=${svd.s(j)})")
+            s"|AtAv - s2 v|/s2 = $rel > $ResidualTol (sigma=${svd.s(j)})")
       }
-    }
-
-    // V: vocabSize x kEff (local). Sign convention per concept.
-    val v = svd.V
-    val signs = Array.tabulate(kEff) { j =>
-      var best = 0.0; var sign = 1.0
-      for (i <- 0 until vocabSize) {
-        val x = v(i, j)
-        if (math.abs(x) > best) { best = math.abs(x); sign = if (x < 0) -1.0 else 1.0 }
-      }
-      sign
-    }
-
-    // Quantize loadings to a 1e-6 grid before ordering: mathematically
-    // tied loadings (tokens with identical count patterns) differ only by
-    // solver round-off whose SIGN depends on the backend (ARPACK here,
-    // LAPACK in LocalLsa) and run state — without the grid the top-k
-    // tie-break flips nondeterministically. On the grid, ties fall to the
-    // deterministic secondary key (part of the Q9/H2 determinism pin).
-    def snap(x: Double): Double = {
-      val q = math.rint(x * 1e6) / 1e6
-      if (q == 0.0) 0.0 else q
-    }
-
-    // term array for keyword emission: already collected idx-ordered
-    val vocabArr = vocabRows.map(_._1)
-    val keywords = Array.tabulate(kEff) { j =>
-      (0 until vocabSize)
-        .map(i => (snap(v(i, j) * signs(j)), vocabArr(i)))
-        .sortBy { case (l, t) => (-l, t) }
-        .take(cfg.nKeywords).map(_._2)
-    }
-
-    val signsB = spark.sparkContext.broadcast(signs)
-    // One distributed pass for ALL concepts' top docs: per-partition
-    // bounded heaps aggregated on the driver (kEff × nDocs entries),
-    // instead of k separate jobs each recomputing the U lineage.
-    val nTop = cfg.nDocs
-    val ord = Ordering.by[(Double, Long), (Double, Long)] { case (l, i) => (l, -i) }
-    val tops: Array[Seq[(Double, Long)]] = svd.U.rows
-      .mapPartitions { it =>
-        val heaps = Array.fill(kEff)(scala.collection.mutable.ArrayBuffer.empty[(Double, Long)])
-        it.foreach { r =>
-          var j = 0
-          while (j < kEff) {
-            val raw = r.vector(j) * signsB.value(j)
-            val q = math.rint(raw * 1e6) / 1e6 // same 1e-6 grid as keywords
-            val l = if (q == 0.0) 0.0 else q
-            heaps(j) += ((l, r.index))
-            if (heaps(j).size > 4 * nTop) {
-              val kept = heaps(j).sorted(ord.reverse).take(nTop)
-              heaps(j).clear(); heaps(j) ++= kept
-            }
-            j += 1
-          }
+      // V: vocabSize x kEff (local). Sign convention per concept.
+      val v = svd.V
+      val signs = Array.tabulate(kEff) { j =>
+        var best = 0.0; var sign = 1.0
+        for (i <- 0 until vocabSize) {
+          val x = v(i, j)
+          if (math.abs(x) > best) { best = math.abs(x); sign = if (x < 0) -1.0 else 1.0 }
         }
-        Iterator.single(heaps.map(_.toSeq))
+        sign
       }
-      .reduce { (x, y) =>
-        Array.tabulate(kEff)(j => (x(j) ++ y(j)).sorted(ord.reverse).take(nTop))
-      }
-    // Recover doc ids for ONLY the winning rows (kEff × nDocs of them) —
-    // never the whole row->id map (it is corpus-sized). On the dense-id
-    // path row == id, so no lookup job runs at all.
-    val winRows = tops.flatten.map(_._2).distinct
-    val idxToId: Map[Long, Long] =
-      if (denseIds) winRows.map(r => r -> r).toMap
-      else docIdx
-        .filter(col("row").isin(winRows: _*))
-        // collect-bound: top-k: winning rows only (kEff x nDocs ids), never the corpus row->id map
-        .select(col("row"), col("id")).as[(Long, Long)].collect().toMap
-    val topDocs: Map[Int, Seq[Long]] = (0 until kEff).map { j =>
-      j -> tops(j).sorted(ord.reverse).take(nTop).map(t => idxToId(t._2)).toSeq
-    }.toMap
-    tf.unpersist()
-    if (!denseIds) docIdx.unpersist()
-    rows.unpersist()
 
-    val out = (0 until kEff).map { j =>
-      Concept(j, svd.s(j), keywords(j), topDocs(j))
+      // Quantize loadings to a 1e-6 grid before ordering: mathematically
+      // tied loadings (tokens with identical count patterns) differ only by
+      // solver round-off whose SIGN depends on the backend (ARPACK here,
+      // LAPACK in LocalLsa) and run state — without the grid the top-k
+      // tie-break flips nondeterministically. On the grid, ties fall to the
+      // deterministic secondary key (part of the Q9/H2 determinism pin).
+      def snap(x: Double): Double = {
+        val q = math.rint(x * 1e6) / 1e6
+        if (q == 0.0) 0.0 else q
+      }
+
+      // term array for keyword emission: already collected idx-ordered
+      val vocabArr = vocabRows.map(_._1)
+      val keywords = Array.tabulate(kEff) { j =>
+        (0 until vocabSize)
+          .map(i => (snap(v(i, j) * signs(j)), vocabArr(i)))
+          .sortBy { case (l, t) => (-l, t) }
+          .take(cfg.nKeywords).map(_._2)
+      }
+
+      val signsB = spark.sparkContext.broadcast(signs)
+      // One distributed pass for ALL concepts' top docs: per-partition
+      // bounded heaps aggregated on the driver (kEff × nDocs entries),
+      // instead of k separate jobs each recomputing the U lineage.
+      val nTop = cfg.nDocs
+      val ord = Ordering.by[(Double, Long), (Double, Long)] { case (l, i) => (l, -i) }
+      val tops: Array[Seq[(Double, Long)]] = svd.U.rows
+        .mapPartitions { it =>
+          val heaps = Array.fill(kEff)(scala.collection.mutable.ArrayBuffer.empty[(Double, Long)])
+          it.foreach { r =>
+            var j = 0
+            while (j < kEff) {
+              val raw = r.vector(j) * signsB.value(j)
+              val q = math.rint(raw * 1e6) / 1e6 // same 1e-6 grid as keywords
+              val l = if (q == 0.0) 0.0 else q
+              heaps(j) += ((l, r.index))
+              if (heaps(j).size > 4 * nTop) {
+                val kept = heaps(j).sorted(ord.reverse).take(nTop)
+                heaps(j).clear(); heaps(j) ++= kept
+              }
+              j += 1
+            }
+          }
+          Iterator.single(heaps.map(_.toSeq))
+        }
+        .reduce { (x, y) =>
+          Array.tabulate(kEff)(j => (x(j) ++ y(j)).sorted(ord.reverse).take(nTop))
+        }
+      val topDocs = Array.tabulate(kEff)(j => tops(j).sorted(ord.reverse).take(nTop).map(_._2))
+      spark.createDataFrame((0 until kEff).map { j =>
+        Concept(j, svd.s(j), keywords(j), topDocs(j))
+      })
+    } finally {
+      tf.unpersist()
+      if (rows != null) rows.unpersist()
     }
-    spark.createDataFrame(out)
   }
 }

@@ -56,12 +56,12 @@ object LsaQueries extends QueryProvider {
     // The production-solver sibling: distributed ARPACK SVD
     // (IndexedRowMatrix.computeSVD — the path a 100 TB corpus calls).
     // Verified at EVERY scale, two layers:
-    //  1. Lsa.concepts' built-in eigen-residual gate (Config
-    //     .verifyResiduals, default ON — including here, including under
-    //     Bench): one distributed pass proves each returned (σⱼ, vⱼ) is a
-    //     genuine singular triple of this matrix (‖AᵀAvⱼ−σⱼ²vⱼ‖ ≤
-    //     1e-6·σⱼ²), so the solver cannot silently return garbage at any
-    //     corpus size — the r5 "unverified above 2000 docs" gap.
+    //  1. Lsa.concepts' built-in eigen-residual gate (unconditional —
+    //     including here, including under Bench): one distributed pass
+    //     proves each returned (σⱼ, vⱼ) is a genuine singular triple of
+    //     this matrix (‖AᵀAvⱼ−σⱼ²vⱼ‖ ≤ 1e-6·σⱼ²), so the solver cannot
+    //     silently return garbage at any corpus size — the r5
+    //     "unverified above 2000 docs" gap.
     //  2. Below 2000 docs, additionally the cell-for-cell dense-LAPACK
     //     mirror (LocalLsa): σ within 1e-3 relative and identical
     //     keyword/doc selections. Above that, Stress cross-checks σ

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected queries so scan pruning
   * (`PushedFilters`/`ReadSchema`), join strategies (BroadcastHashJoin vs
   * SortMergeJoin), and WholeStageCodegen coverage can be audited.
@@ -53,14 +51,7 @@ object ExplainAudit {
         "d06_cosine_neardup", "t10_char_bigrams", "d05_simhash_neardup",
         "d31_dupgram_sketch")
     // (mm10_phash is an RDD-kernel query — no Catalyst plan to audit)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("graft-explain", 4)
     val qmap = graft.SparkEntry.allQueries
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -175,22 +174,12 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = args.lift(1).getOrElse("PLAN_AUDIT.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE off: the audit traverses the plan TREE, and the adaptive
-      // wrapper hides its children until execution. The initial plan is
-      // exactly what the invariant is about — the shape Catalyst commits
-      // to before runtime stats.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE off: the audit traverses the plan TREE, and the adaptive
+    // wrapper hides its children until execution. The initial plan is
+    // exactly what the invariant is about — the shape Catalyst commits
+    // to before runtime stats.
+    val spark = graft.LocalSession("graft-plan-audit", 8,
+      "spark.sql.adaptive.enabled" -> "false", "spark.scheduler.mode" -> "FAIR")
     val qmap = graft.SparkEntry.allQueries
     val gate = graft.SparkEntry.queries.keySet
     val results = new ConcurrentHashMap[String, Audit]()

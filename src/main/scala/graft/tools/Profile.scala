@@ -1,15 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
-import graft.operators.Dedup
-import graft.tables.Tables
-import graft.text.{TextFunctions => TF}
-
-/** Dev-only stage profiler for the bench hot paths. Not part of the
-  * driver contract; run with
-  *   sbt "runMain graft.tools.Profile /root/testdata/sf0.1 d04"
+/** Dev-only cold/warm timer for registered queries; run with
+  *   sbt "runMain graft.tools.Profile <sfDir> [query ...]"
+  * Several query names may be given: each runs cold, warm and warm again
+  * in this one JVM (matching Bench's one-session-many-queries shape).
   */
 object Profile {
   def time[A](label: String)(f: => A): A = {
@@ -21,195 +17,14 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    // several registered query names may be given: each runs cold+warm
-    // in this one JVM (matching Bench's one-session-many-queries shape)
-    val whiches = if (args.length > 1) args.drop(1).toSeq else Seq("d04")
-    whiches.foreach(w => run(sfDir, w))
-    SparkSession.getActiveSession.foreach(_.stop())
-  }
-
-  def run(sfDir: String, which: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
+    val names = if (args.length > 1) args.drop(1).toSeq else Seq("d04_minhash_neardup")
+    val unknown = names.filterNot(graft.SparkEntry.allQueries.contains)
+    require(unknown.isEmpty, s"not a registered query: ${unknown.mkString(", ")}")
+    val spark = graft.LocalSession("graft-profile", 16)
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-
-    which match {
-      case q if graft.SparkEntry.allQueries.contains(q) =>
-        val fn = graft.SparkEntry.allQueries(q)
-        time(s"$q-cold")(noop(fn(spark, sfDir)))
-        time(s"$q-warm")(noop(fn(spark, sfDir)))
-        time(s"$q-warm2")(noop(fn(spark, sfDir)))
-
-      // Stepwise mirror of tr01's exact path (rankDocuments -> ranks ->
-      // ranksShuffled) with a materialization print between steps — for
-      // isolating which stage breaks the heap envelope at the sf3+
-      // replicas, where the exact graph is ~1 B directed edges.
-      case "tr01steps" =>
-        import graft.textrank.TextRank
-        val docs = Tables.documents(spark, sfDir)
-        val vertices = graft.Par.fanOut(docs
-          .filter(TF.spaceWordCount($"text") > 10 && TF.spaceWordCount($"text") < 30))
-          .select($"doc_id".as("id"), TF.textrankTokens($"text", lemma = false).as("tokens"))
-          .filter(size($"tokens") > 0).persist()
-        time("vertices")(println("n=" + vertices.count()))
-        val e = TextRank.similarityEdges(vertices)
-          .select($"src", $"dst", $"weight").persist()
-        time("edges")(println("m=" + e.count()))
-        val verts = e.select($"src".as("id")).union(e.select($"dst".as("id")))
-          .distinct().persist()
-        time("vertexSet")(println("v=" + verts.count()))
-        val outSum = e.groupBy($"src").agg(sum($"weight").as("ow"))
-        val norm = e.join(broadcast(outSum), "src")
-          .select($"src", $"dst", ($"weight" / $"ow").as("wn")).persist()
-        time("norm")(println("norm=" + norm.count()))
-        e.unpersist()
-        var r = verts.withColumn("rnk", lit(0.15))
-        for (i <- 1 to 5) {
-          val contrib = norm.join(broadcast(r), norm("src") === r("id"))
-            .groupBy($"dst").agg(sum($"rnk" * $"wn").as("c"))
-            .select($"dst".as("id"), $"c")
-          r = verts.join(contrib, Seq("id"), "left")
-            .select($"id", (lit(0.15) + lit(0.85) * coalesce($"c", lit(0.0))).as("rnk"))
-            .localCheckpoint()
-          time(s"iter$i")(println("r=" + r.count()))
-        }
-
-      case "d04" =>
-        val toks = graft.Par.fanOut(Tables.documents(spark, sfDir)
-          .select($"doc_id".as("id"), TF.tokenize($"text").as("tokens"))).persist()
-        time("tokenize+count")(toks.count())
-        val sh = toks.select(col("id"),
-          array_distinct(Dedup.shingles(col("tokens"), 3)).as("sh"))
-          .filter(size(col("sh")) > 0).persist()
-        time("shingles")(sh.count())
-        val withSig = sh
-          .withColumn("hv", Dedup.shingleHashes(col("sh")))
-          .withColumn("sig", Dedup.minhashSignature(col("hv"), 32))
-          .select("id", "sig").persist()
-        time("signatures")(withSig.count())
-        val cands = Dedup.lshCandidates(withSig, 8, 4).persist()
-        time("lsh-candidates")(println("cands=" + cands.count()))
-        val shOnly = sh.select(col("id"), col("sh"))
-        val out = cands
-          .join(shOnly.withColumnRenamed("id", "a").withColumnRenamed("sh", "sh_a"), "a")
-          .join(shOnly.withColumnRenamed("id", "b").withColumnRenamed("sh", "sh_b"), "b")
-          .withColumn("jaccard", Dedup.jaccard(col("sh_a"), col("sh_b")))
-          .filter(col("jaccard") >= 0.3)
-          .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
-          .orderBy("a", "b")
-        time("verify-join")(noop(out))
-
-      case "ls08" =>
-        val docs = Tables.documents(spark, sfDir)
-        val tok = graft.Par.fanOut(docs)
-          .select($"doc_id".cast("long").as("id"),
-            graft.text.TextFunctions.lsaTokens($"text", true).as("tokens"))
-          .filter(size($"tokens") > 0)
-        time("tokenize+lemma")(tok.count())
-        // warm run then timed runs isolating the residual gate
-        val cfgOff = graft.lsa.Lsa.Config(verifyResiduals = false)
-        time("concepts-warmup")(noop(
-          graft.lsa.Lsa.concepts(docs, "doc_id", "text", cfgOff)))
-        time("concepts-noGate")(noop(
-          graft.lsa.Lsa.concepts(docs, "doc_id", "text", cfgOff)))
-        time("concepts-withGate")(noop(
-          graft.lsa.Lsa.concepts(docs, "doc_id", "text")))
-
-      case "ls01" =>
-        val docs = Tables.documents(spark, sfDir)
-        for (round <- Seq("cold", "warm")) {
-          val tok = graft.Par.fanOut(docs)
-            .select(col("doc_id").cast("long").as("id"),
-              TF.lsaTokens(col("text"), lemma = true).as("tokens"))
-            .filter(size(col("tokens")) > 0)
-            .persist()
-          time(s"tokens-$round")(println("docs=" + tok.count()))
-          val tf = graft.tfidf.TfIdf.termFrequencies(tok, "id", "tokens").persist()
-          time(s"tf-$round")(println("nnz=" + tf.count()))
-          val vocab = graft.lsa.Lsa.vocabulary(tf).persist()
-          time(s"vocab-$round")(println("V=" + vocab.count()))
-          val docIdx = {
-            import spark.implicits._
-            tok.select(col("id")).orderBy(col("id")).as[Long].rdd
-              .zipWithIndex().toDF("id", "row").persist()
-          }
-          time(s"docIdx-$round")(docIdx.count())
-          val nDocs = tok.count(); val vocabSize = vocab.count().toInt
-          val idf = graft.tfidf.TfIdf.idfTable(tf, "id", nDocs)
-          val cells = tf.join(broadcast(vocab.select("token", "idx")), "token")
-            .join(broadcast(idf.select("token", "idf")), "token")
-            .join(docIdx, "id")
-            .select(col("row"), col("idx"), (col("tf") * col("idf")).as("v"))
-          import spark.implicits._
-          val rows = cells.as[(Long, Int, Double)].rdd
-            .groupBy((t: (Long, Int, Double)) => t._1, 2)
-            .map { case (row, cs) =>
-              val sorted = cs.toSeq.sortBy(_._2)
-              org.apache.spark.mllib.linalg.distributed.IndexedRow(row,
-                org.apache.spark.mllib.linalg.Vectors.sparse(vocabSize,
-                  sorted.map(_._2).toArray, sorted.map(_._3).toArray))
-            }
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          time(s"cells-$round")(rows.count())
-          val mat = new org.apache.spark.mllib.linalg.distributed.IndexedRowMatrix(rows)
-          val svd = time(s"svd-$round")(mat.computeSVD(5, computeU = true))
-          time(s"udrain-$round")(svd.U.rows.count())
-          tok.unpersist(); tf.unpersist(); vocab.unpersist(); docIdx.unpersist(); rows.unpersist()
-          time(s"full-$round")(noop(graft.lsa.Lsa.concepts(docs, "doc_id", "text")))
-        }
-
-      case "t13steps" =>
-        // stepwise mirror of Bm25.score for t13 (r15): where do the warm
-        // milliseconds go — stats collect, df collect, or the pivot job?
-        import org.apache.spark.sql.functions.{typedLit, array_contains, filter => afilter}
-        val terms = Seq("spark", "join", "window")
-        for (round <- Seq("cold", "warm")) {
-          val docs = graft.Par.fanOut(Tables.documents(spark, sfDir))
-          val termsCol = typedLit(terms)
-          val lens = docs.select($"doc_id", TF.tokenize($"text").as("toks"))
-            .select($"doc_id", size($"toks").cast("long").as("dl"),
-              afilter($"toks", t => array_contains(termsCol, t)).as("qtoks"))
-            .transform(df => graft.Par.cacheIfNew(df)._1)
-          time(s"stats-$round")(lens.agg(count(lit(1)), sum($"dl")).head())
-          val tf = lens.select($"doc_id", $"dl", explode($"qtoks").as("tok"))
-            .groupBy($"doc_id", $"dl", $"tok").agg(count(lit(1)).as("tf"))
-            .transform(df => graft.Par.cacheIfNew(df)._1)
-          // collect-bound: scalar: one df row per query term (<= |terms|)
-          time(s"df-$round")(
-            tf.groupBy($"tok").agg(countDistinct($"doc_id").as("df")).collect())
-          time(s"full-$round")(noop(
-            graft.SparkEntry.allQueries("t13_bm25")(spark, sfDir)))
-        }
-
-      case "tr02" =>
-        val docs = Tables.documents(spark, sfDir)
-          .select($"doc_id".as("id"), $"text")
-        val cfg = graft.textrank.TextRank.Config(lemma = false)
-        for (round <- Seq("cold", "warm")) {
-          val vertices = graft.Par.fanOut(docs
-            .filter(TF.spaceWordCount(col("text")) > cfg.minWords &&
-              TF.spaceWordCount(col("text")) < cfg.maxWords))
-            .select(col("id"), TF.textrankTokens(col("text"), cfg.lemma).as("tokens"))
-            .filter(size(col("tokens")) > 0)
-            .persist()
-          time(s"vertices-$round")(println("V=" + vertices.count()))
-          val edges = graft.textrank.TextRank.similarityEdges(vertices).persist()
-          time(s"edges-$round")(println("E=" + edges.count()))
-          val r = time(s"ranks-$round")(graft.textrank.TextRank.ranks(edges, cfg))
-          time(s"topk-$round")(noop(r.orderBy(desc("rnk"), col("id")).limit(5)))
-          vertices.unpersist(); edges.unpersist()
-        }
-    }
+    for (q <- names; pass <- Seq("cold", "warm", "warm2"))
+      time(s"$q-$pass")(noop(graft.SparkEntry.allQueries(q)(spark, sfDir)))
+    spark.stop()
   }
 }

@@ -19,21 +19,47 @@ class LocalLsaSpec extends SparkSpec {
     (3L, "mango fruit banana juice mango fruit fruit tropical"),
     (4L, "spark cluster executor deployment spark executor executor"))
 
+  // The id is the distributed path's row index as is, so non-dense ids
+  // need no renumbering: the smallest id is not 0, ids skip, one exceeds
+  // Int.MaxValue, the all-stopword doc 4 drops out of the matrix, and the
+  // identical docs 40 and 41 tie on every loading, so the lower id must
+  // come first in both implementations.
+  private val bigId = Int.MaxValue.toLong + 7L
+  private val sparseIds = Seq(
+    (3L, "spark cluster executor spark cluster scaling executor spark"),
+    (4L, "the and was were them this that"),
+    (9L, "banana mango fruit banana smoothie mango banana"),
+    (17L, "mango fruit banana juice mango fruit fruit tropical"),
+    (40L, "cluster executor spark shuffle cluster partition"),
+    (41L, "cluster executor spark shuffle cluster partition"),
+    (bigId, "spark cluster executor deployment spark executor executor"))
+
   test("LocalLsa matches distributed Lsa.concepts (keywords, docs, sigma)") {
-    val cfg = Lsa.Config(k = 2, lemma = false)
-    val dist = Lsa.concepts(docs.toDF("doc_id", "text"), "doc_id", "text", cfg)
-      .as[Lsa.Concept].collect().sortBy(_.concept)
-    val local = LocalLsa.concepts(docs, cfg).sortBy(_.concept)
-    assert(dist.length == local.length)
-    dist.zip(local).foreach { case (d, l) =>
-      assert(d.concept == l.concept)
-      assert(math.abs(d.singular_value - l.singularValue) < 1e-6,
-        s"sigma ${d.singular_value} vs ${l.singularValue}")
-      assert(d.keywords == l.keywords, s"concept ${d.concept} keywords")
-      assert(d.doc_ids == l.docIds, s"concept ${d.concept} docs")
+    for ((input, cfg) <- Seq(
+        docs -> Lsa.Config(k = 2, lemma = false),
+        sparseIds -> Lsa.Config(k = 2, nDocs = 4, lemma = false))) {
+      val dist = Lsa.concepts(input.toDF("doc_id", "text"), "doc_id", "text", cfg)
+        .as[Lsa.Concept].collect().sortBy(_.concept)
+      val local = LocalLsa.concepts(input, cfg).sortBy(_.concept)
+      assert(dist.length == local.length)
+      dist.zip(local).foreach { case (d, l) =>
+        assert(d.concept == l.concept)
+        assert(math.abs(d.singular_value - l.singularValue) < 1e-6,
+          s"sigma ${d.singular_value} vs ${l.singularValue}")
+        assert(d.keywords == l.keywords, s"concept ${d.concept} keywords")
+        assert(d.doc_ids == l.docIds, s"concept ${d.concept} docs")
+      }
     }
   }
 
+  test("the non-dense fixture reaches the cases it names") {
+    val ids = LocalLsa.concepts(sparseIds, Lsa.Config(k = 2, nDocs = 4, lemma = false))
+      .map(_.docIds)
+    assert(!ids.flatten.contains(4L), "the all-stopword doc has no row")
+    assert(ids.flatten.contains(bigId), "the id above Int.MaxValue is selected")
+    val twins = ids.map(_.filter(Set(40L, 41L)))
+    assert(twins.contains(Seq(40L, 41L)), s"the tied docs rank together, lower id first: $twins")
+  }
   test("LocalLsa matches with the lemmatizer enabled") {
     // multiplicities differ per (doc, term) so loadings are well-separated
     // (near-tied loadings may legitimately order differently between

@@ -1,5 +1,7 @@
 package graft.lsa
 
+import org.apache.spark.sql.CacheAccess
+
 import graft.SparkSpec
 
 class LsaSpec extends SparkSpec {
@@ -34,5 +36,25 @@ class LsaSpec extends SparkSpec {
       .as[Lsa.Concept].collect().sortBy(_.concept)
       .map(c => (c.concept, c.keywords, c.doc_ids)).toSeq
     assert(run() == run())
+  }
+
+  test("a failing call leaves the session's caches as it found them") {
+    // ids that fail the long cast throw CAST_INVALID_INPUT (ANSI) inside
+    // the first job, after the tf table was registered for caching
+    val bad = Seq(("a", "spark cluster executor"), ("b", "banana mango fruit"))
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val entries0 = CacheAccess.entries(spark)
+      val rdds0 = sc.getPersistentRDDs.keySet
+      val e = intercept[Exception](
+        Lsa.concepts(bad, "doc_id", "text", Lsa.Config(k = 2, lemma = false)))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("CAST_INVALID_INPUT")), e)
+      assert(CacheAccess.entries(spark) == entries0)
+      assert(sc.getPersistentRDDs.keySet == rdds0)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 }
