@@ -197,7 +197,10 @@ object Lsa {
         // Without this persist each ARPACK iteration replays the
         // join+groupBy lineage above.
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val svd = new IndexedRowMatrix(rows).computeSVD(k, computeU = true)
+      // The column count is known (vocabSize); without it computeSVD
+      // runs a rows.first() job to learn it. nRows = 0 leaves the row
+      // count lazy, and the SVD never reads it.
+      val svd = new IndexedRowMatrix(rows, 0L, vocabSize).computeSVD(k, computeU = true)
       // ARPACK may converge on fewer than k singular values — truncate.
       val kEff = math.min(k, math.min(svd.s.size, svd.V.numCols))
 

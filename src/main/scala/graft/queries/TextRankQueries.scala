@@ -173,27 +173,18 @@ object TextRankQueries extends QueryProvider {
             graft.text.TextFunctions.textrankTokens($"text", lemma = false).as("tokens"))
           .filter(size($"tokens") > 0)
           .persist()
-        // same DISK_ONLY flip as rankDocuments: above the quadratic
-        // estimate the edge caches must not live on the heap
-        // (quadEdgeBytes saturates instead of wrapping negative at
-        // nv ≳ 4.4e8 — the shared helper keeps both probes in sync)
+        // nv² bounds the directed edge count, as in rankDocuments
         val nv = vertices.count()
-        val cfg =
-          if (TextRank.quadEdgeBytes(nv) > TextRank.DiskEdgeBytes)
-            TextRank.Config(edgeStorage =
-              org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          else TextRank.Config()
         try graft.textrank.TextRankGraphX
-          .ranks(TextRank.similarityEdges(vertices, nv), cfg)
+          .ranks(TextRank.similarityEdges(vertices, nv), TextRank.satMul(nv, nv))
           .select($"id", round($"rnk", 6).as("rnk"))
           .orderBy(desc("rnk"), $"id")
         finally vertices.unpersist()
       },
       Some(oracleSql(5, None))),
 
-    // The 100 TB edge-generation path: MinHash-LSH candidate prefilter
-    // (minVertices=0 forces LSH even at gate scale so the path is
-    // exercised end-to-end). Full hash-for-hash oracle since the family
+    // The 100 TB edge-generation path: MinHash-LSH candidate prefilter,
+    // taken at every scale, so the gate exercises it end-to-end. Full hash-for-hash oracle since the family
     // moved to FNV-1a: the banding (128 hashes, 64 bands of 2), bucket
     // cap, candidate join, exact re-weighting and the rank propagation
     // are all replayed in SQL. TextRankLshSpec additionally bounds the

@@ -20,7 +20,7 @@ import graft.functions.IntersectSize.intersect_size
 object GroupedTextRank {
 
   /** vertices: (grp, id, tokens). Returns (grp, id, rnk). */
-  def ranks(vertices: DataFrame, cfg: TextRank.Config = TextRank.Config()): DataFrame = {
+  def ranks(vertices: DataFrame): DataFrame = {
     val v = vertices.select(col("grp"), col("id"),
       array_distinct(col("tokens")).as("dt"),
       size(col("tokens")).as("n"))
@@ -46,11 +46,12 @@ object GroupedTextRank {
     // rank table keys renamed (r_grp, id) to keep the iterated self-join
     // unambiguous
     var r = norm.select(col("grp").as("r_grp"), col("src").as("id")).distinct()
-      .withColumn("rnk", lit(cfg.initRank))
-    for (_ <- 1 to cfg.iterations) {
+      .withColumn("rnk", lit(TextRank.InitRank))
+    for (_ <- 1 to TextRank.Iterations) {
       r = norm.join(r, col("grp") === col("r_grp") && col("src") === col("id"))
         .groupBy(col("grp"), col("dst"))
-        .agg((lit(cfg.initRank) + lit(cfg.damping) * sum(col("rnk") * col("wn"))).as("rnk"))
+        .agg((lit(TextRank.InitRank) + lit(TextRank.Damping) *
+          sum(col("rnk") * col("wn"))).as("rnk"))
         .select(col("grp").as("r_grp"), col("dst").as("id"), col("rnk"))
         .localCheckpoint()
     }
@@ -65,13 +66,13 @@ object GroupedTextRank {
       textCol: String, cfg: TextRank.Config = TextRank.Config()): DataFrame = {
     import graft.text.TextFunctions
     val vertices = graft.Par.fanOut(docs
-      .filter(TextFunctions.spaceWordCount(col(textCol)) > cfg.minWords &&
-        TextFunctions.spaceWordCount(col(textCol)) < cfg.maxWords))
+      .filter(TextFunctions.spaceWordCount(col(textCol)) > TextRank.MinWords &&
+        TextFunctions.spaceWordCount(col(textCol)) < TextRank.MaxWords))
       .select(col(grpCol).as("grp"), col(idCol).as("id"),
         TextFunctions.textrankTokens(col(textCol), cfg.lemma).as("tokens"))
       .filter(size(col("tokens")) > 0)
       .persist()
-    val r = ranks(vertices, cfg)
+    val r = ranks(vertices)
     vertices.unpersist()
     r
   }

@@ -2,6 +2,7 @@ package graft.textrank
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.text.TextFunctions
 
@@ -50,62 +51,63 @@ object TextRank {
       * bands=64 a pair at Jaccard 0.2 is caught with p≈0.93, at 0.5
       * with p≈1-2e-8. `TextRankLshSpec` bounds the rank divergence on
       * the fixture corpus.
-      *
-      * @param minVertices below this vertex count the exact path is used
-      *        instead — one config serves the gate scale (exact, oracle-
-      *        matching) and the corpus scale (LSH) without re-plumbing.
       */
     final case class Lsh(
         numHashes: Int = 128,
         bands: Int = 64,
-        maxBucket: Int = 10000,
-        minVertices: Long = 0L) extends EdgeCandidates
+        maxBucket: Int = 10000) extends EdgeCandidates
   }
 
   final case class Config(
-      iterations: Int = 5,
-      damping: Double = 0.85,
-      initRank: Double = 0.15,
-      minWords: Int = 10,
-      maxWords: Int = 30,
       lemma: Boolean = true,
-      /** Vertex count above which the iteration's rank side falls back
-        * from a broadcast join to a shuffled join (see
-        * [[broadcastRankLimit]]). Overridable per call, mainly so tests
-        * can exercise the shuffled path on small fixtures.
-        */
-      broadcastLimit: Long = broadcastRankLimit,
-      /** Edge count above which the iteration falls back from the
-        * compacted-primitive-arrays treeAggregate strategy to the
-        * shuffled join: the compact arrays are EDGE-sized (16 bytes per
-        * directed edge held across the executor heap), so vertex count
-        * alone is the wrong budget — the sf3 stress replica's exact
-        * graph (~1 B directed edges, 45 k vertices) passed the vertex
-        * probe and then blew the 8 g heap building the arrays. 150 M
-        * edges ≈ 2.4 GB of arrays; the sf1 graph (113 M) stays on the
-        * fast path.
-        */
-      edgeBudget: Long = 150000000L,
-      /** Storage level for the edge-sized caches (the edge list and the
-        * normalized-weight table). MEMORY_AND_DISK by default;
-        * [[rankDocuments]] switches to DISK_ONLY when the quadratic
-        * estimate says the cache dwarfs the heap — at the sf3 replica a
-        * ~24 GB columnar edge cache on an 8 g heap made every
-        * concurrent reader/builder marginal (boxed dictionary decoders
-        * OOM'd mid-read), while DISK_ONLY leaves the whole heap to
-        * execution memory and streams blocks from local disk.
-        */
-      edgeStorage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
       /** Edge-generation strategy; Exact below, LSH at corpus scale. */
       edgeCandidates: EdgeCandidates = EdgeCandidates.Exact)
 
-  /** Estimated edge-cache bytes above which [[rankDocuments]] flips the
-    * edge caches to DISK_ONLY (2 GB ≈ a quarter of the default 8 g
+  // The reference's fixed numbers (BigdataProjectCode.py:386-391; the
+  // band is F2's exclusive 10..30 space-split words). Every TextRank
+  // oracle in the gate replays exactly these.
+  private[textrank] val Iterations = 5
+  private[textrank] val Damping = 0.85
+  private[textrank] val InitRank = 0.15
+  private[textrank] val MinWords = 10
+  private[textrank] val MaxWords = 30
+
+  /** Edge count above which [[ranks]] falls back from the
+    * compacted-primitive-arrays treeAggregate strategy to the shuffled
+    * join: the compact arrays are EDGE-sized (16 bytes per directed edge
+    * held across the executor heap), so vertex count alone is the wrong
+    * budget — the sf3 stress replica's exact graph (~1 B directed edges,
+    * 45 k vertices) passed the vertex probe and then blew the 8 g heap
+    * building the arrays. 150 M edges ≈ 2.4 GB of arrays; the sf1 graph
+    * (113 M) stays on the fast path.
+    */
+  private val EdgeBudget: Long = 150000000L
+
+  /** Estimated edge-cache bytes above which [[edgeStorage]] puts the
+    * edge caches on DISK_ONLY (2 GB ≈ a quarter of the default 8 g
     * heap; the sf1 graph's 2.7 GB crosses it, the sf0.1 bench graph's
     * ~54 MB does not).
     */
   val DiskEdgeBytes: Long = 2L << 30
+
+  /** Storage level for the edge-sized caches (the edge list and the
+    * normalized-weight table), from the caller's upper bound on the
+    * directed edge count: DISK_ONLY when the bound at 48 B per edge
+    * exceeds [[DiskEdgeBytes]], MEMORY_AND_DISK otherwise. At the sf3
+    * replica a ~24 GB columnar edge cache on an 8 g heap made every
+    * concurrent reader/builder marginal (boxed dictionary decoders
+    * OOM'd mid-read), while DISK_ONLY leaves the whole heap to
+    * execution memory and streams blocks from local disk.
+    *
+    * `Long.MaxValue` means the caller has no bound, and keeps
+    * MEMORY_AND_DISK. The nv² bound of an `nv`-vertex graph saturates
+    * to that value only at nv ≳ 3e9, a graph whose directed pair count
+    * no longer fits a Long.
+    */
+  private[textrank] def edgeStorage(maxDirectedEdges: Long): StorageLevel =
+    if (maxDirectedEdges != Long.MaxValue &&
+        satMul(maxDirectedEdges, 48L) > DiskEdgeBytes) StorageLevel.DISK_ONLY
+    else StorageLevel.MEMORY_AND_DISK
 
   /** a·b saturating at Long.MaxValue (inputs are non-negative counts).
     * The quadratic probes (`nv² · bytes-per-edge`) overflow a plain Long
@@ -121,8 +123,7 @@ object TextRank {
 
   /** Overflow-safe estimate of the exact route's edge-cache bytes:
     * every vertex pair, both directions, 24 B each (`nv² · 48`,
-    * saturating). Shared by [[rankDocuments]] and the tr04 GraphX query
-    * so the two DISK_ONLY probes cannot drift.
+    * saturating). Sizes [[similarityEdges]]' output partitions.
     */
   def quadEdgeBytes(nv: Long): Long = satMul(satMul(nv, nv), 48L)
 
@@ -182,14 +183,10 @@ object TextRank {
     *
     * vertices: (id: long, tokens: array<string>), tokens non-empty.
     *
-    * @param vertexCount the caller's precomputed `vertices.count()`
-    *        (used to size the stream side for the quadratic output);
-    *        pass -1 to let this method count — in that case an
-    *        unpersisted input is persisted first, so an external caller
-    *        does not recompute its full token pipeline once for the
-    *        count and again for the join.
+    * @param vertexCount the caller's `vertices.count()`, which sizes the
+    *        stream side for the quadratic output
     */
-  def similarityEdges(vertices: DataFrame, vertexCount: Long = -1L): DataFrame = {
+  def similarityEdges(vertices: DataFrame, vertexCount: Long): DataFrame = {
     // Distinct token sets and raw lengths are per-VERTEX quantities:
     // compute them once before the quadratic join, not per pair (a
     // V²→V reduction in array_distinct work).
@@ -205,28 +202,27 @@ object TextRank {
     // (AGGREGATE_OUT_OF_MEMORY). Hash-partitioning by src keeps each
     // vertex's out-edges together (map-side combine for the out-weight
     // sums) and bounds a partition to ~64 MB of edges.
-    val nv =
-      if (vertexCount >= 0L) vertexCount
-      else {
-        // persist-if-unpersisted (same pattern as lshSimilarityEdges'
-        // v cache: no unpersist hook — the returned plan still reads
-        // it; MEMORY_AND_DISK entries are LRU-evicted)
-        if (vertices.storageLevel ==
-            org.apache.spark.storage.StorageLevel.NONE) vertices.persist()
-        vertices.count()
-      }
     val cores = vertices.sparkSession.sparkContext.defaultParallelism
-    // satMul: a plain nv²·48 wraps negative at nv ≳ 4.4e8 and would
+    // saturating: a plain nv²·48 wraps negative at nv ≳ 4.4e8 and would
     // collapse targetParts back to `cores` at exactly the scales the
     // output-sized partitioning protects
     val targetParts = math.min(4096L,
-      math.max(cores.toLong, satMul(satMul(nv, nv), 48L) / (64L << 20))).toInt
+      math.max(cores.toLong, quadEdgeBytes(vertexCount) / (64L << 20))).toInt
     val a = v.repartition(targetParts, col("id"))
       .select(col("id").as("src"), col("dt").as("dt_a"), col("n").as("na"))
     val b = v.select(col("id").as("dst"), col("dt").as("dt_b"), col("n").as("nb"))
     // The graph is symmetric: compute each unordered pair's intersection
     // once (src < dst) and mirror the edge — halves the quadratic work.
-    a.join(broadcast(b), col("src") < col("dst"))
+    weightedMirror(a.join(broadcast(b), col("src") < col("dst")))
+  }
+
+  /** The reference's similarity on candidate pairs
+    * (src, dt_a, na, dst, dt_b, nb): set intersection over
+    * `log2(na) + log2(nb) + 1`, zero-weight pairs dropped, and each
+    * surviving pair emitted in both directions as (src, dst, weight).
+    */
+  private def weightedMirror(pairs: DataFrame): DataFrame =
+    pairs
       .withColumn("weight",
         graft.functions.IntersectSize.intersect_size(col("dt_a"), col("dt_b")).cast("double") /
           (log2(col("na")) + log2(col("nb")) + lit(1.0)))
@@ -236,7 +232,6 @@ object TextRank {
         struct(col("src"), col("dst"), col("weight")),
         struct(col("dst").as("src"), col("src").as("dst"), col("weight")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.weight").as("weight"))
-  }
 
   /** LSH-prefiltered edge list — same schema and weight semantics as
     * [[similarityEdges]], but candidate pairs come from MinHash banding
@@ -266,7 +261,7 @@ object TextRank {
     * gate plan is unaffected either way.
     */
   def lshSimilarityEdges(vertices: DataFrame,
-      lsh: EdgeCandidates.Lsh, vertexCount: Long = -1L): DataFrame = {
+      lsh: EdgeCandidates.Lsh, vertexCount: Long): DataFrame = {
     import graft.operators.Dedup
     val rowsPerBand = math.max(1, lsh.numHashes / lsh.bands)
     // Distinct token sets / raw lengths are per-vertex quantities; this
@@ -278,7 +273,6 @@ object TextRank {
       array_distinct(col("tokens")).as("dt"),
       size(col("tokens")).as("n"))
       .persist()
-    val nv = if (vertexCount >= 0L) vertexCount else v.count()
     val sigs = v
       .withColumn("hv", Dedup.shingleHashes(col("dt")))
       .withColumn("sig", Dedup.minhashSignature(col("hv"), lsh.bands * rowsPerBand))
@@ -298,7 +292,7 @@ object TextRank {
     // are identical to the probe-less path (tr06's oracle replays the
     // LSH banding, so the engine must stay on it wherever hashes are
     // checked).
-    val allPairs = satMul(nv, nv)
+    val allPairs = satMul(vertexCount, vertexCount)
     // When the probe runs, the signature stage (the compute-bound step
     // — see Dedup.minhashSignature) is about to be evaluated once for
     // the probe aggregation and, on the non-degenerate path, again
@@ -331,7 +325,7 @@ object TextRank {
         .agg(coalesce(sum(col("c") * (col("c") - lit(1L))), lit(0L)))
         .first().getLong(0)
       val hit = mass >= allPairs
-      System.err.println(s"[textrank] LSH diversity probe: nv=$nv, " +
+      System.err.println(s"[textrank] LSH diversity probe: nv=$vertexCount, " +
         s"bucket-join mass=$mass (all-pairs bound $allPairs) -> " +
         (if (hit) "DEGENERATE, exact-route fallback" else "banding prunes, LSH route"))
       (hit, mass)
@@ -346,39 +340,26 @@ object TextRank {
       v.unpersist()    // it re-derives its own per-vertex table
       // throws here when -Dgraft.textrank.lshFallback=off (Verify sets
       // it: an oracle-gated run must never silently change answer class)
-      enforceFallbackPolicy(nv, probeMass, allPairs)
-      return similarityEdges(vertices, nv)
+      enforceFallbackPolicy(vertexCount, probeMass, allPairs)
+      return similarityEdges(vertices, vertexCount)
     }
     val cands = Dedup.lshCandidates(sigs, lsh.bands, rowsPerBand, lsh.maxBucket)
     val a = v.select(col("id").as("src"), col("dt").as("dt_a"), col("n").as("na"))
     val b = v.select(col("id").as("dst"), col("dt").as("dt_b"), col("n").as("nb"))
-    cands.select(col("a").as("src"), col("b").as("dst"))
-      .join(a, "src").join(b, "dst")
-      .withColumn("weight",
-        graft.functions.IntersectSize.intersect_size(col("dt_a"), col("dt_b")).cast("double") /
-          (log2(col("na")) + log2(col("nb")) + lit(1.0)))
-      .filter(col("weight") =!= 0.0)
-      .select(explode(array(
-        struct(col("src"), col("dst"), col("weight")),
-        struct(col("dst").as("src"), col("src").as("dst"), col("weight")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.weight").as("weight"))
+    weightedMirror(cands.select(col("a").as("src"), col("b").as("dst"))
+      .join(a, "src").join(b, "dst"))
   }
 
-  /** Routes edge generation per [[Config.edgeCandidates]]: exact all-pairs,
-    * or LSH candidates above `minVertices` (vertices should be persisted
-    * by the caller — the routing count and the downstream plan both read
-    * it). `vertexCount`, when ≥ 0, is the caller's precomputed
-    * `vertices.count()` — [[rankDocuments]] already holds it for the
-    * DISK_ONLY probe, so no route re-counts.
+  /** Routes edge generation per [[Config.edgeCandidates]]: exact
+    * all-pairs or LSH candidates. `vertexCount` is the caller's
+    * `vertices.count()` ([[rankDocuments]] already holds it for the
+    * edge bound), so no route re-counts; the caller should persist
+    * `vertices`, which the edge plan reads more than once.
     */
-  def edges(vertices: DataFrame, cfg: Config, vertexCount: Long = -1L): DataFrame =
+  def edges(vertices: DataFrame, cfg: Config, vertexCount: Long): DataFrame =
     cfg.edgeCandidates match {
       case EdgeCandidates.Exact => similarityEdges(vertices, vertexCount)
-      case l: EdgeCandidates.Lsh =>
-        val nv = if (vertexCount >= 0L) vertexCount else vertices.count()
-        if (l.minVertices > 0L && nv < l.minVertices)
-          similarityEdges(vertices, nv)
-        else lshSimilarityEdges(vertices, l, nv)
+      case l: EdgeCandidates.Lsh => lshSimilarityEdges(vertices, l, vertexCount)
     }
 
   /** Vertex count below which the rank vector is held as driver-side
@@ -395,9 +376,9 @@ object TextRank {
     *
     * Two execution strategies, routed on vertex count (the rank vector
     * is vertex-sized) AND edge count (the compact arrays are edge-sized
-    * — [[Config.edgeBudget]]):
+    * — [[EdgeBudget]]):
     *
-    *  - **≤ [[Config.broadcastLimit]]**: the MLlib small-model pattern
+    *  - **≤ [[broadcastRankLimit]]**: the MLlib small-model pattern
     *    (how gradient descent iterates): the edge list is compacted once
     *    into cached primitive arrays, and each iteration is ONE
     *    `treeAggregate` job — broadcast the rank array, fused
@@ -409,13 +390,17 @@ object TextRank {
     *  - **above the limit**: rank state stays distributed; each
     *    iteration is a shuffled join + hash-agg with a `localCheckpoint`
     *    lineage cut (H5). This is the arbitrarily-large-V shape.
+    *
+    * The edge caches' storage level comes from `maxDirectedEdges`
+    * through [[edgeStorage]].
     */
-  def ranks(edges: DataFrame, cfg: Config = Config(),
+  def ranks(edges: DataFrame,
       maxDirectedEdges: Long = Long.MaxValue,
       symmetricEdges: Boolean = false,
       maxVertices: Long = Long.MaxValue): DataFrame = {
+    val storage = edgeStorage(maxDirectedEdges)
     val e = edges.select(col("src"), col("dst"), col("weight"))
-      .persist(cfg.edgeStorage)
+      .persist(storage)
     // Materialize the edge cache under a STATELESS scan first: at the
     // sf3 replica, building the 1 B-edge cache underneath a hash
     // aggregation starved the aggregation of execution memory
@@ -432,8 +417,8 @@ object TextRank {
     // are unchanged wherever the bound does not bind (count ≤ bound ≤
     // budget → same strategy), so this is hash-neutral by construction.
     val edgeCount =
-      if (maxDirectedEdges <= cfg.edgeBudget &&
-          satMul(maxDirectedEdges, 48L) <= DiskEdgeBytes) maxDirectedEdges
+      if (maxDirectedEdges <= EdgeBudget &&
+          storage == StorageLevel.MEMORY_AND_DISK) maxDirectedEdges
       else e.count()
     // Vertex set = src ∪ dst (equal to src-distinct on the symmetric
     // lists the pipeline builds, but a directed list through the public
@@ -458,27 +443,27 @@ object TextRank {
       (if (symmetricEdges) e.select(col("src"))
        else e.select(col("src")).union(e.select(col("dst"))))
         .distinct()
-    val boundedVertices = maxVertices <= cfg.broadcastLimit
+    val boundedVertices = maxVertices <= broadcastRankLimit
     val vertices =
       if (boundedVertices) vertices0
       else vertices0.persist() // count probe + (small path) collect read it once each
     val vertexCount = if (boundedVertices) maxVertices else vertices.count()
     try {
-      if (vertexCount <= cfg.broadcastLimit && edgeCount <= cfg.edgeBudget) {
+      if (vertexCount <= broadcastRankLimit && edgeCount <= EdgeBudget) {
         // Bounded by the check above. The numbering order never reaches
         // the output values: per-destination sums accumulate in edge
         // order within partitions and tree-combine across them.
-        // collect-bound: probe-guarded: count() (or the caller's maxVertices bound) <= cfg.broadcastLimit just above, with the distributed ranksDF fallback
+        // collect-bound: probe-guarded: count() (or the caller's maxVertices bound) <= broadcastRankLimit just above, with the distributed ranksShuffled fallback
         val ids: Array[Any] = vertices.collect().map(_.get(0))
         // Once the compacted primitive arrays materialize, nothing reads
         // the edge DataFrame again — drop both caches BEFORE the
         // iterations so one query's steady heap is the compact arrays
         // alone. (Two concurrent sf1 tr queries holding edge cache +
         // compact each OOM'd an 8 g heap in the round-11 verify.)
-        ranksAggregated(e, ids, cfg,
+        ranksAggregated(e, ids,
           onCompacted = () => { vertices.unpersist(); e.unpersist() })
-      } else ranksShuffled(e, cfg,
-        smallVertexSet = vertexCount <= cfg.broadcastLimit,
+      } else ranksShuffled(e, maxDirectedEdges,
+        smallVertexSet = vertexCount <= broadcastRankLimit,
         symmetricEdges = symmetricEdges)
     } finally {
       // idempotent (no-op when the small path already released them) —
@@ -499,7 +484,7 @@ object TextRank {
     * materializing `wn` up front.
     */
   private def ranksAggregated(e: DataFrame, ids: Array[Any],
-      cfg: Config, onCompacted: () => Unit = () => ()): DataFrame = {
+      onCompacted: () => Unit = () => ()): DataFrame = {
     val spark = e.sparkSession
     val sc = spark.sparkContext
 
@@ -550,8 +535,8 @@ object TextRank {
     onCompacted()
     val owB = sc.broadcast(ow)
 
-    var r = Array.fill(n)(cfg.initRank)
-    for (_ <- 1 to cfg.iterations) {
+    var r = Array.fill(n)(InitRank)
+    for (_ <- 1 to Iterations) {
       val rB = sc.broadcast(r)
       val contrib = accumulate { case ((ss, ds, ws), acc) =>
         val rv = rB.value; val o = owB.value
@@ -562,7 +547,7 @@ object TextRank {
         }
       }
       rB.destroy()
-      r = contrib.map(c => cfg.initRank + cfg.damping * c)
+      r = contrib.map(c => InitRank + Damping * c)
     }
     compact.unpersist()
     indexB.destroy()
@@ -582,7 +567,7 @@ object TextRank {
     * are normalized once, then each iteration is a shuffled join +
     * hash-agg with a `localCheckpoint` lineage cut (H5).
     *
-    * `smallVertexSet` (vertex count within [[Config.broadcastLimit]],
+    * `smallVertexSet` (vertex count within [[broadcastRankLimit]],
     * i.e. this route was chosen by the EDGE budget, not vertex count)
     * broadcast-hints the two vertex-sized join sides against the
     * edge-scale `norm`: Catalyst's size estimate for the out-weight
@@ -591,16 +576,18 @@ object TextRank {
     * readers' read-ahead buffers alone blew the 8 g heap. A broadcast
     * keeps the edge side streaming in place; above the limit the
     * joins stay shuffled (a >500 k-vertex relation is no broadcast
-    * candidate).
+    * candidate). `maxDirectedEdges` picks the `norm` cache's storage
+    * level, as in [[ranks]].
     */
-  private def ranksShuffled(e: DataFrame, cfg: Config,
+  private[textrank] def ranksShuffled(e: DataFrame,
+      maxDirectedEdges: Long = Long.MaxValue,
       smallVertexSet: Boolean = false,
       symmetricEdges: Boolean = false): DataFrame = {
     def dim(df: DataFrame): DataFrame = if (smallVertexSet) broadcast(df) else df
     val outSum = e.groupBy(col("src")).agg(sum(col("weight")).as("ow"))
     val norm = e.join(dim(outSum), "src")
       .select(col("src"), col("dst"), (col("weight") / col("ow")).as("wn"))
-      .persist(cfg.edgeStorage)
+      .persist(edgeStorage(maxDirectedEdges))
     // Full vertex set (src ∪ dst), kept through every iteration: a
     // vertex with no in-edges still holds rank initRank and feeds its
     // out-edges next round — dropping it after one groupBy(dst) would
@@ -611,8 +598,8 @@ object TextRank {
        else norm.select(col("src").as("id"))
          .union(norm.select(col("dst").as("id")))).distinct().persist()
     vertices.count() // materialize both once; reused every iteration
-    var r = vertices.withColumn("rnk", lit(cfg.initRank))
-    for (_ <- 1 to cfg.iterations) {
+    var r = vertices.withColumn("rnk", lit(InitRank))
+    for (_ <- 1 to Iterations) {
       val contrib = norm.join(dim(r), norm("src") === r("id"))
         .groupBy(col("dst"))
         .agg(sum(col("rnk") * col("wn")).as("c"))
@@ -620,7 +607,7 @@ object TextRank {
       // Left join keeps contribution-less vertices at initRank (c = 0).
       r = vertices.join(contrib, Seq("id"), "left")
         .select(col("id"),
-          (lit(cfg.initRank) + lit(cfg.damping) * coalesce(col("c"), lit(0.0))).as("rnk"))
+          (lit(InitRank) + lit(Damping) * coalesce(col("c"), lit(0.0))).as("rnk"))
         // Cut lineage each round or the plan doubles per iteration (H5).
         .localCheckpoint()
     }
@@ -638,33 +625,25 @@ object TextRank {
     // similarity self-join that streams over these partitions must use
     // every core, not the scan's (possibly single) input split.
     val vertices = graft.Par.fanOut(docs
-      .filter(TextFunctions.spaceWordCount(col(textCol)) > cfg.minWords &&
-        TextFunctions.spaceWordCount(col(textCol)) < cfg.maxWords))
+      .filter(TextFunctions.spaceWordCount(col(textCol)) > MinWords &&
+        TextFunctions.spaceWordCount(col(textCol)) < MaxWords))
       .select(col(idCol).as("id"),
         TextFunctions.textrankTokens(col(textCol), cfg.lemma).as("tokens"))
       .filter(size(col("tokens")) > 0)
       .persist() // read once, joined against itself
-    // Flip the edge caches to DISK_ONLY when the quadratic estimate
-    // (every vertex pair, both directions, 24 B each) dwarfs the heap —
-    // the vertex count is a cache hit, so the probe is ~free. The
-    // estimate is applied to the LSH route too: it is an upper bound
-    // (candidates are a subset of all pairs), and on a low-diversity
-    // corpus the banding degenerates toward all-pairs — the sf3 probe's
-    // 31-token vocabulary collided ~every document into shared buckets
-    // and tr06's candidate edge set OOM'd an in-heap cache exactly like
-    // the exact route's.
     val nv = vertices.count()
-    val cfg2 =
-      if (quadEdgeBytes(nv) > DiskEdgeBytes)
-        cfg.copy(edgeStorage = org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      else cfg
     // ranks() is eager (localCheckpoint per iteration), so the inputs are
     // fully consumed by the time it returns — safe to release them; the
     // finally also releases on job abort (no leaked vertex cache).
     // nv² bounds the directed edge count on BOTH routes (LSH candidates
-    // are a subset of all pairs), letting ranks() skip its stateless
-    // pre-count when the bound proves the graph small.
-    try ranks(edges(vertices, cfg2, nv), cfg2,
+    // are a subset of all pairs), so it sets the edge caches' storage
+    // level and lets ranks() skip its stateless pre-count when the bound
+    // proves the graph small. The bound is applied to the LSH route's
+    // storage too: on a low-diversity corpus the banding degenerates
+    // toward all-pairs — the sf3 probe's 31-token vocabulary collided
+    // ~every document into shared buckets and tr06's candidate edge set
+    // OOM'd an in-heap cache exactly like the exact route's.
+    try ranks(edges(vertices, cfg, nv),
       maxDirectedEdges = satMul(nv, nv),
       // both edge routes mirror every surviving pair (see
       // similarityEdges / lshSimilarityEdges), so src-distinct is the

@@ -50,7 +50,11 @@ object TextRankGraphX {
     sys.props.get("graft.graphx.maxEdges").map(_.toLong).getOrElse(
       (Runtime.getRuntime.maxMemory() * 0.35 / BytesPerEdge).toLong)
 
-  def ranks(edges: DataFrame, cfg: TextRank.Config = TextRank.Config()): DataFrame = {
+  /** `maxDirectedEdges` is the caller's upper bound on the directed
+    * edge count; it picks the edge cache's storage level through
+    * [[TextRank.edgeStorage]] and is handed on to the fallback.
+    */
+  def ranks(edges: DataFrame, maxDirectedEdges: Long = Long.MaxValue): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // Serialized + spillable storage throughout: the edge set is the
@@ -62,13 +66,13 @@ object TextRankGraphX {
     // of dying, which is the behavior a 100 TB run needs. Values are
     // unaffected (storage level only).
     val lvl = StorageLevel.MEMORY_AND_DISK_SER
-    // The edge DataFrame cache honors the caller's scale decision: at
-    // the sf3 replica (~1 B edges) even a serialized columnar cache
-    // resident on an 8 g heap makes every reader marginal — callers
-    // that can estimate the edge count (tr04's query, rankDocuments)
-    // pass DISK_ONLY and the budget probe streams from disk instead.
+    // The edge DataFrame cache follows the caller's bound: at the sf3
+    // replica (~1 B edges) even a serialized columnar cache resident on
+    // an 8 g heap makes every reader marginal — above the DISK_ONLY
+    // estimate the budget probe streams from disk instead.
     val eLvl =
-      if (cfg.edgeStorage == StorageLevel.DISK_ONLY) StorageLevel.DISK_ONLY
+      if (TextRank.edgeStorage(maxDirectedEdges) == StorageLevel.DISK_ONLY)
+        StorageLevel.DISK_ONLY
       else lvl
     // Budget the edge set BEFORE any RDD-of-tuples exists: the first
     // cut of this guard counted a persisted RDD[(Long,Long,Double)],
@@ -90,7 +94,7 @@ object TextRankGraphX {
       log.warn(s"TextRankGraphX: $edgeCount edges exceed the ~${edgeBudget} " +
         s"heap budget (${Runtime.getRuntime.maxMemory() >> 20} MiB max heap); " +
         "falling back to TextRank.ranks (value-identical, scale-safe)")
-      val r = TextRank.ranks(eDf, cfg)
+      val r = TextRank.ranks(eDf, maxDirectedEdges)
       eDf.unpersist(blocking = false)
       return r
     }
@@ -103,17 +107,17 @@ object TextRankGraphX {
     val normalized = e.map(t => (t._1, (t._2, t._3))).join(outSum)
       .map { case (src, ((dst, w), ow)) => Edge(src, dst, w / ow) }
     val vertices = e.flatMap(t => Seq(t._1, t._2)).distinct()
-      .map(id => (id, cfg.initRank))
+      .map(id => (id, TextRank.InitRank))
     var g = Graph(vertices, normalized,
-      defaultVertexAttr = cfg.initRank,
+      defaultVertexAttr = TextRank.InitRank,
       edgeStorageLevel = lvl, vertexStorageLevel = lvl).cache()
     g.edges.count() // materialize once, then release the input lineage
     eDf.unpersist(blocking = false)
-    for (_ <- 1 to cfg.iterations) {
+    for (_ <- 1 to TextRank.Iterations) {
       val msgs = g.aggregateMessages[Double](
         ctx => ctx.sendToDst(ctx.srcAttr * ctx.attr), _ + _)
       val next = g.outerJoinVertices(msgs) { (_, old, msg) =>
-        msg.map(m => cfg.initRank + cfg.damping * m).getOrElse(old)
+        msg.map(m => TextRank.InitRank + TextRank.Damping * m).getOrElse(old)
       }.cache()
       next.vertices.count() // materialize before unpersisting the parent
       g.unpersist(blocking = false)

@@ -12,7 +12,7 @@ class TextRankGraphXSpec extends SparkSpec {
     (3L, Seq("x", "y", "z", "w"))).toDF("id", "tokens")
 
   test("GraphX backend matches the DataFrame loop on the micro graph") {
-    val edges = TextRank.similarityEdges(vertices)
+    val edges = TextRank.similarityEdges(vertices, 4L)
     val df = TextRank.ranks(edges).as[(Long, Double)].collect().toMap
     val gx = TextRankGraphX.ranks(edges).as[(Long, Double)].collect().toMap
     assert(df.keySet == gx.keySet)
@@ -20,7 +20,7 @@ class TextRankGraphXSpec extends SparkSpec {
   }
 
   test("edge budget exceeded falls back to the DataFrame strategy, value-identical") {
-    val edges = TextRank.similarityEdges(vertices)
+    val edges = TextRank.similarityEdges(vertices, 4L)
     val df = TextRank.ranks(edges).as[(Long, Double)].collect().toMap
     // force the budget below the micro graph's edge count: the GraphX
     // entry point must route to TextRank.ranks instead of building the
@@ -41,7 +41,8 @@ class TextRankGraphXSpec extends SparkSpec {
       .select($"doc_id".as("id"),
         graft.text.TextFunctions.textrankTokens($"text", lemma = false).as("tokens"))
       .filter(org.apache.spark.sql.functions.size($"tokens") > 0)
-    val edges = TextRank.similarityEdges(vertices)
+      .persist()
+    val edges = TextRank.similarityEdges(vertices, vertices.count())
     val df = TextRank.ranks(edges).as[(Long, Double)].collect().toMap
     val gx = TextRankGraphX.ranks(edges).as[(Long, Double)].collect().toMap
     assert(df.keySet == gx.keySet && df.nonEmpty)

@@ -14,21 +14,22 @@ class TextRankLshSpec extends SparkSpec {
 
   private val hiRecall = TextRank.EdgeCandidates.Lsh(numHashes = 128, bands = 64)
 
-  private lazy val vertices = {
+  private lazy val (vertices, nv) = {
     val docs = graft.tables.Tables.documents(spark, sf("sf0.001"))
-    docs
+    val v = docs
       .filter(graft.text.TextFunctions.spaceWordCount($"text") > 10 &&
         graft.text.TextFunctions.spaceWordCount($"text") < 30)
       .select($"doc_id".as("id"),
         graft.text.TextFunctions.textrankTokens($"text", lemma = false).as("tokens"))
       .filter(size($"tokens") > 0)
       .persist()
+    (v, v.count())
   }
 
   test("surviving LSH edges are weight-identical to exact edges (subset)") {
-    val exact = TextRank.similarityEdges(vertices)
+    val exact = TextRank.similarityEdges(vertices, nv)
       .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    val lsh = TextRank.lshSimilarityEdges(vertices, hiRecall)
+    val lsh = TextRank.lshSimilarityEdges(vertices, hiRecall, nv)
       .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(lsh.nonEmpty)
     assert(lsh.keySet.subsetOf(exact.keySet),
@@ -45,9 +46,9 @@ class TextRankLshSpec extends SparkSpec {
   test("LSH-path ranks diverge from exact ranks within a small bound") {
     val cfgExact = TextRank.Config(lemma = false)
     val cfgLsh = TextRank.Config(lemma = false, edgeCandidates = hiRecall)
-    val exact = TextRank.ranks(TextRank.edges(vertices, cfgExact), cfgExact)
+    val exact = TextRank.ranks(TextRank.edges(vertices, cfgExact, nv))
       .as[(Long, Double)].collect().toMap
-    val lsh = TextRank.ranks(TextRank.edges(vertices, cfgLsh), cfgLsh)
+    val lsh = TextRank.ranks(TextRank.edges(vertices, cfgLsh, nv))
       .as[(Long, Double)].collect().toMap
     // every vertex the LSH graph keeps must rank close to its exact rank
     // (bound calibrated on this fixture; re-measured 0.055 after the
@@ -80,9 +81,9 @@ class TextRankLshSpec extends SparkSpec {
       (200L, "b" +: (1 to 20).map(i => s"y$i")))
     val degenerate = (core ++ sats).toDF("id", "tokens")
     val lowRecall = TextRank.EdgeCandidates.Lsh(numHashes = 4, bands = 2)
-    val exact = TextRank.similarityEdges(degenerate)
+    val exact = TextRank.similarityEdges(degenerate, 12L)
       .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    val lsh = TextRank.lshSimilarityEdges(degenerate, lowRecall)
+    val lsh = TextRank.lshSimilarityEdges(degenerate, lowRecall, 12L)
       .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
     // the core clique survives banding (identical signatures)
     assert(lsh.contains((0L, 1L)) && lsh.contains((1L, 0L)))
@@ -110,15 +111,5 @@ class TextRankLshSpec extends SparkSpec {
       assert(e.getMessage.contains("DEGENERATE") &&
         e.getMessage.contains("mass=10000"))
     } finally System.clearProperty(TextRank.LshFallbackProp)
-  }
-
-  test("minVertices routes small inputs to the exact path") {
-    val routed = TextRank.EdgeCandidates.Lsh(minVertices = 1000000L)
-    val cfg = TextRank.Config(lemma = false, edgeCandidates = routed)
-    val viaRouting = TextRank.edges(vertices, cfg)
-      .as[(Long, Long, Double)].collect().toSet
-    val exact = TextRank.similarityEdges(vertices)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(viaRouting == exact)
   }
 }

@@ -9,7 +9,7 @@ class TextRankSpec extends SparkSpec {
 
   private val log2 = (x: Double) => math.log(x) / math.log(2)
 
-  // 3-vertex micro graph, hand-checkable (SURVEY §5.2: one iteration
+  // 3-vertex micro graph, hand-checkable (SURVEY §5.2: rank iterations
   // against hand-computed contributions).
   private val vertices = Seq(
     (0L, Seq("x", "x", "y")), // len 3 (duplicates count toward log2 length)
@@ -21,7 +21,7 @@ class TextRankSpec extends SparkSpec {
   private val simBC = 1.0 / (log2(2) + log2(2) + 1) // {z}
 
   test("similarity uses duplicate lengths but set intersection (G2)") {
-    val e = TextRank.similarityEdges(vertices)
+    val e = TextRank.similarityEdges(vertices, 3L)
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(e.size == 6) // both directions, no self edges
@@ -30,31 +30,39 @@ class TextRankSpec extends SparkSpec {
     assert(math.abs(e((1L, 2L)) - simBC) < 1e-12)
   }
 
-  test("one rank iteration matches hand-computed contributions (G5/G6)") {
-    val r = TextRank.ranks(TextRank.similarityEdges(vertices),
-      TextRank.Config(iterations = 1))
+  test("five rank iterations match the hand-computed recurrence (G5/G6)") {
+    val r = TextRank.ranks(TextRank.similarityEdges(vertices, 3L))
       .as[(Long, Double)].collect().toMap
-    val owA = simAB + simAC
-    val owB = simAB + simBC
-    val owC = simAC + simBC
-    val expA = 0.15 + 0.85 * (0.15 * simAB / owB + 0.15 * simAC / owC)
-    val expB = 0.15 + 0.85 * (0.15 * simAB / owA + 0.15 * simBC / owC)
-    assert(math.abs(r(0L) - expA) < 1e-12)
-    assert(math.abs(r(1L) - expB) < 1e-12)
+    // the reference's update, unrolled: r' = 0.15 + 0.85 Σ_in r·w/ow(src)
+    val w = Array(
+      Array(0.0, simAB, simAC),
+      Array(simAB, 0.0, simBC),
+      Array(simAC, simBC, 0.0))
+    val ow = w.map(_.sum)
+    var exp = Array.fill(3)(0.15)
+    for (_ <- 1 to 5) {
+      val prev = exp
+      exp = Array.tabulate(3) { d =>
+        0.15 + 0.85 * (0 until 3).map(s => prev(s) * w(s)(d) / ow(s)).sum
+      }
+    }
+    assert(r.size == 3)
+    (0 until 3).foreach { i =>
+      assert(math.abs(r(i.toLong) - exp(i)) < 1e-12, s"vertex $i")
+    }
   }
 
   test("ranks stay >= initRank and converge over 5 iterations") {
-    val r = TextRank.ranks(TextRank.similarityEdges(vertices))
+    val r = TextRank.ranks(TextRank.similarityEdges(vertices, 3L))
       .as[(Long, Double)].collect().toMap
     assert(r.size == 3)
     assert(r.values.forall(_ >= 0.15))
   }
 
-  test("shuffled fallback (broadcastLimit=0) matches the broadcast path") {
-    val broadcasted = TextRank.ranks(TextRank.similarityEdges(vertices))
+  test("shuffled fallback matches the broadcast path") {
+    val broadcasted = TextRank.ranks(TextRank.similarityEdges(vertices, 3L))
       .as[(Long, Double)].collect().toMap
-    val shuffled = TextRank.ranks(TextRank.similarityEdges(vertices),
-      TextRank.Config(broadcastLimit = 0L))
+    val shuffled = TextRank.ranksShuffled(TextRank.similarityEdges(vertices, 3L))
       .as[(Long, Double)].collect().toMap
     assert(broadcasted.keySet == shuffled.keySet)
     broadcasted.foreach { case (id, v) =>
@@ -71,15 +79,15 @@ class TextRankSpec extends SparkSpec {
       (0L, 1L, 1.0),
       (1L, 2L, 2.0),
       (0L, 2L, 3.0)).toDF("src", "dst", "weight")
-    val agg = TextRank.ranks(directed, TextRank.Config(iterations = 2))
+    val agg = TextRank.ranks(directed)
       .as[(Long, Double)].collect().toMap
-    val shf = TextRank.ranks(directed,
-      TextRank.Config(iterations = 2, broadcastLimit = 0L))
+    val shf = TextRank.ranksShuffled(directed)
       .as[(Long, Double)].collect().toMap
     assert(agg.keySet == Set(0L, 1L, 2L))
     assert(shf.keySet == Set(0L, 1L, 2L))
-    // Source-only vertex holds initRank; hand-check the chain after two
-    // iterations: r1 = .15 + .85*(r0 * 1/4); r2 uses iteration-1 ranks.
+    // Source-only vertex holds initRank; hand-check the chain: r1 =
+    // .15 + .85*(r0 * 1/4); r2 uses iteration-1 ranks. The chain reaches
+    // its fixed point by iteration 2, so five iterations read the same.
     val r1i1 = 0.15 + 0.85 * (0.15 * 0.25)
     assert(math.abs(agg(0L) - 0.15) < 1e-12)
     assert(math.abs(agg(1L) - r1i1) < 1e-12) // r0 constant → r1 fixed point
@@ -103,13 +111,21 @@ class TextRankSpec extends SparkSpec {
     assert(TextRank.quadEdgeBytes(6700L) == 6700L * 6700L * 48L)
     // monotone across the old wrap point
     assert(TextRank.quadEdgeBytes(nv) >= TextRank.quadEdgeBytes(440000000L))
+    // the edge-cache storage rule reads the same saturating product:
+    // no bound keeps MEMORY_AND_DISK, and DISK_ONLY starts once
+    // bound·48 B passes DiskEdgeBytes (6,689² edges, not 6,688²)
+    import org.apache.spark.storage.StorageLevel.{DISK_ONLY, MEMORY_AND_DISK}
+    assert(TextRank.edgeStorage(Long.MaxValue) == MEMORY_AND_DISK)
+    assert(TextRank.edgeStorage(6688L * 6688L) == MEMORY_AND_DISK)
+    assert(TextRank.edgeStorage(6689L * 6689L) == DISK_ONLY)
+    assert(TextRank.edgeStorage(nv * nv) == DISK_ONLY) // nv²·48 saturates
   }
 
   test("ranks with a proven-small edge bound matches the counted path") {
     // maxDirectedEdges below both the edge budget and the DISK_ONLY
     // threshold skips the stateless pre-count (the tr02 bench reclaim);
     // the result must be identical to the counting path.
-    val e = TextRank.similarityEdges(vertices)
+    val e = TextRank.similarityEdges(vertices, 3L)
     val counted = TextRank.ranks(e).as[(Long, Double)].collect().toMap
     val bounded = TextRank.ranks(e, maxDirectedEdges = 9L)
       .as[(Long, Double)].collect().toMap
@@ -117,14 +133,6 @@ class TextRankSpec extends SparkSpec {
     counted.foreach { case (id, v) =>
       assert(v == bounded(id), s"vertex $id") // bit-identical, same route
     }
-  }
-
-  test("similarityEdges with an explicit vertexCount matches the counting path") {
-    val a = TextRank.similarityEdges(vertices)
-      .as[(Long, Long, Double)].collect().toSet
-    val b = TextRank.similarityEdges(vertices, vertexCount = 3L)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(a == b)
   }
 
   test("rankDocuments applies the exclusive 10..30 word band (F2)") {
