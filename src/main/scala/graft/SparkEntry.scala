@@ -47,7 +47,7 @@ object SparkEntry {
     providers.flatMap(_.all).filter(_.gate).map(q => q.name -> q.run).toMap
 
   /** Every registered query, including bench/stress-only (gate=false)
-    * entries — what Bench, Stress, Profile, and ExplainAudit resolve from.
+    * entries — what Bench, Stress, Profile, and PlanAudit resolve from.
     */
   def allQueries: Map[String, (SparkSession, String) => DataFrame] =
     providers.flatMap(_.all).map(q => q.name -> q.run).toMap

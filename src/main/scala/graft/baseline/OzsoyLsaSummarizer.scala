@@ -6,29 +6,21 @@ import graft.text.StopWords
 
 /** Driver-local LSA baseline summarizer equivalent to the reference's
   * external `pytldr` `LsaSummarizer` (BigdataProjectCode.py:167-176,
-  * SURVEY V1/H3), rebuilt from the published algorithms it implements
-  * (Ozsoy et al. 2010 "cross method"; Steinberger & Ježek 2004).
+  * SURVEY V1/H3), rebuilt from the published algorithm it implements:
+  * the Ozsoy et al. 2010 "cross method" (pytldr's `LsaSummarizer` IS the
+  * cross-method object — the reference's own comment at
+  * BigdataProjectCode.py:168).
   *
-  * pytldr's `LsaSummarizer` IS the Ozsoy cross-method object (the
-  * reference's own comment at BigdataProjectCode.py:168), so the cross
-  * method is the parity default here; the Steinberger-Ježek "enhanced
-  * length" score is preserved alongside as [[scoreSentencesSteinberger]].
-  *
-  * Shared pipeline:
+  * Steps (the cross method per Ozsoy et al. 2010 §3.3):
   *  1. binary term×sentence matrix (`binary_matrix=True`) over
   *     stopword-filtered alphabetic tokens;
   *  2. SVD (Breeze, local — a single document's sentences always fit),
   *     top `topics` concepts by singular value;
-  *  3. concepts with σ_j < topicSigmaThreshold·σ_max are zeroed out.
-  *
-  * Cross method (steps from Ozsoy et al. 2010 §3.3):
+  *  3. concepts with σ_j < topicSigmaThreshold·σ_max are zeroed out;
   *  4. per-topic average sentence loading; cells ≤ the topic average are
   *     zeroed (drops weakly-related sentences from each concept);
   *  5. sentence saliency = Σ_j σ_j² · v_ij² over the surviving cells —
   *     the "cross" of concept strength and sentence loading.
-  *
-  * Steinberger-Ježek:
-  *  4'. sentence score = sqrt(Σ_j σ_j² · v_ij²) with no cell zeroing.
   *
   * Determinism: SVD singular-vector signs are implementation-defined, so
   * each concept row of Vᵀ is flipped to make its max-|loading| entry
@@ -75,16 +67,13 @@ object OzsoyLsaSummarizer {
     Some((sigma.take(k), v))
   }
 
-  private def zeroed(sentences: Seq[String]): Seq[Scored] =
-    sentences.zipWithIndex.map { case (s, i) => Scored(i, s, 0.0) }
-
   /** Ozsoy cross-method sentence scores — the pytldr `LsaSummarizer`
     * parity path. No selection.
     */
   def scoreSentences(sentences: Seq[String], topics: Int = 15,
       topicSigmaThreshold: Double = 0.75): Seq[Scored] =
     decompose(sentences, topics) match {
-      case None => zeroed(sentences)
+      case None => sentences.zipWithIndex.map { case (s, i) => Scored(i, s, 0.0) }
       case Some((sigma, v)) =>
         val n = sentences.size
         val k = sigma.length
@@ -97,32 +86,12 @@ object OzsoyLsaSummarizer {
         // 3. zero out weak concepts
         val sMax = if (k > 0) sigma.max else 0.0
         val sig = sigma.map(s => if (s < topicSigmaThreshold * sMax) 0.0 else s)
-        // 5. saliency = sigma² · v² (no sqrt — that is the Steinberger form)
+        // 5. saliency = sigma² · v²
         sentences.indices.map { i =>
           val score = (0 until k).map { j =>
             val x = sig(j) * vCut(j)(i)
             x * x
           }.sum
-          Scored(i, sentences(i), score)
-        }
-    }
-
-  /** Steinberger-Ježek "enhanced length" scores, preserved alongside the
-    * cross method: sqrt(Σ σ²v²) over surviving concepts, no cell zeroing.
-    */
-  def scoreSentencesSteinberger(sentences: Seq[String], topics: Int = 15,
-      topicSigmaThreshold: Double = 0.75): Seq[Scored] =
-    decompose(sentences, topics) match {
-      case None => zeroed(sentences)
-      case Some((sigma, v)) =>
-        val k = sigma.length
-        val sMax = if (k > 0) sigma.max else 0.0
-        val keep = (0 until k).filter(j => sigma(j) >= topicSigmaThreshold * sMax)
-        sentences.indices.map { i =>
-          val score = math.sqrt(keep.map { j =>
-            val x = sigma(j) * v(j)(i)
-            x * x
-          }.sum)
           Scored(i, sentences(i), score)
         }
     }

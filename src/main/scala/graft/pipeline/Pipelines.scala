@@ -3,10 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.baseline.OzsoyLsaSummarizer
 import graft.io.ReviewSource
 import graft.lsa.Lsa
-import graft.rouge.Rouge
+import graft.operators.GroupedSummarizer
 import graft.text.TextFunctions
 import graft.textrank.TextRank
 
@@ -86,32 +85,29 @@ object Pipelines {
     TextRank.summarize(sents, "sentence_id", "sentence", k, cfg)
   }
 
+  // Above this many products EP3 runs as one flatMapGroups job.
+  private val GroupedRouteProducts = 64
+
   /** EP3 — evaluation: LSA system summary vs the Ozsoy/pytldr-style
-    * baseline, zip-paired (J3: zip truncates to the shorter list) and
-    * ROUGE-scored with stemming, per product. Implements the INTENDED
+    * baseline, zip-paired and ROUGE-scored with stemming, per product
+    * ([[GroupedSummarizer.evalRows]]). Implements the INTENDED
     * per-product comparison — not the reference's file-0 bug (quirk Q7).
-    *
-    * `conceptPairs = true` (default) pairs like the reference
-    * (BigdataProjectCode.py:196: `zip(textSummariesConcepts, rfrncedata)`):
-    * each system element is ONE CONCEPT's sentences joined, zipped against
-    * single baseline sentences — the length asymmetry behind the published
-    * ROUGE-L P ≪ R shape (BASELINE.md Fig-5/6). `false` pairs
-    * sentence-by-sentence (symmetric lengths).
+    * Each system element is ONE CONCEPT's sentences joined, zipped
+    * against single baseline sentences, as the reference pairs them
+    * (BigdataProjectCode.py:196: `zip(textSummariesConcepts, rfrncedata)`)
+    * — the length asymmetry behind the published ROUGE-L P ≪ R shape
+    * (BASELINE.md Fig-5/6).
     *
     * Output: one row per product × metric with mean P/R/F (A7).
     *
     * Scale routing: the faithful per-product driver loop (pytldr-shaped,
     * one Spark job per product) runs only while the corpus is small;
-    * above `groupedThreshold` products the SAME evaluation runs as ONE
-    * `flatMapGroups` job ([[graft.operators.GroupedSummarizer
-    * .evaluatePerGroup]] — a million corpora = one job). The two paths
-    * are asserted row-equal in GroupedEvalSpec, so the routing is a pure
-    * execution-strategy choice.
+    * above 64 products the SAME evaluation runs as ONE `flatMapGroups`
+    * job ([[GroupedSummarizer.evaluatePerGroup]] — a million corpora =
+    * one job). GroupedEvalSpec asserts the two routes row-equal, so the
+    * routing is a pure execution-strategy choice.
     */
-  def evaluate(spark: SparkSession, path: String,
-      topics: Int = 15, summaryLen: Int = 15,
-      conceptPairs: Boolean = true,
-      groupedThreshold: Int = 64): DataFrame = {
+  def evaluate(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val all = ReviewSource.sentences(ReviewSource.reviews(spark, path))
       .filter(length(trim(col("sentence"))) > 0)
@@ -121,46 +117,24 @@ object Pipelines {
       // collect-bound: model: distinct product ids (group domain) — the reference's per-file loop spine
       .as[String].collect().sorted.toSeq
 
-    if (products.length > groupedThreshold) {
-      val out = graft.operators.GroupedSummarizer.evaluatePerGroup(
-        all.select($"product_id".as("grp"), $"review_id", $"sent_idx",
-          $"sentence"),
-        topics, summaryLen, conceptPairs).toDF()
-      all.unpersist()
-      return out
-    }
-
-    val rows = products.flatMap { pid =>
-      val psents = all.filter($"product_id" === pid)
-      val conceptSents = lsaSummaryFromSentences(psents)
-        // collect-bound: top-k: k concept summaries for one product
-        .select($"sentences").as[String].collect()
-      val sys =
-        if (conceptPairs) conceptSents.map(_.replace(" | ", " ")).toSeq
-        else conceptSents.flatMap(_.split(" \\| ")).toSeq
-      // baseline: driver-local like pytldr; one product's sentences fit
-      val ordered = psents.orderBy($"review_id", $"sent_idx")
-        // collect-bound: fixture: one product's sentences for the driver-local pytldr baseline (reference parity; the grouped operators are the scale route)
-        .select($"sentence").as[String].collect().toSeq
-      val ref = OzsoyLsaSummarizer.summarize(ordered, topics, summaryLen.toDouble)
-      val pairs = sys.zip(ref)
-      Seq("rouge1", "rouge2", "rougeL").map { metric =>
-        val scores = pairs.map { case (s, r) =>
-          metric match {
-            case "rouge1" => Rouge.rougeN(s, r, 1, stem = true)
-            case "rouge2" => Rouge.rougeN(s, r, 2, stem = true)
-            case _ => Rouge.rougeL(s, r, stem = true)
-          }
-        }
-        val n = math.max(scores.size, 1)
-        (pid, metric,
-          scores.map(_.precision).sum / n,
-          scores.map(_.recall).sum / n,
-          scores.map(_.f1).sum / n)
-      }
-    }
+    val out =
+      if (products.length > GroupedRouteProducts)
+        GroupedSummarizer.evaluatePerGroup(
+          all.select($"product_id".as("grp"), $"review_id", $"sent_idx",
+            $"sentence")).toDF()
+      else products.flatMap { pid =>
+        val psents = all.filter($"product_id" === pid)
+        val sys = lsaSummaryFromSentences(psents)
+          // collect-bound: top-k: k concept summaries for one product
+          .select($"sentences").as[String].collect()
+          .map(_.replace(" | ", " ")).toSeq
+        // baseline: driver-local like pytldr; one product's sentences fit
+        val ordered = psents.orderBy($"review_id", $"sent_idx")
+          // collect-bound: fixture: one product's sentences for the driver-local pytldr baseline (reference parity; the grouped operators are the scale route)
+          .select($"sentence").as[String].collect().toSeq
+        GroupedSummarizer.evalRows(pid, sys, ordered)
+      }.toDF()
     all.unpersist()
-    spark.createDataFrame(rows)
-      .toDF("product_id", "metric", "precision", "recall", "f1")
+    out
   }
 }

@@ -72,6 +72,18 @@ object Rouge {
     Score(p, r, fScore(p, r))
   }
 
+  /** EP3's metrics (rouge-score's `use_stemmer=True`) in report order. */
+  private val stemmedMetrics: Seq[(String, (String, String) => Score)] = Seq(
+    ("rouge1", (s, r) => rougeN(s, r, 1, stem = true)),
+    ("rouge2", (s, r) => rougeN(s, r, 2, stem = true)),
+    ("rougeL", (s, r) => rougeL(s, r, stem = true)))
+
+  /** Stemmed ROUGE-1/2/L of every (system, reference) pair, per metric
+    * in report order.
+    */
+  def stemmedScores(pairs: Seq[(String, String)]): Seq[(String, Seq[Score])] =
+    stemmedMetrics.map { case (metric, score) => metric -> pairs.map(score.tupled) }
+
   // ---- Column-level surface (struct<precision,recall,f1>) ----
   def rouge1(stem: Boolean): (Column, Column) => Column = {
     val u = udf((s: String, r: String) => rougeN(s, r, 1, stem))

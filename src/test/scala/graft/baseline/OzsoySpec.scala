@@ -85,17 +85,6 @@ class OzsoySpec extends AnyFunSuite {
     assert(math.abs(byIdx(1) - 0.2763932023) < 1e-6)
   }
 
-  test("Steinberger score preserved alongside (hand-computed, no cell zeroing)") {
-    // sqrt(sum sigma^2 v^2) over all concepts at threshold 0.5:
-    //   s0 = sqrt(4 * 0.5) = sqrt(2), s2 = 1, s3 = sqrt(2)
-    val s = OzsoyLsaSummarizer.scoreSentencesSteinberger(block,
-      topics = 3, topicSigmaThreshold = 0.5)
-    val byIdx = s.map(x => x.index -> x.score).toMap
-    assert(math.abs(byIdx(0) - math.sqrt(2)) < 1e-9)
-    assert(math.abs(byIdx(2) - 1.0) < 1e-9)
-    assert(math.abs(byIdx(3) - math.sqrt(2)) < 1e-9)
-  }
-
   test("BASELINE.md configuration (topics=15, length=15, sigma>=0.75) runs end-to-end") {
     // the reference's exact pytldr invocation shape on a 20-sentence doc
     val doc = (0 until 20).map(i => s"review sentence number word$i about spark topic${i % 4}")

@@ -1,10 +1,12 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.MapGroups
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.io.ReviewSource
-import graft.pipeline.Pipelines
+import graft.pipeline.{Pipelines, SyntheticReviews}
 
 /** The grouped (single-job) EP3 evaluator must produce the same
   * per-product ROUGE table as the driver-looped `Pipelines.evaluate` —
@@ -16,18 +18,13 @@ class GroupedEvalSpec extends SparkSpec {
   private def res(name: String): String =
     getClass.getResource(s"/reviews/$name").getPath
 
-  private def check(conceptPairs: Boolean): Unit = {
-    val path = res("small_product.txt")
-    val expected = Pipelines.evaluate(spark, path, conceptPairs = conceptPairs)
-      .as[(String, String, Double, Double, Double)].collect()
+  private type Rows = Map[(String, String), (Double, Double, Double)]
+
+  private def rows(df: DataFrame): Rows =
+    df.as[(String, String, Double, Double, Double)].collect()
       .map(r => (r._1, r._2) -> (r._3, r._4, r._5)).toMap
 
-    val sents = ReviewSource.sentences(ReviewSource.reviews(spark, path))
-      .select($"product_id".as("grp"), $"review_id", $"sent_idx", $"sentence")
-    val actual = GroupedSummarizer.evaluatePerGroup(sents, conceptPairs = conceptPairs)
-      .collect()
-      .map(r => (r.product_id, r.metric) -> (r.precision, r.recall, r.f1)).toMap
-
+  private def assertClose(actual: Rows, expected: Rows): Unit = {
     assert(actual.keySet == expected.keySet)
     actual.foreach { case (k, (p, r, f)) =>
       val (ep, er, ef) = expected(k)
@@ -38,26 +35,27 @@ class GroupedEvalSpec extends SparkSpec {
   }
 
   test("grouped EP3 equals Pipelines.evaluate (concept pairing, reference shape)") {
-    check(conceptPairs = true)
-  }
-
-  test("grouped EP3 equals Pipelines.evaluate (sentence pairing)") {
-    check(conceptPairs = false)
+    val path = res("small_product.txt")
+    val sents = ReviewSource.sentences(ReviewSource.reviews(spark, path))
+      .select($"product_id".as("grp"), $"review_id", $"sent_idx", $"sentence")
+    assertClose(rows(GroupedSummarizer.evaluatePerGroup(sents).toDF()),
+      rows(Pipelines.evaluate(spark, path)))
   }
 
   test("evaluate's scale routing returns identical rows on both paths") {
-    val path = res("small_product.txt")
-    def rows(threshold: Int) =
-      Pipelines.evaluate(spark, path, groupedThreshold = threshold)
-        .as[(String, String, Double, Double, Double)].collect()
-        .sortBy(r => (r._1, r._2)).toSeq
-    val viaLoop = rows(Int.MaxValue) // forced driver loop
-    val viaGrouped = rows(0) // forced single-job flatMapGroups
-    assert(viaLoop.nonEmpty)
-    viaLoop.zip(viaGrouped).foreach { case (l, g) =>
-      assert(l._1 == g._1 && l._2 == g._2)
-      assert(math.abs(l._3 - g._3) < 1e-9 && math.abs(l._4 - g._4) < 1e-9 &&
-        math.abs(l._5 - g._5) < 1e-9, s"$l vs $g")
+    // 65 products: one over the loop route's 64, so the glob takes the
+    // single-job grouped route while each file alone takes the loop
+    val dir = SyntheticReviews.write(products = 65, reviews = 6)
+    def grouped(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.exists(_.isInstanceOf[MapGroups])
+    val all = Pipelines.evaluate(spark, s"$dir/*.txt")
+    assert(grouped(all))
+    val viaGrouped = rows(all)
+    assert(viaGrouped.size == 65 * 3)
+    Seq("product00", "product64").foreach { pid =>
+      val one = Pipelines.evaluate(spark, s"$dir/$pid.txt")
+      assert(!grouped(one))
+      assertClose(viaGrouped.filter(_._1._1 == pid), rows(one))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.functions._
 
@@ -24,38 +24,8 @@ import graft.operators.GroupedSummarizer
 class AnchorSpec extends SparkSpec {
   import spark.implicits._
 
-  // --- deterministic 30-product corpus ------------------------------
-  private val shared = Vector("battery", "screen", "quality", "price",
-    "shipping", "sound", "camera", "button", "cable", "charger", "device",
-    "product", "works", "great", "small", "light", "broken", "return",
-    "amazon", "warranty", "month", "year", "daily", "travel", "office",
-    "value", "setup", "manual", "plastic", "metal")
-
-  private def productWords(p: Int): Vector[String] =
-    Vector.tabulate(12)(i => s"feature$p" + ('a' + i % 4).toChar)
-
-  private lazy val corpusDir: Path = {
-    val dir = Files.createTempDirectory("anchor_corpus")
-    val rnd = new scala.util.Random(42)
-    (0 until 30).foreach { p =>
-      val pool = shared ++ productWords(p)
-      val sb = new StringBuilder
-      sb.append("review_id\tproduct_title\tstar_rating\tvine\tverified_purchase\treview_body\n")
-      (0 until 40).foreach { r =>
-        val nSents = 3 + rnd.nextInt(3)
-        val body = (0 until nSents).map { _ =>
-          // 12..24 words: inside the TextRank band (10 < w < 30) and
-          // above the LSA minimum (>= 5)
-          val n = 12 + rnd.nextInt(13)
-          (0 until n).map(_ => pool(rnd.nextInt(pool.size))).mkString(" ")
-        }.mkString(". ") + "."
-        sb.append(s"R${p}_$r\tProduct $p\t${1 + rnd.nextInt(5)}\tN\tY\t$body\n")
-      }
-      Files.write(dir.resolve(f"product$p%02d.txt"),
-        sb.toString.getBytes("UTF-8"))
-    }
-    dir
-  }
+  private lazy val corpusDir: Path =
+    SyntheticReviews.write(products = 30, reviews = 40)
 
   test("EP2 anchor: TextRank top-5 rank shape matches Fig-2") {
     // per-product, like the reference's per-file loop (3 spot products)

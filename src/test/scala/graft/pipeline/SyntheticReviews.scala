@@ -1,0 +1,46 @@
+package graft.pipeline
+
+import java.nio.file.{Files, Path}
+
+/** Deterministic synthetic corpus in the reference dataset's shape: one
+  * review TSV per product (`productNN.txt`), each review 3-5 sentences
+  * of 12-24 words drawn from a shared vocabulary plus 12 words of the
+  * product's own. The real review text is not redistributable.
+  */
+object SyntheticReviews {
+
+  private val shared = Vector("battery", "screen", "quality", "price",
+    "shipping", "sound", "camera", "button", "cable", "charger", "device",
+    "product", "works", "great", "small", "light", "broken", "return",
+    "amazon", "warranty", "month", "year", "daily", "travel", "office",
+    "value", "setup", "manual", "plastic", "metal")
+
+  private def productWords(p: Int): Vector[String] =
+    Vector.tabulate(12)(i => s"feature$p" + ('a' + i % 4).toChar)
+
+  /** Writes `products` files of `reviews` reviews each to a new temp
+    * directory and returns it.
+    */
+  def write(products: Int, reviews: Int): Path = {
+    val dir = Files.createTempDirectory("review_corpus")
+    val rnd = new scala.util.Random(42)
+    (0 until products).foreach { p =>
+      val pool = shared ++ productWords(p)
+      val sb = new StringBuilder
+      sb.append("review_id\tproduct_title\tstar_rating\tvine\tverified_purchase\treview_body\n")
+      (0 until reviews).foreach { r =>
+        val nSents = 3 + rnd.nextInt(3)
+        val body = (0 until nSents).map { _ =>
+          // 12..24 words: inside the TextRank band (10 < w < 30) and
+          // above the LSA minimum (>= 5)
+          val n = 12 + rnd.nextInt(13)
+          (0 until n).map(_ => pool(rnd.nextInt(pool.size))).mkString(" ")
+        }.mkString(". ") + "."
+        sb.append(s"R${p}_$r\tProduct $p\t${1 + rnd.nextInt(5)}\tN\tY\t$body\n")
+      }
+      Files.write(dir.resolve(f"product$p%02d.txt"),
+        sb.toString.getBytes("UTF-8"))
+    }
+    dir
+  }
+}

@@ -3,7 +3,6 @@ package graft.textrank
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.GroupedSummarizer
 
 class GroupedTextRankSpec extends SparkSpec {
   import spark.implicits._
@@ -33,32 +32,5 @@ class GroupedTextRankSpec extends SparkSpec {
         assert(math.abs(r - grouped((g, id))) < 1e-12, s"grp=$g id=$id")
       }
     }
-  }
-}
-
-class GroupedSummarizerSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("per-group top-k matches the direct scorer") {
-    val sents = Seq(
-      ("d1", 0L, "spark cluster executor spark cluster"),
-      ("d1", 1L, "the cat sat"),
-      ("d1", 2L, "spark executor cluster scaling spark"),
-      ("d2", 0L, "banana mango fruit banana"),
-      ("d2", 1L, "mango fruit tasty mango banana fruit"),
-      ("d2", 2L, "unrelated words entirely")).toDF("grp", "sid", "text")
-    val got = GroupedSummarizer.topKPerGroup(sents, 2).collect()
-      .groupBy(_.grp).view.mapValues(_.map(_.sid).toSeq).toMap
-
-    Seq("d1", "d2").foreach { g =>
-      val texts = sents.filter($"grp" === g).orderBy($"sid")
-        .select($"text").as[String].collect().toSeq
-      val direct = graft.baseline.OzsoyLsaSummarizer
-        .scoreSentences(texts, 15, 0.75)
-        .sortBy(s => (-s.score, s.index)).take(2).map(_.index.toLong)
-        .sorted
-      assert(got(g) == direct, s"group $g")
-    }
-    assert(got.values.forall(_.size == 2))
   }
 }
