@@ -99,13 +99,17 @@ object GroupedSummarizer {
       }
   }
 
+  /** F1: the fewest space-separated words a numbered sentence has, here
+    * and in `Pipelines.sentencesWithSid`.
+    */
+  private[graft] val MinSentenceWords = 5
+
   /** In-group sid numbering, as `Pipelines.sentencesWithSid` numbers a
-    * product: the F1 filter (≥ 5 space-separated words; split keeps
-    * trailing empties, like Spark's split(col, " ")), then 1-based ids
-    * in sentence order.
+    * product: the F1 filter (split keeps trailing empties, like Spark's
+    * split(col, " ")), then 1-based ids in sentence order.
     */
   private def withSid(ordered: Seq[EvalSentence]): Seq[(Long, String)] =
-    ordered.filter(_.sentence.split(" ", -1).length >= 5)
+    ordered.filter(_.sentence.split(" ", -1).length >= MinSentenceWords)
       .zipWithIndex.map { case (r, i) => (i + 1L, r.sentence) }
 
   /** The DuckDB-replayable configuration of [[evaluatePerGroup]]: both

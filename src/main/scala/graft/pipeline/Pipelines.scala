@@ -20,10 +20,11 @@ object Pipelines {
     * `zipWithIndex` assigns contiguous ids per partition — no
     * single-partition global window even on multi-product input.
     */
-  def sentencesWithSid(sents: DataFrame, minWords: Int = 5): DataFrame = {
+  def sentencesWithSid(sents: DataFrame): DataFrame = {
     val spark = sents.sparkSession
     val sorted = sents
-      .filter(TextFunctions.spaceWordCount(col("sentence")) >= minWords)
+      .filter(TextFunctions.spaceWordCount(col("sentence")) >=
+        GroupedSummarizer.MinSentenceWords)
       .orderBy(col("review_id"), col("sent_idx"))
     val numbered = sorted.rdd.zipWithIndex().map { case (row, i) =>
       org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (i + 1L))

@@ -18,9 +18,6 @@ object TextRankQueries extends QueryProvider {
   private val stopSql: String =
     StopWords.nltkEnglishAlpha.map(w => s"'$w'").mkString("[", ",", "]")
 
-  /** Out-normalization + rank init + unrolled iterations + final
-    * projection; an `e(src, dst, w)` CTE must already be defined.
-    */
   /** Out-normalization + rank init + unrolled damped iterations, as
     * chained CTEs ending in `r$iterations`; the caller appends its own
     * final SELECT. An `e(src, dst, w)` CTE must already be defined.
@@ -165,14 +162,8 @@ object TextRankQueries extends QueryProvider {
       "tr04_ranks_graphx",
       (s, dir) => {
         import s.implicits._
-        val docs = Tables.documents(s, dir)
-        val vertices = docs
-          .filter(graft.text.TextFunctions.spaceWordCount($"text") > 10 &&
-            graft.text.TextFunctions.spaceWordCount($"text") < 30)
-          .select($"doc_id".as("id"),
-            graft.text.TextFunctions.textrankTokens($"text", lemma = false).as("tokens"))
-          .filter(size($"tokens") > 0)
-          .persist()
+        val vertices = TextRank.vertices(Tables.documents(s, dir), $"doc_id",
+          "text", lemma = false).persist()
         // nv² bounds the directed edge count, as in rankDocuments
         val nv = vertices.count()
         try graft.textrank.TextRankGraphX
@@ -232,14 +223,14 @@ object TextRankQueries extends QueryProvider {
 
     // Grouped (per-language) TextRank in ONE distributed job — the scale
     // formulation of the reference's per-file loop — with a full grouped
-    // unrolled oracle.
+    // unrolled oracle. It ranks through TextRank.ranksShuffled, so this
+    // oracle also hash-checks the distributed rank route at every scale.
     Q(
       "tr05_grouped_ranks",
       (s, dir) => {
         import s.implicits._
         graft.textrank.GroupedTextRank.rankDocuments(
-          Tables.documents(s, dir), "lang", "doc_id", "text",
-          TextRank.Config(lemma = false))
+          Tables.documents(s, dir), "lang", "doc_id", "text", lemma = false)
           .select($"grp", $"id", round($"rnk", 6).as("rnk"))
           .orderBy($"grp", desc("rnk"), $"id")
       },

@@ -69,8 +69,8 @@ object TextRank {
   private[textrank] val Iterations = 5
   private[textrank] val Damping = 0.85
   private[textrank] val InitRank = 0.15
-  private[textrank] val MinWords = 10
-  private[textrank] val MaxWords = 30
+  private val MinWords = 10
+  private val MaxWords = 30
 
   /** Edge count above which [[ranks]] falls back from the
     * compacted-primitive-arrays treeAggregate strategy to the shuffled
@@ -177,6 +177,31 @@ object TextRank {
           "Re-adjudicate the route for this corpus explicitly.")
   }
 
+  /** The vertex table every TextRank graph starts from: docs inside F2's
+    * exclusive [[MinWords]]..[[MaxWords]] space-split word band, fanned
+    * out over every core BEFORE tokenizing (the token pipeline and the
+    * quadratic self-join that streams over these partitions must not
+    * inherit the scan's possibly single split), `textrankTokens`, and
+    * empty token lists dropped (F7). Columns (id, tokens), `id` being
+    * the caller's expression. The caller persists it.
+    */
+  private[graft] def vertices(docs: DataFrame, id: Column, textCol: String,
+      lemma: Boolean): DataFrame =
+    graft.Par.fanOut(docs
+      .filter(TextFunctions.spaceWordCount(col(textCol)) > MinWords &&
+        TextFunctions.spaceWordCount(col(textCol)) < MaxWords))
+      .select(id.as("id"), TextFunctions.textrankTokens(col(textCol), lemma).as("tokens"))
+      .filter(size(col("tokens")) > 0)
+
+  /** Distinct token sets and raw lengths are per-VERTEX quantities:
+    * (id, dt, n) computed once before any pair join, not per pair (a
+    * V²→V reduction in array_distinct work).
+    */
+  private[textrank] def tokenSets(vertices: DataFrame): DataFrame =
+    vertices.select(col("id"),
+      array_distinct(col("tokens")).as("dt"),
+      size(col("tokens")).as("n"))
+
   /** Directed edge list (src, dst, weight) over all ordered pairs with
     * nonzero similarity (both directions present — the graph is
     * symmetric, matching the reference's adjacency map).
@@ -187,12 +212,7 @@ object TextRank {
     *        stream side for the quadratic output
     */
   def similarityEdges(vertices: DataFrame, vertexCount: Long): DataFrame = {
-    // Distinct token sets and raw lengths are per-VERTEX quantities:
-    // compute them once before the quadratic join, not per pair (a
-    // V²→V reduction in array_distinct work).
-    val v = vertices.select(col("id"),
-      array_distinct(col("tokens")).as("dt"),
-      size(col("tokens")).as("n"))
+    val v = tokenSets(vertices)
     // Size the STREAM side for the quadratic OUTPUT, not the input: the
     // self-join multiplies row count by ~V/2, so cores-sized input
     // partitions become multi-hundred-MB edge partitions whose cache
@@ -221,7 +241,7 @@ object TextRank {
     * `log2(na) + log2(nb) + 1`, zero-weight pairs dropped, and each
     * surviving pair emitted in both directions as (src, dst, weight).
     */
-  private def weightedMirror(pairs: DataFrame): DataFrame =
+  private[textrank] def weightedMirror(pairs: DataFrame): DataFrame =
     pairs
       .withColumn("weight",
         graft.functions.IntersectSize.intersect_size(col("dt_a"), col("dt_b")).cast("double") /
@@ -264,15 +284,12 @@ object TextRank {
       lsh: EdgeCandidates.Lsh, vertexCount: Long): DataFrame = {
     import graft.operators.Dedup
     val rowsPerBand = math.max(1, lsh.numHashes / lsh.bands)
-    // Distinct token sets / raw lengths are per-vertex quantities; this
-    // table feeds the signature build and both candidate re-join sides.
-    // (Persisted without an unpersist hook — the result is a lazy plan
-    // that still references it; MEMORY_AND_DISK entries are LRU-evicted,
-    // same documented pattern as Dedup.minhashNearDuplicates.)
-    val v = vertices.select(col("id"),
-      array_distinct(col("tokens")).as("dt"),
-      size(col("tokens")).as("n"))
-      .persist()
+    // The per-vertex table feeds the signature build and both candidate
+    // re-join sides. (Persisted without an unpersist hook — the result
+    // is a lazy plan that still references it; MEMORY_AND_DISK entries
+    // are LRU-evicted, same documented pattern as
+    // Dedup.minhashNearDuplicates.)
+    val v = tokenSets(vertices).persist()
     val sigs = v
       .withColumn("hv", Dedup.shingleHashes(col("dt")))
       .withColumn("sig", Dedup.minhashSignature(col("hv"), lsh.bands * rowsPerBand))
@@ -596,24 +613,31 @@ object TextRank {
     val vertices =
       (if (symmetricEdges) norm.select(col("src").as("id"))
        else norm.select(col("src").as("id"))
-         .union(norm.select(col("dst").as("id")))).distinct().persist()
-    vertices.count() // materialize both once; reused every iteration
-    var r = vertices.withColumn("rnk", lit(InitRank))
-    for (_ <- 1 to Iterations) {
-      val contrib = norm.join(dim(r), norm("src") === r("id"))
-        .groupBy(col("dst"))
-        .agg(sum(col("rnk") * col("wn")).as("c"))
-        .select(col("dst").as("id"), col("c"))
-      // Left join keeps contribution-less vertices at initRank (c = 0).
-      r = vertices.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(InitRank) + lit(Damping) * coalesce(col("c"), lit(0.0))).as("rnk"))
-        // Cut lineage each round or the plan doubles per iteration (H5).
-        .localCheckpoint()
+         .union(norm.select(col("dst").as("id")))).distinct()
+    // the iterations are eager (localCheckpoint), so both caches are
+    // consumed on return; the finally also releases them when a job
+    // aborts
+    try {
+      vertices.persist()
+      vertices.count() // materialize both once; reused every iteration
+      var r = vertices.withColumn("rnk", lit(InitRank))
+      for (_ <- 1 to Iterations) {
+        val contrib = norm.join(dim(r), norm("src") === r("id"))
+          .groupBy(col("dst"))
+          .agg(sum(col("rnk") * col("wn")).as("c"))
+          .select(col("dst").as("id"), col("c"))
+        // Left join keeps contribution-less vertices at initRank (c = 0).
+        r = vertices.join(contrib, Seq("id"), "left")
+          .select(col("id"),
+            (lit(InitRank) + lit(Damping) * coalesce(col("c"), lit(0.0))).as("rnk"))
+          // Cut lineage each round or the plan doubles per iteration (H5).
+          .localCheckpoint()
+      }
+      r
+    } finally {
+      norm.unpersist()
+      vertices.unpersist()
     }
-    norm.unpersist()
-    vertices.unpersist()
-    r
   }
 
   /** Full document-level pipeline over a (id, text) DataFrame: band filter
@@ -621,15 +645,7 @@ object TextRank {
     */
   def rankDocuments(docs: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config()): DataFrame = {
-    // fanOut BEFORE tokenizing: both the token pipeline and the quadratic
-    // similarity self-join that streams over these partitions must use
-    // every core, not the scan's (possibly single) input split.
-    val vertices = graft.Par.fanOut(docs
-      .filter(TextFunctions.spaceWordCount(col(textCol)) > MinWords &&
-        TextFunctions.spaceWordCount(col(textCol)) < MaxWords))
-      .select(col(idCol).as("id"),
-        TextFunctions.textrankTokens(col(textCol), cfg.lemma).as("tokens"))
-      .filter(size(col("tokens")) > 0)
+    val vertices = this.vertices(docs, col(idCol), textCol, cfg.lemma)
       .persist() // read once, joined against itself
     val nv = vertices.count()
     // ranks() is eager (localCheckpoint per iteration), so the inputs are

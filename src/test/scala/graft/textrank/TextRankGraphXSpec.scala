@@ -35,13 +35,7 @@ class TextRankGraphXSpec extends SparkSpec {
 
   test("GraphX backend matches on the sf0.001 documents table") {
     val docs = graft.tables.Tables.documents(spark, sf("sf0.001"))
-    val vertices = docs
-      .filter(graft.text.TextFunctions.spaceWordCount($"text") > 10 &&
-        graft.text.TextFunctions.spaceWordCount($"text") < 30)
-      .select($"doc_id".as("id"),
-        graft.text.TextFunctions.textrankTokens($"text", lemma = false).as("tokens"))
-      .filter(org.apache.spark.sql.functions.size($"tokens") > 0)
-      .persist()
+    val vertices = TextRank.vertices(docs, $"doc_id", "text", lemma = false).persist()
     val edges = TextRank.similarityEdges(vertices, vertices.count())
     val df = TextRank.ranks(edges).as[(Long, Double)].collect().toMap
     val gx = TextRankGraphX.ranks(edges).as[(Long, Double)].collect().toMap

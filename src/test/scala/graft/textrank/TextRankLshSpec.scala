@@ -1,7 +1,5 @@
 package graft.textrank
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Bounds the rank divergence of the LSH-prefiltered edge path
@@ -16,13 +14,7 @@ class TextRankLshSpec extends SparkSpec {
 
   private lazy val (vertices, nv) = {
     val docs = graft.tables.Tables.documents(spark, sf("sf0.001"))
-    val v = docs
-      .filter(graft.text.TextFunctions.spaceWordCount($"text") > 10 &&
-        graft.text.TextFunctions.spaceWordCount($"text") < 30)
-      .select($"doc_id".as("id"),
-        graft.text.TextFunctions.textrankTokens($"text", lemma = false).as("tokens"))
-      .filter(size($"tokens") > 0)
-      .persist()
+    val v = TextRank.vertices(docs, $"doc_id", "text", lemma = false).persist()
     (v, v.count())
   }
 

@@ -1,5 +1,6 @@
 package graft.textrank
 
+import org.apache.spark.sql.CacheAccess
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -68,6 +69,23 @@ class TextRankSpec extends SparkSpec {
     broadcasted.foreach { case (id, v) =>
       assert(math.abs(v - shuffled(id)) < 1e-12, s"vertex $id")
     }
+  }
+
+  test("shuffled ranks release their caches when a job fails") {
+    // a non-local input, so the error fires in the first job after both
+    // caches were registered (a local relation would throw inside
+    // persist())
+    val failing = TextRank.similarityEdges(vertices, 3L).repartition(2)
+      .withColumn("weight",
+        when($"src" === 2L, raise_error(lit("shuffled-boom"))).otherwise($"weight"))
+    val sc = spark.sparkContext
+    val entries0 = CacheAccess.entries(spark)
+    val rdds0 = sc.getPersistentRDDs.keySet
+    val e = intercept[Exception](TextRank.ranksShuffled(failing, symmetricEdges = true))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("shuffled-boom")), e)
+    assert((CacheAccess.entries(spark) - entries0,
+      (sc.getPersistentRDDs.keySet -- rdds0).size) == ((0, 0)))
   }
 
   test("directed edge list: sink-only vertices ranked, both paths agree") {
