@@ -2,6 +2,7 @@ package graft.baseline
 
 import breeze.linalg.{svd => bsvd, DenseMatrix}
 
+import graft.lsa.Loadings
 import graft.text.StopWords
 
 /** Driver-local LSA baseline summarizer equivalent to the reference's
@@ -57,11 +58,7 @@ object OzsoyLsaSummarizer {
     val k = math.min(topics, sigma.length)
     val v = Array.tabulate(k) { j =>
       // sign convention: max-|loading| sentence entry positive
-      var best = 0.0; var sign = 1.0
-      (0 until sentences.size).foreach { i =>
-        val x = vt(j, i)
-        if (math.abs(x) > best) { best = math.abs(x); sign = if (x < 0) -1.0 else 1.0 }
-      }
+      val sign = Loadings.sign(sentences.size)(vt(j, _))
       Array.tabulate(sentences.size)(i => sign * vt(j, i))
     }
     Some((sigma.take(k), v))

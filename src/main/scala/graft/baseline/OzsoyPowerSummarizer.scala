@@ -1,6 +1,6 @@
 package graft.baseline
 
-import graft.lsa.{PowerCore, SparkNumerics}
+import graft.lsa.{Loadings, PowerCore, SparkNumerics}
 
 /** The DuckDB-replayable configuration of the Ozsoy cross-method
   * baseline (reference BigdataProjectCode.py:167-176 / pytldr): the
@@ -54,8 +54,7 @@ object OzsoyPowerSummarizer {
     val smax = sigmas.max
     // sign-fixed loadings + exact-decimal per-topic means
     val sv: Array[Array[Double]] = factors.map { f =>
-      val tStar = f.v.indices.minBy(t => (-math.abs(f.v(t)), t))
-      val fl = if (f.v(tStar) < 0) -1.0 else 1.0
+      val fl = Loadings.sign(f.v.length)(f.v(_))
       f.v.map(fl * _)
     }
     val avgs = sv.map(row => PowerCore.sum(row) / n)

@@ -17,9 +17,9 @@ import graft.text.{Lemmatizer, StopWords}
   *  - cell value tf · log10(N/df) (quirk Q3); the dense matrix stacks the
   *    doc rows in ascending id order, which is the distributed path's
   *    row-index order, since there the id IS the row index;
-  *  - sign convention: max-|V-loading| entry positive per concept (Q9/H2),
-  *    scanning idx ascending with strict `>` (first max wins);
-  *  - loadings quantized to the 1e-6 ordering grid before top-k
+  *  - sign convention: [[Loadings.sign]] over the vocabulary index
+  *    (Q9/H2: first max-|V-loading| entry positive per concept);
+  *  - loadings quantized to the [[Loadings.snap]] grid before top-k
   *    tie-breaks (solver-noise-proof determinism);
   *  - keywords: top nKeywords by (-loading, token); docs: top nDocs by
   *    (-loading, id).
@@ -43,12 +43,6 @@ object LocalLsa {
       .filterNot(StopWords.asSet.contains)
       .filter(_.length >= 3)
     if (lemma) Lemmatizer.lemmaAll(t) else t
-  }
-
-  // same 1e-6 ordering grid as Lsa.concepts (see the snap doc there)
-  private def snap(x: Double): Double = {
-    val q = math.rint(x * 1e6) / 1e6
-    if (q == 0.0) 0.0 else q
   }
 
   def concepts(docs: Seq[(Long, String)],
@@ -82,22 +76,15 @@ object LocalLsa {
     val vt = r.Vt // rank x vocabSize; V(i,j) = vt(j,i)
     val kEff = math.min(k, sigma.length)
 
-    val signs = Array.tabulate(kEff) { j =>
-      var best = 0.0; var sign = 1.0
-      (0 until vocabSize).foreach { i =>
-        val x = vt(j, i)
-        if (math.abs(x) > best) { best = math.abs(x); sign = if (x < 0) -1.0 else 1.0 }
-      }
-      sign
-    }
+    val signs = Array.tabulate(kEff)(j => Loadings.sign(vocabSize)(vt(j, _)))
 
     (0 until kEff).map { j =>
       val keywords = (0 until vocabSize)
-        .map(i => (snap(vt(j, i) * signs(j)), vocabArr(i)))
+        .map(i => (Loadings.snap(vt(j, i) * signs(j)), vocabArr(i)))
         .sortBy { case (l, t) => (-l, t) }
         .take(cfg.nKeywords).map(_._2)
       val topDocs = (0 until nDocs)
-        .map(i => (snap(u(i, j) * signs(j)), i))
+        .map(i => (Loadings.snap(u(i, j) * signs(j)), i))
         .sortBy { case (l, i) => (-l, i) }
         .take(cfg.nDocs).map { case (_, i) => ids(i) }
       Concept(j, sigma(j), keywords, topDocs)

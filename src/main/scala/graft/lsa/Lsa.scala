@@ -211,33 +211,16 @@ object Lsa {
           s"SVD self-check failed: concept $j eigen-residual " +
             s"|AtAv - s2 v|/s2 = $rel > $ResidualTol (sigma=${svd.s(j)})")
       }
-      // V: vocabSize x kEff (local). Sign convention per concept.
+      // V: vocabSize x kEff (local). Sign convention per concept; every
+      // loading is ordered on the Loadings.snap grid.
       val v = svd.V
-      val signs = Array.tabulate(kEff) { j =>
-        var best = 0.0; var sign = 1.0
-        for (i <- 0 until vocabSize) {
-          val x = v(i, j)
-          if (math.abs(x) > best) { best = math.abs(x); sign = if (x < 0) -1.0 else 1.0 }
-        }
-        sign
-      }
-
-      // Quantize loadings to a 1e-6 grid before ordering: mathematically
-      // tied loadings (tokens with identical count patterns) differ only by
-      // solver round-off whose SIGN depends on the backend (ARPACK here,
-      // LAPACK in LocalLsa) and run state — without the grid the top-k
-      // tie-break flips nondeterministically. On the grid, ties fall to the
-      // deterministic secondary key (part of the Q9/H2 determinism pin).
-      def snap(x: Double): Double = {
-        val q = math.rint(x * 1e6) / 1e6
-        if (q == 0.0) 0.0 else q
-      }
+      val signs = Array.tabulate(kEff)(j => Loadings.sign(vocabSize)(v(_, j)))
 
       // term array for keyword emission: already collected idx-ordered
       val vocabArr = vocabRows.map(_._1)
       val keywords = Array.tabulate(kEff) { j =>
         (0 until vocabSize)
-          .map(i => (snap(v(i, j) * signs(j)), vocabArr(i)))
+          .map(i => (Loadings.snap(v(i, j) * signs(j)), vocabArr(i)))
           .sortBy { case (l, t) => (-l, t) }
           .take(cfg.nKeywords).map(_._2)
       }
@@ -254,10 +237,7 @@ object Lsa {
           it.foreach { r =>
             var j = 0
             while (j < kEff) {
-              val raw = r.vector(j) * signsB.value(j)
-              val q = math.rint(raw * 1e6) / 1e6 // same 1e-6 grid as keywords
-              val l = if (q == 0.0) 0.0 else q
-              heaps(j) += ((l, r.index))
+              heaps(j) += ((Loadings.snap(r.vector(j) * signsB.value(j)), r.index))
               if (heaps(j).size > 4 * nTop) {
                 val kept = heaps(j).sorted(ord.reverse).take(nTop)
                 heaps(j).clear(); heaps(j) ++= kept

@@ -64,6 +64,14 @@ object PowerCore {
   /** The exact-decimal 2-norm √Σ dec(w·w). */
   def norm(w: Array[Double]): Double = math.sqrt(dot(w, w))
 
+  /** w / ‖w‖, or the ZERO vector when ‖w‖ = 0 (the zero-continue
+    * convention of [[factorize]]).
+    */
+  def normalize(w: Array[Double]): Array[Double] = {
+    val n = norm(w)
+    if (n == 0.0) Array.fill(w.length)(0.0) else w.map(_ / n)
+  }
+
   /** Sparse (id × token) cells on compact indices, with the keys behind
     * each index: `ids`/`toks` ascending, so index order is key order.
     * Cell order never reaches a value (every sum is an exact decimal).
@@ -123,12 +131,6 @@ object PowerCore {
   def factorize(m: Matrix, k: Int, iters: Int): Array[Factor] = {
     require(k >= 1 && iters >= 1)
     val nToks = m.nToks
-
-    def normalize(w: Array[Double]): Array[Double] = {
-      val n = norm(w)
-      if (n == 0.0) Array.fill(w.length)(0.0) else w.map(_ / n)
-    }
-
     val out = scala.collection.mutable.ArrayBuffer.empty[Factor]
     val c0 = 1.0 / math.sqrt(nToks.toDouble)
     var j = 0

@@ -34,8 +34,7 @@ object PowerLocalLsa {
     })
     val factors = PowerCore.factorize(m, k, iters)
     factors.zipWithIndex.map { case (f, j) =>
-      val tStar = m.toks.indices.minBy(t => (-math.abs(f.v(t)), m.toks(t)))
-      val fl = if (f.v(tStar) < 0) -1.0 else 1.0
+      val fl = Loadings.sign(m.nToks)(f.v(_)) // toks ascending: ties to the first token
       val top = m.ids.indices.map(d => (
           if (f.sigma == 0.0) 0.0 else fl * (f.av(d) / f.sigma), m.ids(d)))
         .sortBy { case (su, d) => (-su, d) }.take(nDocs)

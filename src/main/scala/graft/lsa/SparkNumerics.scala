@@ -7,7 +7,7 @@ import org.apache.spark.sql.internal.SQLConf
 
 /** Spark's double→decimal cast and double `ROUND`, exactly — the one
   * numerics kernel every driver-local solver twin (PowerCore, PowerLsa's
-  * LocalPowerChain, PowerLocalLsa, Hits, Nmf, Lloyd) and every 6dp/4dp
+  * secondLocal, PowerLocalLsa, Hits, Nmf, Lloyd) and every 6dp/4dp
   * rounding helper calls, so a twin walks its distributed route's bit
   * sequence by construction instead of by a hand-copied `setScale`.
   *

@@ -30,7 +30,7 @@ object Hits {
     * contributes). Output: (id, hub, authority) over ALL vertices,
     * 6dp-rounded.
     *
-    * Scale routing (r15; the PowerLsa.topSingular pattern): under the
+    * Scale routing (r15; the PowerLsa.kFactorsAuto pattern): under the
     * edge budget, ONE bounded collect feeds a local loop walking the
     * IDENTICAL exact-decimal recurrence on primitive arrays
     * (HitsLocalTwinSpec pins the routes bit-equal) — at gate scale this

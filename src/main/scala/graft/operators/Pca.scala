@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * per-row fan-out is dims² cells but they combine locally before any
   * shuffle, so the shuffle carries ≤ dims² rows per partition. The
   * iterations touch only the dims² table. More components = implicit
-  * deflation rounds, as in `PowerLsa.secondSingular`.
+  * deflation rounds, as in `PowerLsa.kFactors`.
   */
 object Pca {
 

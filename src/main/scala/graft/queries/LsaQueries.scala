@@ -15,18 +15,18 @@ import graft.tfidf.TfIdf
   */
 object LsaQueries extends QueryProvider {
 
-  /** Power-method rounds for ls06 (declared BEFORE `all` — the oracle
-    * string is built eagerly at object init).
+  /** Power-method rounds for the power SVD family (declared BEFORE
+    * `all` — the oracle string is built eagerly at object init).
     */
-  private val PowerIters = 8
+  private[graft] val PowerIters = 8
 
   /** ls01 gate shape: k concepts, top-3 keywords / docs each.
     * (All gate parameters sit BEFORE `all` — the oracle strings are
     * built eagerly at object init.)
     */
   private val K = 5
-  private val NKw = 3
-  private val NDoc = 3
+  private val NKw = PowerLsa.NKeywords
+  private val NDoc = PowerLsa.NDocs
 
   /** Deflation depth for the Ozsoy power queries (see
     * OzsoyPowerSummarizer: the 0.75 σ-threshold keeps the surviving set
@@ -48,7 +48,7 @@ object LsaQueries extends QueryProvider {
       (s, dir) => {
         import s.implicits._
         PowerLsa.kConceptsShared(s, powerCells(s, dir, lemma = true),
-            factorsKey(dir, lemma = true), K, PowerIters, NKw, NDoc)
+            factorsKey(dir, lemma = true), K, PowerIters)
           .orderBy($"concept")
       },
       Some(ls01OracleSql)),
@@ -220,7 +220,7 @@ object LsaQueries extends QueryProvider {
         import s.implicits._
         val concepts = PowerLsa.kConceptsShared(s,
             powerCells(s, dir, lemma = true),
-            factorsKey(dir, lemma = true), K, PowerIters, NKw, NDoc)
+            factorsKey(dir, lemma = true), K, PowerIters)
           .withColumnRenamed("doc_ids", "sentence_ids")
         graft.pipeline.Pipelines.conceptReport(concepts).orderBy($"concept")
       },
@@ -366,8 +366,8 @@ object LsaQueries extends QueryProvider {
     // and ranking is the 4-dim concept-space cosine — the latent
     // matching that lexical TF-IDF (t05/t13) cannot do. Queries here
     // are docs 0-4 (each must rank itself #1 — a built-in sanity
-    // property the hash check pins). Factors come LIVE from
-    // PowerLsa.kFactors (the exact-decimal deflation loop ls01 rides);
+    // property the hash check pins). Factors come from
+    // PowerLsa.kFactorsShared (the same factor chain ls01 rides);
     // all concept-space sums are DECIMAL-exact in concept order.
     Q(
       "ls14_lsi_retrieval",
@@ -461,7 +461,7 @@ object LsaQueries extends QueryProvider {
     * exact-decimal Frobenius total and the cumulative energy window.
     */
   private def energyCurveOracleSql: String = {
-    // kConcepts numbers concepts 0-based; sg CTEs are 1-based
+    // kConceptsShared numbers concepts 0-based; sg CTEs are 1-based
     val sigUnion = (1 to 4).map(j =>
       s"SELECT ${j - 1} AS concept, round(sigma, 4) AS singular_value FROM sg$j")
       .mkString("\n  UNION ALL ")

@@ -26,7 +26,7 @@ import graft.SparkSpec
 class PowerGateFidelitySpec extends SparkSpec {
   import spark.implicits._
 
-  private val GateIters = 8 // must equal LsaQueries.PowerIters
+  private val GateIters = graft.queries.LsaQueries.PowerIters
   private val K = 5
 
   test("iters=8 matches LAPACK on the sf0.001 ls01 cells, gap-aware") {
@@ -51,9 +51,13 @@ class PowerGateFidelitySpec extends SparkSpec {
     local.foreach { case (i, t, a) => m(idIdx(i), tokIdx(t)) = a }
     val s = bsvd(m)
 
-    val pow = PowerLsa.kConcepts(cells, K, GateIters, nKeywords = 3, nDocs = 3)
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getString(2),
-        r.getString(3))).sortBy(_._1)
+    // ls01's path: concept emission over the factors of either route,
+    // which must agree exactly
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getDouble(1), r.getString(2),
+        r.getString(3))).sortBy(_._1).toSeq
+    val pow = rows(PowerRoutes.conceptsLocal(cells, K, GateIters))
+    assert(pow == rows(PowerRoutes.conceptsDistributed(cells, K, GateIters)))
     assert(pow.length == K)
 
     // LAPACK keywords/docs under the engine's exact conventions (sign:

@@ -2,14 +2,15 @@ package graft.lsa
 
 import graft.SparkSpec
 
-/** Pins the r15 routing contract of [[PowerLsa.topSingular]] /
-  * [[PowerLsa.secondSingular]]: the bounded-collect local twin
-  * ([[PowerLsa.LocalPowerChain]]) must be BIT-identical to the
-  * distributed exact-decimal chain on the same cells — every score
-  * (6dp-rounded term/doc loadings and sigma) compared with ==, not a
-  * tolerance. The oracle gate checks the same equality against DuckDB at
-  * every scale; this spec keeps the two engine routes from drifting on
-  * corpora the gate never reaches (e.g. a future budget change).
+/** Pins the routing contract of [[PowerLsa.topSingular]] /
+  * [[PowerLsa.secondSingular]]: the bounded-collect local route
+  * ([[PowerLsa.kFactorsLocal]] / [[PowerLsa.secondLocal]]) must be
+  * BIT-identical to the distributed exact-decimal chain
+  * ([[PowerLsa.kFactors]] / [[PowerLsa.secondDistributed]]) on the same
+  * cells — every score (6dp-rounded term/doc loadings and sigma)
+  * compared with ==, not a tolerance. The oracle gate checks the same
+  * equality against DuckDB at every scale; this spec keeps the two
+  * engine routes from drifting on corpora the gate never reaches.
   */
 class PowerLocalTwinSpec extends SparkSpec {
   import spark.implicits._
@@ -30,26 +31,44 @@ class PowerLocalTwinSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
       .toSeq
 
+  private def topDistributed(cells: org.apache.spark.sql.DataFrame, iters: Int) =
+    PowerRoutes.distributed(cells)((c, nv) =>
+      rowsOf(PowerLsa.emit(PowerLsa.kFactors(c, nv, 1, iters).head)))
+
+  private def secondDistributed(cells: org.apache.spark.sql.DataFrame, iters: Int) =
+    PowerRoutes.distributed(cells)((c, nv) =>
+      rowsOf(PowerLsa.emit(PowerLsa.secondDistributed(c, nv, iters))))
+
   test("topSingular local twin is bit-identical to the distributed chain") {
     val cells = entries.toDF("id", "token", "a")
     val local = rowsOf(PowerLsa.topSingular(cells, iters = 7))
-    val dist = rowsOf(PowerLsa.topSingular(cells, iters = 7,
-      maxLocalNnz = 0L, maxLocalIds = 0L)) // budget 0 forces the DF route
-    assert(local == dist)
+    assert(local == topDistributed(cells, 7))
     assert(local.count(_._1 == "term") == 5 && local.count(_._1 == "doc") == 6)
   }
 
   test("secondSingular local twin is bit-identical to the distributed chain") {
     val cells = entries.toDF("id", "token", "a")
     val local = rowsOf(PowerLsa.secondSingular(cells, iters = 7))
-    val dist = rowsOf(PowerLsa.secondSingular(cells, iters = 7,
-      maxLocalNnz = 0L, maxLocalIds = 0L))
-    assert(local == dist)
+    assert(local == secondDistributed(cells, 7))
     // concept 2 is orthogonal-ish to concept 1: its sigma must be
     // strictly smaller than concept 1's
     val s1 = rowsOf(PowerLsa.topSingular(cells, iters = 7))
       .collect { case ("sigma", _, x) => x }.head
     val s2 = local.collect { case ("sigma", _, x) => x }.head
     assert(s2 < s1)
+  }
+
+  test("all-zero cells give the same all-zero rows on both routes") {
+    // what a one-document corpus produces: idf = log10(1/1) = 0 on every
+    // token, so every norm in the chain is 0 (ANSI on, the default)
+    val cells = entries.map { case (id, t, _) => (id, t, 0.0) }.toDF("id", "token", "a")
+    val top = rowsOf(PowerLsa.topSingular(cells, iters = 3))
+    val second = rowsOf(PowerLsa.secondSingular(cells, iters = 3))
+    assert(top == topDistributed(cells, 3))
+    assert(second == secondDistributed(cells, 3))
+    Seq(top, second).foreach { rows =>
+      assert(rows.length == 1 + 5 + 6)
+      assert(rows.forall(_._3 == 0.0), rows)
+    }
   }
 }

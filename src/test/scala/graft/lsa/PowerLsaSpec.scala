@@ -75,7 +75,8 @@ class PowerLsaSpec extends SparkSpec {
   test("kConcepts local and DF routes are bit-equal on the harness corpus") {
     // both routes walk the same exact-decimal recurrence, so the result
     // must be IDENTICAL, not merely close — the routing contract ls01
-    // relies on (gate scale runs local, 100 TB runs DF)
+    // relies on (gate scale runs local, 100 TB runs DF); both emit
+    // through kConceptsFromFactors, as ls01 does
     val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
     val n = docs.count()
     val tok = docs.select($"doc_id",
@@ -89,18 +90,19 @@ class PowerLsaSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getDouble(1),
         r.getString(2), r.getString(3))).sortBy(_._1).toSeq
-    val local = rows(PowerLsa.kConceptsLocal(cells, k = 3, iters = 4,
-      nKeywords = 3, nDocs = 3))
-    val dist = rows(PowerLsa.kConceptsDF(cells, k = 3, iters = 4,
-      nKeywords = 3, nDocs = 3))
+    val local = rows(PowerRoutes.conceptsLocal(cells, k = 3, iters = 4))
+    val dist = rows(PowerRoutes.conceptsDistributed(cells, k = 3, iters = 4))
     assert(local == dist)
     assert(local.length == 3)
+    cells.unpersist(): Unit
   }
 
   test("kConcepts converges to the LAPACK spectrum on a gapped matrix") {
-    val out = PowerLsa.kConcepts(entries.toDF("id", "token", "a"),
-        k = 2, iters = 24, nKeywords = 2, nDocs = 2)
-      .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1)
+    def sigmas(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).toSeq
+    val cells = entries.toDF("id", "token", "a")
+    val out = sigmas(PowerRoutes.conceptsLocal(cells, k = 2, iters = 24))
+    assert(out == sigmas(PowerRoutes.conceptsDistributed(cells, k = 2, iters = 24)))
     val s = svd(dense)
     assert(math.abs(out(0)._2 - s.S(0)) < 1e-3)
     assert(math.abs(out(1)._2 - s.S(1)) < 1e-3)
