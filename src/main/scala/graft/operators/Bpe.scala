@@ -87,7 +87,10 @@ object Bpe {
     vocab.select(col("word"), size(split(col("repr"), Sep)).as("n_sub"))
   }
 
-  /** Merge table + the final (freq, repr) word-type table.
+  /** Local-route budget (word types). */
+  private val MaxLocalTypes = 2000000L
+
+  /** Merge table + the final (word, freq, repr) word-type table.
     *
     * Scale routing (the TextRank/PowerLsa pattern): the merge loop's
     * working set is the word-TYPE table, which Heaps' law keeps
@@ -97,16 +100,16 @@ object Bpe {
     * size) are replaced by ONE bounded collect and a local loop walking
     * the IDENTICAL greedy recurrence (BpeSpec pins the two routes
     * row-equal). A truly unbounded type table (100 TB multilingual)
-    * routes to the distributed loop unchanged.
+    * routes to [[mergesAndVocabDF]] unchanged.
     */
   def mergesAndVocab(spark: SparkSession, wordFreq: DataFrame,
-      numMerges: Int, maxLocalTypes: Long = 2000000L): (DataFrame, DataFrame) = {
+      numMerges: Int): (DataFrame, DataFrame) = {
     require(numMerges >= 1, "numMerges must be >= 1")
     val (wf, owned) = graft.Par.cacheIfNew(wordFreq.select(col("word"),
       col("freq").cast("long").as("freq")))
     val nTypes = wf.count()
     val out =
-      if (nTypes <= maxLocalTypes) mergesAndVocabLocal(spark, wf, numMerges)
+      if (nTypes <= MaxLocalTypes) mergesAndVocabLocal(spark, wf, numMerges)
       else mergesAndVocabDF(spark, wf, numMerges)
     if (owned) wf.unpersist()
     out
@@ -184,7 +187,7 @@ object Bpe {
   }
 
   /** Distributed route — the 100 TB path (unbounded type tables). */
-  private def mergesAndVocabDF(spark: SparkSession, wordFreq: DataFrame,
+  private[operators] def mergesAndVocabDF(spark: SparkSession, wordFreq: DataFrame,
       numMerges: Int): (DataFrame, DataFrame) = {
     // chars + end marker, joined on the separator; the word TYPE rides
     // along untouched so the final table doubles as an encode dictionary

@@ -33,25 +33,24 @@ object Dedup {
   // that stream (d04's candidate distinct, d15's pair-dot groupBy)
   // pressed 7.94–7.97 g of the 8 g heap at sf10 with OOM projected at
   // ~sf15 (~490 M post-cap pairs). The same probe pattern that closed
-  // tr06's cliff closes this one BEFORE it is hit: above a plan-stats
-  // floor, aggregate the exact post-cap pair mass (one bounded job —
-  // the quantity is the joins' true pre-distinct output, the number
-  // DuckDB replay predicted to the digit at tr06), and when it exceeds
-  // a heap-derived budget, switch the pair stream to OUTPUT-SIZED
+  // tr06's cliff closes this one BEFORE it is hit: above a row floor,
+  // aggregate the exact post-cap pair mass (one bounded job — the
+  // quantity is the joins' true pre-distinct output, the number DuckDB
+  // replay predicted to the digit at tr06), and when it exceeds a
+  // heap-derived budget, switch the pair stream to OUTPUT-SIZED
   // partitioning: an explicit repartition on the pair key BEFORE the
   // distinct/groupBy, so no pre-shuffle hash map ever holds a
   // corpus-quadratic working set — each post-shuffle task handles
   // ~[[MassPairsPerPartition]] pairs. VALUES ARE UNCHANGED (the same
   // rows flow through the same distinct/sum; only partitioning moves),
   // so unlike tr06's fallback this is not an answer-class change and
-  // needs no Verify tripwire; `-Dgraft.dedup.massReroute=off` still
-  // turns a tripped probe into a loud IllegalStateException carrying
-  // the probe evidence, for callers that want the boundary fatal.
+  // needs no Verify tripwire.
   //
-  // The probe only runs above [[massProbeMinDocs]] input rows (the
-  // same count-then-floor gate as TextRank.lshSimilarityEdges' nv
-  // probe; the count itself is one column-pruned job over the already-
-  // cached shingle table — milliseconds at gate scale): gate corpora
+  // [[massRouted]] is the one implementation (lshCandidates,
+  // simhashNearDuplicates, Similarity.tfidfCosinePairs). Its row floor
+  // is the same count-then-floor gate as TextRank.lshSimilarityEdges'
+  // nv probe (the count is one column-pruned job over the callers'
+  // already-cached tables — milliseconds at gate scale): gate corpora
   // (sf0.001–sf1, ≤ 50 k documents) never reach the floor, so no probe
   // job runs and gate values/hashes are identical to the probe-less
   // path (since r14 the banded/chunk tables are persisted at EVERY
@@ -60,59 +59,56 @@ object Dedup {
   // probe-less path lacked; rows and hashes are unchanged); the sf3+
   // stress replicas (150 k+ docs) probe.
 
-  /** Input-row floor below which the mass probe is skipped outright.
-    * Default 100 k docs: the largest oracle-gated corpus (sf1) holds
-    * 50 k, the first stress rung past it (sf3) 150 k — and
-    * STRESS_r13's ladder shows every scale below sf5 completing with
-    * ≥ 0.75 g of headroom probe-less. Overridable for specs and ops
-    * via -Dgraft.dedup.massProbeMinDocs.
-    */
-  def massProbeMinDocs: Long =
-    sys.props.get("graft.dedup.massProbeMinDocs").map(_.toLong)
-      .getOrElse(100000L)
+  /** Floor (input rows) and budget (post-cap pairs) of the mass probe. */
+  private[operators] final case class MassLimits(minRows: Long,
+      budgetPairs: Long)
 
-  /** Heap-derived post-cap pair-mass budget: above this many pairs the
-    * bucket/token joins' pre-shuffle partial aggregates are re-routed
-    * to output-sized partitioning. Default maxHeap/64 (≈131 M pairs at
-    * the 8 g stress heap): STRESS_r13 measured 216 M post-cap pairs
-    * peaking 7.97 g — past the default budget, inside the measured
-    * envelope — so the reroute engages one rung BEFORE the projected
-    * ~490 M OOM. -Dgraft.dedup.massBudgetPairs overrides.
+  /** The production limits.
+    *  - Floor 100 k rows: the largest oracle-gated corpus (sf1) holds
+    *    50 k documents, the first stress rung past it (sf3) 150 k — and
+    *    STRESS_r13's ladder shows every scale below sf5 completing with
+    *    ≥ 0.75 g of headroom probe-less.
+    *  - Budget maxHeap/64 pairs (≈131 M at the 8 g stress heap):
+    *    STRESS_r13 measured 216 M post-cap pairs peaking 7.97 g — past
+    *    the budget, inside the measured envelope — so the reroute
+    *    engages one rung BEFORE the projected ~490 M OOM.
     */
-  def massBudgetPairs: Long =
-    sys.props.get("graft.dedup.massBudgetPairs").map(_.toLong)
-      .getOrElse(Runtime.getRuntime.maxMemory / 64L)
+  private[operators] val Mass: MassLimits =
+    MassLimits(100000L, Runtime.getRuntime.maxMemory / 64L)
 
   /** Target pairs per post-shuffle task on the bounded route (~2 M
     * pairs ≈ 100 MB of aggregation state per task).
     */
-  val MassPairsPerPartition: Long = 2000000L
+  private val MassPairsPerPartition: Long = 2000000L
 
   /** Partition count for a bounded-route pair stream of `mass` rows. */
-  def massParts(mass: Long): Int =
+  private[operators] def massParts(mass: Long): Int =
     math.min(4096L, math.max(32L,
       mass / MassPairsPerPartition)).toInt
 
-  val MassRerouteProp: String = "graft.dedup.massReroute"
-
-  /** Route decision + policy for a tripped probe: returns true when the
-    * bounded route must be taken (mass > budget); under
-    * `-Dgraft.dedup.massReroute=off` a tripped probe throws instead,
-    * carrying the measured evidence. Logs the probe reading either way
-    * (the runtime marker STRESS rows cite).
+  /** The mass probe for operator `op` over an input of `rows` rows:
+    * at or below `limits.minRows` no probe job runs and the pair stream
+    * is left as it is. Above it, the exact post-cap pair `mass` is
+    * evaluated (one bounded job) and logged (the runtime marker STRESS
+    * rows cite); when it exceeds `limits.budgetPairs` the returned
+    * function repartitions the pair stream on `keys` into
+    * [[massParts]] partitions (output-sized partitioning), otherwise it
+    * is the identity. The caller applies it to the pair stream right
+    * before the distinct/groupBy whose pre-shuffle partial aggregate it
+    * replaces.
     */
-  private[graft] def massRoute(op: String, mass: Long, budget: Long): Boolean = {
-    val hit = mass > budget
-    System.err.println(s"[dedup] $op mass probe: post-cap pair mass=$mass " +
-      s"(budget $budget) -> " +
-      (if (hit) "DEGENERATE, output-sized partitioning" else "within budget, default route"))
-    if (hit && sys.props.getOrElse(MassRerouteProp, "auto") == "off")
-      throw new IllegalStateException(
-        s"-D$MassRerouteProp=off forbids the bounded reroute: $op post-cap " +
-          s"pair mass $mass exceeds the heap-derived budget $budget " +
-          "(degenerate corpus; see Dedup mass-probe docs)")
-    hit
-  }
+  private[operators] def massRouted(op: String, rows: Long,
+      limits: MassLimits, keys: String*)(mass: => Long): DataFrame => DataFrame =
+    if (rows <= limits.minRows) identity
+    else {
+      val m = mass
+      val hit = m > limits.budgetPairs
+      System.err.println(s"[dedup] $op mass probe: post-cap pair mass=$m " +
+        s"(budget ${limits.budgetPairs}) -> " +
+        (if (hit) "DEGENERATE, output-sized partitioning"
+         else "within budget, default route"))
+      if (hit) _.repartition(massParts(m), keys.map(col): _*) else identity
+    }
 
   /** Whitespace-collapsed, lowercased, trimmed content key. */
   def normalized(text: Column): Column =
@@ -157,6 +153,15 @@ object Dedup {
       graft.functions.MinHashSig(
         org.apache.spark.sql.graft.ColumnBridge.expression(hashes), numHashes))
 
+  /** Per-band LSH bucket keys: element j = comma-joined j-th band slice
+    * of the signature. THE parity contract between the batch banding
+    * (d04), the streaming index (sm13) and the DuckDB `bands` CTE —
+    * one definition so the three cannot drift.
+    */
+  def bandKeyArray(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      j => array_join(slice(sig, j * rowsPerBand + 1, lit(rowsPerBand)), ","))
+
   /** Candidate pairs (a, b) from LSH banding of signatures.
     *
     * sigs: (id, sig array<long> of length bands*rowsPerBand).
@@ -168,17 +173,13 @@ object Dedup {
     * should raise maxBucket or run the brute-force verify on the
     * affected keys.
     */
-  /** Per-band LSH bucket keys: element j = comma-joined j-th band slice
-    * of the signature. THE parity contract between the batch banding
-    * (d04), the streaming index (sm13) and the DuckDB `bands` CTE —
-    * one definition so the three cannot drift.
-    */
-  def bandKeyArray(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      j => array_join(slice(sig, j * rowsPerBand + 1, lit(rowsPerBand)), ","))
-
   def lshCandidates(sigs: DataFrame, bands: Int, rowsPerBand: Int,
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = 1000): DataFrame =
+    lshCandidatesWithin(sigs, bands, rowsPerBand, maxBucket, Mass)
+
+  /** [[lshCandidates]] under explicit mass-probe limits. */
+  private[operators] def lshCandidatesWithin(sigs: DataFrame, bands: Int,
+      rowsPerBand: Int, maxBucket: Int, limits: MassLimits): DataFrame = {
     val banded = sigs.select(col("id"),
       posexplode(bandKeyArray(col("sig"), bands, rowsPerBand)))
       .toDF("id", "band", "key")
@@ -195,37 +196,28 @@ object Dedup {
     // required. Values unchanged (same rows either way); same
     // no-unpersist-hook pattern as the callers' shingle caches.
     val sized = s0persist(sized0)
-    // Degenerate-corpus mass probe (see object docs): above the
-    // doc-count floor, measure the bucket joins' exact pre-distinct
-    // output Σ c·(c−1) — `sized` already carries each row's bucket
-    // size, so the probe is one sum over the persisted table. Below the
-    // floor no probe job runs. The count is column-pruned (sig never
-    // evaluates) and reads the callers' cached shingle tables —
-    // milliseconds at gate scale.
+    // Mass probe (see object docs): the bucket joins' exact
+    // pre-distinct output Σ c·(c−1) — `sized` already carries each
+    // row's bucket size, so the probe is one sum over the persisted
+    // table. The count is column-pruned (sig never evaluates) and reads
+    // the callers' cached shingle tables — milliseconds at gate scale.
     // collect-bound: scalar: row count vs the probe floor
-    val probed = sigs.count() > massProbeMinDocs
-    val (bounded, mass) =
-      if (!probed) (false, 0L)
-      else {
-        // collect-bound: scalar: single aggregated row (bucket-mass probe)
-        val m = sized.agg(coalesce(sum(col("bucket_n") - lit(1L)), lit(0L)))
-          .first().getLong(0)
-        (massRoute("lshCandidates", m, massBudgetPairs), m)
-      }
+    val route = massRouted("lshCandidates", sigs.count(), limits, "a", "b") {
+      // collect-bound: scalar: single aggregated row (bucket-mass probe)
+      sized.agg(coalesce(sum(col("bucket_n") - lit(1L)), lit(0L)))
+        .first().getLong(0)
+    }
     val l = sized.select(col("band"), col("key"), col("id").as("a"))
     val r = sized.select(col("band"), col("key"), col("id").as("b"))
     val pairs = l.join(r, Seq("band", "key"))
       .filter(col("a") < col("b"))
       .select(col("a"), col("b"))
-    if (!bounded) pairs.distinct()
-    else
-      // output-sized partitioning: the explicit exchange on the pair key
-      // replaces the pre-shuffle partial aggregate (the join output
-      // streams straight into the exchange writer — no driver-side or
-      // task-side corpus-quadratic hash map), and the post-shuffle
-      // distinct runs on ~MassPairsPerPartition rows per task. Same
-      // rows, same values — only the partitioning moves.
-      pairs.repartition(massParts(mass), col("a"), col("b")).distinct()
+    // on the bounded route the explicit exchange on the pair key
+    // replaces the pre-shuffle partial aggregate (the join output
+    // streams straight into the exchange writer — no corpus-quadratic
+    // hash map in any task), and the post-shuffle distinct runs on
+    // ~MassPairsPerPartition rows per task
+    route(pairs).distinct()
   }
 
   /** MEMORY_AND_DISK persist for probe-scale intermediates (no
@@ -698,57 +690,52 @@ object Dedup {
     * guaranteed recall via 4-chunk banding; pigeonhole over 16-bit
     * chunks).
     */
-  def simhashNearDuplicates(toks0: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def simhashNearDuplicates(toks0: DataFrame, maxHamming: Int = 3): DataFrame =
+    simhashNearDuplicatesWithin(toks0, maxHamming, Mass)
+
+  /** [[simhashNearDuplicates]] under explicit mass-probe limits. */
+  private[operators] def simhashNearDuplicatesWithin(toks0: DataFrame,
+      maxHamming: Int, limits: MassLimits): DataFrame = {
     val toks = graft.Par.fanOut(toks0)
     val sigs = toks.select(col("id"), simhash(col("tokens")).as("sig"))
     val chunks0 = sigs.select(col("id"), col("sig"),
       posexplode(array((0 until 4).map(i =>
         shiftrightunsigned(col("sig"), i * 16).bitwiseAND(lit(0xffffL))): _*)))
       .toDF("id", "sig", "chunk_idx", "chunk")
-    // Degenerate-corpus mass probe, same contract as [[lshCandidates]]:
-    // replica copies of a document carry an IDENTICAL 64-bit signature,
-    // so they share all four 16-bit chunks and the band join's
-    // pre-distinct mass grows with the square of the replica count —
-    // and unlike the MinHash path there is no maxBucket cap in front of
-    // it (the operator guarantees recall at Hamming ≤ 3, so a cap would
-    // silently drop true pairs). Below the doc-count floor no probe job
-    // runs; above it, the exact mass Σ c·(c−1) over chunk groups routes
-    // the distinct to output-sized partitioning when it exceeds the
-    // heap-derived budget.
+    // Mass probe, as in [[lshCandidates]]: replica copies of a
+    // document carry an IDENTICAL 64-bit signature, so they share all
+    // four 16-bit chunks and the band join's pre-distinct mass grows
+    // with the square of the replica count — and unlike the MinHash
+    // path there is no maxBucket cap in front of it (the operator
+    // guarantees recall at Hamming ≤ 3, so a cap would silently drop
+    // true pairs). The probed mass is Σ c·(c−1) over chunk groups.
     // The chunk table feeds BOTH sides of the band join — unpersisted,
     // the per-row simhash fold over the corpus executed twice per call
     // (r14). Persist unconditionally, same rationale and pattern as
     // lshCandidates' sized cache.
     val chunks = s0persist(chunks0)
     // collect-bound: scalar: row count vs the probe floor
-    val probed = sigs.count() > massProbeMinDocs
-    val (bounded, mass) =
-      if (!probed) (false, 0L)
-      else {
-        // Exact mass Σ c·(c−1) over chunk groups via one hash
-        // aggregation of the cached chunk table (r14: the former
-        // window attached a per-row count — an exchange + sort — to
-        // compute the same scalar; a two-level groupBy reads the same
-        // quantity with no sort).
-        // collect-bound: scalar: single aggregated row (chunk-mass probe)
-        val m = chunks.groupBy(col("chunk_idx"), col("chunk"))
-          .agg(count(lit(1)).as("c"))
-          .agg(coalesce(sum(col("c") * (col("c") - lit(1L))), lit(0L)))
-          .first().getLong(0)
-        (massRoute("simhashNearDuplicates", m, massBudgetPairs), m)
-      }
+    val route = massRouted("simhashNearDuplicates", sigs.count(), limits,
+        "a", "b") {
+      // One hash aggregation of the cached chunk table (r14: the former
+      // window attached a per-row count — an exchange + sort — to
+      // compute the same scalar; a two-level groupBy reads the same
+      // quantity with no sort).
+      // collect-bound: scalar: single aggregated row (chunk-mass probe)
+      chunks.groupBy(col("chunk_idx"), col("chunk"))
+        .agg(count(lit(1)).as("c"))
+        .agg(coalesce(sum(col("c") * (col("c") - lit(1L))), lit(0L)))
+        .first().getLong(0)
+    }
     val l = chunks.select(col("chunk_idx"), col("chunk"), col("id").as("a"), col("sig").as("sig_a"))
     val r = chunks.select(col("chunk_idx"), col("chunk"), col("id").as("b"), col("sig").as("sig_b"))
     val cand = l.join(r, Seq("chunk_idx", "chunk"))
       .filter(col("a") < col("b"))
       .select(col("a"), col("b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-    (if (!bounded) cand.distinct()
-     else
-       // see lshCandidates: the explicit pair-key exchange replaces the
-       // pre-shuffle partial aggregate so no task holds a
-       // corpus-quadratic candidate map; values unchanged
-       cand.repartition(massParts(mass), col("a"), col("b")).distinct())
+    // see lshCandidates: on the bounded route the explicit pair-key
+    // exchange replaces the pre-shuffle partial aggregate
+    route(cand).distinct()
       .filter(col("hamming") <= maxHamming)
   }
 

@@ -26,26 +26,36 @@ object Hits {
 
   private val Dec = "decimal(38,18)"
 
+  /** Local-route budget (edges). */
+  private val MaxLocalEdges = 500000
+
   /** edges: (src, dst), directed, duplicates allowed (each occurrence
     * contributes). Output: (id, hub, authority) over ALL vertices,
     * 6dp-rounded.
     *
     * Scale routing (r15; the PowerLsa.kFactorsAuto pattern): under the
     * edge budget, ONE bounded collect feeds a local loop walking the
-    * IDENTICAL exact-decimal recurrence on primitive arrays
-    * (HitsLocalTwinSpec pins the routes bit-equal) — at gate scale this
-    * replaces 2·iters+1 eager-checkpoint jobs (each a join+agg+norm
-    * chain). Above the budget the distributed loop runs unchanged (the
-    * 100 TB path).
+    * IDENTICAL exact-decimal recurrence (HitsLocalTwinSpec pins the routes
+    * bit-equal) — at gate scale this replaces 2·iters+1 eager-checkpoint
+    * jobs (each a join+agg+norm chain). Above the budget
+    * [[hitsDistributed]] runs (the 100 TB path).
     */
-  def hits(edges: DataFrame, iters: Int,
-      maxLocalEdges: Int = 500000): DataFrame = {
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     // Edge ORDER never reaches a value (decimal sums are exact; output
     // order is the caller's ORDER BY).
-    val local = LocalRoute.collectWithin(edges.select(col("src"), col("dst")),
-      maxLocalEdges)
-    if (local.isDefined) return hitsLocal(edges, local.get, iters)
+    LocalRoute.collectWithin(edges.select(col("src"), col("dst")),
+        MaxLocalEdges) match {
+      case Some(rows) => hitsLocal(edges, rows, iters)
+      case None => hitsDistributed(edges, iters)
+    }
+  }
+
+  /** The distributed HITS loop: per round two shuffled join+agg
+    * scatters, lineage cut with localCheckpoint.
+    */
+  private[operators] def hitsDistributed(edges: DataFrame,
+      iters: Int): DataFrame = {
     val verts = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id")))
       .distinct().localCheckpoint(true)

@@ -60,6 +60,9 @@ object Nmf {
     round(col(x).cast("double") * col(num).cast("double") /
       (col(den).cast("double") + 1e-9), 6).cast("decimal(18,6)")
 
+  /** Local-route budget (nonzero cells). */
+  private val MaxLocalNnz = 2000000
+
   /** Run `rounds` update rounds at rank k. Returns (W (doc_id, topic,
     * w), H (topic, term, h)), both 6dp DECIMAL.
     *
@@ -69,15 +72,22 @@ object Nmf {
     * (NmfLocalTwinSpec pins the routes bit-equal) — at gate scale this
     * replaces 2·rounds eager-checkpoint jobs of 3 grouped matrix
     * products each, for every ls10/ls11/ls13-class consumer. Above the
-    * budget the distributed loop runs unchanged (the 100 TB path).
+    * budget [[factorizeDistributed]] runs (the 100 TB path).
     */
-  def factorize(v: DataFrame, k: Int, rounds: Int,
-      maxLocalNnz: Int = 2000000): (DataFrame, DataFrame) = {
+  def factorize(v: DataFrame, k: Int, rounds: Int): (DataFrame, DataFrame) =
+    LocalRoute.collectWithin(
+        v.select(col("doc_id"), col("term"), col("v")), MaxLocalNnz) match {
+      case Some(rows) => factorizeLocal(v, rows, k, rounds)
+      case None => factorizeDistributed(v, k, rounds)
+    }
+
+  /** The distributed update loop: per round three grouped matrix
+    * products for W and three for H, lineage cut with localCheckpoint.
+    */
+  private[operators] def factorizeDistributed(v: DataFrame, k: Int,
+      rounds: Int): (DataFrame, DataFrame) = {
     val spark = v.sparkSession
     import spark.implicits._
-    val local = LocalRoute.collectWithin(
-      v.select(col("doc_id"), col("term"), col("v")), maxLocalNnz)
-    if (local.isDefined) return factorizeLocal(v, local.get, k, rounds)
     val vp = v.persist()
     val topics = spark.range(k).select($"id".cast("int").as("topic"))
     var w = vp.select($"doc_id").distinct()

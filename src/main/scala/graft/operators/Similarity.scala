@@ -234,8 +234,14 @@ object Similarity {
     */
   def tfidfCosinePairs(docs: DataFrame, idCol: String, tokens: Column,
       quantScale: Double = 1e4, maxDfFrac: Double = 0.5,
-      tau: Double = 0.3): DataFrame = {
-    import graft.operators.{Dedup => D}
+      tau: Double = 0.3): DataFrame =
+    tfidfCosinePairsWithin(docs, idCol, tokens, quantScale, maxDfFrac, tau,
+      Dedup.Mass)
+
+  /** [[tfidfCosinePairs]] under explicit mass-probe limits. */
+  private[operators] def tfidfCosinePairsWithin(docs: DataFrame,
+      idCol: String, tokens: Column, quantScale: Double, maxDfFrac: Double,
+      tau: Double, limits: Dedup.MassLimits): DataFrame = {
     val base = docs.select(col(idCol).as("id"), tokens.as("toks"))
     val tf = base.select(col("id"), explode(col("toks")).as("tok"))
       .groupBy(col("id"), col("tok")).agg(count(lit(1)).as("tf"))
@@ -247,40 +253,35 @@ object Similarity {
       // cache class as `w` below (r15; guide §2.4 — remove duplicate
       // passes). cacheIfNew: plan-equal calls share the entry.
       .transform(df => graft.Par.cacheIfNew(df)._1)
-    val dfT0 = tf.groupBy(col("tok")).agg(countDistinct(col("id")).as("df"))
-    // Degenerate-corpus mass probe (r13 verdict task 2; see the Dedup
-    // object docs — same floor/budget/policy as lshCandidates). The
-    // token self-join's pre-aggregate output is exactly
-    // Σ_tok (df_kept choose 2); probing the post-cap Σ df·(df−1)/2
-    // over the vocabulary-sized df table UPPER-bounds it (the wq>0
-    // filter can only shrink df), erring toward the bounded route.
-    // The doc count is column-pruned; the df aggregation above the
-    // floor costs one extra corpus pass, after which dfT is persisted
-    // so the main plan reuses it. r14: this ONE count job now also
-    // supplies n_docs to the weight expression as a LITERAL — the
-    // previous one-row corpus aggregate and its broadcast-cross-join
-    // into the weight table are gone (one less job + one less
-    // BroadcastNestedLoopJoin in the plan; a corpus scalar folds into
-    // codegen). Values unchanged: long→double is exact far past any
-    // feasible corpus count, and the df-cap / idf arithmetic below is
-    // the same IEEE expression either way.
+    val dfT = tf.groupBy(col("tok")).agg(countDistinct(col("id")).as("df"))
+    // Mass probe (see the Dedup object docs — same floor/budget as
+    // lshCandidates). The token self-join's pre-aggregate output is
+    // exactly Σ_tok (df_kept choose 2); probing the post-cap
+    // Σ df·(df−1)/2 over the vocabulary-sized df table UPPER-bounds it
+    // (the wq>0 filter can only shrink df), erring toward the bounded
+    // route. The doc count is column-pruned; the df aggregation above
+    // the floor costs one extra corpus pass, after which dfT is
+    // persisted so the main plan (built below, after the probe) reuses
+    // it. r14: this ONE count job also supplies n_docs to the weight
+    // expression as a LITERAL — the previous one-row corpus aggregate
+    // and its broadcast-cross-join into the weight table are gone (one
+    // less job + one less BroadcastNestedLoopJoin in the plan; a corpus
+    // scalar folds into codegen). Values unchanged: long→double is
+    // exact far past any feasible corpus count, and the df-cap / idf
+    // arithmetic below is the same IEEE expression either way.
     // collect-bound: scalar: row count (probe floor + n_docs literal)
     val nDocs = base.count()
-    val probed = nDocs > D.massProbeMinDocs
-    val (dfT, bounded, mass) =
-      if (!probed) (dfT0, false, 0L)
-      else {
-        val d = dfT0.persist()
-        // post-cap mass: tokens past the df cap never reach the join.
-        // Summed DIRECTED (df·(df−1), exact long arithmetic — SQL `/`
-        // on longs would go through double) and halved on the driver
-        // to the ida<idb undirected count the groupBy actually sees.
-        // collect-bound: scalar: single aggregated row (token-df mass probe)
-        val m = d.filter(col("df") <= lit((nDocs * maxDfFrac).toLong))
-          .agg(coalesce(sum(col("df") * (col("df") - lit(1L))), lit(0L)))
-          .first().getLong(0) / 2L
-        (d, D.massRoute("tfidfCosinePairs", m, D.massBudgetPairs), m)
-      }
+    val route = Dedup.massRouted("tfidfCosinePairs", nDocs, limits,
+        "ida", "idb") {
+      // post-cap mass: tokens past the df cap never reach the join.
+      // Summed DIRECTED (df·(df−1), exact long arithmetic — SQL `/`
+      // on longs would go through double) and halved on the driver
+      // to the ida<idb undirected count the groupBy actually sees.
+      // collect-bound: scalar: single aggregated row (token-df mass probe)
+      dfT.persist().filter(col("df") <= lit((nDocs * maxDfFrac).toLong))
+        .agg(coalesce(sum(col("df") * (col("df") - lit(1L))), lit(0L)))
+        .first().getLong(0) / 2L
+    }
     val w = tf.join(broadcast(dfT), Seq("tok"))
       .filter(col("df") <= lit(nDocs * maxDfFrac))
       .withColumn("wq",
@@ -303,16 +304,12 @@ object Similarity {
     // bounded route (probe tripped): the explicit pair-key exchange
     // replaces the pre-shuffle partial aggregate — the join output
     // streams into the exchange writer instead of a per-task hash map
-    // holding a corpus-quadratic pair set, and the post-shuffle sum
-    // runs on ~MassPairsPerPartition rows per task. Same rows, same
-    // integer sums (order-independent), so values are unchanged. On a
-    // diverse corpus the partial aggregate stays — it combines the
-    // many-tokens-per-pair fan-in map-side, which the degenerate
-    // corpus's quadratic pair space inverts from win to OOM risk.
-    val grouped =
-      if (!bounded) prods
-      else prods.repartition(D.massParts(mass), col("ida"), col("idb"))
-    val dot = grouped
+    // holding a corpus-quadratic pair set. Same rows, same integer sums
+    // (order-independent), so values are unchanged. On a diverse corpus
+    // the partial aggregate stays — it combines the many-tokens-per-pair
+    // fan-in map-side, which the degenerate corpus's quadratic pair
+    // space inverts from win to OOM risk.
+    val dot = route(prods)
       .groupBy(col("ida"), col("idb"))
       .agg(sum(col("wa") * col("wb")).as("dot"))
     dot
@@ -353,6 +350,9 @@ object Similarity {
         org.apache.spark.sql.graft.ColumnBridge.expression(a),
         org.apache.spark.sql.graft.ColumnBridge.expression(b)))
 
+  /** [[lloydClusters]]' local-route budget (rows). */
+  private val MaxLocalLloydRows = 200000
+
   /** Deterministic fixed-iteration Lloyd clustering — shared by the IVF
     * probe (s03) and SemDeDup-style clustered semantic dedup (d12).
     * Returns (final centroids (cluster, cv), assignment (id, vec,
@@ -364,8 +364,8 @@ object Similarity {
     * oracle recomputes the clustering itself.
     */
   def lloydClusters(vecs: DataFrame, nClusters: Int,
-      lloydIters: Int, maxLocalRows: Int = 200000): (DataFrame, DataFrame) = {
-    val v0 = vecs.select(col("id"), col("vec"))
+      lloydIters: Int): (DataFrame, DataFrame) = {
+    val v = vecs.select(col("id"), col("vec"))
     // Scale routing (r15; the PowerLsa.kFactorsAuto pattern): under the
     // row budget, ONE sorted collect feeds a local loop walking the
     // IDENTICAL recurrence (same sqDist left-fold, same ties-to-lowest
@@ -376,11 +376,19 @@ object Similarity {
     // so s15-class queries save ~5× that. The bounded collect runs the
     // orderBy(id) inside its job (a distributed TakeOrdered, not a
     // global sort), so the rows arrive in Spark's own id order; over
-    // budget, the unchanged distributed loop runs (the 100 TB path).
-    val local = LocalRoute.collectWithin(v0.orderBy(col("id")), maxLocalRows)
-    if (local.isDefined)
-      return lloydClustersLocal(v0, local.get, nClusters, lloydIters)
-    val v = v0
+    // budget, [[lloydDistributed]] runs (the 100 TB path).
+    LocalRoute.collectWithin(v.orderBy(col("id")), MaxLocalLloydRows) match {
+      case Some(rows) => lloydClustersLocal(v, rows, nClusters, lloydIters)
+      case None => lloydDistributed(v, nClusters, lloydIters)
+    }
+  }
+
+  /** The distributed Lloyd loop over (id, vec) rows `v`: per round a
+    * broadcast-centroid window argmin and a decimal-exact mean
+    * aggregate, lineage cut with localCheckpoint.
+    */
+  private[operators] def lloydDistributed(v: DataFrame, nClusters: Int,
+      lloydIters: Int): (DataFrame, DataFrame) = {
     var centroids = v.orderBy(col("id")).limit(nClusters)
       .select(col("id").as("cid"), col("vec").as("cv"))
       .withColumn("cluster",

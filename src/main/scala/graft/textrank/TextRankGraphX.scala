@@ -47,14 +47,20 @@ object TextRankGraphX {
     * strategy absorbs the identical edge set inside it).
     */
   private def edgeBudget: Long =
-    sys.props.get("graft.graphx.maxEdges").map(_.toLong).getOrElse(
-      (Runtime.getRuntime.maxMemory() * 0.35 / BytesPerEdge).toLong)
+    (Runtime.getRuntime.maxMemory() * 0.35 / BytesPerEdge).toLong
 
   /** `maxDirectedEdges` is the caller's upper bound on the directed
     * edge count; it picks the edge cache's storage level through
     * [[TextRank.edgeStorage]] and is handed on to the fallback.
     */
-  def ranks(edges: DataFrame, maxDirectedEdges: Long = Long.MaxValue): DataFrame = {
+  def ranks(edges: DataFrame, maxDirectedEdges: Long = Long.MaxValue): DataFrame =
+    ranksWithin(edges, maxDirectedEdges, edgeBudget)
+
+  /** [[ranks]] with an explicit edge budget: above `budget` edges the
+    * ranks come from [[TextRank.ranks]] instead of GraphX.
+    */
+  private[textrank] def ranksWithin(edges: DataFrame, maxDirectedEdges: Long,
+      budget: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // Serialized + spillable storage throughout: the edge set is the
@@ -90,15 +96,15 @@ object TextRankGraphX {
     // budget the identical rank vector comes from the default strategy
     // (both are hash-verified against the same unrolled oracle), so
     // fall back instead of demanding a 48 GiB driver.
-    if (edgeCount > edgeBudget) {
-      log.warn(s"TextRankGraphX: $edgeCount edges exceed the ~${edgeBudget} " +
+    if (edgeCount > budget) {
+      log.warn(s"TextRankGraphX: $edgeCount edges exceed the ~$budget " +
         s"heap budget (${Runtime.getRuntime.maxMemory() >> 20} MiB max heap); " +
         "falling back to TextRank.ranks (value-identical, scale-safe)")
       val r = TextRank.ranks(eDf, maxDirectedEdges)
       eDf.unpersist(blocking = false)
       return r
     }
-    log.info(s"TextRankGraphX: $edgeCount edges within the ${edgeBudget} budget; " +
+    log.info(s"TextRankGraphX: $edgeCount edges within the $budget budget; " +
       "running the GraphX backend")
     // tuple streams over the cached columnar batches — never persisted
     // as objects; the three consumers below each re-scan the cache

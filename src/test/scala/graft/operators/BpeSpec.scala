@@ -71,7 +71,7 @@ class BpeSpec extends SparkSpec {
       p._1.as[(Long, String, String, String, Long)].collect().sortBy(_._1).toSeq,
       p._2.as[(String, Long, String)].collect().sortBy(_._1).toSeq)
     val local = rows(Bpe.mergesAndVocab(spark, freq, 8))
-    val dist = rows(Bpe.mergesAndVocab(spark, freq, 8, maxLocalTypes = 0L))
+    val dist = rows(Bpe.mergesAndVocabDF(spark, freq, 8))
     assert(local._1 == dist._1)
     assert(local._2 == dist._2)
     assert(local._1.length == 8)

@@ -7,18 +7,21 @@ import org.apache.spark.sql.DataFrame
   * task 2): STRESS_r13 measured d04/d15's pre-shuffle partial
   * aggregates pressing 7.94–7.97 g at sf10 on the replica-degenerate
   * corpus with OOM projected at ~sf15 (~490 M post-cap pairs). The
-  * probe (Dedup object docs) measures the exact post-cap pair mass
-  * above a doc-count floor and, over a heap-derived budget, swaps the
-  * pair stream to output-sized partitioning. Contract pinned here:
+  * probe ([[Dedup.massRouted]], Dedup object docs) measures the exact
+  * post-cap pair mass above a row floor and, over a heap-derived
+  * budget, swaps the pair stream to output-sized partitioning.
+  * Contract pinned here:
   *  - the bounded route is VALUE-IDENTICAL to the default route (for
   *    d04's candidate distinct, d05's simhash chunk-band pairs and
   *    d15's quantized cosine) — the reroute moves partitioning, never
   *    answers;
-  *  - the route decision is exactly mass > budget;
-  *  - `-Dgraft.dedup.massReroute=off` turns a tripped probe into a
-  *    loud IllegalStateException carrying the measured evidence;
+  *  - the route decision is exactly mass > budget, and below the floor
+  *    no mass is measured;
   *  - below the floor the optimized plan is byte-identical to the
   *    probe-less shape (no injected exchange).
+  * The bounded route is reached through the operators' package-private
+  * `*Within` entry points with small [[Dedup.MassLimits]]; the public
+  * operators always use the production limits [[Dedup.Mass]].
   */
 class DedupMassProbeSpec extends SparkSpec {
   import spark.implicits._
@@ -29,16 +32,20 @@ class DedupMassProbeSpec extends SparkSpec {
   private def degenerateSigs(n: Int): DataFrame =
     (0L until n.toLong).map(i => (i, Seq.fill(8)(42L))).toDF("id", "sig")
 
-  private def withProps(kv: (String, String)*)(body: => Unit): Unit = {
-    kv.foreach { case (k, v) => System.setProperty(k, v) }
-    try body
-    finally kv.foreach { case (k, _) => System.clearProperty(k) }
-  }
+  private def exchanged(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.toString.toLowerCase
+      .contains("repartitionbyexpression")
 
   test("route decision is exactly mass > budget") {
-    assert(Dedup.massRoute("spec", 101L, 100L))
-    assert(!Dedup.massRoute("spec", 100L, 100L))
-    assert(!Dedup.massRoute("spec", 0L, 100L))
+    // at or below the floor the mass is never evaluated
+    val pairs = Seq((1L, 2L)).toDF("a", "b")
+    val limits = Dedup.MassLimits(minRows = 10L, budgetPairs = 100L)
+    def routed(rows: Long, mass: => Long) =
+      exchanged(Dedup.massRouted("spec", rows, limits, "a", "b")(mass)(pairs))
+    assert(routed(11L, 101L))
+    assert(!routed(11L, 100L))
+    assert(!routed(11L, 0L))
+    assert(!routed(10L, sys.error("mass probed at the floor")))
   }
 
   test("massParts scales with mass inside [32, 4096]") {
@@ -53,35 +60,19 @@ class DedupMassProbeSpec extends SparkSpec {
     // mass = 4 bands × 50·49 = 9800 > budget 1000; floor 10 < 50 docs
     val default = Dedup.lshCandidates(sigs, bands = 4, rowsPerBand = 2)
       .as[(Long, Long)].collect().toSet
-    withProps("graft.dedup.massProbeMinDocs" -> "10",
-        "graft.dedup.massBudgetPairs" -> "1000") {
-      val bounded = Dedup.lshCandidates(sigs, bands = 4, rowsPerBand = 2)
-      assert(bounded.queryExecution.optimizedPlan.toString
-        .toLowerCase.contains("repartitionbyexpression"),
-        "probe must have injected the output-sized exchange")
-      assert(bounded.as[(Long, Long)].collect().toSet == default,
-        "bounded route changed the candidate set")
-    }
+    val bounded = Dedup.lshCandidatesWithin(sigs, bands = 4, rowsPerBand = 2,
+      maxBucket = 1000, Dedup.MassLimits(minRows = 10L, budgetPairs = 1000L))
+    assert(exchanged(bounded),
+      "probe must have injected the output-sized exchange")
+    assert(bounded.as[(Long, Long)].collect().toSet == default,
+      "bounded route changed the candidate set")
     assert(default.size == 50 * 49 / 2, "fixture must be all-pairs degenerate")
   }
 
   test("below the floor the plan carries no injected exchange") {
     val sigs = degenerateSigs(20)
-    val plan = Dedup.lshCandidates(sigs, bands = 4, rowsPerBand = 2)
-      .queryExecution.optimizedPlan.toString.toLowerCase
-    assert(!plan.contains("repartitionbyexpression"),
+    assert(!exchanged(Dedup.lshCandidates(sigs, bands = 4, rowsPerBand = 2)),
       "default-scale plan must stay byte-identical to the probe-less shape")
-  }
-
-  test("massReroute=off turns a tripped probe into a loud failure " +
-      "carrying the evidence") {
-    withProps(Dedup.MassRerouteProp -> "off") {
-      val e = intercept[IllegalStateException] {
-        Dedup.massRoute("lshCandidates", 9800L, 1000L)
-      }
-      assert(e.getMessage.contains("9800") && e.getMessage.contains("1000"),
-        s"probe evidence missing from: ${e.getMessage}")
-    }
   }
 
   test("tripped probe keeps d05's simhash pairs identical and injects " +
@@ -91,22 +82,17 @@ class DedupMassProbeSpec extends SparkSpec {
     // maxBucket cap exists on this path, so the probe is the only guard)
     val toks = (0L until 30L).map(i => (i, Seq("alpha", "beta", "gamma")))
       .toDF("id", "tokens")
-    val default = Dedup.simhashNearDuplicates(toks)
-      .as[(Long, Long, Int)].collect().toSet
+    val below = Dedup.simhashNearDuplicates(toks)
+    val default = below.as[(Long, Long, Int)].collect().toSet
     assert(default.size == 30 * 29 / 2 &&
       default.forall(_._3 == 0), "fixture must be all-pairs at Hamming 0")
-    withProps("graft.dedup.massProbeMinDocs" -> "10",
-        "graft.dedup.massBudgetPairs" -> "100") {
-      val bounded = Dedup.simhashNearDuplicates(toks)
-      assert(bounded.queryExecution.optimizedPlan.toString
-        .toLowerCase.contains("repartitionbyexpression"),
-        "probe must have injected the output-sized exchange")
-      assert(bounded.as[(Long, Long, Int)].collect().toSet == default,
-        "bounded route changed the simhash pair set")
-    }
-    val below = Dedup.simhashNearDuplicates(toks)
-      .queryExecution.optimizedPlan.toString.toLowerCase
-    assert(!below.contains("repartitionbyexpression"),
+    val bounded = Dedup.simhashNearDuplicatesWithin(toks, maxHamming = 3,
+      Dedup.MassLimits(minRows = 10L, budgetPairs = 100L))
+    assert(exchanged(bounded),
+      "probe must have injected the output-sized exchange")
+    assert(bounded.as[(Long, Long, Int)].collect().toSet == default,
+      "bounded route changed the simhash pair set")
+    assert(!exchanged(below),
       "default-scale plan must stay byte-identical to the probe-less shape")
   }
 
@@ -116,16 +102,18 @@ class DedupMassProbeSpec extends SparkSpec {
     val docs = ((0 until 12).map(i => (i.toLong, "alpha beta gamma delta")) ++
       Seq((100L, "alpha epsilon zeta eta"), (200L, "beta theta iota kappa")))
       .toDF("doc_id", "text")
-    def run(): Set[(Long, Long, Double)] =
-      Similarity.tfidfCosinePairs(docs, "doc_id",
-          graft.text.TextFunctions.tokenize(org.apache.spark.sql.functions.col("text")),
-          quantScale = 1e4, maxDfFrac = 0.95, tau = 0.1)
-        .as[(Long, Long, Double)].collect().toSet
-    val default = run()
-    withProps("graft.dedup.massProbeMinDocs" -> "5",
-        "graft.dedup.massBudgetPairs" -> "10") {
-      assert(run() == default, "bounded route changed d15 values")
-    }
+    val tokens =
+      graft.text.TextFunctions.tokenize(org.apache.spark.sql.functions.col("text"))
+    val default = Similarity.tfidfCosinePairs(docs, "doc_id", tokens,
+        quantScale = 1e4, maxDfFrac = 0.95, tau = 0.1)
+      .as[(Long, Long, Double)].collect().toSet
+    val bounded = Similarity.tfidfCosinePairsWithin(docs, "doc_id", tokens,
+      quantScale = 1e4, maxDfFrac = 0.95, tau = 0.1,
+      Dedup.MassLimits(minRows = 5L, budgetPairs = 10L))
+    assert(exchanged(bounded),
+      "probe must have injected the output-sized exchange")
+    assert(bounded.as[(Long, Long, Double)].collect().toSet == default,
+      "bounded route changed d15 values")
     assert(default.nonEmpty, "fixture must produce pairs")
   }
 }

@@ -1,14 +1,16 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 
 /** Pins the r15 routing contract of [[Similarity.lloydClusters]]: the
-  * bounded-collect local twin must be BIT-identical to the distributed
-  * window+decimal-agg loop — centroid coordinates and assignments
-  * compared with ==, never a tolerance. The fixture deliberately
-  * includes duplicate vectors (argmin ties → lowest cluster), a vector
-  * equidistant from two centroids, and a cluster that goes empty after
-  * round 1 (keep-previous-centroid rule).
+  * bounded-collect local twin (what `lloydClusters` runs under its row
+  * budget) must be BIT-identical to the distributed window+decimal-agg
+  * loop ([[Similarity.lloydDistributed]], called directly) — centroid
+  * coordinates and assignments compared with ==, never a tolerance.
+  * The fixture deliberately includes duplicate vectors (argmin ties →
+  * lowest cluster), a vector equidistant from two centroids, and a
+  * cluster that goes empty after round 1 (keep-previous-centroid rule).
   */
 class LloydLocalTwinSpec extends SparkSpec {
   import spark.implicits._
@@ -24,8 +26,8 @@ class LloydLocalTwinSpec extends SparkSpec {
     (7L, Seq(0.05, 0.05))
   ).toDF("id", "vec")
 
-  private def run(maxLocalRows: Int) = {
-    val (cents, asg) = Similarity.lloydClusters(vecs, 3, 2, maxLocalRows)
+  private def rows(ca: (DataFrame, DataFrame)) = {
+    val (cents, asg) = ca
     val c = cents.orderBy("cluster")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
     val a = asg.orderBy("id")
@@ -35,15 +37,11 @@ class LloydLocalTwinSpec extends SparkSpec {
   }
 
   test("local twin is bit-identical to the distributed loop") {
-    val (cLocal, aLocal) = run(maxLocalRows = 200000) // local route
-    val (cDist, aDist) = run(maxLocalRows = -1)        // forces the DF route
+    val (cLocal, aLocal) = rows(Similarity.lloydClusters(vecs, 3, 2))
+    val (cDist, aDist) = rows(Similarity.lloydDistributed(vecs, 3, 2))
     assert(cLocal == cDist)
     assert(aLocal == aDist)
     assert(cLocal.size == 3 && aLocal.size == 8)
-  }
-
-  test("an Int.MaxValue budget routes local without overflowing") {
-    assert(run(maxLocalRows = Int.MaxValue) == run(maxLocalRows = 200000))
   }
 
   test("a NaN coordinate in the lowest-id vector matches the distributed loop") {
@@ -56,16 +54,16 @@ class LloydLocalTwinSpec extends SparkSpec {
       case null => None
       case d: Double => Some(java.lang.Double.doubleToLongBits(d))
     }
-    def runNaN(iters: Int, maxLocalRows: Int) = {
-      val (cents, asg) = Similarity.lloydClusters(withNaN, 3, iters, maxLocalRows)
+    def rowsNaN(ca: (DataFrame, DataFrame)) = {
+      val (cents, asg) = ca
       (cents.schema, asg.schema, cents.orderBy("cluster").collect()
         .map(r => (r.getInt(0), bits(r.getSeq[Any](1)))).toSeq,
         asg.orderBy("id").collect()
           .map(r => (r.getLong(0), bits(r.getSeq[Any](1)), r.getInt(2))).toSeq)
     }
     for (iters <- Seq(1, 2)) { // 1 ends on the null coordinate
-      val local = runNaN(iters, maxLocalRows = 200000)
-      assert(local == runNaN(iters, maxLocalRows = -1))
+      val local = rowsNaN(Similarity.lloydClusters(withNaN, 3, iters))
+      assert(local == rowsNaN(Similarity.lloydDistributed(withNaN, 3, iters)))
       assert(local._4.size == 8)
     }
   }

@@ -1,0 +1,41 @@
+package graft.operators
+
+import graft.SparkSpec
+import org.apache.spark.JobCount
+
+/** Pins [[LocalRoute.collectWithin]], the probe-and-collect behind the
+  * Hits, Nmf and Lloyd routes: the budget boundary, the row order it
+  * hands to the local twins, and the jobs one call runs.
+  */
+class LocalRouteSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("budget rows come back whole, in the order of df; one more row " +
+      "routes distributed") {
+    // ids 7..0 over 4 partitions
+    val sorted = (7L to 0L by -1L).toDF("id").repartition(4).orderBy("id")
+    val rows = LocalRoute.collectWithin(sorted, 8)
+    assert(rows.map(_.map(_.getLong(0)).toSeq) == Some(0L until 8L))
+    assert(LocalRoute.collectWithin(sorted, 7).isEmpty)
+    assert(LocalRoute.collectWithin(sorted.limit(0), 0).map(_.length) == Some(0))
+    assert(LocalRoute.collectWithin(sorted, 0).isEmpty)
+  }
+
+  test("an unordered input is collected incrementally: one job over the " +
+      "first partition, one more over the rest") {
+    // 40 rows in 4 partitions of 10, of a size the optimizer cannot
+    // see: the first job reads partition 0 (10 rows < the cap), then
+    // Spark's executeTake scans the remaining partitions in one job
+    val df = spark.sparkContext.parallelize(0L until 40L, 4).toDF("id")
+    def jobs(budget: Int) = JobCount(spark.sparkContext)(
+      LocalRoute.collectWithin(df, budget).map(_.length))
+    assert(jobs(40) == ((Some(40), 2)))
+    assert(jobs(39) == ((None, 2)))
+    // a cap inside the first partition stops after one job
+    assert(jobs(5) == ((None, 1)))
+    // when the optimizer knows the row count is within the cap, the
+    // limit is dropped and the collect is one plain job
+    assert(JobCount(spark.sparkContext)(LocalRoute.collectWithin(
+      spark.range(0, 40, 1, 4).toDF("id"), 40).map(_.length)) == ((Some(40), 1)))
+  }
+}

@@ -1,13 +1,15 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 
 /** Pins the r15 routing contract of [[Nmf.factorize]]: the
-  * bounded-collect local twin must be BIT-identical to the distributed
-  * checkpoint-per-round loop — every W and H entry (6dp decimal)
-  * compared with ==. The fixture exercises the FNV init, both gram
-  * joins, and the epsilon-guarded multiplicative step over several
-  * rounds.
+  * bounded-collect local twin (what `factorize` runs under its nnz
+  * budget) must be BIT-identical to the distributed
+  * checkpoint-per-round loop ([[Nmf.factorizeDistributed]], called
+  * directly) — every W and H entry (6dp decimal) compared with ==.
+  * The fixture exercises the FNV init, both gram joins, and the
+  * epsilon-guarded multiplicative step over several rounds.
   */
 class NmfLocalTwinSpec extends SparkSpec {
   import spark.implicits._
@@ -20,8 +22,8 @@ class NmfLocalTwinSpec extends SparkSpec {
   ).toDF("doc_id", "term", "vs")
     .select($"doc_id", $"term", $"vs".cast("decimal(18,6)").as("v"))
 
-  private def run(maxLocalNnz: Int) = {
-    val (w, h) = Nmf.factorize(cells, k = 3, rounds = 3, maxLocalNnz)
+  private def rows(wh: (DataFrame, DataFrame)) = {
+    val (w, h) = wh
     val wr = w.orderBy("doc_id", "topic").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDecimal(2))).toSeq
     val hr = h.orderBy("topic", "term").collect()
@@ -30,14 +32,10 @@ class NmfLocalTwinSpec extends SparkSpec {
   }
 
   test("local twin is bit-identical to the distributed loop") {
-    val (wLocal, hLocal) = run(maxLocalNnz = 2000000)
-    val (wDist, hDist) = run(maxLocalNnz = -1) // negative budget forces DF route
+    val (wLocal, hLocal) = rows(Nmf.factorize(cells, k = 3, rounds = 3))
+    val (wDist, hDist) = rows(Nmf.factorizeDistributed(cells, k = 3, rounds = 3))
     assert(wLocal == wDist)
     assert(hLocal == hDist)
     assert(wLocal.size == 4 * 3 && hLocal.size == 3 * 4)
-  }
-
-  test("an Int.MaxValue budget routes local without overflowing") {
-    assert(run(maxLocalNnz = Int.MaxValue) == run(maxLocalNnz = 2000000))
   }
 }

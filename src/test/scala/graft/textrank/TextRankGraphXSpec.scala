@@ -22,15 +22,13 @@ class TextRankGraphXSpec extends SparkSpec {
   test("edge budget exceeded falls back to the DataFrame strategy, value-identical") {
     val edges = TextRank.similarityEdges(vertices, 4L)
     val df = TextRank.ranks(edges).as[(Long, Double)].collect().toMap
-    // force the budget below the micro graph's edge count: the GraphX
-    // entry point must route to TextRank.ranks instead of building the
-    // graph (the sf1 demonstrator envelope — its 1.1e8-edge set needs a
+    // a budget below the micro graph's edge count: the GraphX entry
+    // point must route to TextRank.ranks instead of building the graph
+    // (the sf1 demonstrator envelope — its 1.1e8-edge set needs a
     // 48 GiB driver on GraphX while the default strategy fits 8 GiB)
-    sys.props("graft.graphx.maxEdges") = "1"
-    try {
-      val fb = TextRankGraphX.ranks(edges).as[(Long, Double)].collect().toMap
-      assert(fb == df)
-    } finally sys.props -= "graft.graphx.maxEdges"
+    val fb = TextRankGraphX.ranksWithin(edges, Long.MaxValue, budget = 1L)
+      .as[(Long, Double)].collect().toMap
+    assert(fb == df)
   }
 
   test("GraphX backend matches on the sf0.001 documents table") {

@@ -37,13 +37,21 @@ must stay single-statement standalone for the driver's own gate):
 This cut the round-9 sf1 tr-family oracle cost (~6,600 s of its
 four quadratic all-pairs chains) to one chain plus cheap tails.
 """
-import sys, json, glob, os, re, time, hashlib
+import sys, json, glob, os, re, time, hashlib, shutil, tempfile
 from concurrent.futures import ProcessPoolExecutor, wait, FIRST_COMPLETED
 
 TABLES = ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]
 
 SHARE_DIR = os.environ.get("GATE_SHARE_DIR", "/tmp/graft_oracle_shared")
+
+def make_run_dir():
+    """A fresh directory under SHARE_DIR for one run's node files. Node
+    ids hash SQL text only, so two concurrent runs at different scales
+    would otherwise read each other's materialized prefixes; main()
+    removes the directory when the run exits."""
+    os.makedirs(SHARE_DIR, exist_ok=True)
+    return tempfile.mkdtemp(prefix="run_", dir=SHARE_DIR)
 
 def canon(df):
     df = df.reindex(sorted(df.columns), axis=1)
@@ -302,8 +310,9 @@ def _refs(names, text):
     return [nm for nm in names
             if re.search(r"\b" + re.escape(nm) + r"\b", text)]
 
-def plan_shared_nodes(sqls):
-    """sqls: {qname: sql}. Returns (nodes, member_rewrites) where
+def plan_shared_nodes(sqls, node_dir):
+    """sqls: {qname: sql}; node files go under node_dir. Returns
+    (nodes, member_rewrites) where
     nodes = {node_id: {path, defs(list of (name, def_text)),
                        persist(set of CTE names), members(list)}}
     and member_rewrites = {qname: (node_id, rewritten_sql)}.
@@ -403,7 +412,7 @@ def plan_shared_nodes(sqls):
             ok_members.append((q, needed, qdefs[k:], tail))
         if len(ok_members) < 2:
             continue
-        path = f"{SHARE_DIR}/node_{node_id}.duckdb"
+        path = f"{node_dir}/node_{node_id}.duckdb"
         nodes[node_id] = {"path": path, "defs": defs,
                           "persist": sorted(persist),
                           "members": [q for q, _, _, _ in ok_members]}
@@ -456,7 +465,7 @@ def plan_shared_nodes(sqls):
         needed = _refs([nm for nm, _, _ in defs], suffix)
         node_id = hashlib.sha256(
             ("".join(d for _, d, _ in defs) + q).encode()).hexdigest()[:16]
-        nodes[node_id] = {"path": f"{SHARE_DIR}/node_{node_id}.duckdb",
+        nodes[node_id] = {"path": f"{node_dir}/node_{node_id}.duckdb",
                           "defs": defs, "persist": sorted(set(needed)),
                           "members": [q]}
         rewrites[q] = (node_id, rewrite_sql(q, needed, qdefs[lead:], tail))
@@ -575,6 +584,15 @@ def run_one(task):
     return out
 
 def main():
+    run_dir = make_run_dir() if os.environ.get("GATE_SHARE", "1") != "0" else None
+    try:
+        run(run_dir)
+    finally:
+        if run_dir:
+            shutil.rmtree(run_dir, ignore_errors=True)
+
+def run(run_dir):
+    """The check itself; shared nodes live in run_dir (None: no sharing)."""
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     name_re = re.compile(sys.argv[3]) if len(sys.argv) > 3 else None
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
@@ -583,11 +601,9 @@ def main():
     names = sorted(set(dirs) | set(oracles))
     if name_re:
         names = [n for n in names if name_re.search(n)]
-    share = os.environ.get("GATE_SHARE", "1") != "0"
     sqls = {n: oracles[n] for n in names if oracles.get(n) is not None}
-    nodes, rewrites = plan_shared_nodes(sqls) if share else ({}, {})
+    nodes, rewrites = plan_shared_nodes(sqls, run_dir) if run_dir else ({}, {})
     if nodes:
-        os.makedirs(SHARE_DIR, exist_ok=True)
         for nid, node in nodes.items():
             print(f"SHARE node {nid}: {len(node['defs'])} CTEs -> "
                   f"{node['persist']} for {node['members']}", flush=True)

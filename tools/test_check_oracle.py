@@ -13,6 +13,8 @@ pytest in the container).
 """
 import sys
 import os
+import shutil
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import check_oracle as co  # noqa: E402
@@ -105,10 +107,30 @@ def test_parse_with_contract():
         check("parse: tail preserved", r[1].strip().startswith("SELECT x FROM b"))
 
 
+def test_run_dirs_disjoint():
+    # two runs over the same oracle SQL (say at sf0.01 and at sf0.1)
+    # must never share a node file: each run gets its own directory
+    cols = ", ".join(f"{i} AS c{i}" for i in range(80))
+    head = f"WITH a AS (SELECT {cols}), b AS (SELECT * FROM a) "
+    sqls = {"q1": head + "SELECT c1 FROM b", "q2": head + "SELECT c2 FROM b"}
+    base, co.SHARE_DIR = co.SHARE_DIR, tempfile.mkdtemp()
+    try:
+        d1, d2 = co.make_run_dir(), co.make_run_dir()
+        p1 = {n["path"] for n in co.plan_shared_nodes(sqls, d1)[0].values()}
+        p2 = {n["path"] for n in co.plan_shared_nodes(sqls, d2)[0].values()}
+        check("share: both runs plan a node", len(p1) == 1 and len(p2) == 1,
+              (p1, p2))
+        check("share: runs get disjoint node paths", not (p1 & p2), (p1, p2))
+    finally:
+        shutil.rmtree(co.SHARE_DIR, ignore_errors=True)
+        co.SHARE_DIR = base
+
+
 def main():
     test_strip_literals()
     test_skip_balanced_parity()
     test_parse_with_contract()
+    test_run_dirs_disjoint()
     if FAILURES:
         print(f"== {len(FAILURES)} FAILURES ==")
         return 1
