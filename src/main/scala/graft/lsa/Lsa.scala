@@ -11,20 +11,26 @@ import graft.text.TextFunctions
 import graft.tfidf.TfIdf
 
 /** LSA concept extraction (SURVEY.md EP1, §2.8 L1-L5): TF-IDF doc×term
-  * matrix → distributed SVD → per-concept top keywords + top documents.
+  * matrix → SVD → per-concept top keywords + top documents.
   *
   * Differences from the reference (all deliberate, SURVEY §3 EP1):
   *  - ONE scan and ONE SVD: the reference reads the file twice (:117-118)
   *    and computes two driver-side NumPy SVDs (:138, :141); with rows=docs
   *    the doc loadings live in U and the term loadings in V of the same
   *    decomposition (L3/L4).
-  *  - The matrix never hits the driver: `IndexedRowMatrix.computeSVD`
-  *    (ARPACK) keeps U distributed; only the small V (|vocab| × k) and the
-  *    k singular values are local.
+  *  - The SVD runs where the matrix fits: a product-sized matrix (up to
+  *    `LocalDenseCells` dense cells) is collected once and solved on the
+  *    driver with LAPACK, as the reference does with NumPy; a larger one
+  *    never hits the driver — `IndexedRowMatrix.computeSVD` (ARPACK)
+  *    keeps U distributed, and only the small V (|vocab| × k) and the k
+  *    singular values are local.
   *  - IDF is the reference's `log10(N/df)` (quirk Q3).
   *  - Sign convention (quirk Q9/H2): each singular vector is flipped so
   *    its max-|loading| V-entry is positive, making signed-loading top-k
-  *    deterministic across runs/backends.
+  *    deterministic across runs/backends. Loadings are compared on the
+  *    `Loadings.snap` grid, so a tie of opposite-sign maxima (a concept
+  *    spanning two equal-weight sentence groups) falls to the first
+  *    vocabulary index on both solvers instead of to round-off.
   *  - Vocabulary order is pinned to (df desc, token asc) — deterministic,
   *    unlike the reference's driver-side `set()` (quirk Q6). Every token
   *    is kept: there is no document-frequency floor.
@@ -114,24 +120,80 @@ object Lsa {
     */
   private val ResidualTol = 1e-6
 
+  /** The gate both routes of [[concepts]] apply: every residual within
+    * [[ResidualTol]], else the call fails naming the concept.
+    */
+  private[lsa] def requireGenuine(res: Array[Double], s: Array[Double]): Unit =
+    res.zipWithIndex.foreach { case (rel, j) =>
+      require(rel <= ResidualTol,
+        s"SVD self-check failed: concept $j eigen-residual " +
+          s"|AtAv - s2 v|/s2 = $rel > $ResidualTol (sigma=${s(j)})")
+    }
+
+  /** Dense cells (documents × vocabulary) at or below which [[concepts]]
+    * solves on the driver: 768 Ki cells, a 6 MiB matrix at 8 B per cell
+    * (LAPACK's reduced SVD holds about three such arrays). Time binds
+    * before memory: the dense SVD costs docs·vocab·min(docs, vocab), and
+    * on 4 cores it beat ARPACK at every measured shape up to ~780 k cells
+    * (880 × 880: 4.4 s vs 6.4 s) but tied or lost from ~1 M square cells
+    * on (1024 × 1024: 6.8 s vs 6.2 s); CHANGES.md records the sweep.
+    */
+  private val LocalDenseCells: Long = 768L << 10
+
   /** Concepts from a (id: long, text: string) corpus. Returns a LOCAL
     * small result (k rows) as a DataFrame.
+    *
+    * Two routes share the token, tf, vocabulary and tf·idf cell plans.
+    * Up to [[LocalDenseCells]] documents × vocabulary the cells are
+    * collected in one job and solved densely on the driver
+    * ([[LocalLsa.fromCells]]: LAPACK, rows in ascending id order); above
+    * it [[conceptsDistributed]] runs ARPACK. The cell values are Spark's
+    * on both routes, so the two solve the same matrix.
     *
     * The caller's id is the matrix row index (`IndexedRow.index`) as is,
     * whatever its range: `computeSVD` derives σ and V from the row vectors
     * alone and carries each index onto its U row, so no renumbering is
     * needed, and the top-doc tie-break (ascending index) is ascending id.
     *
-    * Every result is checked in-query, at any corpus size: one extra
-    * distributed pass ([[eigenResiduals]]) proves each returned (σⱼ, vⱼ)
-    * is a genuine singular triple of THIS matrix (‖AᵀAvⱼ − σⱼ²vⱼ‖ ≤
-    * 1e-6·σⱼ²); U needs no separate check, since computeSVD derives
-    * U = AVS⁻¹ from V. This complements the ≤2000-doc dense-LAPACK mirror
-    * in ls08 and the power-twin σ cross-check in Stress, which pin the
-    * top-k SELECTION on collectable corpora.
+    * Every result is checked in-query, at any corpus size, on both
+    * routes: the eigen-residual gate proves each returned (σⱼ, vⱼ) is a
+    * genuine singular triple of THIS matrix (‖AᵀAvⱼ − σⱼ²vⱼ‖ ≤
+    * 1e-6·σⱼ²) — on the dense matrix locally, in one extra distributed
+    * pass ([[eigenResiduals]]) on ARPACK's route; U needs no separate
+    * check, since U = AVS⁻¹ follows from V. This complements the
+    * ≤2000-doc dense-LAPACK mirror in ls08 and the power-twin σ
+    * cross-check in Stress, which pin the top-k SELECTION on collectable
+    * corpora.
     */
   def concepts(docs: DataFrame, idCol: String, textCol: String,
-      cfg: Config = Config()): DataFrame = {
+      cfg: Config = Config()): DataFrame =
+    withCells(docs, idCol, textCol, cfg) { (cells, nnz, nDocs, vocab, k) =>
+      if (nDocs * vocab.length <= LocalDenseCells) {
+        val spark = docs.sparkSession
+        import spark.implicits._
+        // collect-bound: probe-guarded: nDocs x |vocab| <= LocalDenseCells just above; conceptsDistributed is the fallback
+        val local = LocalLsa.fromCells(cells.as[(Long, Int, Double)].collect(), vocab, k, cfg)
+        spark.createDataFrame(local.map(c =>
+          Concept(c.concept, c.singularValue, c.keywords, c.docIds)))
+      } else arpack(cells, nnz, vocab, k, cfg)
+    }
+
+  /** [[concepts]] on the distributed ARPACK route at any size. */
+  private[graft] def conceptsDistributed(docs: DataFrame, idCol: String,
+      textCol: String, cfg: Config = Config()): DataFrame =
+    withCells(docs, idCol, textCol, cfg) { (cells, nnz, _, vocab, k) =>
+      arpack(cells, nnz, vocab, k, cfg)
+    }
+
+  /** The plans both routes share: tokens, the persisted tf table, one
+    * job for (nnz, nDocs), the collected vocabulary, and the (id, idx, v)
+    * tf·idf cells; `solve` gets (cells, nnz, nDocs, vocab, k) and runs
+    * while tf is cached. A degenerate corpus (no tokens survive) returns
+    * no concepts without calling it.
+    */
+  private def withCells(docs: DataFrame, idCol: String, textCol: String,
+      cfg: Config)(
+      solve: (DataFrame, Long, Long, Array[String], Int) => DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -142,12 +204,11 @@ object Lsa {
         TextFunctions.lsaTokens(col(textCol), cfg.lemma).as("tokens"))
       .filter(size(col("tokens")) > 0)
     val tf = TfIdf.termFrequencies(tok, "id", "tokens").persist() // feeds vocab, idf, cells
-    var rows: RDD[IndexedRow] = null
     // released on every exit, including a failed job or the residual gate
     try {
       // ONE job for both corpus scalars: nnz sizes the SVD row
-      // partitioning, nDocs feeds IDF and k (vocabSize comes from the
-      // vocabulary collect below).
+      // partitioning, nDocs feeds IDF, k and the route (vocabSize comes
+      // from the vocabulary collect below).
       val (nnz, nDocs) = {
         val row = tf.agg(count(lit(1)), count_distinct(col("id"))).head()
         (row.getLong(0), row.getLong(1))
@@ -178,49 +239,55 @@ object Lsa {
         .join(broadcast(vocabLocal.select(col("token"), col("idx"),
           TfIdf.idfCol(nDocs, col("df")).as("idf"))), "token")
         .select(col("id"), col("idx"), (col("tf") * col("idf")).as("v"))
+      solve(cells, nnz, nDocs, vocabRows.map(_._1), k)
+    } finally tf.unpersist()
+  }
 
-      // ARPACK runs one treeAggregate job over this RDD per Lanczos
-      // iteration (dozens of jobs), so per-iteration cost = per-task
-      // scheduling × partitions + the actual multiply. Size partitions by
-      // nonzero count (~250k cells each): a small corpus collapses to a
-      // couple of tasks (scheduling overhead was dominating the SVD at
-      // bench scale), a 100 TB corpus still spreads across the cluster.
-      val rowParts = math.max(1,
-        math.min((nnz / 250000L).toInt + 1, spark.sparkContext.defaultParallelism))
-      rows = cells.as[(Long, Int, Double)].rdd
-        .groupBy((t: (Long, Int, Double)) => t._1, rowParts)
-        .map { case (id, cs) =>
-          val sorted = cs.toSeq.sortBy(_._2)
-          IndexedRow(id, MlVectors.sparse(vocabSize,
-            sorted.map(_._2).toArray, sorted.map(_._3).toArray))
-        }
-        // Without this persist each ARPACK iteration replays the
-        // join+groupBy lineage above.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+  /** The distributed route: ARPACK `computeSVD` over the cells as
+    * IndexedRows, the [[eigenResiduals]] gate, then the sign, keyword
+    * and top-doc selection.
+    */
+  private def arpack(cells: DataFrame, nnz: Long, vocab: Array[String],
+      k: Int, cfg: Config): DataFrame = {
+    val spark = cells.sparkSession
+    import spark.implicits._
+    val vocabSize = vocab.length
+    // ARPACK runs one treeAggregate job over this RDD per Lanczos
+    // iteration (dozens of jobs), so per-iteration cost = per-task
+    // scheduling × partitions + the actual multiply. Size partitions by
+    // nonzero count (~250k cells each): a small corpus collapses to a
+    // couple of tasks (scheduling overhead was dominating the SVD at
+    // bench scale), a 100 TB corpus still spreads across the cluster.
+    val rowParts = math.max(1,
+      math.min((nnz / 250000L).toInt + 1, spark.sparkContext.defaultParallelism))
+    val rows: RDD[IndexedRow] = cells.as[(Long, Int, Double)].rdd
+      .groupBy((t: (Long, Int, Double)) => t._1, rowParts)
+      .map { case (id, cs) =>
+        val sorted = cs.toSeq.sortBy(_._2)
+        IndexedRow(id, MlVectors.sparse(vocabSize,
+          sorted.map(_._2).toArray, sorted.map(_._3).toArray))
+      }
+      // Without this persist each ARPACK iteration replays the
+      // join+groupBy lineage above.
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // released on every exit, including a failed job or the residual gate
+    try {
       // The column count is known (vocabSize); without it computeSVD
       // runs a rows.first() job to learn it. nRows = 0 leaves the row
       // count lazy, and the SVD never reads it.
       val svd = new IndexedRowMatrix(rows, 0L, vocabSize).computeSVD(k, computeU = true)
       // ARPACK may converge on fewer than k singular values — truncate.
       val kEff = math.min(k, math.min(svd.s.size, svd.V.numCols))
-
-      val res = eigenResiduals(rows,
-        (i, j) => svd.V(i, j), Array.tabulate(kEff)(svd.s(_)), vocabSize)
-      res.zipWithIndex.foreach { case (rel, j) =>
-        require(rel <= ResidualTol,
-          s"SVD self-check failed: concept $j eigen-residual " +
-            s"|AtAv - s2 v|/s2 = $rel > $ResidualTol (sigma=${svd.s(j)})")
-      }
+      val s = Array.tabulate(kEff)(svd.s(_))
+      requireGenuine(eigenResiduals(rows, (i, j) => svd.V(i, j), s, vocabSize), s)
       // V: vocabSize x kEff (local). Sign convention per concept; every
       // loading is ordered on the Loadings.snap grid.
       val v = svd.V
-      val signs = Array.tabulate(kEff)(j => Loadings.sign(vocabSize)(v(_, j)))
+      val signs = Array.tabulate(kEff)(j => Loadings.sign(vocabSize)(i => Loadings.snap(v(i, j))))
 
-      // term array for keyword emission: already collected idx-ordered
-      val vocabArr = vocabRows.map(_._1)
       val keywords = Array.tabulate(kEff) { j =>
         (0 until vocabSize)
-          .map(i => (Loadings.snap(v(i, j) * signs(j)), vocabArr(i)))
+          .map(i => (Loadings.snap(v(i, j) * signs(j)), vocab(i)))
           .sortBy { case (l, t) => (-l, t) }
           .take(cfg.nKeywords).map(_._2)
       }
@@ -254,9 +321,6 @@ object Lsa {
       spark.createDataFrame((0 until kEff).map { j =>
         Concept(j, svd.s(j), keywords(j), topDocs(j))
       })
-    } finally {
-      tf.unpersist()
-      if (rows != null) rows.unpersist()
-    }
+    } finally rows.unpersist()
   }
 }

@@ -54,9 +54,11 @@ object LsaQueries extends QueryProvider {
       Some(ls01OracleSql)),
 
     // The production-solver sibling: distributed ARPACK SVD
-    // (IndexedRowMatrix.computeSVD — the path a 100 TB corpus calls).
+    // (IndexedRowMatrix.computeSVD — the path a 100 TB corpus calls),
+    // taken at every scale through Lsa.conceptsDistributed, even where
+    // Lsa.concepts would solve densely on the driver.
     // Verified at EVERY scale, two layers:
-    //  1. Lsa.concepts' built-in eigen-residual gate (unconditional —
+    //  1. the ARPACK route's built-in eigen-residual gate (unconditional —
     //     including here, including under Bench): one distributed pass
     //     proves each returned (σⱼ, vⱼ) is a genuine singular triple of
     //     this matrix (‖AᵀAvⱼ−σⱼ²vⱼ‖ ≤ 1e-6·σⱼ²), so the solver cannot
@@ -76,7 +78,7 @@ object LsaQueries extends QueryProvider {
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
-        val out = Lsa.concepts(docs, "doc_id", "text")
+        val out = Lsa.conceptsDistributed(docs, "doc_id", "text")
         val nDocs = docs.count()
         // Bounded verification collect: covers the correctness gate
         // (sf0.01 = 500 docs); at bench scale the in-query residual gate

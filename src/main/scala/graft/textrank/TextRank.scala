@@ -20,8 +20,12 @@ import graft.text.TextFunctions
   *    — the reference would crash on them; F7).
   *
   * Scale design: the all-pairs similarity join (J2) is the quadratic
-  * step. The exact path is a broadcast-nested-loop self-join, correct and
-  * fast while the vertex set (sentence band survivors) fits a broadcast;
+  * step. A product-sized exact graph (up to `LocalPairBudget` vertex
+  * pairs) is built and ranked on the driver from one collect of the
+  * vertex table, as the reference ranks on the driver
+  * ([[rankDocuments]]). Above it the exact path is a
+  * broadcast-nested-loop self-join, correct and fast while the vertex
+  * set (sentence band survivors) fits a broadcast;
   * the 100 TB path ([[EdgeCandidates.Lsh]]) routes edge generation through
   * the MinHash-LSH banding in `graft.operators.Dedup` — candidates from
   * bucket joins (linear + bounded-bucket quadratic), exact re-weighting
@@ -640,26 +644,66 @@ object TextRank {
     }
   }
 
+  /** Unordered vertex pairs nv·(nv−1)/2 at or below which
+    * [[rankDocuments]] ranks an exact graph on the driver
+    * ([[ranksLocal]]): 8 Mi pairs, 4,096 vertices. Memory binds, not
+    * speed: on 4 cores the local route beat the distributed one at every
+    * measured size (4,096 vertices: 0.9 s vs 24.8 s; CHANGES.md records
+    * the sweep), and a complete graph at the budget is 16 Mi directed
+    * edges, 256 MiB at 16 B each (the local arrays hold each pair once,
+    * 16 B, so 128 MiB plus growth). The sf1 gate graph (10,660
+    * vertices, 56.8 M pairs) stays above it, so the stress replica still
+    * runs the distributed similarity kernel.
+    */
+  private val LocalPairBudget: Long = 8L << 20
+
   /** Full document-level pipeline over a (id, text) DataFrame: band filter
-    * F2 on raw space-split words, token pipeline, edges, ranks.
+    * F2 on raw space-split words, token pipeline, edges, ranks. An exact
+    * graph of at most [[LocalPairBudget]] vertex pairs is ranked on the
+    * driver ([[ranksLocal]]); a larger one, or LSH candidates, runs
+    * [[rankDocumentsDistributed]]'s route.
     */
   def rankDocuments(docs: DataFrame, idCol: String, textCol: String,
-      cfg: Config = Config()): DataFrame = {
+      cfg: Config = Config()): DataFrame =
+    withVertices(docs, idCol, textCol, cfg) { (vertices, nv) =>
+      if (cfg.edgeCandidates == EdgeCandidates.Exact &&
+          satMul(nv, nv - 1) / 2 <= LocalPairBudget) ranksLocal(vertices)
+      else rankGraph(vertices, nv, cfg)
+    }
+
+  /** [[rankDocuments]] on the distributed edge and rank route at any
+    * size.
+    */
+  private[graft] def rankDocumentsDistributed(docs: DataFrame, idCol: String,
+      textCol: String, cfg: Config = Config()): DataFrame =
+    withVertices(docs, idCol, textCol, cfg)(rankGraph(_, _, cfg))
+
+  /** The persisted vertex table and its count, released when `body`
+    * returns or fails. Both routes are eager (the local route collects,
+    * [[ranks]] checkpoints every iteration), so nothing reads the cache
+    * after `body`.
+    */
+  private def withVertices(docs: DataFrame, idCol: String, textCol: String,
+      cfg: Config)(body: (DataFrame, Long) => DataFrame): DataFrame = {
     val vertices = this.vertices(docs, col(idCol), textCol, cfg.lemma)
       .persist() // read once, joined against itself
-    val nv = vertices.count()
-    // ranks() is eager (localCheckpoint per iteration), so the inputs are
-    // fully consumed by the time it returns — safe to release them; the
-    // finally also releases on job abort (no leaked vertex cache).
-    // nv² bounds the directed edge count on BOTH routes (LSH candidates
-    // are a subset of all pairs), so it sets the edge caches' storage
-    // level and lets ranks() skip its stateless pre-count when the bound
-    // proves the graph small. The bound is applied to the LSH route's
-    // storage too: on a low-diversity corpus the banding degenerates
-    // toward all-pairs — the sf3 probe's 31-token vocabulary collided
-    // ~every document into shared buckets and tr06's candidate edge set
-    // OOM'd an in-heap cache exactly like the exact route's.
-    try ranks(edges(vertices, cfg, nv),
+    try body(vertices, vertices.count())
+    finally vertices.unpersist()
+  }
+
+  /** The distributed route: the edge list of [[edges]], ranked by
+    * [[ranks]].
+    */
+  private def rankGraph(vertices: DataFrame, nv: Long, cfg: Config): DataFrame =
+    // nv² bounds the directed edge count on BOTH edge routes (LSH
+    // candidates are a subset of all pairs), so it sets the edge caches'
+    // storage level and lets ranks() skip its stateless pre-count when
+    // the bound proves the graph small. The bound is applied to the LSH
+    // route's storage too: on a low-diversity corpus the banding
+    // degenerates toward all-pairs — the sf3 probe's 31-token vocabulary
+    // collided ~every document into shared buckets and tr06's candidate
+    // edge set OOM'd an in-heap cache exactly like the exact route's.
+    ranks(edges(vertices, cfg, nv),
       maxDirectedEdges = satMul(nv, nv),
       // both edge routes mirror every surviving pair (see
       // similarityEdges / lshSimilarityEdges), so src-distinct is the
@@ -669,15 +713,118 @@ object TextRank {
       // (isolated docs drop out), so nv bounds it — below the broadcast
       // limit ranks() skips its vertex count job entirely
       maxVertices = nv)
-    finally vertices.unpersist()
+
+  /** Spark's `log2` (`Log2`: `StrictMath.log(x) / StrictMath.log(2)`),
+    * so local weights are bit-identical to [[weightedMirror]]'s.
+    */
+  private def sparkLog2(n: Int): Double = StrictMath.log(n.toDouble) / StrictMath.log(2.0)
+
+  /** The exact graph over vertex token lists, as upper-triangle edges
+    * (a, b, weight) with a < b indexing `tokens` (each edge stands for
+    * both directions). Tokens are int-coded with a per-call dictionary;
+    * a posting list per code (its vertices, ascending) counts every
+    * pair's distinct shared tokens in one sweep — the integer
+    * `intersect_size` gives — so the work follows the shared (pair,
+    * token) incidences, not all token comparisons. The weight is
+    * [[weightedMirror]]'s in the same double operations
+    * (`inter / (log2(na) + log2(nb) + 1.0)`, raw token counts), so it is
+    * bit-identical; zero-weight pairs are dropped.
+    */
+  private[textrank] def localEdges(
+      tokens: Array[Seq[String]]): (Array[Int], Array[Int], Array[Double]) = {
+    val nv = tokens.length
+    val dict = new java.util.HashMap[String, Integer]()
+    val codes = tokens.map(_.map { t =>
+      val c = dict.get(t)
+      if (c != null) c.intValue()
+      else { val d = dict.size; dict.put(t, d); d }
+    }.distinct.toArray)
+    val lg = tokens.map(ts => sparkLog2(ts.length))
+    val postings = Array.fill(dict.size)(new scala.collection.mutable.ArrayBuilder.ofInt)
+    for (a <- 0 until nv; t <- codes(a)) postings(t) += a
+    val post = postings.map(_.result())
+
+    val as = new scala.collection.mutable.ArrayBuilder.ofInt
+    val bs = new scala.collection.mutable.ArrayBuilder.ofInt
+    val ws = new scala.collection.mutable.ArrayBuilder.ofDouble
+    val inter = new Array[Int](nv)
+    var a = 0
+    while (a < nv) {
+      val ca = codes(a)
+      var k = 0
+      while (k < ca.length) {
+        val p = post(ca(k))
+        var i = java.util.Arrays.binarySearch(p, a) + 1
+        while (i < p.length) { inter(p(i)) += 1; i += 1 }
+        k += 1
+      }
+      var b = a + 1
+      while (b < nv) {
+        if (inter(b) > 0) {
+          as += a; bs += b; ws += inter(b).toDouble / (lg(a) + lg(b) + 1.0)
+          inter(b) = 0
+        }
+        b += 1
+      }
+      a += 1
+    }
+    (as.result(), bs.result(), ws.result())
+  }
+
+  /** The exact graph ranked on the driver, from one collect of the
+    * persisted (id, tokens) vertex table — the tokens are Spark's
+    * `textrankTokens`, so there is no tokenizer mirror — through
+    * [[localEdges]]. Out-weight sums and [[Iterations]] rounds of
+    * `r' = InitRank + Damping·Σ r(src)·(w/ow(src))` follow
+    * [[ranksAggregated]]; vertices without an edge drop out. Returns
+    * (id, rnk) with the caller's id type as a local relation.
+    * Per-destination sums run in vertex-pair order, so ranks may differ
+    * from the distributed route's in the last bits.
+    */
+  private def ranksLocal(vertices: DataFrame): DataFrame = {
+    // collect-bound: probe-guarded: rankDocuments routes here only when nv·(nv−1)/2 <= LocalPairBudget; rankDocumentsDistributed is the fallback
+    val rows = vertices.collect()
+    val nv = rows.length
+    val (src, dst, w) = localEdges(rows.map(_.getSeq[String](1)))
+    val ow = new Array[Double](nv)
+    var e = 0
+    while (e < src.length) { ow(src(e)) += w(e); ow(dst(e)) += w(e); e += 1 }
+
+    var r = Array.fill(nv)(InitRank)
+    for (_ <- 1 to Iterations) {
+      val c = new Array[Double](nv)
+      e = 0
+      while (e < src.length) {
+        val x = src(e); val y = dst(e)
+        c(y) += r(x) * (w(e) / ow(x))
+        c(x) += r(y) * (w(e) / ow(y))
+        e += 1
+      }
+      r = c.map(InitRank + Damping * _)
+    }
+    val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    rows.indices.foreach { i =>
+      if (ow(i) > 0.0) out.add(org.apache.spark.sql.Row(rows(i).get(0), r(i)))
+    }
+    vertices.sparkSession.createDataFrame(out,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          vertices.schema("id").dataType, nullable = false),
+        org.apache.spark.sql.types.StructField("rnk",
+          org.apache.spark.sql.types.DoubleType, nullable = false))))
   }
 
   /** G7: top-k by rank with text recovered via an equi-join (not the
     * reference's per-winner `lookup()` jobs — SURVEY §4.1 anti-pattern).
     */
   def summarize(docs: DataFrame, idCol: String, textCol: String, k: Int,
-      cfg: Config = Config()): DataFrame = {
-    val r = rankDocuments(docs, idCol, textCol, cfg)
+      cfg: Config = Config()): DataFrame =
+    topRanked(rankDocuments(docs, idCol, textCol, cfg), docs, idCol, textCol, k)
+
+  /** [[summarize]]'s top-k and text join over ranks `r` (id, rnk). */
+  private[textrank] def topRanked(r0: DataFrame, docs: DataFrame, idCol: String,
+      textCol: String, k: Int): DataFrame = {
+    val r = r0
       .withColumn("rnk", round(col("rnk"), 6))
       .orderBy(desc("rnk"), col("id"))
       .limit(k)

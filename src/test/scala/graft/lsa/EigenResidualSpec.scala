@@ -62,4 +62,21 @@ class EigenResidualSpec extends SparkSpec {
     val res = Lsa.eigenResiduals(rowsRdd, (_, _) => 0.0, Array(0.0), 4)
     assert(res sameElements Array(0.0))
   }
+
+  test("the local route's dense gate rejects a corrupted factor") {
+    val s = bsvd(m)
+    val k = 3
+    val sig = Array.tabulate(k)(s.S(_))
+    val v = s.Vt(0 until k, ::).t.copy // 4 x k
+    val genuine = LocalLsa.denseResiduals(m, v, sig)
+    genuine.foreach(r => assert(r < 1e-12, s"genuine triple residual $r"))
+    Lsa.requireGenuine(genuine, sig)
+    // the same corruption as above: concept 0's loadings rotated by one
+    val bad = v.copy
+    (0 until 4).foreach(i => bad(i, 0) = v((i + 1) % 4, 0))
+    val res = LocalLsa.denseResiduals(m, bad, sig)
+    assert(res(0) > 1e-2 && res(1) < 1e-12, res.toSeq)
+    val e = intercept[IllegalArgumentException](Lsa.requireGenuine(res, sig))
+    assert(e.getMessage.contains("concept 0 eigen-residual"), e.getMessage)
+  }
 }

@@ -1,10 +1,17 @@
 package graft.lsa
 
-import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 
-/** LocalLsa is the per-group mirror of the distributed Lsa.concepts —
-  * both must select identical keywords and documents, with singular
-  * values agreeing to numerical precision (Breeze LAPACK vs ARPACK).
+import graft.SparkSpec
+import graft.io.ReviewSource
+import graft.pipeline.{Pipelines, SyntheticReviews}
+
+/** LocalLsa is the dense mirror of the distributed ARPACK route
+  * (`Lsa.conceptsDistributed`) — both must select identical keywords and
+  * documents, with singular values agreeing to numerical precision
+  * (Breeze LAPACK vs ARPACK). `Lsa.concepts` solves product-sized input
+  * with LocalLsa's dense solve, so its local route is pinned against
+  * the ARPACK route here too.
   */
 class LocalLsaSpec extends SparkSpec {
   import spark.implicits._
@@ -38,7 +45,7 @@ class LocalLsaSpec extends SparkSpec {
     for ((input, cfg) <- Seq(
         docs -> Lsa.Config(k = 2, lemma = false),
         sparseIds -> Lsa.Config(k = 2, nDocs = 4, lemma = false))) {
-      val dist = Lsa.concepts(input.toDF("doc_id", "text"), "doc_id", "text", cfg)
+      val dist = Lsa.conceptsDistributed(input.toDF("doc_id", "text"), "doc_id", "text", cfg)
         .as[Lsa.Concept].collect().sortBy(_.concept)
       val local = LocalLsa.concepts(input, cfg).sortBy(_.concept)
       assert(dist.length == local.length)
@@ -71,10 +78,48 @@ class LocalLsaSpec extends SparkSpec {
       (3L, "markets traders traders stocks stocks stocks indexes"),
       (4L, "dogs cats cats cats fields fields running daily"))
     val cfg = Lsa.Config(k = 2)
-    val dist = Lsa.concepts(texts.toDF("doc_id", "text"), "doc_id", "text", cfg)
+    val dist = Lsa.conceptsDistributed(texts.toDF("doc_id", "text"), "doc_id", "text", cfg)
       .as[Lsa.Concept].collect().sortBy(_.concept)
     val local = LocalLsa.concepts(texts, cfg).sortBy(_.concept)
     assert(dist.map(c => (c.concept, c.keywords, c.doc_ids)).toSeq ==
       local.map(c => (c.concept, c.keywords, c.docIds)).toSeq)
+  }
+
+  private def res(name: String): String =
+    getClass.getResource(s"/reviews/$name").getPath
+
+  /** A product's sid-numbered sentences, as `Pipelines` hands them to LSA. */
+  private def sentences(path: String): DataFrame =
+    Pipelines.sentencesWithSid(ReviewSource.sentences(ReviewSource.reviews(spark, path)))
+
+  private def concepts(df: DataFrame): Seq[Lsa.Concept] =
+    df.as[Lsa.Concept].collect().sortBy(_.concept).toSeq
+
+  test("Lsa.concepts' local route equals the ARPACK route on the review fixtures") {
+    val generated = s"${SyntheticReviews.write(products = 1, reviews = 600)}/product00.txt"
+    for (path <- Seq(res("tiny_product.txt"), res("small_product.txt"),
+        res("edge_cases.txt"), generated)) {
+      val docs = sentences(path).persist()
+      val local = concepts(Lsa.concepts(docs, "sid", "sentence"))
+      val dist = concepts(Lsa.conceptsDistributed(docs, "sid", "sentence"))
+      docs.unpersist()
+      assert(local.nonEmpty, path)
+      assert(local.map(c => (c.concept, c.keywords, c.doc_ids)) ==
+        dist.map(c => (c.concept, c.keywords, c.doc_ids)), path)
+      local.zip(dist).foreach { case (l, d) =>
+        assert(math.abs(l.singular_value - d.singular_value) <= 1e-12 * d.singular_value,
+          s"$path concept ${l.concept}: sigma ${l.singular_value} vs ${d.singular_value}")
+      }
+    }
+  }
+
+  test("a duplicated sentence's null concept is dropped on both routes") {
+    // edge_cases.txt: E3 repeats one sentence, so 4 documents span rank 3
+    // and k = min(5, 4, |vocab|) = 4 asks for one concept too many
+    val docs = sentences(res("edge_cases.txt"))
+    assert(docs.count() == 4)
+    val local = concepts(Lsa.concepts(docs, "sid", "sentence"))
+    val dist = concepts(Lsa.conceptsDistributed(docs, "sid", "sentence"))
+    assert(local.length == 3 && dist.length == 3)
   }
 }

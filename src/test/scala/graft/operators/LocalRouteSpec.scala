@@ -21,18 +21,19 @@ class LocalRouteSpec extends SparkSpec {
     assert(LocalRoute.collectWithin(sorted, 0).isEmpty)
   }
 
-  test("an unordered input is collected incrementally: one job over the " +
-      "first partition, one more over the rest") {
-    // 40 rows in 4 partitions of 10, of a size the optimizer cannot
-    // see: the first job reads partition 0 (10 rows < the cap), then
-    // Spark's executeTake scans the remaining partitions in one job
-    val df = spark.sparkContext.parallelize(0L until 40L, 4).toDF("id")
-    def jobs(budget: Int) = JobCount(spark.sparkContext)(
-      LocalRoute.collectWithin(df, budget).map(_.length))
-    assert(jobs(40) == ((Some(40), 2)))
-    assert(jobs(39) == ((None, 2)))
-    // a cap inside the first partition stops after one job
-    assert(jobs(5) == ((None, 1)))
+  test("an unordered input is collected in one job at any partition count") {
+    // inputs of a size the optimizer cannot see, so the limit stays in
+    // the plan: Spark's own collect of a limit scans one partition, then
+    // up to 4x as many per job (4 jobs for 32 partitions of 10 rows)
+    for (parts <- Seq(4, 32)) {
+      val n = 10 * parts
+      val df = spark.sparkContext.parallelize(0L until n.toLong, parts).toDF("id")
+      def jobs(budget: Int) = JobCount(spark.sparkContext)(
+        LocalRoute.collectWithin(df, budget).map(_.map(_.getLong(0)).toSeq.sorted))
+      assert(jobs(n) == ((Some(0L until n.toLong), 1)), s"$parts partitions")
+      assert(jobs(n - 1) == ((None, 1)), s"$parts partitions")
+      assert(jobs(5) == ((None, 1)), s"$parts partitions")
+    }
     // when the optimizer knows the row count is within the cap, the
     // limit is dropped and the collect is one plain job
     assert(JobCount(spark.sparkContext)(LocalRoute.collectWithin(

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.JobCount
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -77,5 +78,18 @@ class PipelineSpec extends SparkSpec {
     // sanity: rouge1 >= rouge2 on recall (bigrams are strictly harder)
     val byM = out.map(x => x._2 -> x._4).toMap
     assert(byM("rouge1") >= byM("rouge2"))
+  }
+
+  test("EP1 and EP2 stay within their Spark job budgets on a product") {
+    // a product-sized input takes the driver-local LSA and TextRank
+    // routes: the jobs left are the scans, the sid numbering, the LSA
+    // corpus probes and the result join
+    val path = res("small_product.txt")
+    val sc = spark.sparkContext
+    val (lsaRows, lsaJobs) = JobCount(sc)(Pipelines.lsaSummary(spark, path).collect())
+    val (trRows, trJobs) = JobCount(sc)(Pipelines.textrankSummary(spark, path, 5).collect())
+    assert(lsaRows.length == 5 && trRows.length == 5)
+    assert(lsaJobs <= 18, s"EP1 ran $lsaJobs jobs")
+    assert(trJobs <= 9, s"EP2 ran $trJobs jobs")
   }
 }
