@@ -4,21 +4,32 @@ import breeze.linalg.{svd => bsvd, DenseMatrix}
 
 import graft.text.{Lemmatizer, StopWords}
 
-/** LOCAL mirror of [[Lsa.concepts]]' ARPACK route — the dense LAPACK
-  * solve behind `Lsa.concepts`' driver-local route ([[fromCells]]) and,
-  * through [[concepts]], behind per-product EP3 evaluation INSIDE
-  * `flatMapGroups` (one local SVD per group, no Spark jobs, no driver
-  * loop). Every convention of the distributed implementation is
-  * reproduced so the two paths select the same concepts/documents:
+/** The driver-local LSA solve: tf·idf cells from token lists
+  * ([[fromTokens]]) and the dense LAPACK SVD over them ([[fromCells]]).
+  * Which route runs where:
+  *
+  *  - EP1 (`Pipelines.lsaSummaryFromSentences`): a product within its
+  *    row and dense-cell budgets is collected once with Spark's tokens
+  *    and solved here end to end ([[fromTokens]] + [[solve]]);
+  *  - `Lsa.concepts`: Spark computes the cells, and a matrix within
+  *    `Lsa.LocalDenseCells` is solved here ([[fromCells]]);
+  *  - EP3's grouped route (`GroupedSummarizer.evaluatePerGroup`, one
+  *    local SVD per group inside `flatMapGroups`) and ls08's LAPACK
+  *    truth twin call [[concepts]] on raw text.
+  *
+  * Every convention of the distributed ARPACK route is reproduced so
+  * the two select the same concepts/documents:
   *
   *  - LSA token pipeline: `[a-zA-Z]+` on lowercased text → NLTK stopword
   *    filter → length ≥ 3 → optional lemmatizer (TextFunctions.lsaTokens);
   *  - vocabulary ordered (df desc, token asc), 0-based idx, every token
   *    kept (no df floor);
-  *  - cell value tf · log10(N/df) (quirk Q3); the dense matrix stacks the
-  *    doc rows in ascending id order, which is the distributed path's
-  *    row-index order, since there the id IS the row index;
-  *  - effective rank: `computeSVD`'s rCond cut ([[RCond]]);
+  *  - cell value tf · log10(N/df) (quirk Q3), with `StrictMath.log10`,
+  *    which is Spark's `Log10`, so the cells are bit-equal to Spark's;
+  *    the dense matrix stacks the doc rows in ascending id order, which
+  *    is the distributed path's row-index order, since there the id IS
+  *    the row index;
+  *  - effective rank: the σ floor both routes share ([[Lsa.SigmaFloor]]);
   *  - the eigen-residual gate of [[Lsa.eigenResiduals]], on the dense
   *    matrix ([[denseResiduals]]);
   *  - sign convention: [[Loadings.sign]] over the vocabulary index, on
@@ -31,7 +42,8 @@ import graft.text.{Lemmatizer, StopWords}
   *    (-loading, id).
   *
   * `LocalLsaSpec` asserts this against the distributed
-  * `Lsa.conceptsDistributed` output on shared fixtures.
+  * `Lsa.conceptsDistributed` output on shared fixtures, and pins
+  * [[fromTokens]]' cells bit-equal to Spark's.
   */
 object LocalLsa {
 
@@ -41,11 +53,11 @@ object LocalLsa {
       keywords: Seq[String],
       docIds: Seq[Long])
 
-  /** `RowMatrix.computeSVD`'s default `rCond`: singular values below
-    * rCond·σ₀ are dropped, so rank-deficient input (duplicate sentences)
-    * returns the same concept count here as on the ARPACK route.
+  /** A corpus' tf·idf matrix as (id, idx, value) cells, one per
+    * (document, token) pair, over `vocab` in idx order; `nDocs` counts
+    * the documents with a token.
     */
-  private val RCond = 1e-9
+  final case class Cells(cells: Seq[(Long, Int, Double)], vocab: Array[String], nDocs: Int)
 
   /** Local mirror of `TextFunctions.lsaTokens` (lower/regex → stopword +
     * len≥3 → lemma).
@@ -57,31 +69,47 @@ object LocalLsa {
     if (lemma) Lemmatizer.lemmaAll(t) else t
   }
 
+  /** [[solve]] over raw text, tokenized by the [[lsaTokens]] mirror:
+    * EP3's grouped route and ls08's truth twin.
+    */
   def concepts(docs: Seq[(Long, String)],
-      cfg: Lsa.Config = Lsa.Config()): Seq[Concept] = {
-    val tok = docs.map { case (id, t) => id -> lsaTokens(t, cfg.lemma) }
-      .filter(_._2.nonEmpty)
-    // vocabulary: (df desc, token asc), 0-based idx
-    val df = tok.flatMap { case (id, ts) => ts.distinct.map(_ -> id) }
-      .groupBy(_._1).map { case (t, xs) => t -> xs.size.toLong }
-    val vocabArr = df.toSeq
-      .sortBy { case (t, d) => (-d, t) }.map(_._1).toArray
-    val vocab = vocabArr.zipWithIndex.toMap
+      cfg: Lsa.Config = Lsa.Config()): Seq[Concept] =
+    solve(fromTokens(docs.map { case (id, t) => id -> lsaTokens(t, cfg.lemma) }), cfg)
+
+  /** The tf·idf cells of tokenized documents, as `Lsa.concepts` builds
+    * them in Spark: documents without a token drop out, the vocabulary
+    * is ordered (df desc, token asc), and a cell is
+    * `tf · log10(nDocs / df)` with `StrictMath.log10`, Spark 4.1.2's
+    * `Log10`, so every value is bit-equal to the Spark-computed cell.
+    */
+  def fromTokens(docs: Seq[(Long, Seq[String])]): Cells = {
+    val tok = docs.filter(_._2.nonEmpty)
+    val tf = tok.map { case (id, ts) =>
+      id -> ts.groupMapReduce(identity)(_ => 1L)(_ + _)
+    }
+    val df = tf.flatMap(_._2.keys).groupMapReduce(identity)(_ => 1L)(_ + _)
+    val vocab = df.toArray.sortBy { case (t, d) => (-d, t) }.map(_._1)
+    val idx = vocab.zipWithIndex.toMap
     val nDocs = tok.size
-    val k = math.min(cfg.k, math.min(nDocs, vocabArr.length))
-    if (k <= 0) return Seq.empty
-    // cells tf * log10(N/df)
-    val cells = tok.flatMap { case (id, ts) =>
-      ts.groupBy(identity).map { case (t, dup) =>
-        (id, vocab(t), dup.size * math.log10(nDocs.toDouble / df(t)))
+    val cells = tf.flatMap { case (id, counts) =>
+      counts.map { case (t, n) =>
+        (id, idx(t), n.toDouble * StrictMath.log10(nDocs.toDouble / df(t)))
       }
     }
-    fromCells(cells, vocabArr, k, cfg)
+    Cells(cells, vocab, nDocs)
+  }
+
+  /** [[fromCells]] at `Lsa.concepts`' k = min(cfg.k, nDocs, |vocab|);
+    * no concepts when no token survives.
+    */
+  def solve(c: Cells, cfg: Lsa.Config): Seq[Concept] = {
+    val k = math.min(cfg.k, math.min(c.nDocs, c.vocab.length))
+    if (k <= 0) Seq.empty else fromCells(c.cells, c.vocab, k, cfg)
   }
 
   /** The dense solve over the nonzero cells (id, idx, value) of a
-    * docs × |vocab| matrix, `vocab` in idx order: LAPACK SVD, the rCond
-    * cut at `k` concepts, the eigen-residual gate, then the sign and
+    * docs × |vocab| matrix, `vocab` in idx order: LAPACK SVD, the σ
+    * floor cut at `k` concepts, the eigen-residual gate, then the sign and
     * keyword/doc selection. Rows stack in ascending id order.
     */
   private[lsa] def fromCells(cells: Iterable[(Long, Int, Double)],
@@ -95,7 +123,7 @@ object LocalLsa {
     val sigma = r.S.toArray // descending
     val u = r.U // nDocs x rank
     val vt = r.Vt // rank x vocabSize; V(i,j) = vt(j,i)
-    val kEff = sigma.iterator.take(k).takeWhile(_ >= RCond * sigma(0)).size
+    val kEff = sigma.iterator.take(k).takeWhile(_ >= Lsa.SigmaFloor * sigma(0)).size
     val s = sigma.take(kEff)
     Lsa.requireGenuine(denseResiduals(m, vt(0 until kEff, ::).t.copy, s), s)
 

@@ -138,7 +138,22 @@ object Lsa {
     * (880 × 880: 4.4 s vs 6.4 s) but tied or lost from ~1 M square cells
     * on (1024 × 1024: 6.8 s vs 6.2 s); CHANGES.md records the sweep.
     */
-  private val LocalDenseCells: Long = 768L << 10
+  private[graft] val LocalDenseCells: Long = 768L << 10
+
+  /** Relative σ floor both routes cut the effective rank at: 8·√ε·σ₀
+    * (ε = 2⁻⁵², the double's machine epsilon; about 1.2e-7·σ₀).
+    * ARPACK's route squares the matrix, so a null direction of
+    * rank-deficient input (duplicate sentences) comes back as a Gramian
+    * eigenvalue of p·ε·σ₀², at σ = √p·√ε·σ₀: it passes `computeSVD`'s
+    * rCond = 1e-9 and then fails the eigen-residual gate. On 120 random
+    * rank-deficient corpora (vocabularies of 5 to 277 tokens) that σ
+    * read 0.25–1.4·√ε·σ₀, so a floor of √ε alone keeps some of them;
+    * 8·√ε covers p ≤ 64. The dense SVD reports null directions near
+    * ε·σ₀, and a genuine top-k concept of a tf·idf matrix sits orders
+    * of magnitude above the floor, so both routes keep the same
+    * concepts.
+    */
+  private[lsa] val SigmaFloor: Double = 8 * math.sqrt(math.ulp(1.0))
 
   /** Concepts from a (id: long, text: string) corpus. Returns a LOCAL
     * small result (k rows) as a DataFrame.
@@ -148,7 +163,10 @@ object Lsa {
     * collected in one job and solved densely on the driver
     * ([[LocalLsa.fromCells]]: LAPACK, rows in ascending id order); above
     * it [[conceptsDistributed]] runs ARPACK. The cell values are Spark's
-    * on both routes, so the two solve the same matrix.
+    * on both routes, so the two solve the same matrix. EP1 calls this
+    * only above its own product-sized route, which collects the tokens
+    * instead and builds the same cells on the driver
+    * (`Pipelines.lsaSummaryFromSentences`, [[LocalLsa.fromTokens]]).
     *
     * The caller's id is the matrix row index (`IndexedRow.index`) as is,
     * whatever its range: `computeSVD` derives σ and V from the row vectors
@@ -160,10 +178,10 @@ object Lsa {
     * genuine singular triple of THIS matrix (‖AᵀAvⱼ − σⱼ²vⱼ‖ ≤
     * 1e-6·σⱼ²) — on the dense matrix locally, in one extra distributed
     * pass ([[eigenResiduals]]) on ARPACK's route; U needs no separate
-    * check, since U = AVS⁻¹ follows from V. This complements the
-    * ≤2000-doc dense-LAPACK mirror in ls08 and the power-twin σ
-    * cross-check in Stress, which pin the top-k SELECTION on collectable
-    * corpora.
+    * check, since U = AVS⁻¹ follows from V. Both routes first drop σ
+    * below [[SigmaFloor]]·σ₀. This complements the ≤2000-doc
+    * dense-LAPACK mirror in ls08 and the power-twin σ cross-check in
+    * Stress, which pin the top-k SELECTION on collectable corpora.
     */
   def concepts(docs: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config()): DataFrame =
@@ -191,7 +209,7 @@ object Lsa {
     * while tf is cached. A degenerate corpus (no tokens survive) returns
     * no concepts without calling it.
     */
-  private def withCells(docs: DataFrame, idCol: String, textCol: String,
+  private[lsa] def withCells(docs: DataFrame, idCol: String, textCol: String,
       cfg: Config)(
       solve: (DataFrame, Long, Long, Array[String], Int) => DataFrame): DataFrame = {
     val spark = docs.sparkSession
@@ -276,8 +294,11 @@ object Lsa {
       // runs a rows.first() job to learn it. nRows = 0 leaves the row
       // count lazy, and the SVD never reads it.
       val svd = new IndexedRowMatrix(rows, 0L, vocabSize).computeSVD(k, computeU = true)
-      // ARPACK may converge on fewer than k singular values — truncate.
-      val kEff = math.min(k, math.min(svd.s.size, svd.V.numCols))
+      // ARPACK may converge on fewer than k singular values, and a
+      // rank-deficient matrix's null directions sit at the σ floor —
+      // truncate both.
+      val kEff = (0 until math.min(k, math.min(svd.s.size, svd.V.numCols)))
+        .takeWhile(j => svd.s(j) >= SigmaFloor * svd.s(0)).size
       val s = Array.tabulate(kEff)(svd.s(_))
       requireGenuine(eigenResiduals(rows, (i, j) => svd.V(i, j), s, vocabSize), s)
       // V: vocabSize x kEff (local). Sign convention per concept; every

@@ -1,11 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.io.ReviewSource
-import graft.lsa.Lsa
-import graft.operators.GroupedSummarizer
+import graft.lsa.{LocalLsa, Lsa}
+import graft.operators.{GroupedSummarizer, LocalRoute}
 import graft.text.TextFunctions
 import graft.textrank.TextRank
 
@@ -13,6 +16,13 @@ import graft.textrank.TextRank
   * Spark-native APIs over the review TSV input shape.
   */
 object Pipelines {
+
+  /** F1: sentences of at least `MinSentenceWords` space-separated words,
+    * the rows EP1 numbers and summarizes.
+    */
+  private def longSentences(sents: DataFrame): DataFrame =
+    sents.filter(TextFunctions.spaceWordCount(col("sentence")) >=
+      GroupedSummarizer.MinSentenceWords)
 
   /** Sentence table with surrogate long ids for the matrix row index
     * (deterministic by (review_id, sent_idx)); F1 length filter applied.
@@ -22,21 +32,81 @@ object Pipelines {
     */
   def sentencesWithSid(sents: DataFrame): DataFrame = {
     val spark = sents.sparkSession
-    val sorted = sents
-      .filter(TextFunctions.spaceWordCount(col("sentence")) >=
-        GroupedSummarizer.MinSentenceWords)
-      .orderBy(col("review_id"), col("sent_idx"))
+    val sorted = longSentences(sents).orderBy(col("review_id"), col("sent_idx"))
     val numbered = sorted.rdd.zipWithIndex().map { case (row, i) =>
-      org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (i + 1L))
+      Row.fromSeq(row.toSeq :+ (i + 1L))
     }
-    spark.createDataFrame(numbered,
-      sorted.schema.add("sid", org.apache.spark.sql.types.LongType))
+    spark.createDataFrame(numbered, sorted.schema.add("sid", LongType))
   }
+
+  /** EP1's result columns, as [[lsaSummaryDistributed]]'s plan types them. */
+  private val LsaSummarySchema = StructType(Seq(
+    StructField("concept", IntegerType, nullable = false),
+    StructField("singular_value", DoubleType, nullable = false),
+    StructField("keywords", StringType, nullable = false),
+    StructField("sentence_ids", StringType, nullable = false),
+    StructField("sentences", StringType, nullable = false)))
+
+  /** F1-filtered sentences at or below which EP1 collects a product to
+    * solve it on the driver. The local solve also needs documents ×
+    * vocabulary within `Lsa.LocalDenseCells` (768 Ki), so 32 Ki rows
+    * covers every product whose vocabulary is 24 tokens or more; above
+    * that a collect would mostly be discarded, at about 40% of the
+    * distributed route's time. The rows (sentence, id and tokens, about
+    * 1 KiB each) stay near 32 MiB on the driver. On 4 cores the local
+    * route took 0.4–0.9 s against 1.3–2.2 s distributed from 1 k to
+    * 24 k rows; CHANGES.md records the sweep.
+    */
+  private val LocalSentenceRows = 32 << 10
 
   /** EP1 core — LSA summary from a sentence table.
     * Output: (concept, singular_value, keywords, sentence_ids, sentences).
+    *
+    * A product-sized table runs [[lsaSummaryLocal]]: one bounded collect
+    * of its sentences with Spark's LSA tokens, then the sid numbering,
+    * tf·idf cells, LAPACK solve and sentence join on the driver. Above
+    * [[LocalSentenceRows]] sentences, or `Lsa.LocalDenseCells` documents
+    * × vocabulary, [[lsaSummaryDistributed]] runs instead. Both give the
+    * same rows (`LsaSummaryRouteSpec`).
     */
-  def lsaSummaryFromSentences(sents0: DataFrame,
+  def lsaSummaryFromSentences(sents: DataFrame,
+      cfg: Lsa.Config = Lsa.Config()): DataFrame =
+    lsaSummaryLocal(sents, cfg).getOrElse(lsaSummaryDistributed(sents, cfg))
+
+  /** EP1 on the driver, or `None` over its row or dense-cell budget. The
+    * tokens are `TextFunctions.lsaTokens`, computed in Spark, and the
+    * (review_id, sent_idx) order is Spark's sort inside the collect, so
+    * sid n is the n-th row, as [[sentencesWithSid]] numbers it.
+    */
+  private[graft] def lsaSummaryLocal(sents: DataFrame, cfg: Lsa.Config): Option[DataFrame] = {
+    val spark = sents.sparkSession
+    // tokens before the sort, so the lemmatizer runs on every partition
+    val tokened = graft.Par.fanOut(longSentences(sents))
+      .select(col("review_id"), col("sent_idx"), col("sentence_id"), col("sentence"),
+        TextFunctions.lsaTokens(col("sentence"), cfg.lemma).as("tokens"))
+      .orderBy(col("review_id"), col("sent_idx"))
+      .select(col("sentence_id"), col("sentence"), col("tokens"))
+    LocalRoute.collectWithin(tokened, LocalSentenceRows).flatMap { rows =>
+      val cells = LocalLsa.fromTokens(rows.toSeq.zipWithIndex.map { case (r, i) =>
+        (i + 1L, r.getSeq[String](2))
+      })
+      Option.when(cells.nDocs.toLong * cells.vocab.length <= Lsa.LocalDenseCells) {
+        // as the distributed join's concat_ws: ids in loading order, nulls skipped
+        def joined(ids: Seq[Long], field: Int, sep: String): String =
+          ids.flatMap(sid => Option(rows((sid - 1).toInt).getString(field))).mkString(sep)
+        val out = LocalLsa.solve(cells, cfg).sortBy(_.concept).map { c =>
+          Row(c.concept, c.singularValue, c.keywords.mkString(" "),
+            joined(c.docIds, 0, ","), joined(c.docIds, 1, " | "))
+        }
+        spark.createDataFrame(out.asJava, LsaSummarySchema)
+      }
+    }
+  }
+
+  /** EP1 through Spark at any size: distributed sid numbering,
+    * `Lsa.concepts`, and the join back to the sentences.
+    */
+  private[graft] def lsaSummaryDistributed(sents0: DataFrame,
       cfg: Lsa.Config = Lsa.Config()): DataFrame = {
     val spark = sents0.sparkSession
     import spark.implicits._

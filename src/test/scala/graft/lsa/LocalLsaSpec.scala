@@ -122,4 +122,46 @@ class LocalLsaSpec extends SparkSpec {
     val dist = concepts(Lsa.conceptsDistributed(docs, "sid", "sentence"))
     assert(local.length == 3 && dist.length == 3)
   }
+
+  test("fromTokens' cells are bit-equal to Spark's tf-idf cells") {
+    val generated = s"${SyntheticReviews.write(products = 1, reviews = 600)}/product00.txt"
+    for (path <- Seq(res("small_product.txt"), generated)) {
+      val docs = sentences(path).persist()
+      var spark0: (Seq[(Long, Int, Double)], Seq[String]) = null
+      Lsa.withCells(docs, "sid", "sentence", Lsa.Config()) { (cells, _, _, vocab, _) =>
+        spark0 = (cells.as[(Long, Int, Double)].collect().toSeq, vocab.toSeq)
+        cells
+      }
+      val tokens = docs.select($"sid",
+        graft.text.TextFunctions.lsaTokens($"sentence").as("tokens"))
+        .as[(Long, Seq[String])].collect().toSeq
+      docs.unpersist()
+      val local = LocalLsa.fromTokens(tokens)
+      val (cells, vocab) = spark0
+      assert(local.vocab.toSeq == vocab, path)
+      def byKey(cs: Seq[(Long, Int, Double)]) = cs.sortBy(c => (c._1, c._2))
+      assert(local.cells.size == cells.size, path)
+      byKey(local.cells).zip(byKey(cells)).foreach { case (l, d) =>
+        assert(l._1 == d._1 && l._2 == d._2 && l._3 == d._3, s"$path cell $l vs Spark's $d")
+      }
+      assert(local.cells.exists(_._3 != 0.0), path)
+    }
+  }
+
+  test("rank below k: both routes cut the null concepts at the shared sigma floor") {
+    // 7 documents of 3 distinct sentences, repeated 4, 2 and 1 times so
+    // the 3 sigmas are distinct: rank 3, and k = min(5, 7, 15) asks for
+    // 5. ARPACK squares the matrix, so its null directions come back
+    // near sqrt(eps) * sigma0, above computeSVD's rCond
+    val a = "spark cluster executor shuffle partition"
+    val b = "banana mango fruit smoothie juice"
+    val c = "market trader stock index bond"
+    val input = Seq(a, b, c, a, b, a, a).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val cfg = Lsa.Config(lemma = false)
+    val dist = Lsa.conceptsDistributed(input.toDF("doc_id", "text"), "doc_id", "text", cfg)
+      .as[Lsa.Concept].collect().sortBy(_.concept).toSeq
+    val local = LocalLsa.concepts(input, cfg)
+    assert(dist.length == 3 && local.length == 3)
+    assert(dist.map(c => (c.keywords, c.doc_ids)) == local.map(c => (c.keywords, c.docIds)))
+  }
 }
