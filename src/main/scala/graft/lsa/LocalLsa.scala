@@ -9,9 +9,12 @@ import graft.text.{Lemmatizer, StopWords}
   * Which route runs where:
   *
   *  - EP1 (`Pipelines.lsaSummaryFromSentences`): a product within its
-  *    row and dense-cell budgets is collected once with Spark's tokens
-  *    and solved here end to end ([[fromTokens]] + [[solve]]);
-  *  - `Lsa.concepts`: Spark computes the cells, and a matrix within
+  *    row budget is collected once with Spark's tokens and its cells
+  *    are built here ([[fromTokens]]); a matrix within
+  *    `Lsa.LocalDenseCells` is solved here too ([[solve]]), a larger one
+  *    by ARPACK over the same cells (`Lsa.conceptsOfCells`);
+  *  - `Lsa.concepts` (EP1 above its row budget, and the benchmark's
+  *    traced pass): Spark computes the cells, and a matrix within
   *    `Lsa.LocalDenseCells` is solved here ([[fromCells]]);
   *  - EP3's grouped route (`GroupedSummarizer.evaluatePerGroup`, one
   *    local SVD per group inside `flatMapGroups`) and ls08's LAPACK

@@ -3,7 +3,7 @@ package graft.lsa
 import org.apache.spark.mllib.linalg.{Vectors => MlVectors}
 import org.apache.spark.mllib.linalg.distributed.{IndexedRow, IndexedRowMatrix}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -163,10 +163,18 @@ object Lsa {
     * collected in one job and solved densely on the driver
     * ([[LocalLsa.fromCells]]: LAPACK, rows in ascending id order); above
     * it [[conceptsDistributed]] runs ARPACK. The cell values are Spark's
-    * on both routes, so the two solve the same matrix. EP1 calls this
-    * only above its own product-sized route, which collects the tokens
-    * instead and builds the same cells on the driver
-    * (`Pipelines.lsaSummaryFromSentences`, [[LocalLsa.fromTokens]]).
+    * on both routes, so the two solve the same matrix.
+    *
+    * EP1 calls this only above its row budget
+    * (`Pipelines.lsaSummaryDistributed`); within it, EP1 collects the
+    * tokens, builds the same cells on the driver ([[LocalLsa.fromTokens]])
+    * and solves them with LAPACK or [[conceptsOfCells]]. So in the
+    * engine the dense branch here serves EP1 only above 32 Ki sentences
+    * with a vocabulary under 24 tokens. It stays because the benchmark's
+    * traced pass (`perfbench/ReviewOps.lsaFromSentences`) still composes
+    * the older EP1 route through this method and must give the untraced
+    * pass's exact rows; it goes when that mirror does (ROADMAP
+    * direction 1).
     *
     * The caller's id is the matrix row index (`IndexedRow.index`) as is,
     * whatever its range: `computeSVD` derives σ and V from the row vectors
@@ -261,33 +269,65 @@ object Lsa {
     } finally tf.unpersist()
   }
 
-  /** The distributed route: ARPACK `computeSVD` over the cells as
-    * IndexedRows, the [[eigenResiduals]] gate, then the sign, keyword
-    * and top-doc selection.
+  /** ARPACK runs one treeAggregate job over the matrix rows per Lanczos
+    * iteration (dozens of jobs), so per-iteration cost = per-task
+    * scheduling × partitions + the actual multiply. Size partitions by
+    * nonzero count (~250k cells each): a small corpus collapses to a
+    * couple of tasks (scheduling overhead was dominating the SVD at
+    * bench scale), a 100 TB corpus still spreads across the cluster.
     */
+  private def rowParts(spark: SparkSession, nnz: Long): Int =
+    math.max(1, math.min((nnz / 250000L).toInt + 1, spark.sparkContext.defaultParallelism))
+
+  /** One document's cells (id, idx, value) as its matrix row. */
+  private def indexedRow(id: Long, cs: Iterable[(Long, Int, Double)],
+      vocabSize: Int): IndexedRow = {
+    val sorted = cs.toSeq.sortBy(_._2)
+    IndexedRow(id, MlVectors.sparse(vocabSize, sorted.map(_._2).toArray, sorted.map(_._3).toArray))
+  }
+
+  /** The distributed route over Spark's cells: see [[svdConcepts]]. */
   private def arpack(cells: DataFrame, nnz: Long, vocab: Array[String],
       k: Int, cfg: Config): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
+    val rows = cells.as[(Long, Int, Double)].rdd
+      .groupBy((t: (Long, Int, Double)) => t._1, rowParts(spark, nnz))
+      .map { case (id, cs) => indexedRow(id, cs, vocab.length) }
+    spark.createDataFrame(svdConcepts(rows, vocab, k, cfg))
+  }
+
+  /** The ARPACK route over cells the driver built
+    * ([[LocalLsa.fromTokens]]): EP1's route for a product within its row
+    * budget whose dense matrix exceeds [[LocalDenseCells]]. The rows
+    * reach the executors as one broadcast, so the Lanczos jobs ship no
+    * matrix in their tasks, and the answer is [[conceptsDistributed]]'s
+    * on the same cells.
+    */
+  private[graft] def conceptsOfCells(spark: SparkSession, c: LocalLsa.Cells,
+      cfg: Config): Seq[LocalLsa.Concept] = {
+    val k = math.min(cfg.k, math.min(c.nDocs, c.vocab.length))
+    if (k <= 0) return Seq.empty
+    val sc = spark.sparkContext
+    val rows = c.cells.groupBy(_._1).iterator
+      .map { case (id, cs) => indexedRow(id, cs, c.vocab.length) }.toVector
+    val parts = rowParts(spark, c.cells.size.toLong)
+    val chunks = rows.grouped((rows.size + parts - 1) / parts).toVector
+    val rowsB = sc.broadcast(chunks)
+    try svdConcepts(sc.parallelize(chunks.indices, chunks.size).flatMap(rowsB.value(_)),
+      c.vocab, k, cfg).map(x => LocalLsa.Concept(x.concept, x.singular_value, x.keywords, x.doc_ids))
+    finally rowsB.destroy()
+  }
+
+  /** ARPACK `computeSVD` over the matrix rows, the [[eigenResiduals]]
+    * gate, then the sign, keyword and top-doc selection.
+    */
+  private def svdConcepts(rows0: RDD[IndexedRow], vocab: Array[String],
+      k: Int, cfg: Config): Seq[Concept] = {
     val vocabSize = vocab.length
-    // ARPACK runs one treeAggregate job over this RDD per Lanczos
-    // iteration (dozens of jobs), so per-iteration cost = per-task
-    // scheduling × partitions + the actual multiply. Size partitions by
-    // nonzero count (~250k cells each): a small corpus collapses to a
-    // couple of tasks (scheduling overhead was dominating the SVD at
-    // bench scale), a 100 TB corpus still spreads across the cluster.
-    val rowParts = math.max(1,
-      math.min((nnz / 250000L).toInt + 1, spark.sparkContext.defaultParallelism))
-    val rows: RDD[IndexedRow] = cells.as[(Long, Int, Double)].rdd
-      .groupBy((t: (Long, Int, Double)) => t._1, rowParts)
-      .map { case (id, cs) =>
-        val sorted = cs.toSeq.sortBy(_._2)
-        IndexedRow(id, MlVectors.sparse(vocabSize,
-          sorted.map(_._2).toArray, sorted.map(_._3).toArray))
-      }
-      // Without this persist each ARPACK iteration replays the
-      // join+groupBy lineage above.
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Without this persist each ARPACK iteration replays the lineage
+    // that built the rows.
+    val rows = rows0.persist(StorageLevel.MEMORY_AND_DISK)
     // released on every exit, including a failed job or the residual gate
     try {
       // The column count is known (vocabSize); without it computeSVD
@@ -313,7 +353,7 @@ object Lsa {
           .take(cfg.nKeywords).map(_._2)
       }
 
-      val signsB = spark.sparkContext.broadcast(signs)
+      val signsB = rows.sparkContext.broadcast(signs)
       // One distributed pass for ALL concepts' top docs: per-partition
       // bounded heaps aggregated on the driver (kEff × nDocs entries),
       // instead of k separate jobs each recomputing the U lineage.
@@ -339,9 +379,7 @@ object Lsa {
           Array.tabulate(kEff)(j => (x(j) ++ y(j)).sorted(ord.reverse).take(nTop))
         }
       val topDocs = Array.tabulate(kEff)(j => tops(j).sorted(ord.reverse).take(nTop).map(_._2))
-      spark.createDataFrame((0 until kEff).map { j =>
-        Concept(j, svd.s(j), keywords(j), topDocs(j))
-      })
+      (0 until kEff).map(j => Concept(j, svd.s(j), keywords(j), topDocs(j)))
     } finally rows.unpersist()
   }
 }

@@ -48,58 +48,63 @@ object Pipelines {
     StructField("sentences", StringType, nullable = false)))
 
   /** F1-filtered sentences at or below which EP1 collects a product to
-    * solve it on the driver. The local solve also needs documents ×
-    * vocabulary within `Lsa.LocalDenseCells` (768 Ki), so 32 Ki rows
-    * covers every product whose vocabulary is 24 tokens or more; above
-    * that a collect would mostly be discarded, at about 40% of the
-    * distributed route's time. The rows (sentence, id and tokens, about
-    * 1 KiB each) stay near 32 MiB on the driver. On 4 cores the local
-    * route took 0.4–0.9 s against 1.3–2.2 s distributed from 1 k to
-    * 24 k rows; CHANGES.md records the sweep.
+    * summarize it on the driver. On 4 cores the local route beat the
+    * distributed one at every measured size up to 32 k sentences, for a
+    * 31-token synthetic vocabulary (0.13 → 1.25 s against 1.14 → 2.55 s)
+    * and for English prose, whose vocabulary grows with the product
+    * (887 tokens at 250 sentences, 6,769 at 15.6 k; ARPACK from 1 k
+    * sentences: 0.66 → 1.46 s against 1.58 → 2.90 s). A collected row
+    * measured 0.7–1.2 KiB, so the budget holds about 40 MiB on the
+    * driver. Over it, the refused collect (a sorted take of untokenized
+    * sentences) cost 0.56 s before a 4.2 s distributed run. CHANGES.md
+    * records the sweep.
     */
-  private val LocalSentenceRows = 32 << 10
+  private[pipeline] val LocalSentenceRows = 32 << 10
 
   /** EP1 core — LSA summary from a sentence table.
     * Output: (concept, singular_value, keywords, sentence_ids, sentences).
     *
     * A product-sized table runs [[lsaSummaryLocal]]: one bounded collect
     * of its sentences with Spark's LSA tokens, then the sid numbering,
-    * tf·idf cells, LAPACK solve and sentence join on the driver. Above
-    * [[LocalSentenceRows]] sentences, or `Lsa.LocalDenseCells` documents
-    * × vocabulary, [[lsaSummaryDistributed]] runs instead. Both give the
-    * same rows (`LsaSummaryRouteSpec`).
+    * tf·idf cells, solve and sentence join on the driver. Above
+    * [[LocalSentenceRows]] sentences, [[lsaSummaryDistributed]] runs
+    * instead. Both give the same rows (`LsaSummaryRouteSpec`), σ to
+    * round-off where both solve with ARPACK, as two ARPACK calls do.
     */
   def lsaSummaryFromSentences(sents: DataFrame,
       cfg: Lsa.Config = Lsa.Config()): DataFrame =
     lsaSummaryLocal(sents, cfg).getOrElse(lsaSummaryDistributed(sents, cfg))
 
-  /** EP1 on the driver, or `None` over its row or dense-cell budget. The
-    * tokens are `TextFunctions.lsaTokens`, computed in Spark, and the
-    * (review_id, sent_idx) order is Spark's sort inside the collect, so
-    * sid n is the n-th row, as [[sentencesWithSid]] numbers it.
+  /** EP1 on the driver, or `None` over its row budget. Spark's sort takes
+    * at most budget + 1 sentences in (review_id, sent_idx) order, and
+    * only those get their `TextFunctions.lsaTokens`, so an over-budget
+    * product is refused before the lemmatizer runs. Sid n is the n-th
+    * row, as [[sentencesWithSid]] numbers it. The cells come from
+    * `LocalLsa.fromTokens`: within `Lsa.LocalDenseCells` documents ×
+    * vocabulary LAPACK solves them on the driver, above it Spark's
+    * ARPACK (`Lsa.conceptsOfCells`), so no collect is thrown away.
     */
   private[graft] def lsaSummaryLocal(sents: DataFrame, cfg: Lsa.Config): Option[DataFrame] = {
     val spark = sents.sparkSession
-    // tokens before the sort, so the lemmatizer runs on every partition
-    val tokened = graft.Par.fanOut(longSentences(sents))
-      .select(col("review_id"), col("sent_idx"), col("sentence_id"), col("sentence"),
+    val firstRows = longSentences(sents).orderBy(col("review_id"), col("sent_idx"))
+      .limit(LocalSentenceRows + 1)
+      .select(col("sentence_id"), col("sentence"),
         TextFunctions.lsaTokens(col("sentence"), cfg.lemma).as("tokens"))
-      .orderBy(col("review_id"), col("sent_idx"))
-      .select(col("sentence_id"), col("sentence"), col("tokens"))
-    LocalRoute.collectWithin(tokened, LocalSentenceRows).flatMap { rows =>
+    LocalRoute.collectWithin(firstRows, LocalSentenceRows).map { rows =>
       val cells = LocalLsa.fromTokens(rows.toSeq.zipWithIndex.map { case (r, i) =>
         (i + 1L, r.getSeq[String](2))
       })
-      Option.when(cells.nDocs.toLong * cells.vocab.length <= Lsa.LocalDenseCells) {
-        // as the distributed join's concat_ws: ids in loading order, nulls skipped
-        def joined(ids: Seq[Long], field: Int, sep: String): String =
-          ids.flatMap(sid => Option(rows((sid - 1).toInt).getString(field))).mkString(sep)
-        val out = LocalLsa.solve(cells, cfg).sortBy(_.concept).map { c =>
-          Row(c.concept, c.singularValue, c.keywords.mkString(" "),
-            joined(c.docIds, 0, ","), joined(c.docIds, 1, " | "))
-        }
-        spark.createDataFrame(out.asJava, LsaSummarySchema)
+      val concepts =
+        if (cells.nDocs.toLong * cells.vocab.length <= Lsa.LocalDenseCells) LocalLsa.solve(cells, cfg)
+        else Lsa.conceptsOfCells(spark, cells, cfg)
+      // as the distributed join's concat_ws: ids in loading order, nulls skipped
+      def joined(ids: Seq[Long], field: Int, sep: String): String =
+        ids.flatMap(sid => Option(rows((sid - 1).toInt).getString(field))).mkString(sep)
+      val out = concepts.sortBy(_.concept).map { c =>
+        Row(c.concept, c.singularValue, c.keywords.mkString(" "),
+          joined(c.docIds, 0, ","), joined(c.docIds, 1, " | "))
       }
+      spark.createDataFrame(out.asJava, LsaSummarySchema)
     }
   }
 

@@ -11,8 +11,8 @@ import graft.lsa.Lsa
 /** EP1's product-sized route (`Pipelines.lsaSummaryLocal`: one collect,
   * then numbering, cells, solve and the sentence join on the driver)
   * must return exactly the rows of the Spark composition it replaces
-  * (`Pipelines.lsaSummaryDistributed`), and hand over to it above its
-  * dense-cell budget.
+  * (`Pipelines.lsaSummaryDistributed`), solve a matrix over its
+  * dense-cell budget with ARPACK, and hand over above its row budget.
   */
 class LsaSummaryRouteSpec extends SparkSpec {
 
@@ -61,7 +61,7 @@ class LsaSummaryRouteSpec extends SparkSpec {
     assert(twin(path.toString).isEmpty)
   }
 
-  test("a product over the dense-cell budget takes the distributed route") {
+  test("a product over the dense-cell budget solves its collected cells with ARPACK") {
     // 900 sentences over a 900-word vocabulary: 810,000 dense cells,
     // above Lsa.LocalDenseCells (786,432) and far inside the row budget
     val rnd = new scala.util.Random(7)
@@ -72,17 +72,28 @@ class LsaSummaryRouteSpec extends SparkSpec {
       (vocab(i) +: Seq.fill(11)(vocab(rnd.nextInt(vocab.size)))).mkString(" ") + "."
     }
     val sents = sentences(product(bodies).toString)
-    assert(Pipelines.lsaSummaryLocal(sents, Lsa.Config()).isEmpty)
-    val routed = Pipelines.lsaSummaryFromSentences(sents).collect().toSeq
-    val dist = Pipelines.lsaSummaryDistributed(sents).collect().toSeq
+    val local = Pipelines.lsaSummaryLocal(sents, Lsa.Config())
+    assert(local.isDefined)
+    val dist = Pipelines.lsaSummaryDistributed(sents)
+    assert(local.get.schema == dist.schema)
+    val (routed, expected) = (local.get.collect().toSeq, dist.collect().toSeq)
     assert(routed.length == 5)
     // ARPACK draws a new start vector per call: σ agrees to round-off,
     // every other column exactly
     def rest(r: Row): Seq[Any] = r.toSeq.patch(1, Nil, 1)
-    assert(routed.map(rest) == dist.map(rest))
-    routed.zip(dist).foreach { case (a, b) =>
+    assert(routed.map(rest) == expected.map(rest))
+    routed.zip(expected).foreach { case (a, b) =>
       val (sa, sb) = (a.getDouble(1), b.getDouble(1))
       assert(math.abs(sa - sb) <= 1e-9 * sb, s"sigma $sa vs $sb")
     }
+  }
+
+  test("a product over the row budget is left to the distributed route") {
+    // four 5-word sentences per review, all passing F1
+    val reviews = Pipelines.LocalSentenceRows / 4 + 1
+    val bodies = (0 until reviews).map(r =>
+      Seq.tabulate(4)(s => s"review $r sentence $s battery works").mkString(". "))
+    val sents = sentences(product(bodies).toString)
+    assert(Pipelines.lsaSummaryLocal(sents, Lsa.Config()).isEmpty)
   }
 }
