@@ -2,7 +2,7 @@ package graft.lsa
 
 /** LOCAL per-group LSA concepts on the [[PowerCore]] exact-decimal
   * recurrence — the DuckDB-replayable sibling of [[LocalLsa]] (which
-  * mirrors the ARPACK/LAPACK production solvers). Used by the ls05
+  * runs the production Lanczos solver). Used by the ls05
   * grouped evaluation: one call per bounded group inside
   * `flatMapGroups`, each a pure function of the group's sentences that
   * the keyed PowerKSql chain unrolls.

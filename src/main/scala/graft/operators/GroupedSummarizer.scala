@@ -11,9 +11,9 @@ import graft.rouge.Rouge
   * LSA scorers run INSIDE `flatMapGroups`, one local SVD per group (a
   * group = one document's sentences, or one product's reviews — always
   * bounded), so a 100 TB corpus of millions of documents is processed in
-  * a single shuffle-by-key job with no driver loop. This is the scale
-  * counterpart of the reference's per-file driver iteration (SURVEY
-  * §4.1) and of `Pipelines.evaluate`'s faithful but driver-looped EP3.
+  * a single shuffle-by-key job with no driver loop. This replaces the
+  * reference's per-file driver iteration (SURVEY §4.1); EP3
+  * (`Pipelines.evaluate`) is [[evaluatePerGroup]].
   */
 object GroupedSummarizer {
 
@@ -60,8 +60,7 @@ object GroupedSummarizer {
   private val BaselineTopics = 15
   private val BaselineLength = 15.0
 
-  /** EP3's scoring of one product, shared by both routes of
-    * `Pipelines.evaluate`: the Ozsoy cross-method baseline of the
+  /** EP3's scoring of one product: the Ozsoy cross-method baseline of the
     * product's ordered sentences, zip-paired with the system summaries
     * (J3: zip truncates to the shorter list), stemmed ROUGE-1/2/L, and
     * the plain mean P/R/F per metric (A7; an empty pair set gives zeros).
@@ -119,7 +118,7 @@ object GroupedSummarizer {
     * decimal sums of the round-6 per-pair ROUGE scores — so the ENTIRE
     * evaluation (two SVD families + stemmed ROUGE-1/2/L + aggregation)
     * is a pure function of the corpus that the ls05 oracle unrolls.
-    * Same single flatMapGroups shape as the LAPACK variant.
+    * Same single flatMapGroups shape as [[evaluatePerGroup]].
     */
   def evaluatePerGroupPower(sents: DataFrame, topics: Int = 5,
       iters: Int = 8, summaryLen: Int = 15, k: Int = 5,
@@ -144,16 +143,13 @@ object GroupedSummarizer {
       }
     }
 
-  /** EP3 at scale: the per-product system-vs-baseline ROUGE evaluation
-    * of `Pipelines.evaluate` as ONE `flatMapGroups` job — no driver
-    * loop, no per-product Spark jobs. Per group (bounded: one product's
-    * review sentences), the system summary is [[LocalLsa.concepts]] (the
-    * local mirror of the distributed `Lsa.concepts`) over the
-    * sid-numbered sentences: each concept's top documents joined, in
-    * concept order. [[evalRows]] scores it.
-    *
-    * `GroupedEvalSpec` asserts equality with `Pipelines.evaluate`'s
-    * per-product loop.
+  /** EP3 (`Pipelines.evaluate`): the per-product system-vs-baseline
+    * ROUGE evaluation as ONE `flatMapGroups` job, no driver loop. Per
+    * group (one product's review sentences) the system summary is
+    * [[LocalLsa.concepts]] over the sid-numbered sentences, each
+    * concept's top documents joined: EP1's sparse solve, about 16 B per
+    * nonzero tf·idf cell. [[evalRows]] scores it; `GroupedEvalSpec`
+    * checks the rows against EP1's summary of each product.
     *
     * sents: (grp, review_id, sent_idx, sentence).
     */
@@ -161,8 +157,7 @@ object GroupedSummarizer {
     perGroup(sents) { (grp, ordered) =>
       val sided = withSid(ordered)
       val sentenceOf = sided.toMap
-      val sys = LocalLsa.concepts(sided).sortBy(_.concept)
-        .map(_.docIds.map(sentenceOf).mkString(" "))
+      val sys = LocalLsa.concepts(sided).map(_.doc_ids.map(sentenceOf).mkString(" "))
       evalRows(grp, sys, ordered.map(_.sentence))
     }
 }

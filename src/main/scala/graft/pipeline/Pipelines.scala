@@ -49,15 +49,12 @@ object Pipelines {
 
   /** F1-filtered sentences at or below which EP1 collects a product to
     * summarize it on the driver. On 4 cores the local route beat the
-    * distributed one at every measured size up to 32 k sentences, for a
-    * 31-token synthetic vocabulary (0.13 → 1.25 s against 1.14 → 2.55 s)
-    * and for English prose, whose vocabulary grows with the product
-    * (887 tokens at 250 sentences, 6,769 at 15.6 k; ARPACK from 1 k
-    * sentences: 0.66 → 1.46 s against 1.58 → 2.90 s). A collected row
-    * measured 0.7–1.2 KiB, so the budget holds about 40 MiB on the
-    * driver. Over it, the refused collect (a sorted take of untokenized
-    * sentences) cost 0.56 s before a 4.2 s distributed run. CHANGES.md
-    * records the sweep.
+    * distributed one at every measured size up to 32 k sentences, for
+    * synthetic and English vocabularies. A collected row measured
+    * 0.7–1.2 KiB, so the budget holds about 40 MiB on the driver. Over
+    * it, the refused collect (a sorted take of untokenized sentences)
+    * cost 0.56 s before a 4.2 s distributed run. CHANGES.md records the
+    * sweeps.
     */
   private[pipeline] val LocalSentenceRows = 32 << 10
 
@@ -69,7 +66,7 @@ object Pipelines {
     * tf·idf cells, solve and sentence join on the driver. Above
     * [[LocalSentenceRows]] sentences, [[lsaSummaryDistributed]] runs
     * instead. Both give the same rows (`LsaSummaryRouteSpec`), σ to
-    * round-off where both solve with ARPACK, as two ARPACK calls do.
+    * the round-off of summing the rows in another order.
     */
   def lsaSummaryFromSentences(sents: DataFrame,
       cfg: Lsa.Config = Lsa.Config()): DataFrame =
@@ -80,9 +77,8 @@ object Pipelines {
     * only those get their `TextFunctions.lsaTokens`, so an over-budget
     * product is refused before the lemmatizer runs. Sid n is the n-th
     * row, as [[sentencesWithSid]] numbers it. The cells come from
-    * `LocalLsa.fromTokens`: within `Lsa.LocalDenseCells` documents ×
-    * vocabulary LAPACK solves them on the driver, above it Spark's
-    * ARPACK (`Lsa.conceptsOfCells`), so no collect is thrown away.
+    * `LocalLsa.fromTokens` and `LocalLsa.solve` solves them on the
+    * driver, so no collect is thrown away.
     */
   private[graft] def lsaSummaryLocal(sents: DataFrame, cfg: Lsa.Config): Option[DataFrame] = {
     val spark = sents.sparkSession
@@ -91,18 +87,15 @@ object Pipelines {
       .select(col("sentence_id"), col("sentence"),
         TextFunctions.lsaTokens(col("sentence"), cfg.lemma).as("tokens"))
     LocalRoute.collectWithin(firstRows, LocalSentenceRows).map { rows =>
-      val cells = LocalLsa.fromTokens(rows.toSeq.zipWithIndex.map { case (r, i) =>
-        (i + 1L, r.getSeq[String](2))
-      })
-      val concepts =
-        if (cells.nDocs.toLong * cells.vocab.length <= Lsa.LocalDenseCells) LocalLsa.solve(cells, cfg)
-        else Lsa.conceptsOfCells(spark, cells, cfg)
+      val concepts = LocalLsa.solve(LocalLsa.fromTokens(rows.toSeq.zipWithIndex.map {
+        case (r, i) => (i + 1L, r.getSeq[String](2))
+      }), cfg)
       // as the distributed join's concat_ws: ids in loading order, nulls skipped
       def joined(ids: Seq[Long], field: Int, sep: String): String =
         ids.flatMap(sid => Option(rows((sid - 1).toInt).getString(field))).mkString(sep)
-      val out = concepts.sortBy(_.concept).map { c =>
-        Row(c.concept, c.singularValue, c.keywords.mkString(" "),
-          joined(c.docIds, 0, ","), joined(c.docIds, 1, " | "))
+      val out = concepts.map { c =>
+        Row(c.concept, c.singular_value, c.keywords.mkString(" "),
+          joined(c.doc_ids, 0, ","), joined(c.doc_ids, 1, " | "))
       }
       spark.createDataFrame(out.asJava, LsaSummarySchema)
     }
@@ -161,9 +154,6 @@ object Pipelines {
     TextRank.summarize(sents, "sentence_id", "sentence", k, cfg)
   }
 
-  // Above this many products EP3 runs as one flatMapGroups job.
-  private val GroupedRouteProducts = 64
-
   /** EP3 — evaluation: LSA system summary vs the Ozsoy/pytldr-style
     * baseline, zip-paired and ROUGE-scored with stemming, per product
     * ([[GroupedSummarizer.evalRows]]). Implements the INTENDED
@@ -174,43 +164,26 @@ object Pipelines {
     * — the length asymmetry behind the published ROUGE-L P ≪ R shape
     * (BASELINE.md Fig-5/6).
     *
-    * Output: one row per product × metric with mean P/R/F (A7).
+    * Output: one row per product × metric with mean P/R/F (A7), ordered
+    * by (product_id, metric).
     *
-    * Scale routing: the faithful per-product driver loop (pytldr-shaped,
-    * one Spark job per product) runs only while the corpus is small;
-    * above 64 products the SAME evaluation runs as ONE `flatMapGroups`
-    * job ([[GroupedSummarizer.evaluatePerGroup]] — a million corpora =
-    * one job). GroupedEvalSpec asserts the two routes row-equal, so the
-    * routing is a pure execution-strategy choice.
+    * One `flatMapGroups` job for one product or a million
+    * ([[GroupedSummarizer.evaluatePerGroup]]): each product is summarized
+    * inside its group by the solver EP1 runs, in memory linear in its
+    * nonzero cells. Its rows equal EP1's summary of each product scored
+    * by `evalRows` (`GroupedEvalSpec`). The order costs no job: the
+    * groups' stage is coalesced to one task, which sorts its rows. That
+    * task also runs every group's solve, one after another; a
+    * `repartition(1)` would keep the groups parallel at the cost of a
+    * third job (AQE runs each shuffle stage as its own job).
     */
   def evaluate(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val all = ReviewSource.sentences(ReviewSource.reviews(spark, path))
-      .filter(length(trim(col("sentence"))) > 0)
-      .persist()
-
-    val products = all.select($"product_id").distinct()
-      // collect-bound: model: distinct product ids (group domain) — the reference's per-file loop spine
-      .as[String].collect().sorted.toSeq
-
-    val out =
-      if (products.length > GroupedRouteProducts)
-        GroupedSummarizer.evaluatePerGroup(
-          all.select($"product_id".as("grp"), $"review_id", $"sent_idx",
-            $"sentence")).toDF()
-      else products.flatMap { pid =>
-        val psents = all.filter($"product_id" === pid)
-        val sys = lsaSummaryFromSentences(psents)
-          // collect-bound: top-k: k concept summaries for one product
-          .select($"sentences").as[String].collect()
-          .map(_.replace(" | ", " ")).toSeq
-        // baseline: driver-local like pytldr; one product's sentences fit
-        val ordered = psents.orderBy($"review_id", $"sent_idx")
-          // collect-bound: fixture: one product's sentences for the driver-local pytldr baseline (reference parity; the grouped operators are the scale route)
-          .select($"sentence").as[String].collect().toSeq
-        GroupedSummarizer.evalRows(pid, sys, ordered)
-      }.toDF()
-    all.unpersist()
-    out
+    GroupedSummarizer.evaluatePerGroup(
+        ReviewSource.sentences(ReviewSource.reviews(spark, path))
+          .select($"product_id".as("grp"), $"review_id", $"sent_idx", $"sentence"))
+      .toDF()
+      .coalesce(1)
+      .sortWithinPartitions($"product_id", $"metric")
   }
 }

@@ -53,24 +53,23 @@ object LsaQueries extends QueryProvider {
       },
       Some(ls01OracleSql)),
 
-    // The production-solver sibling: distributed ARPACK SVD
-    // (IndexedRowMatrix.computeSVD — the path a 100 TB corpus calls),
-    // taken at every scale through Lsa.conceptsDistributed, even where
-    // Lsa.concepts would solve densely on the driver.
+    // The production-solver sibling: the distributed Lanczos SVD
+    // (graft.lsa.Svd, one Spark job per step — the path a 100 TB corpus
+    // calls), taken at every scale through Lsa.conceptsDistributed.
     // Verified at EVERY scale, two layers:
-    //  1. the ARPACK route's built-in eigen-residual gate (unconditional —
+    //  1. the solver's built-in eigen-residual gate (unconditional —
     //     including here, including under Bench): one distributed pass
     //     proves each returned (σⱼ, vⱼ) is a genuine singular triple of
     //     this matrix (‖AᵀAvⱼ−σⱼ²vⱼ‖ ≤ 1e-6·σⱼ²), so the solver cannot
     //     silently return garbage at any corpus size — the r5
     //     "unverified above 2000 docs" gap.
     //  2. Below 2000 docs, additionally the cell-for-cell dense-LAPACK
-    //     mirror (LocalLsa): σ within 1e-3 relative and identical
-    //     keyword/doc selections. Above that, Stress cross-checks σ
-    //     against the PowerLsa twin on the gap-separated leaders (a
-    //     degenerate cluster — sf0.1 has σ₂≈σ₃≈σ₄ within 1% — cannot be
-    //     separated by any bounded-iteration power method; the residual
-    //     gate covers those concepts instead).
+    //     twin (LocalLsa.lapackConcepts): σ within 1e-3 relative and
+    //     identical keyword/doc selections. Above that, Stress
+    //     cross-checks σ against the PowerLsa twin on the gap-separated
+    //     leaders (a degenerate cluster — sf0.1 has σ₂≈σ₃≈σ₄ within 1% —
+    //     cannot be separated by any bounded-iteration power method; the
+    //     residual gate covers those concepts instead).
     // Rows-only at the DuckDB layer by nature of the solver; the k=5
     // semantics themselves are hash-verified via ls01's power twin.
     Q(
@@ -85,22 +84,22 @@ object LsaQueries extends QueryProvider {
         // (above) is the verifier — the dense LAPACK mirror at 5k×vocab
         // would dominate the timing, not the solver.
         if (nDocs <= 2000L) {
-          val local = graft.lsa.LocalLsa.concepts(
+          val local = graft.lsa.LocalLsa.lapackConcepts(
             docs.select($"doc_id".cast("long"), $"text")
               // collect-bound: fixture: LAPACK truth twin, gated on nDocs <= 2000 just above
               .as[(Long, String)].collect().toSeq.sortBy(_._1))
           // collect-bound: model: k concept rows
           val dist = out.orderBy($"concept").collect()
           require(dist.length == local.length,
-            s"ARPACK returned ${dist.length} concepts, LAPACK ${local.length}")
-          dist.zip(local.sortBy(_.concept)).foreach { case (r, lc) =>
+            s"Lanczos returned ${dist.length} concepts, LAPACK ${local.length}")
+          dist.zip(local).foreach { case (r, lc) =>
             val sd = r.getAs[Double]("singular_value")
-            require(math.abs(sd - lc.singularValue) <=
-                1e-3 * math.max(1.0, math.abs(lc.singularValue)),
-              s"concept ${lc.concept}: ARPACK sigma $sd vs LAPACK ${lc.singularValue}")
+            require(math.abs(sd - lc.singular_value) <=
+                1e-3 * math.max(1.0, math.abs(lc.singular_value)),
+              s"concept ${lc.concept}: Lanczos sigma $sd vs LAPACK ${lc.singular_value}")
             require(r.getAs[Seq[String]]("keywords") == lc.keywords,
               s"concept ${lc.concept}: keyword sets diverge")
-            require(r.getAs[Seq[Long]]("doc_ids") == lc.docIds,
+            require(r.getAs[Seq[Long]]("doc_ids") == lc.doc_ids,
               s"concept ${lc.concept}: doc selections diverge")
           }
         }
@@ -165,8 +164,8 @@ object LsaQueries extends QueryProvider {
     // unrolls the ENTIRE evaluation: two keyed power chains (system
     // TF-IDF k=5 with morphy lemmas + baseline binary Ozsoy), the
     // Porter stemmer, n-gram overlap, the recursive-CTE LCS, and the
-    // per-group means. The LAPACK composite (evaluatePerGroup) remains
-    // the Pipelines.evaluate parity path, pinned by GroupedEvalSpec.
+    // per-group means. The Lanczos composite (evaluatePerGroup) is
+    // Pipelines.evaluate itself, pinned by GroupedEvalSpec.
     Q(
       "ls05_grouped_eval",
       (s, dir) => {

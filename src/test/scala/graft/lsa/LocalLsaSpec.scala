@@ -6,12 +6,13 @@ import graft.SparkSpec
 import graft.io.ReviewSource
 import graft.pipeline.{Pipelines, SyntheticReviews}
 
-/** LocalLsa is the dense mirror of the distributed ARPACK route
-  * (`Lsa.conceptsDistributed`) — both must select identical keywords and
-  * documents, with singular values agreeing to numerical precision
-  * (Breeze LAPACK vs ARPACK). `Lsa.concepts` solves product-sized input
-  * with LocalLsa's dense solve, so its local route is pinned against
-  * the ARPACK route here too.
+/** LocalLsa's CSR route and the distributed route
+  * (`Lsa.conceptsDistributed`) run the same solver (`Svd`) and must
+  * select identical keywords and documents, with singular values agreeing
+  * to numerical precision; both are pinned against dense LAPACK
+  * (`LocalLsa.lapackConcepts`). `Lsa.concepts` solves product-sized input
+  * on the driver, so its local route is pinned against the distributed
+  * route here too.
   */
 class LocalLsaSpec extends SparkSpec {
   import spark.implicits._
@@ -51,17 +52,17 @@ class LocalLsaSpec extends SparkSpec {
       assert(dist.length == local.length)
       dist.zip(local).foreach { case (d, l) =>
         assert(d.concept == l.concept)
-        assert(math.abs(d.singular_value - l.singularValue) < 1e-6,
-          s"sigma ${d.singular_value} vs ${l.singularValue}")
+        assert(math.abs(d.singular_value - l.singular_value) < 1e-6,
+          s"sigma ${d.singular_value} vs ${l.singular_value}")
         assert(d.keywords == l.keywords, s"concept ${d.concept} keywords")
-        assert(d.doc_ids == l.docIds, s"concept ${d.concept} docs")
+        assert(d.doc_ids == l.doc_ids, s"concept ${d.concept} docs")
       }
     }
   }
 
   test("the non-dense fixture reaches the cases it names") {
     val ids = LocalLsa.concepts(sparseIds, Lsa.Config(k = 2, nDocs = 4, lemma = false))
-      .map(_.docIds)
+      .map(_.doc_ids)
     assert(!ids.flatten.contains(4L), "the all-stopword doc has no row")
     assert(ids.flatten.contains(bigId), "the id above Int.MaxValue is selected")
     val twins = ids.map(_.filter(Set(40L, 41L)))
@@ -82,7 +83,7 @@ class LocalLsaSpec extends SparkSpec {
       .as[Lsa.Concept].collect().sortBy(_.concept)
     val local = LocalLsa.concepts(texts, cfg).sortBy(_.concept)
     assert(dist.map(c => (c.concept, c.keywords, c.doc_ids)).toSeq ==
-      local.map(c => (c.concept, c.keywords, c.docIds)).toSeq)
+      local.map(c => (c.concept, c.keywords, c.doc_ids)).toSeq)
   }
 
   private def res(name: String): String =
@@ -95,22 +96,65 @@ class LocalLsaSpec extends SparkSpec {
   private def concepts(df: DataFrame): Seq[Lsa.Concept] =
     df.as[Lsa.Concept].collect().sortBy(_.concept).toSeq
 
+  /** The same concept count, keywords and doc ids, σ within 1e-12
+    * relative.
+    */
+  private def assertSame(what: String, a: Seq[Lsa.Concept], b: Seq[Lsa.Concept]): Unit = {
+    assert(a.nonEmpty, what)
+    assert(a.map(c => (c.concept, c.keywords, c.doc_ids)) ==
+      b.map(c => (c.concept, c.keywords, c.doc_ids)), what)
+    a.zip(b).foreach { case (x, y) =>
+      assert(math.abs(x.singular_value - y.singular_value) <= 1e-12 * y.singular_value,
+        s"$what concept ${x.concept}: sigma ${x.singular_value} vs ${y.singular_value}")
+    }
+  }
+
+  private lazy val fixtures = Seq(res("tiny_product.txt"), res("small_product.txt"),
+    res("edge_cases.txt"), s"${SyntheticReviews.write(products = 1, reviews = 600)}/product00.txt")
+
+  /** Products of about 40, 600 and 4,600 sentences whose vocabularies
+    * exceed the solver's Gramian cut, so the Lanczos solve runs (the
+    * review fixtures' vocabularies are smaller).
+    */
+  private lazy val zipfProducts = Seq((10, 300), (150, 1500), (1150, 200)).map { case (r, v) =>
+    SyntheticReviews.zipf(1, r, v).resolve("product00.txt").toString
+  }
+
+  /** A product's (sid, sentence) rows, as `Pipelines` numbers them. */
+  private def texts(path: String): Seq[(Long, String)] =
+    sentences(path).select($"sid", $"sentence").as[(Long, String)].collect().toSeq.sortBy(_._1)
+
   test("Lsa.concepts' local route equals the ARPACK route on the review fixtures") {
-    val generated = s"${SyntheticReviews.write(products = 1, reviews = 600)}/product00.txt"
-    for (path <- Seq(res("tiny_product.txt"), res("small_product.txt"),
-        res("edge_cases.txt"), generated)) {
+    for (path <- fixtures ++ zipfProducts) {
       val docs = sentences(path).persist()
       val local = concepts(Lsa.concepts(docs, "sid", "sentence"))
       val dist = concepts(Lsa.conceptsDistributed(docs, "sid", "sentence"))
       docs.unpersist()
-      assert(local.nonEmpty, path)
-      assert(local.map(c => (c.concept, c.keywords, c.doc_ids)) ==
-        dist.map(c => (c.concept, c.keywords, c.doc_ids)), path)
-      local.zip(dist).foreach { case (l, d) =>
-        assert(math.abs(l.singular_value - d.singular_value) <= 1e-12 * d.singular_value,
-          s"$path concept ${l.concept}: sigma ${l.singular_value} vs ${d.singular_value}")
-      }
+      assertSame(path, local, dist)
     }
+  }
+
+  test("the local route equals dense LAPACK on the fixtures and generated products") {
+    for (path <- fixtures ++ zipfProducts) {
+      val docs = texts(path)
+      if (zipfProducts.contains(path))
+        assert(LocalLsa.fromTokens(docs.map { case (id, t) => id -> LocalLsa.lsaTokens(t) })
+          .vocab.length >= 100, s"$path: the Lanczos solve needs 100 tokens or more")
+      assertSame(path, LocalLsa.concepts(docs), LocalLsa.lapackConcepts(docs))
+    }
+  }
+
+  test("a vocabulary no larger than k is solved on both routes") {
+    // 3 tokens over 4 documents: k = min(5, 4, 3) = |vocab|, which leaves
+    // ARPACK no room (nev < ncv <= n), so both routes decompose A'A
+    val input = Seq((1L, "alpha alpha beta"), (2L, "beta gamma gamma"),
+      (3L, "gamma alpha"), (4L, "alpha beta gamma gamma"))
+    val cfg = Lsa.Config(lemma = false)
+    val dist = concepts(Lsa.conceptsDistributed(input.toDF("doc_id", "text"), "doc_id", "text", cfg))
+    val local = LocalLsa.concepts(input, cfg)
+    assert(local.length == 3)
+    assertSame("local vs distributed", local, dist)
+    assertSame("local vs LAPACK", local, LocalLsa.lapackConcepts(input, cfg))
   }
 
   test("a duplicated sentence's null concept is dropped on both routes") {
@@ -128,7 +172,7 @@ class LocalLsaSpec extends SparkSpec {
     for (path <- Seq(res("small_product.txt"), generated)) {
       val docs = sentences(path).persist()
       var spark0: (Seq[(Long, Int, Double)], Seq[String]) = null
-      Lsa.withCells(docs, "sid", "sentence", Lsa.Config()) { (cells, _, _, vocab, _) =>
+      Lsa.withCells(docs, "sid", "sentence", Lsa.Config()) { (cells, _, vocab, _) =>
         spark0 = (cells.as[(Long, Int, Double)].collect().toSeq, vocab.toSeq)
         cells
       }
@@ -151,8 +195,8 @@ class LocalLsaSpec extends SparkSpec {
   test("rank below k: both routes cut the null concepts at the shared sigma floor") {
     // 7 documents of 3 distinct sentences, repeated 4, 2 and 1 times so
     // the 3 sigmas are distinct: rank 3, and k = min(5, 7, 15) asks for
-    // 5. ARPACK squares the matrix, so its null directions come back
-    // near sqrt(eps) * sigma0, above computeSVD's rCond
+    // 5. The solve squares the matrix, so its null directions come back
+    // near sqrt(eps) * sigma0
     val a = "spark cluster executor shuffle partition"
     val b = "banana mango fruit smoothie juice"
     val c = "market trader stock index bond"
@@ -162,6 +206,6 @@ class LocalLsaSpec extends SparkSpec {
       .as[Lsa.Concept].collect().sortBy(_.concept).toSeq
     val local = LocalLsa.concepts(input, cfg)
     assert(dist.length == 3 && local.length == 3)
-    assert(dist.map(c => (c.keywords, c.doc_ids)) == local.map(c => (c.keywords, c.docIds)))
+    assert(dist.map(c => (c.keywords, c.doc_ids)) == local.map(c => (c.keywords, c.doc_ids)))
   }
 }

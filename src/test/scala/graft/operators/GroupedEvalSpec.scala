@@ -1,16 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.MapGroups
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.io.ReviewSource
 import graft.pipeline.{Pipelines, SyntheticReviews}
 
-/** The grouped (single-job) EP3 evaluator must produce the same
-  * per-product ROUGE table as the driver-looped `Pipelines.evaluate` —
-  * the judge-requested proof that EP3-at-scale is fully wired, not half.
+/** EP3 (`Pipelines.evaluate`) is the grouped single-job evaluator, and
+  * its rows must be what the reference's per-product loop computes: EP1's
+  * summary of each product scored by `GroupedSummarizer.evalRows`.
   */
 class GroupedEvalSpec extends SparkSpec {
   import spark.implicits._
@@ -42,20 +41,22 @@ class GroupedEvalSpec extends SparkSpec {
       rows(Pipelines.evaluate(spark, path)))
   }
 
-  test("evaluate's scale routing returns identical rows on both paths") {
-    // 65 products: one over the loop route's 64, so the glob takes the
-    // single-job grouped route while each file alone takes the loop
-    val dir = SyntheticReviews.write(products = 65, reviews = 6)
-    def grouped(df: DataFrame): Boolean =
-      df.queryExecution.analyzed.exists(_.isInstanceOf[MapGroups])
-    val all = Pipelines.evaluate(spark, s"$dir/*.txt")
-    assert(grouped(all))
-    val viaGrouped = rows(all)
-    assert(viaGrouped.size == 65 * 3)
-    Seq("product00", "product64").foreach { pid =>
-      val one = Pipelines.evaluate(spark, s"$dir/$pid.txt")
-      assert(!grouped(one))
-      assertClose(viaGrouped.filter(_._1._1 == pid), rows(one))
+  test("EP3's rows equal EP1's summary of each product scored by evalRows") {
+    val zipf = SyntheticReviews.zipf(products = 1, reviews = 150, vocab = 1500).resolve("product00.txt")
+    for (path <- Seq(res("tiny_product.txt"), res("small_product.txt"), res("edge_cases.txt"),
+        s"${SyntheticReviews.write(products = 1, reviews = 40)}/product00.txt", zipf.toString)) {
+      val sents = ReviewSource.sentences(ReviewSource.reviews(spark, path))
+        .filter(length(trim($"sentence")) > 0)
+      val pid = sents.select($"product_id").as[String].head()
+      val sys = Pipelines.lsaSummaryFromSentences(sents).select($"sentences").as[String]
+        .collect().map(_.replace(" | ", " ")).toSeq
+      val ordered = sents.orderBy($"review_id", $"sent_idx").select($"sentence").as[String]
+        .collect().toSeq
+      val expected = GroupedSummarizer.evalRows(pid, sys, ordered)
+        .map(r => (r.product_id, r.metric, r.precision, r.recall, r.f1))
+      val ep3 = Pipelines.evaluate(spark, path)
+        .as[(String, String, Double, Double, Double)].collect().toSeq
+      assert(ep3 == expected, path)
     }
   }
 

@@ -43,4 +43,37 @@ object SyntheticReviews {
     }
     dir
   }
+
+  /** The `i`-th invented word: "q", `i` in base-26 letters, "x" — no
+    * stopword, at least 3 letters, untouched by the lemmatizer.
+    */
+  def word(i: Int): String =
+    "q" + Integer.toString(i, 26).map(c => ('a' + Character.digit(c, 26)).toChar) + "x"
+
+  /** `products` files (`productNN.txt` in a new temp directory, which
+    * is returned) of `reviews` reviews of 3-5 sentences of 8-16 words,
+    * drawn by a Zipf law (weight 1/rank) from `vocab` invented words, so
+    * the vocabulary grows with the product as English review text's
+    * does; a review averages 4 sentences.
+    */
+  def zipf(products: Int, reviews: Int, vocab: Int, seed: Long = 7L): Path = {
+    val rnd = new scala.util.Random(seed)
+    val cum = (1 to vocab).scanLeft(0.0)(_ + 1.0 / _).tail.toArray
+    def draw(): String = {
+      val i = java.util.Arrays.binarySearch(cum, rnd.nextDouble() * cum.last)
+      word(if (i < 0) -i - 1 else i)
+    }
+    val dir = Files.createTempDirectory("zipf_products")
+    (0 until products).foreach { p =>
+      val sb = new StringBuilder
+      sb.append("review_id\tproduct_title\tstar_rating\tvine\tverified_purchase\treview_body\n")
+      (0 until reviews).foreach { r =>
+        val body = Seq.fill(3 + rnd.nextInt(3))(Seq.fill(8 + rnd.nextInt(9))(draw()).mkString(" "))
+          .mkString(". ") + "."
+        sb.append(s"R${p}_$r\tZipf $p\t5\tN\tY\t$body\n")
+      }
+      Files.write(dir.resolve(f"product$p%02d.txt"), sb.toString.getBytes("UTF-8"))
+    }
+    dir
+  }
 }
