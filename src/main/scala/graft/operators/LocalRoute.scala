@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 
-/** The fused probe-and-collect that routes Hits, Nmf and Lloyd between
-  * their driver-local twin and their distributed loop.
+/** The fused probe-and-collect that routes a product- or model-sized
+  * input to a driver-local route and a larger one to the distributed
+  * route: Hits, Nmf and Lloyd, EP1's summary
+  * (`Pipelines.lsaSummaryLocal`) and EP2's (`TextRank.summarize`).
   */
 object LocalRoute {
 

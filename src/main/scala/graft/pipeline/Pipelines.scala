@@ -147,7 +147,12 @@ object Pipelines {
         lit("] keywords: "), col("keywords"),
         lit(" | sentences: "), col("sentence_ids")).as("line"))
 
-  /** EP2 — TextRank review summary: top-k sentences by rank. */
+  /** EP2 — TextRank review summary: top-k sentences by rank, with their
+    * text. A product of at most 4,096 band sentences runs in one Spark
+    * job: `TextRank.summarize` collects the band rows with their tokens
+    * once and ranks, picks the top-k and looks up their text on the
+    * driver. A larger product runs the distributed graph.
+    */
   def textrankSummary(spark: SparkSession, path: String, k: Int = 5,
       cfg: TextRank.Config = TextRank.Config()): DataFrame = {
     val sents = ReviewSource.sentences(ReviewSource.reviews(spark, path))

@@ -1,9 +1,16 @@
 package graft.textrank
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.lsa.SparkNumerics
+import graft.operators.LocalRoute
 import graft.text.TextFunctions
 
 /** TextRank (Mihalcea & Tarau 2004) re-expressed as declarative DataFrame
@@ -20,12 +27,14 @@ import graft.text.TextFunctions
   *    — the reference would crash on them; F7).
   *
   * Scale design: the all-pairs similarity join (J2) is the quadratic
-  * step. A product-sized exact graph (up to `LocalPairBudget` vertex
-  * pairs) is built and ranked on the driver from one collect of the
-  * vertex table, as the reference ranks on the driver
-  * ([[rankDocuments]]). Above it the exact path is a
-  * broadcast-nested-loop self-join, correct and fast while the vertex
-  * set (sentence band survivors) fits a broadcast;
+  * step. A product-sized exact graph (up to [[LocalVertices]] vertices)
+  * is built and ranked on the driver, as the reference ranks on the
+  * driver: [[summarize]] collects the band rows with their text and
+  * tokens once and does the top-k and text lookup there too (one Spark
+  * job), [[rankDocuments]] collects its persisted vertex table. Above
+  * it the exact path is a broadcast-nested-loop self-join, correct and
+  * fast while the vertex set (sentence band survivors) fits a
+  * broadcast;
   * the 100 TB path ([[EdgeCandidates.Lsh]]) routes edge generation through
   * the MinHash-LSH banding in `graft.operators.Dedup` — candidates from
   * bucket joins (linear + bounded-bucket quadratic), exact re-weighting
@@ -191,11 +200,17 @@ object TextRank {
     */
   private[graft] def vertices(docs: DataFrame, id: Column, textCol: String,
       lemma: Boolean): DataFrame =
-    graft.Par.fanOut(docs
-      .filter(TextFunctions.spaceWordCount(col(textCol)) > MinWords &&
-        TextFunctions.spaceWordCount(col(textCol)) < MaxWords))
-      .select(id.as("id"), TextFunctions.textrankTokens(col(textCol), lemma).as("tokens"))
+    graft.Par.fanOut(inBand(docs, textCol))
+      .select(id.as("id"), tokensOf(textCol, lemma))
       .filter(size(col("tokens")) > 0)
+
+  /** The docs inside F2's band, the rows TextRank ranks and looks up. */
+  private def inBand(docs: DataFrame, textCol: String): DataFrame =
+    docs.filter(TextFunctions.spaceWordCount(col(textCol)) > MinWords &&
+      TextFunctions.spaceWordCount(col(textCol)) < MaxWords)
+
+  private def tokensOf(textCol: String, lemma: Boolean): Column =
+    TextFunctions.textrankTokens(col(textCol), lemma).as("tokens")
 
   /** Distinct token sets and raw lengths are per-VERTEX quantities:
     * (id, dt, n) computed once before any pair join, not per pair (a
@@ -573,15 +588,9 @@ object TextRank {
     compact.unpersist()
     indexB.destroy()
     owB.destroy()
-    val idType = e.schema("src").dataType
     spark.createDataFrame(
-      sc.parallelize(ids.zip(r).toIndexedSeq.map {
-        case (id, rnk) => org.apache.spark.sql.Row(id, rnk)
-      }),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType, nullable = false),
-        org.apache.spark.sql.types.StructField("rnk",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
+      sc.parallelize(ids.zip(r).toIndexedSeq.map { case (id, rnk) => Row(id, rnk) }),
+      rankSchema(e.schema("src").dataType))
   }
 
   /** Large-vector strategy: rank state stays distributed; out-weights
@@ -644,30 +653,29 @@ object TextRank {
     }
   }
 
-  /** Unordered vertex pairs nv·(nv−1)/2 at or below which
-    * [[rankDocuments]] ranks an exact graph on the driver
-    * ([[ranksLocal]]): 8 Mi pairs, 4,096 vertices. Memory binds, not
-    * speed: on 4 cores the local route beat the distributed one at every
-    * measured size (4,096 vertices: 0.9 s vs 24.8 s; CHANGES.md records
-    * the sweep), and a complete graph at the budget is 16 Mi directed
-    * edges, 256 MiB at 16 B each (the local arrays hold each pair once,
-    * 16 B, so 128 MiB plus growth). The sf1 gate graph (10,660
-    * vertices, 56.8 M pairs) stays above it, so the stress replica still
-    * runs the distributed similarity kernel.
+  /** Vertices at or below which an exact graph is ranked on the driver
+    * ([[localRanks]]): 4,096, so at most 8 Mi vertex pairs. Memory
+    * binds, not speed: on 4 cores the local route beat the distributed
+    * one at every measured size (4,096 vertices: 0.9 s vs 24.8 s;
+    * CHANGES.md records the sweep), and a complete graph at the budget
+    * is 16 Mi directed edges, 256 MiB at 16 B each (the local arrays
+    * hold each pair once, 16 B, so 128 MiB plus growth). The sf1 gate
+    * graph (10,660 vertices, 56.8 M pairs) stays above it, so the stress
+    * replica still runs the distributed similarity kernel.
     */
-  private val LocalPairBudget: Long = 8L << 20
+  private val LocalVertices = 4096
 
   /** Full document-level pipeline over a (id, text) DataFrame: band filter
     * F2 on raw space-split words, token pipeline, edges, ranks. An exact
-    * graph of at most [[LocalPairBudget]] vertex pairs is ranked on the
+    * graph of at most [[LocalVertices]] vertices is ranked on the
     * driver ([[ranksLocal]]); a larger one, or LSH candidates, runs
     * [[rankDocumentsDistributed]]'s route.
     */
   def rankDocuments(docs: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config()): DataFrame =
     withVertices(docs, idCol, textCol, cfg) { (vertices, nv) =>
-      if (cfg.edgeCandidates == EdgeCandidates.Exact &&
-          satMul(nv, nv - 1) / 2 <= LocalPairBudget) ranksLocal(vertices)
+      if (cfg.edgeCandidates == EdgeCandidates.Exact && nv <= LocalVertices)
+        ranksLocal(vertices)
       else rankGraph(vertices, nv, cfg)
     }
 
@@ -771,21 +779,28 @@ object TextRank {
     (as.result(), bs.result(), ws.result())
   }
 
-  /** The exact graph ranked on the driver, from one collect of the
-    * persisted (id, tokens) vertex table — the tokens are Spark's
-    * `textrankTokens`, so there is no tokenizer mirror — through
-    * [[localEdges]]. Out-weight sums and [[Iterations]] rounds of
-    * `r' = InitRank + Damping·Σ r(src)·(w/ow(src))` follow
-    * [[ranksAggregated]]; vertices without an edge drop out. Returns
-    * (id, rnk) with the caller's id type as a local relation.
-    * Per-destination sums run in vertex-pair order, so ranks may differ
-    * from the distributed route's in the last bits.
+  /** The exact graph over the vertices (`ids`, `tokens`) ranked on the
+    * driver through [[localEdges]]. Out-weight sums and [[Iterations]]
+    * rounds of `r' = InitRank + Damping·Σ r(src)·(w/ow(src))` follow
+    * [[ranksAggregated]]. Vertices sharing an id are one vertex, as the
+    * distributed route keys its edges by id: an edge between two of them
+    * drops out (its `src < dst` is false) and their other edges add up.
+    * A null id gets no edge (`src < dst` is null). Returns (id, rnk) for
+    * every id with an edge, in first-appearance order. Per-destination
+    * sums run in vertex-pair order, so ranks may differ from the
+    * distributed route's in the last bits.
     */
-  private def ranksLocal(vertices: DataFrame): DataFrame = {
-    // collect-bound: probe-guarded: rankDocuments routes here only when nv·(nv−1)/2 <= LocalPairBudget; rankDocumentsDistributed is the fallback
-    val rows = vertices.collect()
-    val nv = rows.length
-    val (src, dst, w) = localEdges(rows.map(_.getSeq[String](1)))
+  private def localRanks(ids: Array[Any],
+      tokens: Array[Seq[String]]): Array[(Any, Double)] = {
+    val ofId = ids.filter(_ != null).distinct
+    val index = ofId.zipWithIndex.toMap
+    val v = ids.map(id => if (id == null) -1 else index(id))
+    val nv = ofId.length
+    val (a, b, w0) = localEdges(tokens)
+    val kept = a.indices.filter(e => v(a(e)) >= 0 && v(b(e)) >= 0 && v(a(e)) != v(b(e)))
+    val src = kept.map(e => v(a(e))).toArray
+    val dst = kept.map(e => v(b(e))).toArray
+    val w = kept.map(w0).toArray
     val ow = new Array[Double](nv)
     var e = 0
     while (e < src.length) { ow(src(e)) += w(e); ow(dst(e)) += w(e); e += 1 }
@@ -802,33 +817,87 @@ object TextRank {
       }
       r = c.map(InitRank + Damping * _)
     }
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    rows.indices.foreach { i =>
-      if (ow(i) > 0.0) out.add(org.apache.spark.sql.Row(rows(i).get(0), r(i)))
-    }
-    vertices.sparkSession.createDataFrame(out,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          vertices.schema("id").dataType, nullable = false),
-        org.apache.spark.sql.types.StructField("rnk",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
+    (0 until nv).filter(ow(_) > 0.0).map(i => (ofId(i), r(i))).toArray
   }
 
-  /** G7: top-k by rank with text recovered via an equi-join (not the
-    * reference's per-winner `lookup()` jobs — SURVEY §4.1 anti-pattern).
+  /** The (id, rnk) columns every rank route returns. */
+  private def rankSchema(idType: DataType): StructType = StructType(Seq(
+    StructField("id", idType, nullable = false),
+    StructField("rnk", DoubleType, nullable = false)))
+
+  /** The exact graph ranked on the driver, from one collect of the
+    * persisted (id, tokens) vertex table — the tokens are Spark's
+    * `textrankTokens`, so there is no tokenizer mirror — through
+    * [[localRanks]]. Returns (id, rnk) with the caller's id type as a
+    * local relation.
+    */
+  private def ranksLocal(vertices: DataFrame): DataFrame = {
+    // collect-bound: probe-guarded: rankDocuments routes here only when nv <= LocalVertices; rankDocumentsDistributed is the fallback
+    val rows = vertices.collect()
+    val ranked = localRanks(rows.map(_.get(0)), rows.map(_.getSeq[String](1)))
+    vertices.sparkSession.createDataFrame(
+      ranked.toSeq.map { case (id, rnk) => Row(id, rnk) }.asJava,
+      rankSchema(vertices.schema("id").dataType))
+  }
+
+  /** G7: the top `k` sentences by rank with their text (the reference's
+    * per-winner `lookup()` jobs, SURVEY §4.1, are a key lookup here).
+    * An exact-edge product of at most [[LocalVertices]] band rows runs
+    * [[summarizeLocal]]: one Spark job. A larger one, or LSH candidates,
+    * runs [[topRanked]] over [[rankDocuments]].
     */
   def summarize(docs: DataFrame, idCol: String, textCol: String, k: Int,
       cfg: Config = Config()): DataFrame =
-    topRanked(rankDocuments(docs, idCol, textCol, cfg), docs, idCol, textCol, k)
+    (if (cfg.edgeCandidates == EdgeCandidates.Exact)
+      summarizeLocal(docs, idCol, textCol, k, cfg.lemma) else None)
+      .getOrElse(topRanked(rankDocuments(docs, idCol, textCol, cfg), docs, idCol, textCol, k))
 
-  /** [[summarize]]'s top-k and text join over ranks `r` (id, rnk). */
+  /** [[summarize]] on the driver, or `None` over [[LocalVertices]] band
+    * rows. One bounded collect takes the band rows with their text and
+    * Spark's `textrankTokens` (no fan-out: the collect's limit already
+    * bounds tokenizing to budget + 1 rows per partition). The rows with
+    * tokens are ranked by [[localRanks]], then [[topRanked]]'s work runs
+    * on the collected rows: `round(rnk, 6)` as Spark rounds a double,
+    * order by (rnk desc, id) in Spark's ordering of the id type, the
+    * first `k`, and each winner's text from its band rows.
+    */
+  private def summarizeLocal(docs: DataFrame, idCol: String, textCol: String,
+      k: Int, lemma: Boolean): Option[DataFrame] = {
+    val band = inBand(docs, textCol).select(col(idCol).as("id"), col(textCol),
+      tokensOf(textCol, lemma))
+    // collect-bound: probe-guarded: collectWithin's limit(LocalVertices + 1) bounds the band rows; topRanked over rankDocuments is the fallback
+    LocalRoute.collectWithin(band, LocalVertices).map { rows =>
+      val vs = rows.filter(_.getSeq[String](2).nonEmpty)
+      val idField = band.schema("id")
+      val idOrder = {
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idField.dataType)
+        PhysicalDataType.ordering(idField.dataType).on[Any](toCatalyst)
+      }
+      val top = localRanks(vs.map(_.get(0)), vs.map(_.getSeq[String](2)))
+        .map { case (id, rnk) => (id, SparkNumerics.round(rnk, 6)) }
+        .sorted(Ordering.by[(Any, Double), Double](_._2)(Ordering.Double.TotalOrdering.reverse)
+          .orElseBy(_._1)(idOrder))
+        .take(k)
+      val out = top.toSeq.flatMap { case (id, rnk) =>
+        rows.iterator.filter(_.get(0) == id).map(r => Row(id, rnk, r.get(1)))
+      }
+      // Spark's round() types rnk nullable
+      docs.sparkSession.createDataFrame(out.asJava, StructType(Seq(
+        StructField("id", idField.dataType, nullable = false),
+        StructField("rnk", DoubleType), band.schema.fields(1))))
+    }
+  }
+
+  /** [[summarize]]'s top-k over ranks `r` (id, rnk), each winner joined
+    * to its text in the band rows.
+    */
   private[textrank] def topRanked(r0: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, k: Int): DataFrame = {
     val r = r0
       .withColumn("rnk", round(col("rnk"), 6))
       .orderBy(desc("rnk"), col("id"))
       .limit(k)
-    r.join(docs.select(col(idCol).as("id"), col(textCol)), "id")
+    r.join(inBand(docs, textCol).select(col(idCol).as("id"), col(textCol)), "id")
       .orderBy(desc("rnk"), col("id"))
   }
 }

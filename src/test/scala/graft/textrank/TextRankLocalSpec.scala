@@ -7,13 +7,16 @@ import graft.io.ReviewSource
 import graft.pipeline.{Pipelines, SyntheticReviews}
 
 /** `TextRank.rankDocuments` ranks a product-sized exact graph on the
-  * driver; `rankDocumentsDistributed` is the route above the pair
-  * budget. The two must agree on the review fixtures and on a generated
-  * 600-review product: the same vertex set, ranks within 1e-12, the same
-  * `summarize` top-k, and bit-equal edge weights.
+  * driver; `rankDocumentsDistributed` is the route above the vertex
+  * budget. `TextRank.summarize` also picks its top-k and looks its text
+  * up on the driver. The routes must agree on the review fixtures, a
+  * repeated `review_id` and a generated 600-review product: the same
+  * vertex set, ranks within 1e-12, the same `summarize` rows and schema,
+  * and bit-equal edge weights.
   */
 class TextRankLocalSpec extends SparkSpec {
   import spark.implicits._
+  import org.apache.spark.sql.functions.{col, xxhash64}
 
   private def res(name: String): String =
     getClass.getResource(s"/reviews/$name").getPath
@@ -28,6 +31,7 @@ class TextRankLocalSpec extends SparkSpec {
     "tiny_product" -> res("tiny_product.txt"),
     "small_product" -> res("small_product.txt"),
     "edge_cases" -> res("edge_cases.txt"),
+    "repeated review_id" -> res("repeated_ids.txt"),
     "generated 600-review product" -> generated)
 
   private def ranks(df: DataFrame): Map[Any, Double] =
@@ -65,19 +69,59 @@ class TextRankLocalSpec extends SparkSpec {
     assert(ranks(TextRank.rankDocuments(docs, "doc_id", "text")).keySet == Set(1L, 2L))
   }
 
+  /** `summarize` against the distributed ranks' `topRanked`: the same
+    * schema, and the same rows in the same order.
+    */
+  private def assertSameSummary(what: String, docs: DataFrame, idCol: String,
+      textCol: String): Seq[org.apache.spark.sql.Row] = {
+    val local = TextRank.summarize(docs, idCol, textCol, 5)
+    val dist = TextRank.topRanked(
+      TextRank.rankDocumentsDistributed(docs, idCol, textCol), docs, idCol, textCol, 5)
+    assert(local.schema == dist.schema, what)
+    val rows = local.collect().toSeq
+    assert(rows == dist.collect().toSeq, what)
+    rows
+  }
+
   test("summarize's top-k matches on both routes, string and long ids") {
     products.foreach { case (name, path) =>
       val byString = sentences(path)
       val byLong = Pipelines.sentencesWithSid(byString)
       for ((docs, idCol) <- Seq(byString -> "sentence_id", byLong -> "sid")) {
-        val local = TextRank.summarize(docs, idCol, "sentence", 5).collect().toSeq
-        val dist = TextRank.topRanked(
-          TextRank.rankDocumentsDistributed(docs, idCol, "sentence"),
-          docs, idCol, "sentence", 5).collect().toSeq
-        assert(local == dist, s"$name by $idCol")
+        val local = assertSameSummary(s"$name by $idCol", docs, idCol, "sentence")
         if (name != "edge_cases") assert(local.nonEmpty, s"$name by $idCol")
       }
     }
+  }
+
+  test("a repeated id takes its text from its band rows only, string and long ids") {
+    // R1_0 is an in-band sentence of one R1 review and "Battery died" of
+    // the other; R1_1 is the other way round
+    val byString = sentences(res("repeated_ids.txt"))
+    val byLong = byString.withColumn("hid", xxhash64(col("sentence_id")))
+    for ((docs, idCol) <- Seq(byString -> "sentence_id", byLong -> "hid")) {
+      val rows = assertSameSummary(s"repeated by $idCol", docs, idCol, "sentence")
+      val texts = rows.map(_.getString(2))
+      assert(texts.exists(_.startsWith("The battery lasts")), s"by $idCol: $texts")
+      assert(!texts.contains("Battery died") && !texts.contains(" It is fine"),
+        s"by $idCol: $texts")
+    }
+  }
+
+  test("band rows sharing an id are one vertex on both routes; a null id has no edge") {
+    val docs = Seq[(java.lang.Long, String)](
+      (1L, "the battery lasted a long time and the charger worked well too"),
+      (1L, "the charger died after a short time but the battery still worked"),
+      (2L, "the battery died after a short time but the charger still worked"),
+      (3L, "a long battery life and a charger that works well every single day"),
+      (null, "the battery and the charger worked well for a long time every day")
+    ).toDF("doc_id", "text")
+    assertSameRanks("shared id", docs, "doc_id", "text")
+    assert(ranks(TextRank.rankDocuments(docs, "doc_id", "text")).keySet == Set(1L, 2L, 3L))
+    // two winners share id 1, whose order Spark's sort leaves open
+    def sorted(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    assert(sorted(TextRank.summarize(docs, "doc_id", "text", 5)) == sorted(TextRank.topRanked(
+      TextRank.rankDocumentsDistributed(docs, "doc_id", "text"), docs, "doc_id", "text", 5)))
   }
 
   test("local weights are bit-equal to weightedMirror's, na = 1 included") {
