@@ -24,7 +24,7 @@ object Loadings {
 
   /** The 1e-6 ordering grid: mathematically tied loadings (tokens with
     * identical count patterns) differ only by solver round-off whose
-    * SIGN depends on the backend (ARPACK or `eigSym` in `Svd`, LAPACK in
+    * SIGN depends on the backend (ARPACK or `dsyev` in `Svd`, LAPACK in
     * ls08's twin) — without the grid the top-k tie-break flips
     * nondeterministically. On the grid, ties fall to the deterministic
     * secondary key (part of the Q9/H2 determinism pin). −0 becomes 0.

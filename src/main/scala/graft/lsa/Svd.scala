@@ -3,8 +3,8 @@ package graft.lsa
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
-import breeze.linalg.{eigSym, DenseMatrix}
 import dev.ludovic.netlib.arpack.ARPACK
+import dev.ludovic.netlib.lapack.LAPACK
 import org.apache.spark.mllib.linalg.distributed.IndexedRow
 import org.apache.spark.rdd.RDD
 import org.netlib.util.{doubleW, intW}
@@ -23,7 +23,7 @@ import org.netlib.util.{doubleW, intW}
   * vector, so two calls on the same matrix return the same bits. Below
   * [[GramianCols]] columns, or when k leaves ARPACK no room
   * (nev < ncv ≤ n), it forms AᵀA in one pass and solves it with LAPACK
-  * `eigSym`, as `computeSVD` does below 100 columns.
+  * `dsyev`, as `computeSVD` does below 100 columns.
   */
 private[graft] object Svd {
 
@@ -172,15 +172,31 @@ private[graft] object Svd {
   /** The top min(k, n) eigenpairs of AᵀA as (λ descending, V:
     * n × λ.length column-major). ARPACK may converge on fewer than k.
     */
-  private def eigs(a: Matrix, k: Int): (Array[Double], Array[Double]) = {
+  private[lsa] def eigs(a: Matrix, k: Int): (Array[Double], Array[Double]) = {
     val n = a.cols
     if (n < GramianCols || k >= n) {
       val identity = new Array[Double](n * n)
       (0 until n).foreach(i => identity(i * n + i) = 1.0)
-      val es = eigSym(new DenseMatrix(n, n, a.gramianTimes(identity, n)))
-      val top = (n - 1 to math.max(0, n - k) by -1).toArray // eigSym ascends
-      (top.map(es.eigenvalues(_)), top.flatMap(j => es.eigenvectors(::, j).toArray))
+      val (w, z) = dsyev(a.gramianTimes(identity, n), n)
+      val top = (n - 1 to math.max(0, n - k) by -1).toArray // dsyev ascends
+      (top.map(w(_)), top.flatMap(j => z.slice(j * n, (j + 1) * n)))
     } else lanczos(a, n, k)
+  }
+
+  /** All eigenpairs of the symmetric n × n matrix `g` (column-major, its
+    * lower triangle read and overwritten) as (λ ascending, V column-major):
+    * the LAPACK call breeze's `eigSym` makes, with the same lwork, so the
+    * bits are the same.
+    */
+  private def dsyev(g: Array[Double], n: Int): (Array[Double], Array[Double]) = {
+    val w = new Array[Double](n)
+    val lwork = math.max(1, 3 * n - 1)
+    val info = new intW(0)
+    LAPACK.getInstance().dsyev("V", "L", n, g, math.max(1, n), w, new Array[Double](lwork),
+      lwork, info)
+    if (info.`val` != 0)
+      throw new IllegalStateException(s"LAPACK dsyev returned info = ${info.`val`}")
+    (w, g)
   }
 
   private def lanczos(a: Matrix, n: Int, k: Int): (Array[Double], Array[Double]) =

@@ -657,11 +657,13 @@ object TextRank {
     * ([[localRanks]]): 4,096, so at most 8 Mi vertex pairs. Memory
     * binds, not speed: on 4 cores the local route beat the distributed
     * one at every measured size (4,096 vertices: 0.9 s vs 24.8 s;
-    * CHANGES.md records the sweep), and a complete graph at the budget
-    * is 16 Mi directed edges, 256 MiB at 16 B each (the local arrays
-    * hold each pair once, 16 B, so 128 MiB plus growth). The sf1 gate
-    * graph (10,660 vertices, 56.8 M pairs) stays above it, so the stress
-    * replica still runs the distributed similarity kernel.
+    * CHANGES.md records the sweep). The kernel keeps each vertex pair
+    * once, in 24 B (two int ends and one weight share per direction), and
+    * up to 48 B while the sweep's growing builders hand over their
+    * arrays: a complete graph at the budget (8.4 M pairs) keeps 192 MiB
+    * and peaked near 450 MiB of heap on 4 cores (CHANGES.md). The sf1
+    * gate graph (10,660 vertices, 56.8 M pairs) stays above it, so the
+    * stress replica still runs the distributed similarity kernel.
     */
   private val LocalVertices = 4096
 
@@ -727,19 +729,28 @@ object TextRank {
     */
   private def sparkLog2(n: Int): Double = StrictMath.log(n.toDouble) / StrictMath.log(2.0)
 
-  /** The exact graph over vertex token lists, as upper-triangle edges
-    * (a, b, weight) with a < b indexing `tokens` (each edge stands for
-    * both directions). Tokens are int-coded with a per-call dictionary;
-    * a posting list per code (its vertices, ascending) counts every
-    * pair's distinct shared tokens in one sweep — the integer
-    * `intersect_size` gives — so the work follows the shared (pair,
-    * token) incidences, not all token comparisons. The weight is
+  /** [[localEdges]] with every row its own vertex: edges (a, b, weight)
+    * with a < b indexing `tokens`.
+    */
+  private[textrank] def localEdges(
+      tokens: Array[Seq[String]]): (Array[Int], Array[Int], Array[Double]) =
+    localEdges(tokens, Array.range(0, tokens.length))
+
+  /** The exact graph over row token lists, as upper-triangle edges
+    * (v(a), v(b), weight) for rows a < b of `tokens` (each edge stands for
+    * both directions). `v` maps each row to its vertex, -1 for none: a
+    * pair of rows on one vertex, or with a row on none, emits no edge.
+    * Tokens are int-coded with a per-call dictionary; a posting list per
+    * code (its rows, ascending) counts every pair's distinct shared
+    * tokens in one sweep — the integer `intersect_size` gives — so the
+    * work follows the shared (pair, token) incidences, not all token
+    * comparisons. The weight is
     * [[weightedMirror]]'s in the same double operations
     * (`inter / (log2(na) + log2(nb) + 1.0)`, raw token counts), so it is
     * bit-identical; zero-weight pairs are dropped.
     */
-  private[textrank] def localEdges(
-      tokens: Array[Seq[String]]): (Array[Int], Array[Int], Array[Double]) = {
+  private[textrank] def localEdges(tokens: Array[Seq[String]],
+      v: Array[Int]): (Array[Int], Array[Int], Array[Double]) = {
     val nv = tokens.length
     val dict = new java.util.HashMap[String, Integer]()
     val codes = tokens.map(_.map { t =>
@@ -758,7 +769,8 @@ object TextRank {
     val inter = new Array[Int](nv)
     var a = 0
     while (a < nv) {
-      val ca = codes(a)
+      val va = v(a)
+      val ca = if (va >= 0) codes(a) else Array.emptyIntArray
       var k = 0
       while (k < ca.length) {
         val p = post(ca(k))
@@ -769,7 +781,10 @@ object TextRank {
       var b = a + 1
       while (b < nv) {
         if (inter(b) > 0) {
-          as += a; bs += b; ws += inter(b).toDouble / (lg(a) + lg(b) + 1.0)
+          val vb = v(b)
+          if (vb >= 0 && vb != va) {
+            as += va; bs += vb; ws += inter(b).toDouble / (lg(a) + lg(b) + 1.0)
+          }
           inter(b) = 0
         }
         b += 1
@@ -794,25 +809,25 @@ object TextRank {
       tokens: Array[Seq[String]]): Array[(Any, Double)] = {
     val ofId = ids.filter(_ != null).distinct
     val index = ofId.zipWithIndex.toMap
-    val v = ids.map(id => if (id == null) -1 else index(id))
     val nv = ofId.length
-    val (a, b, w0) = localEdges(tokens)
-    val kept = a.indices.filter(e => v(a(e)) >= 0 && v(b(e)) >= 0 && v(a(e)) != v(b(e)))
-    val src = kept.map(e => v(a(e))).toArray
-    val dst = kept.map(e => v(b(e))).toArray
-    val w = kept.map(w0).toArray
+    val (src, dst, w) = localEdges(tokens, ids.map(id => if (id == null) -1 else index(id)))
     val ow = new Array[Double](nv)
     var e = 0
     while (e < src.length) { ow(src(e)) += w(e); ow(dst(e)) += w(e); e += 1 }
+    // the rounds' w/ow(src) and w/ow(dst), computed once; w's array
+    // holds the second
+    val toDst = new Array[Double](w.length)
+    e = 0
+    while (e < w.length) { toDst(e) = w(e) / ow(src(e)); w(e) = w(e) / ow(dst(e)); e += 1 }
+    val toSrc = w
 
     var r = Array.fill(nv)(InitRank)
     for (_ <- 1 to Iterations) {
       val c = new Array[Double](nv)
       e = 0
       while (e < src.length) {
-        val x = src(e); val y = dst(e)
-        c(y) += r(x) * (w(e) / ow(x))
-        c(x) += r(y) * (w(e) / ow(y))
+        c(dst(e)) += r(src(e)) * toDst(e)
+        c(src(e)) += r(dst(e)) * toSrc(e)
         e += 1
       }
       r = c.map(InitRank + Damping * _)

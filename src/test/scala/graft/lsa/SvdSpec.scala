@@ -7,7 +7,8 @@ import graft.pipeline.{Pipelines, SyntheticReviews}
 
 /** The one top-k solver (`Svd`) is deterministic and safe to call from
   * several threads: ARPACK starts from a fixed vector, and its F2j build's
-  * static iteration state is guarded by one JVM-wide lock.
+  * static iteration state is guarded by one JVM-wide lock. Its Gramian
+  * branch calls LAPACK `dsyev` as breeze's `eigSym` does.
   */
 class SvdSpec extends SparkSpec {
   import spark.implicits._
@@ -34,6 +35,32 @@ class SvdSpec extends SparkSpec {
       (0 until len).map(i => SyntheticReviews.word(1000 + len * g + i)).mkString(" "))
     cells((0 until rank).flatMap(g => Seq.fill(g + 1)(s(g))).zipWithIndex
       .map { case (t, i) => (i.toLong, t) })
+  }
+
+  test("the Gramian branch returns breeze eigSym's bits, n = 1 and k = n included") {
+    val rnd = new scala.util.Random(5)
+    def random(docs: Int, n: Int, density: Double): Svd.Matrix = Svd.Local(
+      for (d <- 0 until docs; j <- 0 until n if j == d % n || rnd.nextDouble() < density)
+        yield (d.toLong, j, rnd.nextGaussian()), n)
+    val small = zipfCells(10, 60, 3L)
+    assert(small.vocab.length < 100)
+    val inputs = Seq(
+      "n = 1" -> (random(3, 1, 1.0), 1),
+      "k = n = 7" -> (random(20, 7, 1.0), 7),
+      "k < n = 40" -> (random(60, 40, 0.2), 5),
+      "a product under 100 tokens" -> (Svd.Local(small.cells, small.vocab.length), 5),
+      "k = n = 120" -> (random(150, 120, 0.1), 120))
+    inputs.foreach { case (what, (a, k)) =>
+      val n = a.cols
+      val identity = new Array[Double](n * n)
+      (0 until n).foreach(i => identity(i * n + i) = 1.0)
+      val es = breeze.linalg.eigSym(new breeze.linalg.DenseMatrix(n, n, a.gramianTimes(identity, n)))
+      val top = (n - 1 to math.max(0, n - k) by -1).toArray
+      val (lambda, v) = Svd.eigs(a, k)
+      def bits(xs: Array[Double]) = xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
+      assert(bits(lambda) == bits(top.map(es.eigenvalues(_))), what)
+      assert(bits(v) == bits(top.flatMap(j => es.eigenvectors(::, j).toArray)), what)
+    }
   }
 
   test("two calls on the same input return the same rows on the local route") {

@@ -12,7 +12,8 @@ import graft.pipeline.{Pipelines, SyntheticReviews}
   * up on the driver. The routes must agree on the review fixtures, a
   * repeated `review_id` and a generated 600-review product: the same
   * vertex set, ranks within 1e-12, the same `summarize` rows and schema,
-  * and bit-equal edge weights.
+  * and bit-equal edge weights. The local ranks are also bit-equal to the
+  * kernel's first composition (edges over rows, then a remap to ids).
   */
 class TextRankLocalSpec extends SparkSpec {
   import spark.implicits._
@@ -108,20 +109,91 @@ class TextRankLocalSpec extends SparkSpec {
     }
   }
 
+  /** Two band rows with id 1 and one with a null id. */
+  private lazy val sharedIds = Seq[(java.lang.Long, String)](
+    (1L, "the battery lasted a long time and the charger worked well too"),
+    (1L, "the charger died after a short time but the battery still worked"),
+    (2L, "the battery died after a short time but the charger still worked"),
+    (3L, "a long battery life and a charger that works well every single day"),
+    (null, "the battery and the charger worked well for a long time every day")
+  ).toDF("doc_id", "text")
+
   test("band rows sharing an id are one vertex on both routes; a null id has no edge") {
-    val docs = Seq[(java.lang.Long, String)](
-      (1L, "the battery lasted a long time and the charger worked well too"),
-      (1L, "the charger died after a short time but the battery still worked"),
-      (2L, "the battery died after a short time but the charger still worked"),
-      (3L, "a long battery life and a charger that works well every single day"),
-      (null, "the battery and the charger worked well for a long time every day")
-    ).toDF("doc_id", "text")
+    val docs = sharedIds
     assertSameRanks("shared id", docs, "doc_id", "text")
     assert(ranks(TextRank.rankDocuments(docs, "doc_id", "text")).keySet == Set(1L, 2L, 3L))
     // two winners share id 1, whose order Spark's sort leaves open
     def sorted(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
     assert(sorted(TextRank.summarize(docs, "doc_id", "text", 5)) == sorted(TextRank.topRanked(
       TextRank.rankDocumentsDistributed(docs, "doc_id", "text"), docs, "doc_id", "text", 5)))
+  }
+
+  /** The driver kernel as first composed: edges over rows, then a boxed
+    * remap to id-vertices that drops shared-id and null-id pairs, then
+    * the same out-weights and rank rounds.
+    */
+  private def referenceRanks(ids: Array[Any], tokens: Array[Seq[String]]): Map[Any, Double] = {
+    import TextRank.{Damping, InitRank, Iterations}
+    val ofId = ids.filter(_ != null).distinct
+    val index = ofId.zipWithIndex.toMap
+    val v = ids.map(id => if (id == null) -1 else index(id))
+    val nv = ofId.length
+    val (a, b, w0) = TextRank.localEdges(tokens)
+    val kept = a.indices.filter(e => v(a(e)) >= 0 && v(b(e)) >= 0 && v(a(e)) != v(b(e)))
+    val src = kept.map(e => v(a(e))).toArray
+    val dst = kept.map(e => v(b(e))).toArray
+    val w = kept.map(w0).toArray
+    val ow = new Array[Double](nv)
+    src.indices.foreach { e => ow(src(e)) += w(e); ow(dst(e)) += w(e) }
+    var r = Array.fill(nv)(InitRank)
+    for (_ <- 1 to Iterations) {
+      val c = new Array[Double](nv)
+      src.indices.foreach { e =>
+        val x = src(e); val y = dst(e)
+        c(y) += r(x) * (w(e) / ow(x))
+        c(x) += r(y) * (w(e) / ow(y))
+      }
+      r = c.map(InitRank + Damping * _)
+    }
+    (0 until nv).filter(ow(_) > 0.0).map(i => ofId(i) -> r(i)).toMap
+  }
+
+  private def assertBitEqualRanks(what: String, docs: DataFrame, idCol: String,
+      textCol: String): Unit = {
+    val rows = TextRank.vertices(docs, col(idCol), textCol, lemma = true).collect()
+    val want = referenceRanks(rows.map(_.get(0)), rows.map(_.getSeq[String](1)))
+    val got = ranks(TextRank.rankDocuments(docs, idCol, textCol))
+    assert(got.keySet == want.keySet, s"$what: vertex sets differ")
+    got.foreach { case (id, r) =>
+      assert(java.lang.Double.doubleToRawLongBits(r) ==
+        java.lang.Double.doubleToRawLongBits(want(id)), s"$what: vertex $id rank $r vs ${want(id)}")
+    }
+  }
+
+  test("local ranks are bit-equal to the first kernel composition") {
+    products.foreach { case (name, path) =>
+      assertBitEqualRanks(name, sentences(path), "sentence_id", "sentence")
+    }
+    assertBitEqualRanks("shared and null ids", sharedIds, "doc_id", "text")
+    // every document shares "battery": a complete graph of 300 vertices
+    val complete = (0 until 300).map(d => (d.toLong,
+      ("battery" +: (0 until 11).map(i => SyntheticReviews.word(11 * d + i))).mkString(" ")))
+      .toDF("doc_id", "text")
+    assert(ranks(TextRank.rankDocuments(complete, "doc_id", "text")).size == 300)
+    assertBitEqualRanks("complete graph", complete, "doc_id", "text")
+  }
+
+  test("localEdges maps rows to vertices; shared-vertex and vertex-less pairs emit no edge") {
+    val tokens = Array(Seq("battery", "life"), Seq("battery"), Seq("battery", "life"),
+      Seq("life", "charger"), Seq("charger", "battery"))
+    val v = Array(0, 0, 1, -1, 2) // rows 0 and 1 share a vertex; row 3 has none
+    val (a, b, w) = TextRank.localEdges(tokens)
+    val kept = a.indices.filter(e => v(a(e)) >= 0 && v(b(e)) >= 0 && v(a(e)) != v(b(e)))
+    val (src, dst, ws) = TextRank.localEdges(tokens, v)
+    assert(src.toSeq == kept.map(e => v(a(e))))
+    assert(dst.toSeq == kept.map(e => v(b(e))))
+    assert(ws.toSeq == kept.map(w))
+    assert(src.indices.map(e => (src(e), dst(e))) == Seq((0, 1), (0, 2), (0, 1), (0, 2), (1, 2)))
   }
 
   test("local weights are bit-equal to weightedMirror's, na = 1 included") {
