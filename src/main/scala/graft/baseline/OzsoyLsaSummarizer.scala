@@ -35,8 +35,12 @@ object OzsoyLsaSummarizer {
 
   final case class Scored(index: Int, sentence: String, score: Double)
 
+  /** Stopword-filtered `[a-zA-Z]+` runs of the lowercased sentence. The
+    * lowercase is the root locale's, so a JVM whose default locale is
+    * Turkish does not split "TITLE" into "t" and "tle".
+    */
   def tokenize(sentence: String): Seq[String] =
-    "[a-zA-Z]+".r.findAllIn(sentence.toLowerCase).toSeq
+    "[a-zA-Z]+".r.findAllIn(sentence.toLowerCase(java.util.Locale.ROOT)).toSeq
       .filterNot(StopWords.asSet.contains)
 
   /** Binary term×sentence matrix → (σ descending, sign-fixed Vᵀ rows for

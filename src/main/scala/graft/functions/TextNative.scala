@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,6 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    lexicon order (en, fr, es, de), "und" when every vote is zero.
   *  - `nltk_stop_count(tokens)`: occurrences (duplicates counted) of
   *    NLTK English stopwords, = `size(filter(tokens, array_contains))`.
+  *  - the LSA and TextRank token pipelines ([[TokenPipeline]], built by
+  *    `TextFunctions.lsaTokens`/`textrankTokens`): [[tokens]] does in one
+  *    pass what `regexp_extract_all(lower(text), "[a-zA-Z]+", 0)`, the
+  *    stopword filter, the length filter and the lemmatizer UDF did.
   */
 object TextNative {
 
@@ -196,6 +201,70 @@ object TextNative {
       new org.apache.spark.sql.catalyst.util.GenericArrayData(vals))
   }
 
+  /** Spark's `lower` of a UTF8_BINARY string: ASCII by bytes, anything
+    * else through the call `Lower` makes, with `useICU` read as `Lower`
+    * reads `spark.sql.icu.caseMappings.enabled`. So ASCII text never
+    * touches ICU, and other text is lowered exactly as Spark lowers it.
+    */
+  private def lower(text: UTF8String, useICU: Boolean): UTF8String =
+    if (text.isFullAscii) text.toLowerCaseAscii
+    else CollationSupport.Lower.exec(text, CollationFactory.UTF8_BINARY_COLLATION_ID, useICU)
+
+  /** Per-JVM memo of the lemmatizer on Spark strings, so a repeated token
+    * costs one hashed lookup and no `String` round trip; capped like
+    * `Lemmatizer`'s own memo.
+    */
+  private val lemmaCacheLimit = 1 << 20
+  private val lemmaCache =
+    new java.util.concurrent.ConcurrentHashMap[UTF8String, UTF8String](1 << 12)
+
+  private def lemmaOf(token: UTF8String): UTF8String = {
+    val hit = lemmaCache.get(token)
+    if (hit != null) return hit
+    val out = UTF8String.fromString(graft.text.Lemmatizer.lemma(token.toString))
+    // the key is a copy: `token` may be a view into a row buffer
+    if (lemmaCache.size < lemmaCacheLimit) lemmaCache.put(UTF8String.fromBytes(token.getBytes), out)
+    out
+  }
+
+  private def isAsciiLetter(b: Byte): Boolean =
+    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')
+
+  /** The token pipelines in one pass: the maximal `[a-zA-Z]` runs of
+    * [[lower]]`(text)`, less the stopwords of `remove_stopwords`, then
+    *  - LSA (`textrank = false`): length ≥ 3, then the lemmatizer;
+    *  - TextRank: the lemmatizer, then Spark `length` ≥ 4;
+    *
+    * `lemma = false` skips the lemmatizer. Duplicates and order are kept.
+    */
+  def tokens(text: UTF8String, useICU: Boolean, textrank: Boolean,
+      lemma: Boolean): ArrayData = {
+    val low = lower(text, useICU)
+    // the tokens are views into this array, so it must be one no row owns
+    val bytes = if (low eq text) text.getBytes.clone() else low.getBytes
+    val out = new java.util.ArrayList[AnyRef]()
+    val n = bytes.length
+    var i = 0
+    while (i < n) {
+      while (i < n && !isAsciiLetter(bytes(i))) i += 1
+      val start = i
+      while (i < n && isAsciiLetter(bytes(i))) i += 1
+      if (i > start) {
+        val t = UTF8String.fromBytes(bytes, start, i - start)
+        if (!stopSet.contains(t)) {
+          if (textrank) {
+            val l = if (lemma) lemmaOf(t) else t
+            if (l.numChars >= 4) out.add(l)
+          } else if (i - start >= 3) out.add(if (lemma) lemmaOf(t) else t)
+        }
+      }
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+  }
+
+  /** The session's `spark.sql.icu.caseMappings.enabled`, as `Lower` reads it. */
+  def icuCaseMappings: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
   def lang_id(text: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(LangIdExpr(ColumnBridge.expression(text)))
@@ -225,6 +294,44 @@ object TextNative {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(DigitCount(ColumnBridge.expression(text)))
   }
+
+  def token_pipeline(text: Column, textrank: Boolean, lemma: Boolean): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(TokenPipeline(ColumnBridge.expression(text), textrank, lemma))
+  }
+}
+
+/** The LSA (`textrank = false`) or TextRank token pipeline of a string,
+  * [[TextNative.tokens]]. `spark.sql.icu.caseMappings.enabled` is read
+  * once per expression, when it is first evaluated or compiled, as
+  * `Lower` reads it.
+  */
+@ExpressionDescription(
+  usage = "token_pipeline(text) - the LSA or TextRank tokens of a string, one pass")
+case class TokenPipeline(child: Expression, textrank: Boolean, lemma: Boolean)
+    extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case st: StringType if st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects a UTF8_BINARY string, got ${other.catalogString}")
+    }
+
+  private lazy val useICU: Boolean = TextNative.icuCaseMappings
+
+  override def nullSafeEval(s: Any): Any =
+    TextNative.tokens(s.asInstanceOf[UTF8String], useICU, textrank, lemma)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, s =>
+      s"graft.functions.TextNative.tokens($s, $useICU, $textrank, $lemma)")
+
+  override protected def withNewChildInternal(newChild: Expression): TokenPipeline =
+    copy(child = newChild)
 }
 
 /** Base for the one-pass string-counter expressions. */

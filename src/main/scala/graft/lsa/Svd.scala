@@ -1,6 +1,5 @@
 package graft.lsa
 
-import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
 import dev.ludovic.netlib.arpack.ARPACK
@@ -60,11 +59,15 @@ private[graft] object Svd {
     }
   }
 
-  /** A CSR matrix: row r is document `ids(r)`, its nonzeros at
-    * `ptr(r) until ptr(r + 1)` in ascending column order.
+  /** A CSR matrix: row r is document `ids(r)`, ids ascending, its
+    * nonzeros at `ptr(r) until ptr(r + 1)` in ascending column order.
+    * `LocalLsa` builds the arrays straight from int-coded tokens.
     */
-  final class Local private (ids: Array[Long], ptr: Array[Int], idx: Array[Int],
-      vs: Array[Double], val cols: Int) extends Matrix {
+  final class Local private[lsa] (private[lsa] val ids: Array[Long],
+      private[lsa] val ptr: Array[Int], private[lsa] val idx: Array[Int],
+      private[lsa] val vs: Array[Double], val cols: Int) extends Matrix {
+    def rows: Int = ids.length
+
     protected def fold[A: ClassTag](data: Array[Double], zero: () => A,
         add: (A, Array[Double], Long, Array[Int], Array[Double], Int, Int) => Unit,
         merge: (A, A) => A): A = {
@@ -77,7 +80,8 @@ private[graft] object Svd {
   object Local {
     /** The matrix of nonzero cells (id, column, value), given in any
       * order: rows in ascending id, so a collect's order cannot change
-      * the result.
+      * the result. `Lsa.concepts`' local branch collects Spark's cells
+      * this way.
       */
     def apply(cells: Iterable[(Long, Int, Double)], cols: Int): Local = {
       val c = cells.toArray.sortWith((a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
@@ -125,30 +129,60 @@ private[graft] object Svd {
     }
   }
 
-  private val byLoading = Ordering.by[(Double, Long), (Double, Long)] { case (l, id) => (-l, id) }
+  /** Bounded per-column candidates for [[Matrix.topDocs]]: column j
+    * keeps its best `nTop` (snapped loading, id) pairs in
+    * `j·nTop until j·nTop + sizes(j)`, best first.
+    */
+  private[lsa] final class Tops(m: Int, nTop: Int) extends Serializable {
+    private val loads = new Array[Double](m * nTop)
+    private val ids = new Array[Long](m * nTop)
+    private val sizes = new Array[Int](m)
 
-  /** Bounded per-column candidates for [[Matrix.topDocs]]. */
-  private final class Tops(m: Int, nTop: Int) extends Serializable {
-    private val kept = Array.fill(m)(ArrayBuffer.empty[(Double, Long)])
-    private def trim(j: Int): Unit = {
-      val best = kept(j).sorted(byLoading).take(nTop)
-      kept(j).clear(); kept(j) ++= best
+    /** (l, id) ranks before (l2, id2): loading descending by
+      * `java.lang.Double.compare` of the negated loadings, then id
+      * ascending.
+      */
+    private def before(l: Double, id: Long, l2: Double, id2: Long): Boolean = {
+      val c = java.lang.Double.compare(-l, -l2)
+      c < 0 || (c == 0 && id < id2)
+    }
+
+    private def offer(j: Int, l: Double, id: Long): Unit = {
+      val base = j * nTop
+      val s = sizes(j)
+      if (nTop == 0 || (s == nTop && !before(l, id, loads(base + s - 1), ids(base + s - 1))))
+        return
+      if (s < nTop) sizes(j) = s + 1
+      var p = base + sizes(j) - 1 // the free slot; worse candidates shift into it
+      while (p > base && before(l, id, loads(p - 1), ids(p - 1))) {
+        loads(p) = loads(p - 1); ids(p) = ids(p - 1)
+        p -= 1
+      }
+      loads(p) = l; ids(p) = id
     }
 
     /** Row `id`'s loadings a·wⱼ, a being nonzeros `from until until`. */
     def add(id: Long, idx: Array[Int], vs: Array[Double], from: Int, until: Int,
-        w: Array[Double], n: Int): Unit =
-      (0 until m).foreach { j =>
+        w: Array[Double], n: Int): Unit = {
+      var j = 0
+      while (j < m) {
         var u = 0.0
         var p = from
         while (p < until) { u += vs(p) * w(j * n + idx(p)); p += 1 }
-        kept(j) += ((Loadings.snap(u), id))
-        if (kept(j).size > 4 * nTop) trim(j)
+        offer(j, Loadings.snap(u), id)
+        j += 1
       }
+    }
 
-    def merge(o: Tops): Tops = { (0 until m).foreach { j => kept(j) ++= o.kept(j); trim(j) }; this }
+    def merge(o: Tops): Tops = {
+      (0 until m).foreach { j =>
+        (j * nTop until j * nTop + o.sizes(j)).foreach(p => offer(j, o.loads(p), o.ids(p)))
+      }
+      this
+    }
 
-    def result: Array[Seq[Long]] = kept.map(_.sorted(byLoading).take(nTop).map(_._2).toSeq)
+    def result: Array[Seq[Long]] =
+      Array.tabulate(m)(j => ids.slice(j * nTop, j * nTop + sizes(j)).toSeq)
   }
 
   /** Columns below which [[eigs]] solves an explicit AᵀA: `computeSVD`'s

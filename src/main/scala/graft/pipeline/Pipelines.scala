@@ -76,9 +76,11 @@ object Pipelines {
     * at most budget + 1 sentences in (review_id, sent_idx) order, and
     * only those get their `TextFunctions.lsaTokens`, so an over-budget
     * product is refused before the lemmatizer runs. Sid n is the n-th
-    * row, as [[sentencesWithSid]] numbers it. The cells come from
-    * `LocalLsa.fromTokens` and `LocalLsa.solve` solves them on the
-    * driver, so no collect is thrown away.
+    * row, as [[sentencesWithSid]] numbers it. The rows stay Spark's own
+    * (`LocalRoute.collectRowsWithin`): `LocalLsa.fromTokenArrays` codes
+    * their tokens into the CSR matrix `LocalLsa.solve` solves, and only
+    * the winners' ids and sentences become strings, so no collect is
+    * thrown away and no row is boxed.
     */
   private[graft] def lsaSummaryLocal(sents: DataFrame, cfg: Lsa.Config): Option[DataFrame] = {
     val spark = sents.sparkSession
@@ -86,13 +88,12 @@ object Pipelines {
       .limit(LocalSentenceRows + 1)
       .select(col("sentence_id"), col("sentence"),
         TextFunctions.lsaTokens(col("sentence"), cfg.lemma).as("tokens"))
-    LocalRoute.collectWithin(firstRows, LocalSentenceRows).map { rows =>
-      val concepts = LocalLsa.solve(LocalLsa.fromTokens(rows.toSeq.zipWithIndex.map {
-        case (r, i) => (i + 1L, r.getSeq[String](2))
-      }), cfg)
+    LocalRoute.collectRowsWithin(firstRows, LocalSentenceRows).map { rows =>
+      val concepts = LocalLsa.solve(LocalLsa.fromTokenArrays(rows.map(_.getArray(2))), cfg)
       // as the distributed join's concat_ws: ids in loading order, nulls skipped
       def joined(ids: Seq[Long], field: Int, sep: String): String =
-        ids.flatMap(sid => Option(rows((sid - 1).toInt).getString(field))).mkString(sep)
+        ids.map(sid => rows((sid - 1).toInt)).filterNot(_.isNullAt(field))
+          .map(_.getUTF8String(field).toString).mkString(sep)
       val out = concepts.map { c =>
         Row(c.concept, c.singular_value, c.keywords.mkString(" "),
           joined(c.doc_ids, 0, ","), joined(c.doc_ids, 1, " | "))

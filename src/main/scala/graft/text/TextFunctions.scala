@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Column-level building blocks for the reference's token pipeline
   * (SURVEY.md §2.2-2.3, P2-P5/F1-F5), expressed with codegen'd Catalyst
-  * functions — no UDFs in the hot path. The only non-native step is the
-  * lemmatizer (no JVM builtin; SURVEY H1), exposed as `lemmatizeUdf`.
+  * functions — no UDFs in the hot path. The LSA and TextRank pipelines
+  * are one native expression each (`TextNative.TokenPipeline`), equal to
+  * the composition of the pieces below (`TokenPipelineSpec` pins it);
+  * the lemmatizer alone is still exposed as a UDF, `lemmatizeUdf`.
   *
   * Reference semantics reproduced exactly:
   *  - tokens = `re.findall('[a-zA-Z]+', s.lower())` (BigdataProjectCode.py:66)
@@ -40,20 +42,21 @@ object TextFunctions {
   def lemmatizeUdf(tokens: Column): Column = lemmatize(tokens)
   def stemUdf(tokens: Column): Column = stemU(tokens)
 
-  /** LSA token pipeline (:68): lower/regex → stopword+len>=3 → lemma. */
-  def lsaTokens(text: Column, lemma: Boolean = true): Column = {
-    val t = minTokenLength(removeStopwords(tokenize(text)), 3)
-    if (lemma) lemmatizeUdf(t) else t
-  }
+  /** LSA token pipeline (:68): lower/regex → stopword+len>=3 → lemma,
+    * one native pass; = `lemmatizeUdf(minTokenLength(removeStopwords(
+    * tokenize(text)), 3))` except that a null text gives null where the
+    * UDF throws.
+    */
+  def lsaTokens(text: Column, lemma: Boolean = true): Column =
+    graft.functions.TextNative.token_pipeline(text, textrank = false, lemma)
 
   /** TextRank token pipeline (:365-367): lower/regex → stopword → lemma →
-    * len>3 (i.e. >=4, applied after lemmatization).
+    * len>3 (i.e. >=4, applied after lemmatization), one native pass; =
+    * `minTokenLength(lemmatizeUdf(removeStopwords(tokenize(text))), 4)`
+    * except that a null text gives null where the UDF throws.
     */
-  def textrankTokens(text: Column, lemma: Boolean = true): Column = {
-    val t = removeStopwords(tokenize(text))
-    val l = if (lemma) lemmatizeUdf(t) else t
-    minTokenLength(l, 4)
-  }
+  def textrankTokens(text: Column, lemma: Boolean = true): Column =
+    graft.functions.TextNative.token_pipeline(text, textrank = true, lemma)
 
   /** Space-split word count on raw text, as the reference's length
     * filters measure it (F1/F2 check `len(s.split(' '))` on the raw

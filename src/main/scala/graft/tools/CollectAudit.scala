@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 /** Full-source driver-materialization audit — the collect-side sibling
   * of [[PlanAudit]]'s nested-loop invariant. Every site in `src/main`
   * that pulls a distributed result onto the driver (`.collect()`,
-  * `.collectAsMap()`, `.collectAsList()`, `.toLocalIterator`) must
+  * `.collectAsMap()`, `.collectAsList()`, `.toLocalIterator`, and a
+  * `.runJob(` whose task results come back to the driver) must
   * carry a machine-checkable bound annotation:
   *
   * {{{ // collect-bound: <category>: <justification> }}}
@@ -43,7 +44,8 @@ object CollectAudit {
   // built from pieces so the audit does not flag its own source
   private val call = "\\." + "collect" + "\\(\\)"
   val SiteRe = (call + "|\\." + "collectAsMap" + "\\(\\)" +
-    "|\\." + "collectAsList" + "\\(\\)" + "|\\." + "toLocalIterator" + "\\b").r
+    "|\\." + "collectAsList" + "\\(\\)" + "|\\." + "toLocalIterator" + "\\b" +
+    "|\\." + "runJob" + "\\(").r
   val AnnRe = """//\s*collect-bound:\s*([a-z-]+):\s*(\S.*)""".r.unanchored
 
   final case class Site(
@@ -293,7 +295,7 @@ object CollectAudit {
     val sb = new StringBuilder
     sb ++= "# COLLECT AUDIT — driver-materialization sweep\n\n"
     sb ++= s"Generated by `graft.tools.CollectAudit` over `$root`: every\n"
-    sb ++= "`collect()`/`collectAsMap()`/`collectAsList()`/`toLocalIterator`\n"
+    sb ++= "`collect()`/`collectAsMap()`/`collectAsList()`/`toLocalIterator`/`runJob(`\n"
     sb ++= "site in main, each with its machine-checked bound annotation\n"
     sb ++= "(`// collect-bound: <category>: <why>`). An unannotated or\n"
     sb ++= "mis-categorized site fails this audit AND `CollectAuditSpec`.\n\n"

@@ -168,6 +168,7 @@ class LocalLsaSpec extends SparkSpec {
   }
 
   test("fromTokens' cells are bit-equal to Spark's tf-idf cells") {
+    // the cells are read from the CSR matrix's arrays
     val generated = s"${SyntheticReviews.write(products = 1, reviews = 600)}/product00.txt"
     for (path <- Seq(res("small_product.txt"), generated)) {
       val docs = sentences(path).persist()
@@ -181,14 +182,20 @@ class LocalLsaSpec extends SparkSpec {
         .as[(Long, Seq[String])].collect().toSeq
       docs.unpersist()
       val local = LocalLsa.fromTokens(tokens)
+      val a = local.matrix
+      val entries = (0 until a.rows).flatMap(r =>
+        (a.ptr(r) until a.ptr(r + 1)).map(p => (a.ids(r), a.idx(p), a.vs(p))))
       val (cells, vocab) = spark0
       assert(local.vocab.toSeq == vocab, path)
-      def byKey(cs: Seq[(Long, Int, Double)]) = cs.sortBy(c => (c._1, c._2))
-      assert(local.cells.size == cells.size, path)
-      byKey(local.cells).zip(byKey(cells)).foreach { case (l, d) =>
-        assert(l._1 == d._1 && l._2 == d._2 && l._3 == d._3, s"$path cell $l vs Spark's $d")
+      val keys = entries.map(e => (e._1, e._2))
+      assert(keys == keys.sorted && keys.distinct == keys, s"$path: rows and columns ascend")
+      assert(entries.size == cells.size, path)
+      entries.zip(cells.sortBy(c => (c._1, c._2))).foreach { case (l, d) =>
+        assert(l._1 == d._1 && l._2 == d._2 &&
+          java.lang.Double.doubleToRawLongBits(l._3) == java.lang.Double.doubleToRawLongBits(d._3),
+          s"$path entry $l vs Spark's $d")
       }
-      assert(local.cells.exists(_._3 != 0.0), path)
+      assert(entries.exists(_._3 != 0.0), path)
     }
   }
 

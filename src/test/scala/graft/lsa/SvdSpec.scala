@@ -13,11 +13,11 @@ import graft.pipeline.{Pipelines, SyntheticReviews}
 class SvdSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The cells of a product's tokenized sentences. */
-  private def cells(docs: Seq[(Long, String)]): LocalLsa.Cells =
+  /** The tf·idf matrix of a product's tokenized sentences. */
+  private def cells(docs: Seq[(Long, String)]): LocalLsa.Tfidf =
     LocalLsa.fromTokens(docs.map { case (id, t) => id -> LocalLsa.lsaTokens(t) })
 
-  private def zipfCells(reviews: Int, vocab: Int, seed: Long): LocalLsa.Cells = {
+  private def zipfCells(reviews: Int, vocab: Int, seed: Long): LocalLsa.Tfidf = {
     val path = SyntheticReviews.zipf(1, reviews, vocab, seed).resolve("product00.txt")
     val sents = Pipelines.sentencesWithSid(graft.io.ReviewSource.sentences(
       graft.io.ReviewSource.reviews(spark, path.toString)))
@@ -29,7 +29,7 @@ class SvdSpec extends SparkSpec {
     * than 140 tokens, so the Lanczos solve meets an invariant subspace
     * before it has filled its basis, and restarts.
     */
-  private def lowRank(rank: Int): LocalLsa.Cells = {
+  private def lowRank(rank: Int): LocalLsa.Tfidf = {
     val len = 140 / rank + 1
     val s = (0 until rank).map(g =>
       (0 until len).map(i => SyntheticReviews.word(1000 + len * g + i)).mkString(" "))
@@ -48,7 +48,7 @@ class SvdSpec extends SparkSpec {
       "n = 1" -> (random(3, 1, 1.0), 1),
       "k = n = 7" -> (random(20, 7, 1.0), 7),
       "k < n = 40" -> (random(60, 40, 0.2), 5),
-      "a product under 100 tokens" -> (Svd.Local(small.cells, small.vocab.length), 5),
+      "a product under 100 tokens" -> (small.matrix, 5),
       "k = n = 120" -> (random(150, 120, 0.1), 120))
     inputs.foreach { case (what, (a, k)) =>
       val n = a.cols

@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.JobCount
 
 /** Pins [[LocalRoute.collectWithin]], the probe-and-collect behind the
-  * Hits, Nmf and Lloyd routes: the budget boundary, the row order it
-  * hands to the local twins, and the jobs one call runs.
+  * Hits, Nmf, Lloyd, EP1 and EP2 routes, and [[LocalRoute.collectRowsWithin]],
+  * its form without the `Row` conversion: the budget boundary, the row
+  * order it hands to the local twins, and the jobs one call runs.
   */
 class LocalRouteSpec extends SparkSpec {
   import spark.implicits._
@@ -34,9 +35,23 @@ class LocalRouteSpec extends SparkSpec {
       assert(jobs(n - 1) == ((None, 1)), s"$parts partitions")
       assert(jobs(5) == ((None, 1)), s"$parts partitions")
     }
+    // the unconverted rows take the same single job
+    val df = spark.sparkContext.parallelize(0L until 320L, 32).toDF("id")
+    val (rows, jobs) = JobCount(spark.sparkContext)(LocalRoute.collectRowsWithin(df, 320))
+    assert(jobs == 1 && rows.map(_.map(_.getLong(0)).toSeq.sorted) == Some(0L until 320L))
     // when the optimizer knows the row count is within the cap, the
     // limit is dropped and the collect is one plain job
     assert(JobCount(spark.sparkContext)(LocalRoute.collectWithin(
       spark.range(0, 40, 1, 4).toDF("id"), 40).map(_.length)) == ((Some(40), 1)))
+  }
+
+  test("Spark's own rows are collectWithin's rows, in the same order, on multi-partition input") {
+    val sorted = spark.sparkContext.parallelize((0L until 500L).map(i => (i % 7, i)), 5)
+      .toDF("g", "id").orderBy($"g", $"id".desc)
+    val rows = LocalRoute.collectRowsWithin(sorted, 500).get
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows == LocalRoute.collectWithin(sorted, 500).get.map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    assert(rows == (0L until 500L).map(i => (i % 7, i)).sortBy { case (g, id) => (g, -id) })
+    assert(LocalRoute.collectRowsWithin(sorted, 499).isEmpty)
   }
 }

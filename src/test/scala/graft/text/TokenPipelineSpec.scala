@@ -30,6 +30,20 @@ class TokenPipelineSpec extends SparkSpec {
     assert(got == Seq("working", "word"))
   }
 
+  test("the driver tokenizers do not follow a Turkish default locale") {
+    val before = java.util.Locale.getDefault
+    java.util.Locale.setDefault(new java.util.Locale("tr"))
+    try {
+      assert("TITLE".toLowerCase == "t\u0131tle", "the JVM lowercases by the default locale")
+      assert(graft.lsa.LocalLsa.lsaTokens("TITLE Items", lemma = false) == Seq("title", "items"))
+      assert(graft.lsa.LocalLsa.lsaTokens("TITLE Caf\u00e9 ITEMS", lemma = false) ==
+        firstTokens("TITLE Caf\u00e9 ITEMS", c => TextFunctions.lsaTokens(c, lemma = false)))
+      assert(graft.baseline.OzsoyLsaSummarizer.tokenize("TITLE ITEMS") == Seq("title", "items"))
+    } finally java.util.Locale.setDefault(before)
+    assert(graft.lsa.LocalLsa.lsaTokens("TITLE Caf\u00e9 ITEMS", lemma = false) ==
+      Seq("title", "caf", "items"))
+  }
+
   test("sentence explode keeps positional ids") {
     val df = Seq((1L, "first one. second two. ")).toDF("id", "text")
     val rows = TextFunctions.explodeSentences(df, "id", "text")
